@@ -691,9 +691,6 @@ object Interp {
       case _ => ()
     }
 
-  def bytesToCodes(fi: FontInfo, bytes: List[Int]): List[Int] =
-    bytesToCodesArr(fi, bytes.toArray).toList
-
   def bytesToCodesArr(fi: FontInfo, bytes: Array[Int]): Array[Int] =
     fi.encoding match {
       case Encoding.SJISmap => sjisBytesToCodesArr(bytes)

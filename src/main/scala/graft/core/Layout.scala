@@ -557,13 +557,6 @@ object Layout {
     out.result()
   }
 
-  def paragraphBreak(wmode: Int, graphics: List[Rect], pageBounds: (Double, Double),
-      prev: Line, cur: Line, gaps: List[Double], paraMinInline: Double): Boolean = {
-    val t = new GapTracker
-    gaps.foreach(t.add)
-    paragraphBreakT(wmode, graphics, pageBounds, prev, cur, t, paraMinInline)
-  }
-
   private def paragraphBreakT(wmode: Int, graphics: List[Rect], pageBounds: (Double, Double),
       prev: Line, cur: Line, gaps: GapTracker, paraMinInline: Double): Boolean = {
     val gap = baselineGap(wmode, prev, cur)
@@ -582,15 +575,6 @@ object Layout {
   def baselineGap(wmode: Int, prev: Line, cur: Line): Double = prev.baseline - cur.baseline
   private def negativeAdvance(wmode: Int, prev: Line, cur: Line): Boolean =
     baselineGap(wmode, prev, cur) < 0
-
-  def typicalLeading(gaps: List[Double], lineSize: Double): Double = {
-    val gs = gaps.filter(_ > 0).sorted
-    if (gs.length <= 1) 1.2 * lineSize
-    else {
-      val mid = gs.length / 2
-      if (gs.length % 2 == 1) gs(mid) else (gs(mid - 1) + gs(mid)) / 2
-    }
-  }
 
   private def indentBreak(paraMinInline: Double, cur: Line): Boolean =
     cur.firstInline - paraMinInline >= 0.85 * cur.size

@@ -215,10 +215,10 @@ object Pipeline {
     * On a real corpus you would read `pages` from table metadata and skip
     * the planning pass entirely.
     *
-    * WHEN TO USE — measured honestly (ChunkProbe, 201 docs, one giant,
-    * local[16]): for THIS kernel (~0.15 ms/page) the chunked path is a
-    * PESSIMIZATION at every size tried — 2.5s vs 0.9s wall at 4,000 pages
-    * and 16.4s vs 7.1s at 40,000 — because re-parsing the xref/page tree
+    * WHEN TO USE — measured honestly (BENCH/BASELINE.md, 201 docs, one
+    * giant, local[16]): for THIS kernel (~0.15 ms/page) the chunked path
+    * is a PESSIMIZATION at every size tried — 2.5s vs 0.9s wall at 4,000
+    * pages and 16.4s vs 7.1s at 40,000 — because re-parsing the xref/page tree
     * per chunk plus shipping serialized PageLines outweighs the page work
     * it parallelizes. It pays off when per-page cost dwarfs both (an
     * OCR/vision stage at ~100 ms/page: 1,250 pages of kernel per chunk vs
@@ -1277,30 +1277,13 @@ object Streaming {
     val deltaDir = streamDir(deltaDir0)
     val schema = spark.read.parquet(deltaDir).schema
     val stream = spark.readStream.schema(schema).parquet(deltaDir)
-    val probe = Queries.bandedSigs(Queries.sigKeyed(stream))
-      .select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
-        col("b0").as("b0b"), col("band"),
-        // per-probe-row band-0 flag: the first-band-wins filter below
-        // would otherwise run a substring + compare per candidate PAIR
-        (substring(col("band"), 1, 2) === "0:").as("is0"))
-    val idx = spark.table(idxTable).select(col("band"),
-      col("doc_id").as("doc_a"), col("hs").as("hs_a"), col("b0").as("b0a"))
-    // Jaccard >= 1/2 as integer arithmetic (3i >= a+b): one
-    // array_intersect per candidate even after the predicate is pushed
-    // into the join condition (a ratio form evaluates it 3x there), no
-    // float rounding at the threshold. Broadcasting the DELTA side
-    // (delta-proportional by definition) runs the verify over the
-    // bucketed index scan's full parallelism — streaming plans have no
-    // AQE, and the default choice broadcast the static index instead,
-    // leaving the verify on however few partitions the micro-batch's
-    // files mapped to.
-    val q = broadcast(probe).join(idx, "band")
-      .filter(col("is0") || col("b0a") =!= col("b0b"))
-      // round 7: compiled sorted-merge intersect (Queries.interSizeUdf) —
-      // the per-candidate interpreted ArrayIntersect was this stream's
-      // dominant cost (addBatch 3030ms of 4413ms, R07Probe)
-      .filter(Queries.interSizeUdf(col("hs_a"), col("hs_b")) * 3 >=
-        size(col("hs_a")) + size(col("hs_b")))
+    // Broadcasting the DELTA side (delta-proportional by definition) runs
+    // the verify over the bucketed index scan's full parallelism —
+    // streaming plans have no AQE, and the default choice broadcast the
+    // static index instead, leaving the verify on however few partitions
+    // the micro-batch's files mapped to.
+    val q = Queries.verifiedNearDups(Queries.bandedSigs(Queries.sigKeyed(stream)),
+        spark.table(idxTable))((p, i) => broadcast(p).join(i, "band"))
       .groupBy(col("doc_b"))
       .agg(min(col("doc_a")).as("cluster_old"))
       .writeStream

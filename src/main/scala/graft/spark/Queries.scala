@@ -229,14 +229,26 @@ object Queries {
     * next to a delta write) whose results do not depend on each other.
     * The child thread inherits the caller's SparkContext local
     * properties (InheritableThreadLocal), so scheduling behavior matches
-    * the calling thread's. Failures on either side propagate. */
-  private def inParallel(a: => Unit, b: => Unit): Unit = {
+    * the calling thread's. `a` runs on the child thread, `b` on the
+    * calling thread, and `b`'s value is returned. Failures on either side
+    * propagate; when both throw, the child's error is attached to the
+    * caller's as suppressed. */
+  private[graft] def inParallel[T](a: => Unit, b: => T): T = {
     @volatile var err: Throwable = null
     val th = new Thread(() => try a catch { case e: Throwable => err = e },
       "graft-parallel-action")
     th.start()
-    try b finally th.join()
+    val out =
+      try b
+      catch {
+        case e: Throwable =>
+          th.join()
+          if (err != null) e.addSuppressed(err)
+          throw e
+      }
+    th.join()
     if (err != null) throw err
+    out
   }
 
   private val q12 = Q(
@@ -266,8 +278,9 @@ object Queries {
       // partitioning, so every writer task holds exactly one bucket) —
       // the sort+parquet-encode runs on 8 cores instead of the 1-2 scan
       // splits, and each bucket lands in ONE file, so the SMJ's scans
-      // read pre-sorted buckets (R07Probe: the li write was 1.1s of
-      // q12's 1.8s; guide §6 output sizing / §2 parallelize the write)
+      // read pre-sorted buckets (OPTIMIZATION_r07.md: the li write was
+      // 1.1s of q12's 1.8s; guide §6 output sizing / §2 parallelize the
+      // write)
       // the two table writes are independent — overlap them (guide §2.6)
       inParallel(
         t(spark, dir, "lineitem")
@@ -612,7 +625,8 @@ object Queries {
     * The corpus is dup-heavy by construction (band0 at sf0.1: 57 buckets
     * for 5000 docs, max bucket 3137), so the band join yields millions of
     * candidate pairs and the per-pair intersect dominated d6/d11/x31
-    * (x31's one micro-batch: addBatch 3030ms of 4413ms total, R07Probe).
+    * (x31's one micro-batch: addBatch 3030ms of 4413ms total,
+    * OPTIMIZATION_r07.md).
     * Merge-count of sorted sets == intersection cardinality — same value,
     * pinned against array_intersect in KernelParitySpec. */
   private[graft] val interSizeUdf = udf((a: Array[Long], b: Array[Long]) =>
@@ -1464,6 +1478,35 @@ object Queries {
     explode(array(concat(lit("0:"), col("band0")),
       concat(lit("1:"), col("band1")))).as("band"))
 
+  /** The near-duplicate verify shared by d11 and x31: `probe` and `index`
+    * are [[bandedSigs]]-shaped frames, `join` pairs them on `band` (each
+    * caller picks its strategy and any extra predicate). Returns the
+    * verified candidate pairs (doc_b from the probe, doc_a from the index):
+    * d6's first-band-wins dedupe (a band-1 match only counts when the
+    * band0s differ), then Jaccard >= 0.5. */
+  private[graft] def verifiedNearDups(probe: DataFrame, index: DataFrame)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    // is0 (band-0 row?) is a per-PROBE-ROW fact precomputed here: the
+    // first-band-wins filter would otherwise evaluate a substring +
+    // string-compare once per candidate PAIR (millions on this dup-heavy
+    // corpus) instead of once per probe band row (thousands)
+    val p = probe.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
+      col("b0").as("b0b"), col("band"),
+      (substring(col("band"), 1, 2) === "0:").as("is0"))
+    val i = index.select(col("band"), col("doc_id").as("doc_a"),
+      col("hs").as("hs_a"), col("b0").as("b0a"))
+    // Jaccard >= 1/2 as PURE INTEGER arithmetic: i/(a+b-i) >= 1/2 <=>
+    // 3i >= a+b. One intersect per candidate even after the predicate is
+    // pushed into the join condition (a ratio form evaluates it three
+    // times) and no float rounding at the threshold (the r5 d6
+    // parity-window class). interSizeUdf is the compiled sorted-merge
+    // intersect; its doc has the per-pair cost it removed.
+    join(p, i)
+      .filter(col("is0") || col("b0a") =!= col("b0b"))
+      .filter(interSizeUdf(col("hs_a"), col("hs_b")) * 3 >=
+        size(col("hs_a")) + size(col("hs_b")))
+  }
+
   /** Persist (overwrite) the signature index for a (doc_id, text) corpus,
     * BUCKETED BY band: every later incremental probe reads it
     * co-partitioned and shuffles only the delta. */
@@ -1498,36 +1541,13 @@ object Queries {
     * (d11 builds it concurrently with the index write — guide §2.6). */
   private[graft] def incrementalDedupKeyed(spark: SparkSession, idxTable: String,
       dk: DataFrame): DataFrame = {
-    // is0 (band-0 row?) is a per-PROBE-ROW fact precomputed here: the
-    // first-band-wins filter below would otherwise evaluate a substring
-    // + string-compare once per candidate PAIR (millions on this
-    // dup-heavy corpus) instead of once per delta band row (thousands)
-    val dIdx = bandedSigs(dk).select(col("doc_id").as("doc_b"),
-      col("hs").as("hs_b"), col("b0").as("b0b"), col("band"),
-      (substring(col("band"), 1, 2) === "0:").as("is0"))
-    // Jaccard >= 1/2 as PURE INTEGER arithmetic: i/(a+b-i) >= 1/2 <=>
-    // 3i >= a+b. One intersect per candidate (a ratio form would evaluate
-    // it three times) and no float rounding at the threshold (the r5 d6
-    // parity-window class). Round 7: compiled sorted-merge intersect
-    // (interSizeUdf) — the interpreted ArrayIntersect built a hash set
-    // per candidate pair, the dominant cost on this dup-heavy corpus.
-    def jacHalf = interSizeUdf(col("hs_a"), col("hs_b")) * 3 >=
-      size(col("hs_a")) + size(col("hs_b"))
-    // new<->old: delta bands probe the bucketed index; a band-1 match
-    // only counts when the band0s differ (exact pair dedupe, as in d6)
-    val idx = spark.table(idxTable).select(col("band"),
-      col("doc_id").as("doc_a"), col("hs").as("hs_a"), col("b0").as("b0a"))
-    val oldMatch = dIdx.join(idx, "band")
-      .filter(col("is0") || col("b0a") =!= col("b0b"))
-      .filter(jacHalf)
+    val probe = bandedSigs(dk)
+    // new<->old: delta bands probe the bucketed index
+    val oldMatch = verifiedNearDups(probe, spark.table(idxTable))(_.join(_, "band"))
       .groupBy(col("doc_b").as("doc_id")).agg(min("doc_a").as("cluster_old"))
     // new<->new: within-delta candidates, linked to the smaller doc_id
-    val dIdxA = bandedSigs(dk).select(col("doc_id").as("doc_a"),
-      col("hs").as("hs_a"), col("b0").as("b0a"), col("band"))
-    val newMatch = dIdx.join(dIdxA, "band")
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(col("is0") || col("b0a") =!= col("b0b"))
-      .filter(jacHalf)
+    val newMatch = verifiedNearDups(probe, probe)(
+      _.join(_, "band").filter(col("doc_a") < col("doc_b")))
       .groupBy(col("doc_b").as("doc_id")).agg(min("doc_a").as("cluster_new"))
     dk.select("doc_id")
       .join(oldMatch, Seq("doc_id"), "left")
@@ -1572,10 +1592,9 @@ object Queries {
       // The index write and the delta's signature materialization are
       // independent — overlap them (guide §2.6)
       val docs = t(spark, dir, "documents")
-      var dk: DataFrame = null
-      inParallel(
+      val dk = inParallel(
         buildSignatureIndex(docs, idxTable, s"$base/sig"),
-        { dk = sigKeyed(recrawlDelta(docs)).localCheckpoint(true) })
+        sigKeyed(recrawlDelta(docs)).localCheckpoint(true))
       incrementalDedupKeyed(spark, idxTable, dk)
     },
     Some(s"""WITH delta AS (

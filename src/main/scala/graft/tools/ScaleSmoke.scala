@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.sql.functions._
 import graft.spark.{CorpusGen, Pipeline}
 
-/** Dev tool: million-row corpus end-to-end smoke at local[32]. */
+/** Dev tool: million-row corpus end-to-end smoke at local[32]; lists up to
+  * 20 rows that fail to match their ground truth. */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val docs = sys.env.getOrElse("DOCS", "1000000").toLong
@@ -23,14 +24,23 @@ object ScaleSmoke {
       case _ => "expected"
     }
     t0 = System.nanoTime()
-    val agg = Pipeline.extractMode(spark, stored, mode).toDF()
-      .join(stored.select(col("url"), col(expectedCol).as("expected")), Seq("url"))
+    val joined = Pipeline.extractMode(spark, stored, mode).toDF()
+      .join(stored.select(col("url"), col("kind"), col(expectedCol).as("expected")), Seq("url"))
+    val agg = joined
       .agg(count(lit(1)).as("n"),
         sum(when(col("text") === col("expected"), 1L).otherwise(0L)).as("m"),
         sum(when(col("ok"), 0L).otherwise(1L)).as("errs"))
       .collect()(0)
     val secs = (System.nanoTime()-t0)/1e9
     println(f"SMOKE [$mode] extract+match $docs docs in $secs%.1f s -> ${docs/secs}%.0f docs/s; matched ${agg.getLong(1)}/${agg.getLong(0)}; errors ${agg.getLong(2)}")
+    if (agg.getLong(1) < agg.getLong(0) || agg.getLong(2) > 0) {
+      // null-safe: an ok row with null text must be listed too
+      val bad = joined.filter(!col("ok") || !(col("text") <=> col("expected")))
+        .select("url", "kind", "ok", "error", "chars")
+        .limit(20).collect()
+      println(s"SMOKE first ${bad.length} failing rows:")
+      bad.foreach(r => println(s"  $r"))
+    }
     spark.stop()
   }
 }

@@ -51,6 +51,19 @@ class FuzzSpec extends AnyFunSuite {
     assert(runs == 144)
   }
 
+  test("non-PDF and noise inputs return Left, never Right or a throw") {
+    val rnd = new scala.util.Random(42)
+    val inputs = Seq(
+      "empty" -> Array.emptyByteArray,
+      "words" -> "this is not a pdf at all, just words".getBytes("UTF-8"),
+      "html" -> "<html><body><p>hello</p></body></html>".getBytes("UTF-8"),
+      "random-bytes" -> Array.fill(10000)(rnd.nextInt(256).toByte),
+      "pdf-header-noise" ->
+        ("%PDF-1.5\n".getBytes("UTF-8") ++ Array.fill(5000)(rnd.nextInt(256).toByte)))
+    for ((name, bytes) <- inputs)
+      assert(Extract.extractPdf(bytes, None).isLeft, name)
+  }
+
   test("mutated books (multi-page, compressed) never throw") {
     val rnd = new scala.util.Random(42L)
     for (rep <- 0 until 25) {

@@ -24,6 +24,16 @@ class GoldenSpec extends AnyFunSuite {
     case "legacy" => DocStructure.openDocument(bytes, None).map(d => Legacy.legacyText(d)._1)
   }
 
+  // 15 reference fixture PDFs, each with tagged/geom/legacy expectations
+  private val referenceGoldens = 45
+
+  // an absent fixture directory must show up in the report as a canceled
+  // test, not as a suite that silently registers zero golden cases
+  if (!Files.isDirectory(fixDir))
+    test("reference goldens byte-exact") {
+      cancel(s"$fixDir absent: $referenceGoldens reference goldens not run")
+    }
+
   for (pdf <- fixtures) {
     val name = Paths.get(pdf).getFileName.toString.stripSuffix(".pdf")
     for ((mode, dir) <- List(("tagged", "expected"), ("geom", "expected-geom"),

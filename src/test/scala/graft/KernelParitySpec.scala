@@ -428,4 +428,14 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // the quirk rows really are in the sample set (len <= 2 -> 1)
     assert(kernel.take(4).map(_._2).forall(_ == 1))
   }
+
+  test("inParallel returns the caller arm's value; both failing keeps both errors") {
+    assert(Queries.inParallel((), 42) == 42)
+    val child = new IllegalStateException("child arm")
+    val caller = intercept[IllegalArgumentException] {
+      Queries.inParallel(throw child, throw new IllegalArgumentException("caller arm"))
+    }
+    assert(caller.getMessage == "caller arm")
+    assert(caller.getSuppressed.toSeq == Seq(child))
+  }
 }
