@@ -232,17 +232,26 @@ object Queries {
     * the calling thread's. `a` runs on the child thread, `b` on the
     * calling thread, and `b`'s value is returned. Failures on either side
     * propagate; when both throw, the child's error is attached to the
-    * caller's as suppressed. */
-  private[graft] def inParallel[T](a: => Unit, b: => T): T = {
+    * caller's as suppressed. The child's Spark jobs carry a per-call job
+    * tag: when `b` throws, the child's jobs are cancelled (again each
+    * poll, in case it submits another) until it exits, so a failed caller
+    * never waits out a long child job. */
+  private[graft] def inParallel[T](spark: SparkSession)(a: => Unit, b: => T): T = {
+    val sc = spark.sparkContext
+    val tag = s"graft-parallel-${parallelCalls.incrementAndGet()}"
     @volatile var err: Throwable = null
-    val th = new Thread(() => try a catch { case e: Throwable => err = e },
+    val th = new Thread(() =>
+      try { sc.addJobTag(tag); a } catch { case e: Throwable => err = e },
       "graft-parallel-action")
     th.start()
     val out =
       try b
       catch {
         case e: Throwable =>
-          th.join()
+          while (th.isAlive) {
+            sc.cancelJobsWithTag(tag, "inParallel: the caller arm failed")
+            th.join(100)
+          }
           if (err != null) e.addSuppressed(err)
           throw e
       }
@@ -250,6 +259,8 @@ object Queries {
     if (err != null) throw err
     out
   }
+
+  private val parallelCalls = new java.util.concurrent.atomic.AtomicLong
 
   private val q12 = Q(
     (spark, dir) => {
@@ -282,7 +293,7 @@ object Queries {
       // 1.1s of q12's 1.8s; guide §6 output sizing / §2 parallelize the
       // write)
       // the two table writes are independent — overlap them (guide §2.6)
-      inParallel(
+      inParallel(spark)(
         t(spark, dir, "lineitem")
           .select("l_orderkey", "l_quantity", "l_extendedprice")
           .repartition(8, col("l_orderkey"))
@@ -618,99 +629,6 @@ object Queries {
       }
     })
 
-  /** |hs_a ∩ hs_b| for two SORTED-DISTINCT long arrays (the only shape
-    * sigKeyed/fullSigUdf produce) by a compiled linear merge — replaces
-    * size(array_intersect(...)) in the dedup verify paths, where the
-    * interpreted ArrayIntersect allocated a hash set PER CANDIDATE PAIR.
-    * The corpus is dup-heavy by construction (band0 at sf0.1: 57 buckets
-    * for 5000 docs, max bucket 3137), so the band join yields millions of
-    * candidate pairs and the per-pair intersect dominated d6/d11/x31
-    * (x31's one micro-batch: addBatch 3030ms of 4413ms total,
-    * OPTIMIZATION_r07.md).
-    * Merge-count of sorted sets == intersection cardinality — same value,
-    * pinned against array_intersect in KernelParitySpec. */
-  private[graft] val interSizeUdf = udf((a: Array[Long], b: Array[Long]) =>
-    if (a == null || b == null) null // size(array_intersect) null-propagates
-    else {
-      var i = 0
-      var j = 0
-      var n = 0
-      while (i < a.length && j < b.length) {
-        val x = a(i)
-        val y = b(j)
-        if (x == y) { n += 1; i += 1; j += 1 }
-        else if (x < y) i += 1
-        else j += 1
-      }
-      java.lang.Integer.valueOf(n)
-    })
-
-  /** Spark Round's double path: NaN/Infinity pass through unchanged
-    * (BigDecimal.valueOf(NaN) would throw NumberFormatException). The
-    * cosine kernels additionally map a non-finite SIM to null BEFORE
-    * this (see cosSim6FUdf); round6 itself stays total for the k-means
-    * distance path, where a NaN distance just ranks last. */
-  private def round6(v: Double): Double =
-    if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) v
-    else java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** round(dot/(|a||b|), 6) over FLOAT vectors with the exact arithmetic
-    * of the HOF form it replaces (s1/s3/s4 + d7's verify): per-element
-    * FLOAT product then widening (zip_with on float columns multiplies in
-    * float), in-order double accumulation for dot and both norms, Spark
-    * Round double semantics (see round6) — one compiled pass instead of
-    * three interpreted aggregates per pair. Null inputs and ragged
-    * lengths return null, exactly as the legacy null-propagating
-    * zip_with/aggregate chain did. Pinned against the expression form in
-    * KernelParitySpec (degenerate inputs included). */
-  private[graft] val cosSim6FUdf = udf((a: Seq[Float], b: Seq[Float]) =>
-    if (a == null || b == null || a.length != b.length) null
-    else {
-      val aa = a.toArray
-      val bb = b.toArray
-      var dot = 0.0
-      var na = 0.0
-      var nb = 0.0
-      var i = 0
-      while (i < aa.length) {
-        dot += aa(i) * bb(i)
-        i += 1
-      }
-      i = 0
-      while (i < aa.length) { na += aa(i) * aa(i); i += 1 }
-      i = 0
-      while (i < bb.length) { nb += bb(i) * bb(i); i += 1 }
-      val v = dot / (math.sqrt(na) * math.sqrt(nb))
-      // degenerate (zero-magnitude) pair -> null, not NaN: Spark orders
-      // NaN ABOVE every value, so a NaN sim would pass >= thresholds and
-      // top the desc rankings as a spurious match; the legacy expression
-      // crashed the query here (ANSI DIVIDE_BY_ZERO). Null drops the row
-      // from every filter/ranking. Identical on non-degenerate data.
-      if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) null
-      else java.lang.Double.valueOf(round6(v))
-    })
-
-  /** Double-vector variant (s5's search stage, where emb is cast double). */
-  private[graft] val cosSim6DUdf = udf((a: Seq[Double], b: Seq[Double]) =>
-    if (a == null || b == null || a.length != b.length) null
-    else {
-      val aa = a.toArray
-      val bb = b.toArray
-      var dot = 0.0
-      var na = 0.0
-      var nb = 0.0
-      var i = 0
-      while (i < aa.length) { dot += aa(i) * bb(i); i += 1 }
-      i = 0
-      while (i < aa.length) { na += aa(i) * aa(i); i += 1 }
-      i = 0
-      while (i < bb.length) { nb += bb(i) * bb(i); i += 1 }
-      val v = dot / (math.sqrt(na) * math.sqrt(nb))
-      if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) null // see float variant
-      else java.lang.Double.valueOf(round6(v))
-    })
-
   /** s2/s3's 8-plane sign-LSH bucket in one compiled pass: the plane
     * values cos(i*(k+1)*0.7 + k) are data-independent constants
     * (precomputed with the same Math.cos the Catalyst cos calls), the
@@ -910,9 +828,9 @@ object Queries {
           && col("b0a") =!= col("b0b"))
       link0.select("doc_a", "doc_b", "hs_a", "hs_b")
         .unionByName(link1.select("doc_a", "doc_b", "hs_a", "hs_b"))
-        // round 7: compiled sorted-merge intersect (hs is sorted-distinct
-        // by construction) — see interSizeUdf
-        .withColumn("inter", interSizeUdf(col("hs_a"), col("hs_b")))
+        // native sorted-merge intersect (hs is sorted-distinct by
+        // construction) — see PairKernels.interSizeOf
+        .withColumn("inter", PairKernels.interSize(col("hs_a"), col("hs_b")))
         .withColumn("jaccard", round(col("inter").cast("double") /
           (size(col("hs_a")) + size(col("hs_b")) - col("inter")), 4))
         .filter(col("jaccard") >= 0.5)
@@ -1132,9 +1050,9 @@ object Queries {
         .localCheckpoint(true)
       val links = signLshBandPairs(allv)
       links
-        // round 7: compiled cosine kernel (same fold order + rounding)
+        // native cosine kernel (same fold order + rounding)
         .select(col("id_a"), col("id_b"),
-          cosSim6FUdf(col("emb_a"), col("emb_b")).as("sim"))
+          PairKernels.cosSim6F(col("emb_a"), col("emb_b")).as("sim"))
         .filter(col("sim") >= 0.9)
         .orderBy("id_a", "id_b")
     },
@@ -1499,11 +1417,11 @@ object Queries {
     // 3i >= a+b. One intersect per candidate even after the predicate is
     // pushed into the join condition (a ratio form evaluates it three
     // times) and no float rounding at the threshold (the r5 d6
-    // parity-window class). interSizeUdf is the compiled sorted-merge
-    // intersect; its doc has the per-pair cost it removed.
+    // parity-window class). PairKernels.interSize is the native
+    // sorted-merge intersect; its doc has the per-pair cost it removed.
     join(p, i)
       .filter(col("is0") || col("b0a") =!= col("b0b"))
-      .filter(interSizeUdf(col("hs_a"), col("hs_b")) * 3 >=
+      .filter(PairKernels.interSize(col("hs_a"), col("hs_b")) * 3 >=
         size(col("hs_a")) + size(col("hs_b")))
   }
 
@@ -1592,7 +1510,7 @@ object Queries {
       // The index write and the delta's signature materialization are
       // independent — overlap them (guide §2.6)
       val docs = t(spark, dir, "documents")
-      val dk = inParallel(
+      val dk = inParallel(spark)(
         buildSignatureIndex(docs, idxTable, s"$base/sig"),
         sigKeyed(recrawlDelta(docs)).localCheckpoint(true))
       incrementalDedupKeyed(spark, idxTable, dk)
@@ -1690,7 +1608,7 @@ object Queries {
       registerBucketedCleanup(base)
       // index write and delta write are independent — overlap (guide §2.6)
       val deltaDir = s"$base/delta"
-      inParallel(
+      inParallel(spark)(
         buildSignatureIndex(t(spark, dir, "documents"), idxTable, s"$base/sig"),
         recrawlDelta(t(spark, dir, "documents"))
           .write.mode("overwrite").parquet(deltaDir))
@@ -2314,8 +2232,8 @@ object Queries {
       val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
       broadcast(queries).join(e, col("qid") =!= col("vec_id"))
         .select(col("qid"), col("vec_id"),
-          // round 7: compiled cosine kernel (same fold order + rounding)
-          cosSim6FUdf(col("qv"), col("embedding")).as("sim"))
+          // native cosine kernel (same fold order + rounding)
+          PairKernels.cosSim6F(col("qv"), col("embedding")).as("sim"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .select("qid", "vec_id", "rank", "sim")
@@ -2369,12 +2287,12 @@ object Queries {
       val e = t(spark, dir, "embeddings")
       val cent = e.filter(col("vec_id") < 16)
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      // round 7: compiled cosine kernel in the assignment and the rerank
-      // (same fold order + rounding — see cosSim6FUdf)
+      // native cosine kernel in the assignment and the rerank (same fold
+      // order + rounding — see PairKernels.cosSim6FOf)
       val wAssign = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid").asc)
       val assigned = e.join(broadcast(cent))
         .select(col("vec_id"), col("embedding"), col("cid"),
-          cosSim6FUdf(col("cv"), col("embedding")).as("csim"))
+          PairKernels.cosSim6F(col("cv"), col("embedding")).as("csim"))
         .withColumn("crank", row_number().over(wAssign))
       val cells = assigned.filter(col("crank") === 1)
         .select(col("vec_id"), col("embedding"), col("cid").as("cell"))
@@ -2384,7 +2302,7 @@ object Queries {
       probes.join(cells, Seq("cell"))
         .filter(col("qid") =!= col("vec_id"))
         .select(col("qid"), col("vec_id"), col("cell"),
-          cosSim6FUdf(col("qv"), col("embedding")).as("sim"))
+          PairKernels.cosSim6F(col("qv"), col("embedding")).as("sim"))
         .withColumn("rank", row_number().over(wRank))
         .filter(col("rank") <= 3)
         .select("qid", "vec_id", "cell", "rank", "sim")
@@ -2455,7 +2373,7 @@ object Queries {
           acc += d * d
           i += 1
         }
-        ds(c) = round6(acc) // Spark Round semantics incl. NaN passthrough
+        ds(c) = PairKernels.round6(acc) // Spark Round semantics incl. NaN passthrough
         c += 1
       }
       // stable sort by distance over cid-ascending indices == row_number
@@ -2551,9 +2469,9 @@ object Queries {
       val wRank = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
       probes.join(cells, Seq("cell"))
         .filter(col("qid") =!= col("vec_id"))
-        // round 7: compiled cosine kernel (double variant)
+        // native cosine kernel (double variant)
         .select(col("qid"), col("vec_id"), col("cell"),
-          cosSim6DUdf(col("qv"), col("emb")).as("sim"))
+          PairKernels.cosSim6D(col("qv"), col("emb")).as("sim"))
         .withColumn("rank", row_number().over(wRank))
         .filter(col("rank") <= 3)
         .select("qid", "vec_id", "cell", "rank", "sim")
@@ -2651,7 +2569,7 @@ object Queries {
       queries.join(bucketed, Seq("bucket"))
         .filter(col("qid") =!= col("vec_id"))
         .select(col("qid"), col("vec_id"), col("bucket"),
-          cosSim6FUdf(col("qv"), col("embedding")).as("sim"))
+          PairKernels.cosSim6F(col("qv"), col("embedding")).as("sim"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3)
         .select("qid", "vec_id", "bucket", "rank", "sim")

@@ -1,18 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.spark.Queries
+import graft.spark.{PairKernels, Queries}
 
-/** Round-7 optimization guard: the compiled token-hash kernels
-  * (Queries.Kernels + the *Udf columns) must be VALUE-IDENTICAL to the
-  * legacy Catalyst higher-order-function expressions they replaced —
-  * that identity is what keeps every DuckDB oracle and the driver's
-  * correctness hashes unchanged. Pinned on adversarial strings (unicode
-  * incl. non-BMP, empties, whitespace runs, hash-heavy repetition) AND on
-  * deterministic pseudo-corpus rows. */
+/** Round-7 optimization guard: the compiled kernels (Queries.Kernels,
+  * the *Udf columns and the PairKernels expressions) must be
+  * VALUE-IDENTICAL to the legacy Catalyst higher-order-function
+  * expressions they replaced — that identity is what keeps every DuckDB
+  * oracle and every result checksum unchanged. Pinned on
+  * adversarial strings (unicode incl. non-BMP, empties, whitespace runs,
+  * hash-heavy repetition) AND on deterministic pseudo-corpus rows. */
 class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -28,7 +29,55 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private lazy val tmp = java.nio.file.Files.createTempDirectory("kernel_parity").toFile
+
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
+  /** `df` written to parquet and read back: arrays come back as
+    * `containsNull = true` and are read by the vectorized reader — the
+    * signature index's real shape and the one x31's verify reads. */
+  private def viaParquet(df: DataFrame, name: String): DataFrame = {
+    val path = new java.io.File(tmp, name).getPath
+    df.write.mode("overwrite").parquet(path)
+    val back = spark.read.parquet(path)
+    assert(back.schema.fields.exists(f => f.dataType match {
+      case a: ArrayType => a.containsNull
+      case _ => false
+    }), back.schema.treeString)
+    back
+  }
+
+  /** Asserts `rows(q)` == `legacy` under Catalyst's generated path
+    * (CODEGEN_ONLY, whole-stage codegen on) and its interpreted path
+    * (NO_CODEGEN, whole-stage off). ConvertToLocalRelation is excluded:
+    * it would otherwise fold a projection over a local Seq at
+    * optimization time, interpreted, under both modes. The pair kernels
+    * must sit in a `*(n)` codegen stage exactly on the generated path. */
+  private def pinBothPaths[T](legacy: T)(q: => DataFrame)(rows: Array[Row] => T): Unit =
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> true, "NO_CODEGEN" -> false)) {
+      val confs = Seq("spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.codegen.wholeStage" -> wholeStage.toString,
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        val df = q
+        assert(rows(df.collect()) == legacy, mode)
+        // after execution: AQE's final plan, not the initial one it also prints
+        val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+        val kernelLines = plan.linesIterator.filter(l =>
+          Seq("inter_size(", "cos_sim6_f(", "cos_sim6_d(").exists(l.contains)).toSeq
+        assert(kernelLines.nonEmpty, plan)
+        assert(kernelLines.forall(_.contains("*(")) == wholeStage, s"$mode:\n$plan")
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
 
   private def samples: Seq[String] = {
     val rnd = new scala.util.Random(7)
@@ -183,14 +232,31 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       def arr() = Queries.Kernels.sortedDistinct(
         Array.fill(rnd.nextInt(60))(rnd.nextInt(40).toLong))
       (i.toLong, arr(), arr())
-    } :+ ((300L, Array.empty[Long], Array[Long](1, 2, 3))) :+
-      ((301L, Array[Long](5), Array[Long](5)))
-    val df = rows.toDF("id", "a", "b")
-    val legacy = df.select(col("id"), size(array_intersect(col("a"), col("b"))))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val kernel = df.select(col("id"), Queries.interSizeUdf(col("a"), col("b")))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    assert(kernel == legacy)
+    } ++ Seq(
+      (300L, Array.empty[Long], Array[Long](1, 2, 3)),
+      (301L, Array[Long](5), Array[Long](5)),
+      (302L, Array.empty[Long], Array.empty[Long]),
+      // a 100,000-element pair: evens vs multiples of 3 -> 33,334 common
+      (303L, Array.tabulate(100000)(i => 2L * i), Array.tabulate(100000)(i => 3L * i)))
+    val mem = rows.toDF("id", "a", "b")
+    for (df <- Seq(mem, viaParquet(mem, "inter"))) {
+      val legacy = df.select(col("id"), size(array_intersect(col("a"), col("b"))))
+        .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      assert(legacy.last == ((303L, 33334)))
+      pinBothPaths(legacy)(
+        df.select(col("id"), PairKernels.interSize(col("a"), col("b"))).orderBy("id")) {
+        _.map(r => (r.getLong(0), r.getInt(1))).toSeq
+      }
+      // inside a broadcast join's condition, as x31 runs it: each streamed
+      // row's array meets ~100 build rows, in either argument position
+      val l = df.filter(col("id") < 300).select((col("id") % 3).as("k"), col("a"))
+      val r = df.filter(col("id") < 300).select((col("id") % 3).as("k2"), col("b"))
+      val legacyJ = size(array_intersect(col("a"), col("b")))
+      assert(l.join(broadcast(r), col("k") === col("k2")).count() == 30000)
+      pinBothPaths(0L)(l.join(broadcast(r), col("k") === col("k2") &&
+        (PairKernels.interSize(col("a"), col("b")) =!= legacyJ ||
+          PairKernels.interSize(col("b"), col("a")) =!= legacyJ)))(_.length.toLong)
+    }
   }
 
   test("BigDecimal.valueOf HALF_UP == Spark round(double, 6) (s5 distances)") {
@@ -263,20 +329,24 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       lit(0.0), (acc, x) => acc + x)
     val na = sqrt(aggregate(col("a"), lit(0.0), (acc, x) => acc + x * x))
     val nb = sqrt(aggregate(col("b"), lit(0.0), (acc, x) => acc + x * x))
-    val legacyCos = df.select(col("id"), round(dot / (na * nb), 6))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val kernelCos = df.select(col("id"), Queries.cosSim6FUdf(col("a"), col("b")))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(kernelCos == legacyCos)
-    // double cosine (s5 search path)
-    val dd = df.select(col("id"),
-      transform(col("a"), x => x.cast("double")).as("a"),
-      transform(col("b"), x => x.cast("double")).as("b"))
-    val legacyCosD = dd.select(col("id"), round(dot / (na * nb), 6))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val kernelCosD = dd.select(col("id"), Queries.cosSim6DUdf(col("a"), col("b")))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(kernelCosD == legacyCosD)
+    def cosRows(rs: Array[Row]) = rs.map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // plus a 100,000-element pair; in memory and read back from parquet
+    val big = Seq((200L, Array.fill(100000)((rnd.nextDouble() * 2 - 1).toFloat),
+      Array.fill(100000)((rnd.nextDouble() * 2 - 1).toFloat))).toDF("id", "a", "b")
+    val withBig = df.unionByName(big)
+    for (src <- Seq(withBig, viaParquet(withBig, "cos"))) {
+      val legacyF = src.select(col("id"), round(dot / (na * nb), 6)).orderBy("id").collect()
+      pinBothPaths(cosRows(legacyF))(
+        src.select(col("id"), PairKernels.cosSim6F(col("a"), col("b"))).orderBy("id"))(cosRows)
+      // double cosine (s5 search path); checkpointed, because a projection
+      // holding the interpreted transform() never enters a codegen stage
+      val dd = src.select(col("id"),
+        transform(col("a"), x => x.cast("double")).as("a"),
+        transform(col("b"), x => x.cast("double")).as("b")).localCheckpoint()
+      val legacyD = dd.select(col("id"), round(dot / (na * nb), 6)).orderBy("id").collect()
+      pinBothPaths(cosRows(legacyD))(
+        dd.select(col("id"), PairKernels.cosSim6D(col("a"), col("b"))).orderBy("id"))(cosRows)
+    }
     // 8-plane sign bucket (s2/s3): the legacy per-plane projection
     val planes = (0 until 8).map { k =>
       val proj = aggregate(
@@ -313,14 +383,17 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("kernels preserve legacy null/NaN/degenerate-input semantics") {
     val sp = spark
     import sp.implicits._
-    // zero vectors: under Spark 4's default ANSI mode the LEGACY
-    // expression FAILS the whole query (Divide throws DIVIDE_BY_ZERO on
-    // the 0-norm denominator — pinned here); the kernel instead yields
-    // the IEEE NaN, which every >= / top-k filter then drops. Strictly
-    // more total on degenerate embeddings (d7's own comments name the
-    // zero-vector failure mode), identical on all non-degenerate data.
+    // zero and empty vectors: under Spark 4's default ANSI mode the
+    // LEGACY expression FAILS the whole query (Divide throws
+    // DIVIDE_BY_ZERO on the 0-norm denominator — pinned here); the kernel
+    // instead yields NULL (not NaN: Spark orders NaN above everything, so
+    // a NaN sim would pass >= thresholds as a spurious top match), which
+    // every >= / top-k filter then drops. Strictly more total on
+    // degenerate embeddings (d7's own comments name the zero-vector
+    // failure mode), identical on all non-degenerate data.
     val zeros = Seq((1L, Array.fill(8)(0.0f), Array.fill(8)(1.0f)),
-      (2L, Array.fill(8)(0.0f), Array.fill(8)(0.0f)))
+      (2L, Array.fill(8)(0.0f), Array.fill(8)(0.0f)),
+      (3L, Array.empty[Float], Array.empty[Float]))
       .toDF("id", "a", "b")
     val dot = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
       lit(0.0), (acc, x) => acc + x)
@@ -329,36 +402,68 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[Exception] {
       zeros.select(col("id"), round(dot / (na * nb), 6)).collect()
     }
-    // the kernel yields NULL (not NaN: Spark orders NaN above everything,
-    // so a NaN sim would pass >= thresholds as a spurious top match)
-    val kernelNull = zeros.select(col("id"), Queries.cosSim6FUdf(col("a"), col("b")))
-      .orderBy("id").collect().map(_.isNullAt(1)).toSeq
-    assert(kernelNull == Seq(true, true))
+    def nullFlags(rs: Array[Row]) = rs.map(_.isNullAt(1)).toSeq
+    val asDouble = (d: DataFrame) => d.select(col("id"),
+      transform(col("a"), x => x.cast("double")).as("a"),
+      transform(col("b"), x => x.cast("double")).as("b")).localCheckpoint() // see cosine test
+    pinBothPaths(Seq(true, true, true))(
+      zeros.select(col("id"), PairKernels.cosSim6F(col("a"), col("b"))).orderBy("id"))(nullFlags)
+    pinBothPaths(Seq(true, true, true))(asDouble(zeros)
+      .select(col("id"), PairKernels.cosSim6D(col("a"), col("b"))).orderBy("id"))(nullFlags)
     // and the null rows are DROPPED by a >= filter — no spurious matches
-    assert(zeros.filter(Queries.cosSim6FUdf(col("a"), col("b")) >= 0.9).count() == 0)
+    pinBothPaths(0)(zeros.filter(PairKernels.cosSim6F(col("a"), col("b")) >= 0.9))(_.length)
     // null arrays: legacy expressions null-propagate; kernels must return
     // null (never NPE) for cosine, intersect-size and sign buckets
     val withNulls = Seq(
       (1L, Array(1.0f, 2.0f), null.asInstanceOf[Array[Float]]),
       (2L, null.asInstanceOf[Array[Float]], Array(1.0f, 2.0f)),
       (3L, Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("id", "a", "b")
-    val cos = withNulls.select(Queries.cosSim6FUdf(col("a"), col("b")))
-      .collect().map(r => r.isNullAt(0)).toSeq
-    assert(cos == Seq(true, true, false))
-    val nullsL = Seq((1L, Array(1L, 2L), null.asInstanceOf[Array[Long]]))
-      .toDF("id", "a", "b")
-    assert(nullsL.select(Queries.interSizeUdf(col("a"), col("b")))
-      .collect().head.isNullAt(0))
+    pinBothPaths(Seq(true, true, false))(withNulls
+      .select(col("id"), PairKernels.cosSim6F(col("a"), col("b"))).orderBy("id"))(nullFlags)
+    pinBothPaths(Seq(true, true, false))(asDouble(withNulls)
+      .select(col("id"), PairKernels.cosSim6D(col("a"), col("b"))).orderBy("id"))(nullFlags)
+    val nullsL = Seq((1L, Array(1L, 2L), null.asInstanceOf[Array[Long]]),
+      (2L, null.asInstanceOf[Array[Long]], Array(1L, 2L))).toDF("id", "a", "b")
+    pinBothPaths(Seq(true, true))(nullsL
+      .select(col("id"), PairKernels.interSize(col("a"), col("b"))).orderBy("id"))(nullFlags)
     assert(withNulls.select(Queries.signBucket8Udf(col("b")))
       .collect().map(_.isNullAt(0)).toSeq == Seq(true, false, false))
     // ragged lengths: legacy zip_with pads with null -> null sim; the
     // kernel returns null for unequal lengths
     val ragged = Seq((1L, Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f)))
       .toDF("id", "a", "b")
-    val legacyRag = ragged.select(round(dot / (na * nb), 6)).collect().head.isNullAt(0)
-    val kernelRag = ragged.select(Queries.cosSim6FUdf(col("a"), col("b")))
-      .collect().head.isNullAt(0)
-    assert(legacyRag && kernelRag)
+    assert(ragged.select(round(dot / (na * nb), 6)).collect().head.isNullAt(0))
+    pinBothPaths(Seq(true))(
+      ragged.select(col("id"), PairKernels.cosSim6F(col("a"), col("b"))))(nullFlags)
+    pinBothPaths(Seq(true))(asDouble(ragged)
+      .select(col("id"), PairKernels.cosSim6D(col("a"), col("b"))))(nullFlags)
+    // null ELEMENTS, in memory and read back from parquet. The legacy
+    // cosine null-propagates (zip_with's product and aggregate's sum over
+    // a null are null) and so does the kernel. The Scala UDFs these
+    // expressions replaced FAILED the task here
+    // (NOT_NULL_ASSERT_VIOLATION while deserializing into a primitive
+    // array); the intersect now returns null instead, which keeps the
+    // verify total. There it deliberately differs from the legacy
+    // array_intersect, which counts null as a value: signature arrays
+    // never hold a null.
+    val nullElems = spark.sql("""SELECT * FROM VALUES
+      (1L, array(1L, CAST(NULL AS BIGINT), 3L), array(1L, 2L, 3L),
+        array(CAST(1 AS FLOAT), CAST(NULL AS FLOAT)), array(CAST(1 AS FLOAT), CAST(2 AS FLOAT))),
+      (2L, array(1L, 2L, 3L), array(CAST(NULL AS BIGINT), 5L),
+        array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)), array(CAST(NULL AS FLOAT), CAST(2 AS FLOAT)))
+      AS t(id, la, lb, a, b)""")
+    for (src <- Seq(nullElems, viaParquet(nullElems, "null_elems"))) {
+      assert(src.select(col("id"), size(array_intersect(col("la"), col("lb"))))
+        .orderBy("id").collect().map(_.getInt(1)).toSeq == Seq(2, 0))
+      pinBothPaths(Seq(true, true))(src
+        .select(col("id"), PairKernels.interSize(col("la"), col("lb"))).orderBy("id"))(nullFlags)
+      assert(src.select(col("id"), round(dot / (na * nb), 6)).orderBy("id")
+        .collect().forall(_.isNullAt(1)))
+      pinBothPaths(Seq(true, true))(src
+        .select(col("id"), PairKernels.cosSim6F(col("a"), col("b"))).orderBy("id"))(nullFlags)
+      pinBothPaths(Seq(true, true))(asDouble(src)
+        .select(col("id"), PairKernels.cosSim6D(col("a"), col("b"))).orderBy("id"))(nullFlags)
+    }
     // dim > 64: the sign-bucket kernel must reproduce the legacy
     // full-length projection, not truncate at the precomputed table
     val rnd = new scala.util.Random(23)
@@ -430,12 +535,38 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("inParallel returns the caller arm's value; both failing keeps both errors") {
-    assert(Queries.inParallel((), 42) == 42)
+    assert(Queries.inParallel(spark)((), 42) == 42)
     val child = new IllegalStateException("child arm")
     val caller = intercept[IllegalArgumentException] {
-      Queries.inParallel(throw child, throw new IllegalArgumentException("caller arm"))
+      Queries.inParallel(spark)(throw child, throw new IllegalArgumentException("caller arm"))
     }
     assert(caller.getMessage == "caller arm")
     assert(caller.getSuppressed.toSeq == Seq(child))
+  }
+
+  test("inParallel cancels the child arm's job when the caller arm fails") {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    val caller = intercept[IllegalArgumentException] {
+      Queries.inParallel(spark)(
+        // one task that runs until it is killed; the 120 s cap turns a
+        // regression into a failed assertion below instead of a hung suite
+        sc.parallelize(Seq(1), 1).foreach { _ =>
+          val tc = org.apache.spark.TaskContext.get()
+          val end = System.nanoTime() + 120L * 1000000000L
+          while (!tc.isInterrupted() && System.nanoTime() < end) Thread.sleep(10)
+        }, {
+          val end = System.nanoTime() + 60L * 1000000000L
+          while (sc.statusTracker.getActiveJobIds().isEmpty && System.nanoTime() < end)
+            Thread.sleep(10)
+          throw new IllegalArgumentException("caller arm")
+        })
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30, s"inParallel took $secs s to rethrow")
+    assert(caller.getMessage == "caller arm")
+    assert(caller.getSuppressed.exists(e =>
+      e.isInstanceOf[org.apache.spark.SparkException] && e.getMessage.contains("cancelled")),
+      caller.getSuppressed.map(_.toString).mkString("\n"))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.spark.{CorpusGen, Pipeline, Queries}
+import graft.spark.{CorpusGen, CosSim6D, CosSim6F, InterSize, Pipeline, Queries}
 
 /** Physical-plan assertions: the plans the engine is supposed to produce at
   * scale — broadcasts for dimension joins, no shuffle in the extraction
@@ -145,6 +145,23 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(s.collect { case e: ShuffleExchangeExec => e }.isEmpty,
         s"index side shuffled:\n${s.toString.take(2000)}")
     assert(!plan.toString.contains("CartesianProduct"), plan.toString.take(3000))
+  }
+
+  test("near-dup verify generates code (d11's intersect in a codegen stage, no UDF)") {
+    // the pair-kernel counterpart of ExtensionsSpec's extract_text codegen
+    // check: the verify must stay in generated code, not behind a UDF
+    val df = Queries.queries("d11_incremental_dedup")(spark, sfDir)
+    assert(df.collect().nonEmpty)
+    // after execution: AQE's final plan, not the initial one it also prints
+    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val verify = plan.linesIterator.filter(_.contains("inter_size(")).toSeq
+    assert(verify.nonEmpty && verify.forall(_.contains("*(")), plan)
+    assert("""UDF\([^)]*\bhs_[ab]#""".r.findFirstIn(plan).isEmpty, plan)
+    // the pair kernels implement doGenCode: none may be the interpreted
+    // CodegenFallback escape hatch
+    for (c <- Seq(classOf[InterSize], classOf[CosSim6F], classOf[CosSim6D]))
+      assert(!classOf[org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback]
+        .isAssignableFrom(c), c.getName)
   }
 
   test("fluency model joins by broadcast; sampler is row-local (t10, t8)") {
