@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -51,17 +51,11 @@ object Pipeline {
     * larger rows are counted as errors instead of risking executor OOM. */
   val MaxPayloadBytes: Int = 512 << 20
 
-  /** The per-row kernel: format dispatch on the same codepath. */
-  def extractRow(url: String, html: Array[Byte], textCol: String, geom: Boolean): ExtractedDoc =
-    extractRowMode(url, html, textCol, if (geom) "geom" else "tagged")
-
-  /** Mode: tagged (default, structure tree with geometry fallback), geom
-    * (pure glyph layout), legacy (stream-order extractor). */
-  def extractRowMode(url: String, html: Array[Byte], textCol: String, mode: String): ExtractedDoc =
-    extractRowMode(url, html, textCol, mode, MaxPayloadBytes)
-
+  /** The per-row kernel: format dispatch on the same codepath. Mode:
+    * tagged (default, structure tree with geometry fallback), geom (pure
+    * glyph layout), legacy (stream-order extractor). */
   def extractRowMode(url: String, html: Array[Byte], textCol: String, mode: String,
-      maxPayloadBytes: Int): ExtractedDoc = {
+      maxPayloadBytes: Int = MaxPayloadBytes): ExtractedDoc = {
     val t0 = System.nanoTime()
     def done(mode: String, ok: Boolean, err: String, text: String, pages: Int): ExtractedDoc =
       ExtractedDoc(url, text, mode, ok, err, pages, if (text == null) 0 else text.length,
@@ -107,27 +101,23 @@ object Pipeline {
     * per-document caches partition-local; no shuffle is introduced at all —
     * extraction is embarrassingly parallel and writes can stay
     * shuffle-free. Skew from giant PDFs is bounded by MaxPayloadBytes and
-    * surfaced via kernelMicros in the metrics. Optional `saltPartitions`
-    * redistributes rows by url hash (deterministic) when the source file
-    * layout is skewed (e.g. crawl segments of wildly different row counts).
+    * surfaced via kernelMicros in the metrics. When the source file layout
+    * is skewed (crawl segments of wildly different row counts) the caller
+    * salts the input first, e.g. `repartition(n, pmod(xxhash64(url), n))`,
+    * or places giants with [[sizeWeightedRepartition]].
     */
-  def extract(spark: SparkSession, input: DataFrame,
-      geom: Boolean = false, saltPartitions: Int = 0): Dataset[ExtractedDoc] =
-    extractMode(spark, input, if (geom) "geom" else "tagged", saltPartitions)
-
-  def extractMode(spark: SparkSession, input: DataFrame,
-      mode: String, saltPartitions: Int = 0): Dataset[ExtractedDoc] = {
+  def extractMode(spark: SparkSession, input: DataFrame, mode: String): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    val pruned = input.select(col("url"), col("html"), col("text"))
-    val redistributed =
-      if (saltPartitions > 0) pruned.repartition(saltPartitions, pmod(xxhash64(col("url")), lit(saltPartitions)))
-      else pruned
-    redistributed
+    input.select(col("url"), col("html"), col("text"))
       .as[(String, Array[Byte], String)]
       .mapPartitions { iter =>
         iter.map { case (url, html, text) => extractRowMode(url, html, text, mode) }
       }
   }
+
+  /** [[extractMode]] in the default tagged mode. */
+  def extract(spark: SparkSession, input: DataFrame): Dataset[ExtractedDoc] =
+    extractMode(spark, input, "tagged")
 
   /** Byte-size-weighted redistribution for heavy-tailed corpora
     * (SURVEY §4.1): hash salting gives every giant an independent uniform
@@ -186,163 +176,6 @@ object Pipeline {
       .repartitionByRange(giantSlots, col("giant_slot"))
       .drop("giant_slot")
     smalls.unionByName(giants)
-  }
-
-  /** Intra-document parallelism for GIANT PDFs: a 100k-page document is a
-    * single task under row-level parallelism — the one skew unit that
-    * placement (sizeWeightedRepartition) cannot shrink. Geometry-mode
-    * layout composes per page (geomText = per-page pageLinesRaw -> one
-    * document assembly), so giants split into page-RANGE chunks that
-    * extract in parallel tasks and reassemble byte-identically:
-    *
-    *   1. a skinny planning pass opens each PDF just far enough to count
-    *      pages (xref + page tree — no content streams);
-    *   2. giants (pages > giantThresholdPages) explode into chunk rows and
-    *      re-join the payload (the byte duplication per chunk is the price
-    *      of intra-doc parallelism — chunks re-open the doc and interpret
-    *      only their page range). Every re-open re-parses the xref + page
-    *      tree, a cost that grows WITH the document, so the chunk COUNT is
-    *      capped at maxChunksPerDoc (one per task slot, not one per 64
-    *      pages): measured here, a fixed small chunk size made a 40k-page
-    *      giant 17x SLOWER (625 re-opens), while capped chunking amortizes
-    *      the open against pages/maxChunks pages of kernel work;
-    *   3. serialized per-page PageLines shuffle by url and one assembly
-    *      task per giant runs the cross-page layout (header/footer strip,
-    *      paragraph merge) over the ordered concatenation — the exact
-    *      computation geomText runs, hence byte-identical output;
-    *   4. non-giants take the ordinary row-parallel geom path.
-    *
-    * On a real corpus you would read `pages` from table metadata and skip
-    * the planning pass entirely.
-    *
-    * WHEN TO USE — measured honestly (BENCH/BASELINE.md, 201 docs, one
-    * giant, local[16]): for THIS kernel (~0.15 ms/page) the chunked path
-    * is a PESSIMIZATION at every size tried — 2.5s vs 0.9s wall at 4,000
-    * pages and 16.4s vs 7.1s at 40,000 — because re-parsing the xref/page tree
-    * per chunk plus shipping serialized PageLines outweighs the page work
-    * it parallelizes. It pays off when per-page cost dwarfs both (an
-    * OCR/vision stage at ~100 ms/page: 1,250 pages of kernel per chunk vs
-    * a 0.5 s re-open). The default pipeline answer to giant-PDF skew
-    * remains row-level parallelism + scan-split/size-weighted placement
-    * (BENCH/BASELINE.md); this operator exists for the expensive-kernel
-    * regime and is pinned byte-identical so swapping it in is safe. */
-  /** One page-range chunk of a giant PDF -> serialized PageLines list. */
-  private def doChunk(html: Array[Byte], from: Int, until: Int): Either[String, Array[Byte]] =
-    DocStructure.openDocument(html, None) match {
-      case Left(e) => Left(e.render)
-      case Right(doc) => DocStructure.pageRefs(doc) match {
-        case Left(e) => Left(e.render)
-        case Right(refs) =>
-          val layouts = new scala.collection.mutable.ListBuffer[Layout.PageLines]
-          var err: String = null
-          for (ref <- refs.slice(from, until) if err == null)
-            Interp.interpretPageItems(doc, ref) match {
-              case Right(items) => layouts += Layout.pageLinesRaw(items)
-              case Left(e) => err = e.render
-            }
-          if (err != null) Left(err)
-          else {
-            val baos = new java.io.ByteArrayOutputStream()
-            val oos = new java.io.ObjectOutputStream(baos)
-            oos.writeObject(layouts.toList)
-            oos.close()
-            Right(baos.toByteArray)
-          }
-      }
-    }
-
-  def extractGeomChunked(spark: SparkSession, input: DataFrame,
-      maxChunksPerDoc: Int = 32, giantThresholdPages: Int = 256): Dataset[ExtractedDoc] = {
-    import spark.implicits._
-    require(maxChunksPerDoc > 0)
-    val pruned = input.select(col("url"), col("html"), col("text"))
-    // 1. skinny plan: page count per PDF row (no content interpretation)
-    val planned = pruned.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, html) =>
-        val payload = if (html == null) Array.emptyByteArray else html
-        val pages =
-          // over-cap payloads are NOT giants: they fall through to the
-          // ordinary path, which emits the same "payload too large" error
-          // row as extractRowMode — the decode-bomb cap and the
-          // byte-identical contract both hold on the chunked path
-          if (payload.length > MaxPayloadBytes || !Html.looksLikePdf(payload)) -1
-          else
-            try DocStructure.openDocument(payload, None) match {
-              case Right(doc) => DocStructure.pageRefs(doc).map(_.length).getOrElse(0)
-              case Left(_) => -1
-            } catch { case _: Throwable => -1 } // total: plan failures take the row path
-        (url, pages)
-      }).toDF("url", "pages")
-    // the skinny planning output feeds both the chunk build and the
-    // left-anti "rest" join — materialize it or the full-corpus planning
-    // parse runs once per consumer. localCheckpoint, NOT cache: cache()
-    // registers in the session's CacheManager and is never released unless
-    // explicitly unpersisted (repeat invocations in a long-lived session
-    // would accumulate storage), while checkpoint blocks are dropped by the
-    // ContextCleaner as soon as the returned Dataset is unreferenced.
-    // (Cluster caveat: localCheckpoint forfeits lineage recovery — under
-    // dynamic allocation / preemption a lost executor fails the job. The
-    // giant-plan table is tiny; a cluster run would read page counts from
-    // table metadata instead, as noted above.)
-    val giantUrls = planned.filter(col("pages") > giantThresholdPages)
-      // per-doc chunk size: pages/maxChunks, floored at half the giant
-      // threshold so a barely-giant doc still amortizes its re-opens
-      .withColumn("cp", greatest(ceil(col("pages") / lit(maxChunksPerDoc)),
-        lit(math.max(giantThresholdPages / 2, 1))).cast("int"))
-      .localCheckpoint(true)
-    // 2. chunk rows (url, from, until) joined back to the payload
-    val chunks = giantUrls
-      .select(col("url"), explode(sequence(lit(0),
-        floor((col("pages") - 1) / col("cp")).cast("int"))).as("chunk"),
-        col("pages"), col("cp"))
-      .join(pruned.select(col("url"), col("html")), Seq("url"))
-      .select(col("url"), col("chunk"), col("pages"), col("cp"), col("html"))
-    // 3. per-chunk PageLines, then one assembly per giant
-    val chunkRows = chunks
-      .as[(String, Int, Int, Int, Array[Byte])]
-      .mapPartitions(_.map { case (url, chunk, pages, chunkPages, html) =>
-        val from = chunk * chunkPages
-        val until = math.min(pages, from + chunkPages)
-        val blobOrErr: Either[String, Array[Byte]] =
-          try doChunk(html, from, until)
-          catch { case t: Throwable => // totality: one bad payload = one error row
-            Left(s"chunk extraction failed: ${t.getClass.getSimpleName}")
-          }
-        (url, chunk, pages, blobOrErr.toOption.orNull, blobOrErr.left.toOption.orNull)
-      })
-      .toDF("url", "chunk", "pages", "blob", "err")
-    val giantDocs = chunkRows
-      .groupByKey(r => r.getString(0))(Encoders.STRING)
-      .mapGroups { (url, rows) =>
-        val t0 = System.nanoTime()
-        try {
-          val sorted = rows.toArray.sortBy(_.getInt(1))
-          val pages = sorted.head.getInt(2)
-          val firstErr = sorted.find(_.getString(4) != null).map(_.getString(4))
-          firstErr match {
-            case Some(e) => ExtractedDoc(url, null, "error", ok = false, e, pages, 0,
-              (System.nanoTime() - t0) / 1000)
-            case None =>
-              val layouts = sorted.toList.flatMap { r =>
-                val ois = new java.io.ObjectInputStream(
-                  new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](3)))
-                try ois.readObject().asInstanceOf[List[Layout.PageLines]]
-                finally ois.close()
-              }
-              val text = Layout.layoutDocumentFromPageLines(Layout.defaultOptions, layouts)
-              ExtractedDoc(url, text, "pdf-geom", ok = true, "", pages, text.length,
-                (System.nanoTime() - t0) / 1000)
-          }
-        } catch { case t: Throwable => // totality: assembly failures become error rows
-          ExtractedDoc(url, null, "error", ok = false,
-            s"chunk assembly failed: ${t.getClass.getSimpleName}", 0, 0,
-            (System.nanoTime() - t0) / 1000)
-        }
-      }
-    // 4. everything that is not a chunked giant takes the ordinary path
-    val rest = pruned.join(broadcast(giantUrls.select("url")), Seq("url"), "left_anti")
-    extractMode(spark, rest, "geom").unionByName(giantDocs)
   }
 
   /** Attach decode counters (docs, ok, decode failures, chars, kernel
@@ -1066,18 +899,12 @@ object Surfaces {
     * source (Kafka/files) and an Iceberg sink. */
   def streamingExtract(spark: SparkSession, corpusDir: String, queryName: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(corpusDir).schema
-    val stream = spark.readStream.schema(schema).parquet(corpusDir)
-    val extracted = stream.select(col("url"), col("html"), col("text"))
-      .as[(String, Array[Byte], String)]
-      .map { case (url, html, text) => Pipeline.extractRow(url, html, text, geom = false) }
-    val q = extracted.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streaming.runToMemory(corpusDir, queryName) { dir =>
+      Streaming.parquetReader(spark, dir).parquet(dir)
+        .select(col("url"), col("html"), col("text"))
+        .as[(String, Array[Byte], String)]
+        .map { case (url, html, text) => Pipeline.extractRowMode(url, html, text, "tagged") }
+    }
     spark.table(queryName)
   }
 }
@@ -1087,65 +914,74 @@ object Surfaces {
   * analogues a training-data pipeline needs next to the stateless
   * extraction stream. */
 object Streaming {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+  import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout,
+    OutputMode, StreamingQuery, Trigger}
   import scala.jdk.CollectionConverters._
 
-  /** State-store provider switch (verdict r5 item 4): by default the
-    * streaming queries run on the built-in HDFS-backed provider; setting
-    * SPARK_GRAFT_STATE_STORE=rocksdb runs every streaming query on
-    * RocksDBStateStoreProvider — the cluster configuration, where state
-    * lives off-heap and survives executor GC pressure — on an ISOLATED
-    * child session (mutating the caller's conf would leak the provider
-    * into unrelated queries). The same oracles must stay green either
-    * way; the RocksDB gate run is recorded in BENCH/BASELINE.md. */
   /** Streaming state-partition sizing (round 7, guide §2.2 + §5): a
     * stateful micro-batch pays one state-store open/commit PER SHUFFLE
     * PARTITION regardless of data volume, so partitions must be sized to
     * STATE VOLUME, not inherited from the batch session (x22 measured
     * 8s -> ~3s going 32 -> 8 in round 5; round 7 applies the same sizing
-    * to every stream). Parameterized via SPARK_GRAFT_STREAM_SHUFFLE —
-    * never hard-coded to the local core count; a cluster sets it to
-    * state rows / target-rows-per-store. Partition count does not change
-    * any result: aggregations/sessionization are keyed, and every
-    * streaming query ends in a deterministic total-order sort. */
-  private[graft] def streamShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(_.toInt).getOrElse(8)
+    * to every stream). On a cluster this is state rows /
+    * target-rows-per-store. Partition count does not change any result:
+    * aggregations/sessionization are keyed, and every streaming query
+    * ends in a deterministic total-order sort. */
+  private val StreamShufflePartitions = 8
 
   /** Every stream runs on an ISOLATED child session (newSession shares
     * the SparkContext but owns its SQLConf + temp-view catalog): the
-    * shuffle-partition sizing above — and, under the
-    * SPARK_GRAFT_STATE_STORE=rocksdb switch (verdict r5 item 4), the
-    * RocksDBStateStoreProvider — must not leak into the caller's
-    * session, where they would reshape concurrently planned batch
-    * queries. The same oracles stay green either way; the RocksDB gate
-    * run is recorded in BENCH/BASELINE.md. */
+    * shuffle-partition sizing above must not leak into the caller's
+    * session, where it would reshape concurrently planned batch queries.
+    * The state-store provider is Spark's own key,
+    * `spark.sql.streaming.stateStore.providerClass`, taken from the
+    * caller's conf (`--conf`, `-Dspark.…` or set on the calling session):
+    * RocksDBStateStoreProvider is the cluster configuration, where state
+    * lives off-heap and survives executor GC pressure. The same oracles
+    * stay green on either provider; the RocksDB gate run is recorded in
+    * BENCH/BASELINE.md. */
   private[graft] def streamSession(spark0: SparkSession): SparkSession = {
     val s = spark0.newSession()
-    // newSession resets runtime conf to the context defaults — inherit the
-    // caller's state-store provider choice (SurfacesSpec's RocksDB gate
-    // sets it on the calling session)
+    // newSession resets runtime conf to the context defaults — inherit a
+    // provider choice made on the calling session (SurfacesSpec's RocksDB
+    // gate sets it there)
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     spark0.conf.getOption(providerKey).foreach(s.conf.set(providerKey, _))
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions.toString)
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").exists(_.equalsIgnoreCase("rocksdb"))) {
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      System.err.println("[graft] streaming state store: RocksDBStateStoreProvider")
-    }
+    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
     s
   }
 
-  /** The file stream source needs a directory; single-file tables are
-    * copied into a temp dir. */
-  private def streamDir(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isDirectory(p)) path
-    else {
-      val dir = java.nio.file.Files.createTempDirectory("stream_src")
-      java.nio.file.Files.copy(p, dir.resolve(p.getFileName))
-      dir.toString
+  /** A stream reader for the parquet table at `dir`, carrying the table's
+    * schema (a file source needs it up front). */
+  private[spark] def parquetReader(spark: SparkSession, dir: String): DataStreamReader =
+    spark.readStream.schema(spark.read.parquet(dir).schema)
+
+  /** The one stream runner: runs `plan` over the parquet table at `source`
+    * as an AvailableNow stream into the memory table `queryName` and
+    * returns the finished query. The file source needs a directory, so a
+    * single-file table is copied into a `stream_src*` temp dir for the
+    * run; the copy is deleted once the query has terminated (the memory
+    * sink holds the output, nothing reads the copy afterwards). */
+  private[spark] def runToMemory(source: String, queryName: String,
+      mode: OutputMode = OutputMode.Append())(plan: String => Dataset[_]): StreamingQuery = {
+    import java.nio.file.Files
+    val src = java.nio.file.Paths.get(source)
+    val copy = if (Files.isDirectory(src)) None else Some(Files.createTempDirectory("stream_src").toFile)
+    try {
+      val dir = copy.fold(source) { d => Files.copy(src, d.toPath.resolve(src.getFileName)); d.toString }
+      val q = plan(dir).writeStream
+        .format("memory")
+        .queryName(queryName)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q
+    } finally copy.foreach { dir =>
+      dir.listFiles().foreach(_.delete())
+      dir.delete()
     }
   }
 
@@ -1153,8 +989,7 @@ object Streaming {
     * 10-minute watermark. Exposed un-started so tests can assert the
     * EventTimeWatermark node is in the plan (the state-eviction contract). */
   def windowedEventCountsPlan(spark: SparkSession, eventsDir: String): DataFrame = {
-    val schema = spark.read.parquet(eventsDir).schema
-    spark.readStream.schema(schema).parquet(eventsDir)
+    parquetReader(spark, eventsDir).parquet(eventsDir)
       .withColumn("ts", col("ts").cast("timestamp")) // NTZ -> event-time type
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -1173,16 +1008,9 @@ object Streaming {
     * retain every window ever seen: a state-store OOM at 100 TB.) Windows
     * still inside the final watermark stay in state and are not emitted —
     * the price of eviction on a finite run. */
-  def windowedEventCounts(spark0: SparkSession, eventsDir0: String, queryName: String): DataFrame = {
+  def windowedEventCounts(spark0: SparkSession, eventsDir: String, queryName: String): DataFrame = {
     val spark = streamSession(spark0)
-    val eventsDir = streamDir(eventsDir0)
-    val q = windowedEventCountsPlan(spark, eventsDir).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToMemory(eventsDir, queryName)(windowedEventCountsPlan(spark, _))
     spark.table(queryName)
   }
 
@@ -1194,24 +1022,17 @@ object Streaming {
     * time — constant state on an unbounded stream, unlike a plain
     * dropDuplicates whose key set grows forever (the same bounded-state
     * contract as the windowed counts and sessions). */
-  def dedupedEventStream(spark0: SparkSession, eventsDir0: String, queryName: String): DataFrame = {
+  def dedupedEventStream(spark0: SparkSession, eventsDir: String, queryName: String): DataFrame = {
     val spark = streamSession(spark0)
-    val eventsDir = streamDir(eventsDir0)
-    val schema = spark.read.parquet(eventsDir).schema
-    def src = spark.readStream.schema(schema).parquet(eventsDir)
-      .select(col("event_id").cast("long").as("event_id"),
-        col("ts").cast("timestamp").as("ts"), col("event_type"))
-    val redelivered = src.unionByName(src.filter(pmod(col("event_id"), lit(7)) === 0))
-    val q = redelivered
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToMemory(eventsDir, queryName) { dir =>
+      val reader = parquetReader(spark, dir)
+      def src = reader.parquet(dir)
+        .select(col("event_id").cast("long").as("event_id"),
+          col("ts").cast("timestamp").as("ts"), col("event_type"))
+      src.unionByName(src.filter(pmod(col("event_id"), lit(7)) === 0))
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark("event_id")
+    }
     spark.table(queryName)
   }
 
@@ -1223,35 +1044,25 @@ object Streaming {
     * stream-stream join would buffer both streams forever). Inner join:
     * matches emit as soon as both rows have arrived; the watermark only
     * gates state cleanup. */
-  def attributedPurchases(spark0: SparkSession, eventsDir0: String, queryName: String): DataFrame = {
+  def attributedPurchases(spark0: SparkSession, eventsDir: String, queryName: String): DataFrame = {
     // isolated child session with state-sized shuffle partitions
     // (streamSession — the r5 measurement that motivated the sizing,
-    // 8s -> ~3s at 8 vs 32, was made on this query)
+    // 8s -> ~3s at 8 vs 32, was made on this query; the partition count
+    // is pinned at stream START and baked into the checkpoint)
     val spark = streamSession(spark0)
-    val eventsDir = streamDir(eventsDir0)
-    val schema = spark.read.parquet(eventsDir).schema
-    def src(tpe: String, alias: String) = spark.readStream.schema(schema).parquet(eventsDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").cast("long").as(s"${alias}_user"),
-        col("ts").cast("timestamp").as(s"${alias}_ts"),
-        col("event_id").cast("long").as(s"${alias}_id"))
-      .withWatermark(s"${alias}_ts", "10 minutes")
-    val joined = src("click", "c").join(src("purchase", "p"),
-      col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("interval 1 hour"))
-    // state-partition sizing now lives in streamSession (the shuffle
-    // partition count is pinned at stream START and baked into the
-    // checkpoint, so sizing it on the stream's own session is the
-    // real-world move — on a cluster you size it to state volume, not
-    // to the session default)
-    val q = joined.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToMemory(eventsDir, queryName) { dir =>
+      val reader = parquetReader(spark, dir)
+      def src(tpe: String, alias: String) = reader.parquet(dir)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").cast("long").as(s"${alias}_user"),
+          col("ts").cast("timestamp").as(s"${alias}_ts"),
+          col("event_id").cast("long").as(s"${alias}_id"))
+        .withWatermark(s"${alias}_ts", "10 minutes")
+      src("click", "c").join(src("purchase", "p"),
+        col("c_user") === col("p_user") &&
+          col("p_ts") >= col("c_ts") &&
+          col("p_ts") <= col("c_ts") + expr("interval 1 hour"))
+    }
     spark.table(queryName)
   }
 
@@ -1272,27 +1083,20 @@ object Streaming {
     * (doc_b, cluster_old) — the matched documents and their oldest
     * matching index doc. */
   def incrementalDedupPairs(spark0: SparkSession, idxTable: String,
-      deltaDir0: String, queryName: String): DataFrame = {
+      deltaDir: String, queryName: String): DataFrame = {
     val spark = streamSession(spark0)
-    val deltaDir = streamDir(deltaDir0)
-    val schema = spark.read.parquet(deltaDir).schema
-    val stream = spark.readStream.schema(schema).parquet(deltaDir)
     // Broadcasting the DELTA side (delta-proportional by definition) runs
     // the verify over the bucketed index scan's full parallelism —
     // streaming plans have no AQE, and the default choice broadcast the
     // static index instead, leaving the verify on however few partitions
     // the micro-batch's files mapped to.
-    val q = Queries.verifiedNearDups(Queries.bandedSigs(Queries.sigKeyed(stream)),
-        spark.table(idxTable))((p, i) => broadcast(p).join(i, "band"))
-      .groupBy(col("doc_b"))
-      .agg(min(col("doc_a")).as("cluster_old"))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToMemory(deltaDir, queryName, OutputMode.Complete()) { dir =>
+      val stream = parquetReader(spark, dir).parquet(dir)
+      Queries.verifiedNearDups(Queries.bandedSigs(Queries.sigKeyed(stream)),
+          spark.table(idxTable))((p, i) => broadcast(p).join(i, "band"))
+        .groupBy(col("doc_b"))
+        .agg(min(col("doc_a")).as("cluster_old"))
+    }
     spark.table(queryName)
   }
 
@@ -1328,69 +1132,60 @@ object Streaming {
     * a KMV sketch, exact below K), and the key count is bounded by
     * event-time eviction. Batch inserts go through Kmv.bulkAdd (one
     * sort + merge per session per micro-batch), not copy-on-insert. */
-  def userSessions(spark0: SparkSession, eventsDir0: String, queryName: String,
+  def userSessions(spark0: SparkSession, eventsDir: String, queryName: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val spark = streamSession(spark0)
     import spark.implicits._
-    val eventsDir = streamDir(eventsDir0)
-    val schema = spark.read.parquet(eventsDir).schema
-    val reader0 = spark.readStream.schema(schema)
-    val reader = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(eventsDir)
-      .select(col("user_id").cast("long"), col("ts").cast("timestamp").as("ts"), col("event_type"))
-      .withWatermark("ts", "10 minutes")
-      .as[(Long, java.sql.Timestamp, String)]
-    val sessions = stream
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, java.sql.Timestamp, java.sql.Timestamp, Array[Long]), UserSession](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String)],
-         state: GroupState[(Long, java.sql.Timestamp, java.sql.Timestamp, Array[Long])]) =>
-          if (state.hasTimedOut) {
-            // watermark passed last activity + gap: finalize and DROP the key
-            val (n, first, last, kmv) = state.get
-            state.remove()
-            Iterator.single(UserSession(user, n, first, last, Kmv.estimate(kmv)))
-          } else {
-            var (n, first, last, kmv) = state.getOption.getOrElse(
-              (0L, null: java.sql.Timestamp, null: java.sql.Timestamp, Array.emptyLongArray))
-            val out = new scala.collection.mutable.ListBuffer[UserSession]
-            val pending = new scala.collection.mutable.ArrayBuffer[Long](64)
-            def flushKmv(): Unit =
-              if (pending.nonEmpty) { kmv = Kmv.bulkAdd(kmv, pending.toArray); pending.clear() }
-            // ts order makes the session split a pure event-time fact
-            for ((_, ts, tpe) <- rows.toArray.sortBy(_._2.getTime)) {
-              if (last != null && ts.getTime - last.getTime > SessionGapMs) {
-                // event-time gap: close the current session NOW (batch
-                // boundaries play no part in where sessions split)
-                flushKmv()
-                out += UserSession(user, n, first, last, Kmv.estimate(kmv))
-                n = 0; first = null; last = null; kmv = Array.emptyLongArray
+    val q = runToMemory(eventsDir, queryName) { dir =>
+      val reader = parquetReader(spark, dir)
+      maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+        .parquet(dir)
+        .select(col("user_id").cast("long"), col("ts").cast("timestamp").as("ts"), col("event_type"))
+        .withWatermark("ts", "10 minutes")
+        .as[(Long, java.sql.Timestamp, String)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[(Long, java.sql.Timestamp, java.sql.Timestamp, Array[Long]), UserSession](
+          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+          (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String)],
+           state: GroupState[(Long, java.sql.Timestamp, java.sql.Timestamp, Array[Long])]) =>
+            if (state.hasTimedOut) {
+              // watermark passed last activity + gap: finalize and DROP the key
+              val (n, first, last, kmv) = state.get
+              state.remove()
+              Iterator.single(UserSession(user, n, first, last, Kmv.estimate(kmv)))
+            } else {
+              var (n, first, last, kmv) = state.getOption.getOrElse(
+                (0L, null: java.sql.Timestamp, null: java.sql.Timestamp, Array.emptyLongArray))
+              val out = new scala.collection.mutable.ListBuffer[UserSession]
+              val pending = new scala.collection.mutable.ArrayBuffer[Long](64)
+              def flushKmv(): Unit =
+                if (pending.nonEmpty) { kmv = Kmv.bulkAdd(kmv, pending.toArray); pending.clear() }
+              // ts order makes the session split a pure event-time fact
+              for ((_, ts, tpe) <- rows.toArray.sortBy(_._2.getTime)) {
+                if (last != null && ts.getTime - last.getTime > SessionGapMs) {
+                  // event-time gap: close the current session NOW (batch
+                  // boundaries play no part in where sessions split)
+                  flushKmv()
+                  out += UserSession(user, n, first, last, Kmv.estimate(kmv))
+                  n = 0; first = null; last = null; kmv = Array.emptyLongArray
+                }
+                n += 1
+                if (first == null || ts.before(first)) first = ts
+                if (last == null || ts.after(last)) last = ts
+                pending += Kmv.hash(tpe)
               }
-              n += 1
-              if (first == null || ts.before(first)) first = ts
-              if (last == null || ts.after(last)) last = ts
-              pending += Kmv.hash(tpe)
+              flushKmv()
+              state.update((n, first, last, kmv))
+              // the timeout must sit strictly past the current watermark
+              state.setTimeoutTimestamp(
+                math.max(state.getCurrentWatermarkMs() + 1, last.getTime + SessionGapMs))
+              // running snapshot of the open session (its final row wins the
+              // per-(user, firstTs) max in consumers)
+              out += UserSession(user, n, first, last, Kmv.estimate(kmv))
+              out.iterator
             }
-            flushKmv()
-            state.update((n, first, last, kmv))
-            // the timeout must sit strictly past the current watermark
-            state.setTimeoutTimestamp(
-              math.max(state.getCurrentWatermarkMs() + 1, last.getTime + SessionGapMs))
-            // running snapshot of the open session (its final row wins the
-            // per-(user, firstTs) max in consumers)
-            out += UserSession(user, n, first, last, Kmv.estimate(kmv))
-            out.iterator
-          }
-      }
-    val q = sessions.toDF().writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        }
+    }
     lastSessionStateRows = q.recentProgress.reverse
       .find(_.stateOperators.nonEmpty)
       .map(_.stateOperators(0).numRowsTotal)

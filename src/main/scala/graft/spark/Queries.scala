@@ -206,10 +206,22 @@ object Queries {
 
   private val cleanupRegistered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Delete a per-session bucketed-table dir when the JVM exits (normal
-    * exit covers test/Verify/bench runs; a kill -9 leaves at most one dir
-    * for the OS tmp reaper). Idempotent per path. */
-  private def registerBucketedCleanup(base: String): Unit =
+  /** Session-scoped scratch naming for a query's persisted tables:
+    * returns (sid, base), where `sid` = tag + PID + the session's
+    * identityHashCode suffixes the query's table names and `base` is the
+    * `java.io.tmpdir` dir holding their files. Re-invocations in one
+    * session overwrite in place (no accumulation), while two concurrent
+    * processes (sbt test and Verify) write disjoint names/paths instead of
+    * racing on one overwrite and reading a mix of each other's files. The
+    * PID is part of the suffix because identityHashCode is only unique
+    * within one JVM — cross-process disjointness needs it. Queries that
+    * may share one session take distinct tags. `base` is deleted when the
+    * JVM exits (normal exit covers test/Verify/bench runs; a kill -9
+    * leaves at most one dir for the OS tmp reaper). */
+  private def sessionScratch(spark: SparkSession, tag: String): (String, String) = {
+    val sid = s"${tag}_${ProcessHandle.current().pid()}_" +
+      java.lang.Integer.toHexString(System.identityHashCode(spark))
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_$sid"
     if (cleanupRegistered.add(base))
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
         def rm(f: java.io.File): Unit = {
@@ -219,6 +231,8 @@ object Queries {
         }
         rm(new java.io.File(base))
       }))
+    (sid, base)
+  }
 
   /** Run two INDEPENDENT Spark actions concurrently (guide §2.6): the
     * driver calling actions sequentially is the only reason they
@@ -270,20 +284,10 @@ object Queries {
       // (PlanSpec pins this). At 100 TB this is how a repeatedly-joined
       // fact pair amortizes its shuffle: pay the bucketed write once,
       // join shuffle-free forever after. Table names and location are
-      // scoped PER SESSION: re-invocations in one session overwrite in
-      // place (no accumulation), while two concurrent processes (sbt test
-      // and Verify) write disjoint names/paths instead of racing on one
-      // overwrite and reading a mix of each other's bucket files. The PID
-      // is part of the suffix because identityHashCode is only unique
-      // within one JVM — cross-process disjointness needs it.
-      val sid = ProcessHandle.current().pid().toString + "_" +
-        java.lang.Integer.toHexString(System.identityHashCode(spark))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_$sid"
-      val liTable = s"graft_li_bucketed_$sid"
-      val ordTable = s"graft_ord_bucketed_$sid"
-      // per-session paths would otherwise leak one table copy into /tmp per
-      // JVM (the gates run many): this JVM deletes its own dir on exit
-      registerBucketedCleanup(base)
+      // scoped PER SESSION (sessionScratch).
+      val (sid, base) = sessionScratch(spark, "bucketed")
+      val liTable = s"graft_li_$sid"
+      val ordTable = s"graft_ord_$sid"
       // round 7: pre-partition each write by its bucket key into the
       // bucket count (repartition and bucketBy share Murmur3 hash
       // partitioning, so every writer task holds exactly one bucket) —
@@ -344,36 +348,16 @@ object Queries {
   private val duckTokenHash =
     "list_reduce(list_prepend(CAST(7 AS BIGINT), [CAST(ord(t[i:i]) AS BIGINT) for i in range(1, len(t)+1)]), (a, b) -> (a*31 + b) % 1000000007)"
 
-  /** 60-bit 8-token shingle key over a per-row token-hash array `th`
-    * (d8 substring-dup + d9 decontamination): two independent rolling
-    * folds mod 1e9+7 combined into one long. Both engines compute the SAME
-    * key, so a hash collision merges the same shingles on both sides —
-    * parity stays exact by construction — and the shuffle moves longs, not
-    * ~50-char strings. Kept in ONE place (with [[duckShingle]]) because
-    * the arithmetic must match the oracle digit for digit. */
-  private[graft] def shingleGramsCol: Column = {
-    def roll(m: Long)(i: Column) =
-      aggregate(slice(col("th"), i, lit(8)), lit(7L),
-        (a, x) => pmod(a * m + x, lit(1000000007L)))
-    when(size(col("th")) >= 8,
-      array_distinct(transform(sequence(lit(1), size(col("th")) - 7),
-        i => roll(131)(i) * 1000000007L + roll(137)(i))))
-      .otherwise(array().cast("array<bigint>"))
-  }
-
-  /** DuckDB replay of [[shingleGramsCol]] for position `i` in list `th`. */
+  /** 60-bit 8-token shingle key at position `i` of a per-row token-hash
+    * list `th` (d8 substring-dup + d9 decontamination), DuckDB side: two
+    * independent rolling folds mod 1e9+7 combined into one long. Both
+    * engines compute the SAME key ([[shinglesUdf]] on the Spark side), so
+    * a hash collision merges the same shingles on both sides — parity
+    * stays exact by construction — and the shuffle moves longs, not
+    * ~50-char strings. */
   private val duckShingle =
     "list_reduce(list_prepend(CAST(7 AS BIGINT), th[i:i+7]), (a, b) -> (a*131 + b) % 1000000007) * 1000000007 " +
       "+ list_reduce(list_prepend(CAST(7 AS BIGINT), th[i:i+7]), (a, b) -> (a*137 + b) % 1000000007)"
-
-  /** Row-local distinct-token array (whitespace split, empties dropped). */
-  private[graft] def toksCol: Column =
-    array_distinct(filter(split(col("text"), "\\s+"), x => length(x) > 0))
-
-  /** Row-local minhash permutation: min over the token-hash array of
-    * (x*a + b) mod p — a per-row fold, shuffle-free by construction. */
-  private[graft] def minPerm(xs: Column, a: Long, b: Long): Column =
-    array_min(transform(xs, x => pmod(x * a + b, lit(1000000007L))))
 
   // ---------- round-7 compiled kernels for the token-hash pipeline ----------
   // Optimization round (guide §1.2 step 2, per-task work): the dedup/text
@@ -417,7 +401,7 @@ object Queries {
       h
     }
 
-    /** transform(toksCol, tokenHashCol): hashes of the DISTINCT tokens in
+    /** Hashes of the DISTINCT whitespace-split tokens in
       * first-occurrence order. Distinctness is by token STRING — colliding
       * hashes stay duplicated, exactly like the expression form. */
     def distinctTokenHashes(text: String): Array[Long] = {
@@ -515,10 +499,11 @@ object Queries {
       }
     })
 
-  /** shingleGramsCol over the in-order token-hash array: distinct 60-bit
+  /** Shingles over the in-order token-hash array: distinct 60-bit
     * 8-token shingle keys (roll131 * p + roll137), first-occurrence order,
     * empty below 8 tokens — byte-identical values to the expression form
-    * (the oracle replays the same folds). */
+    * KernelParitySpec pins (the oracle replays the same folds,
+    * [[duckShingle]]). */
   private[graft] val shinglesUdf = udf((text: String) =>
     if (text == null) Array.empty[Long]
     else {
@@ -1226,50 +1211,38 @@ object Queries {
       // corpus).
       var changed = 1L
       var iter = 0
-      def dbg(m: => String): Unit =
-        if (sys.env.contains("GRAFT_D10_DEBUG"))
-          System.err.println(s"[d10] $m t=${System.nanoTime() / 1000000}")
-      dbg("start")
-      locally {
-        dbg(s"sig=${sig.count()}")
-        dbg(s"withReps=${withReps.count()}")
-        dbg(s"edges=${edges.count()}")
-        dbg(s"labels=${labels.count()}")
-        while (changed > 0 && iter < 15) {
-          val nbr = edges.join(labels, edges("dst") === labels("v"))
-            .groupBy(edges("src")).agg(min(labels("lbl")).as("nlbl"))
-          // lbl0 = the ROUND-INPUT label: convergence must be measured
-          // against it, not against the hop output — a round where the hop
-          // progresses but halving adds nothing would otherwise read as
-          // "no change" and exit with non-converged labels, silently
-          // (the require below would pass)
-          val hop = labels.join(nbr, labels("v") === nbr("src"), "left")
-            .select(labels("v").as("v"), labels("lbl").as("lbl0"),
-              least(labels("lbl"), coalesce(col("nlbl"), labels("lbl"))).as("lbl"))
-          // path halving: adopt the label of one's current label
-          val l2 = hop.select(col("v").as("v2"), col("lbl").as("lbl2"))
-          // localCheckpoint TRUNCATES the logical lineage (cache alone does
-          // not — cached plans substitute only at physical planning, so the
-          // halving self-join doubled the ANALYZED plan tree per round and
-          // analysis time grew exponentially: measured 2.7s -> 11.5s per
-          // round on a 102-vertex graph). Round 7: ONE eager checkpoint per
-          // round (was cache -> count -> second materialization into the
-          // checkpoint); the convergence count then reads the materialized
-          // rows for near-free — halves the per-round job count.
-          val next = hop.join(l2, hop("lbl") === l2("v2"), "left")
-            .select(hop("v"), hop("lbl0"),
-              least(hop("lbl"), coalesce(col("lbl2"), hop("lbl"))).as("nl"))
-            .localCheckpoint(true)
-          changed = next.filter(col("nl") < col("lbl0")).count()
-          val newLabels = next.select(col("v"), col("nl").as("lbl"))
-          labels.unpersist(false)
-          labels = newLabels
-          iter += 1
-          dbg(s"iter=$iter changed=$changed")
-        }
+      while (changed > 0 && iter < 15) {
+        val nbr = edges.join(labels, edges("dst") === labels("v"))
+          .groupBy(edges("src")).agg(min(labels("lbl")).as("nlbl"))
+        // lbl0 = the ROUND-INPUT label: convergence must be measured
+        // against it, not against the hop output — a round where the hop
+        // progresses but halving adds nothing would otherwise read as
+        // "no change" and exit with non-converged labels, silently
+        // (the require below would pass)
+        val hop = labels.join(nbr, labels("v") === nbr("src"), "left")
+          .select(labels("v").as("v"), labels("lbl").as("lbl0"),
+            least(labels("lbl"), coalesce(col("nlbl"), labels("lbl"))).as("lbl"))
+        // path halving: adopt the label of one's current label
+        val l2 = hop.select(col("v").as("v2"), col("lbl").as("lbl2"))
+        // localCheckpoint TRUNCATES the logical lineage (cache alone does
+        // not — cached plans substitute only at physical planning, so the
+        // halving self-join doubled the ANALYZED plan tree per round and
+        // analysis time grew exponentially: measured 2.7s -> 11.5s per
+        // round on a 102-vertex graph). Round 7: ONE eager checkpoint per
+        // round (was cache -> count -> second materialization into the
+        // checkpoint); the convergence count then reads the materialized
+        // rows for near-free — halves the per-round job count.
+        val next = hop.join(l2, hop("lbl") === l2("v2"), "left")
+          .select(hop("v"), hop("lbl0"),
+            least(hop("lbl"), coalesce(col("lbl2"), hop("lbl"))).as("nl"))
+          .localCheckpoint(true)
+        changed = next.filter(col("nl") < col("lbl0")).count()
+        val newLabels = next.select(col("v"), col("nl").as("lbl"))
+        labels.unpersist(false)
+        labels = newLabels
+        iter += 1
       }
       require(changed == 0, s"label propagation did not converge in $iter iterations")
-      dbg("loop done")
       // materialize the (small) assignment, then drop every intermediate
       // cache — a long-lived session would otherwise accumulate the
       // signature/edge partitions in executor storage memory across
@@ -1495,11 +1468,8 @@ object Queries {
       // The index is written BUCKETED BY band: the new<->old join reads it
       // co-partitioned with ZERO exchange — only the delta side shuffles
       // (PlanSpec pins this).
-      val sid = ProcessHandle.current().pid().toString + "_" +
-        java.lang.Integer.toHexString(System.identityHashCode(spark))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sigidx_$sid"
-      val idxTable = s"graft_sig_index_$sid"
-      registerBucketedCleanup(base)
+      val (sid, base) = sessionScratch(spark, "sigidx")
+      val idxTable = s"graft_index_$sid"
       // pass 1 (the standing corpus, paid once): persist the signature index
       // pass 2: the recrawl delta, constructed deterministically from the
       // documents table so DuckDB can replay it — exact re-crawls (%10=0),
@@ -1601,11 +1571,9 @@ object Queries {
       // against the STANDING corpus; intra-batch dups are the batch
       // compactor's job — so the oracle is d11's old_match half with
       // statuses {dup_old, new}.
-      val sid = ProcessHandle.current().pid().toString + "_x31_" +
-        java.lang.Integer.toHexString(System.identityHashCode(spark))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sigidx_$sid"
-      val idxTable = s"graft_sig_index_$sid"
-      registerBucketedCleanup(base)
+      // own tag: d11 and x31 never share an index within one session
+      val (sid, base) = sessionScratch(spark, "sigidx_x31")
+      val idxTable = s"graft_index_$sid"
       // index write and delta write are independent — overlap (guide §2.6)
       val deltaDir = s"$base/delta"
       inParallel(spark)(
@@ -1615,8 +1583,8 @@ object Queries {
       val pairs = graft.spark.Streaming.incrementalDedupPairs(spark, idxTable,
         deltaDir, "x31_" + java.lang.Long.toHexString(System.nanoTime()))
       // batch classification over the streamed pairs — rebuilt on the
-      // PAIRS' session (under the RocksDB env switch the stream ran on an
-      // isolated child session; mixing sessions in one plan is undefined)
+      // PAIRS' session (every stream runs on an isolated child session;
+      // mixing sessions in one plan is undefined)
       val s2 = pairs.sparkSession
       val best = pairs.select(col("doc_b").as("doc_id"), col("cluster_old"))
       // classification base = docs with >=1 token (sigKeyed), matching

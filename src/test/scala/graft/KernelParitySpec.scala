@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
@@ -111,16 +111,40 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     samples.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("doc_id", "text")
   }
 
+  // ---- the legacy expression forms the kernels replaced ----
+
+  /** Row-local distinct-token array (whitespace split, empties dropped). */
+  private def toksCol: Column =
+    array_distinct(filter(split(col("text"), "\\s+"), x => length(x) > 0))
+
+  /** Row-local minhash permutation: min over the token-hash array of
+    * (x*a + b) mod p. */
+  private def minPerm(xs: Column, a: Long, b: Long): Column =
+    array_min(transform(xs, x => pmod(x * a + b, lit(1000000007L))))
+
+  /** 60-bit 8-token shingle keys over the token-hash array `th`: two
+    * independent rolling folds mod 1e9+7 combined into one long (the
+    * arithmetic Queries.duckShingle replays in DuckDB). */
+  private def shingleGramsCol: Column = {
+    def roll(m: Long)(i: Column) =
+      aggregate(slice(col("th"), i, lit(8)), lit(7L),
+        (a, x) => pmod(a * m + x, lit(1000000007L)))
+    when(size(col("th")) >= 8,
+      array_distinct(transform(sequence(lit(1), size(col("th")) - 7),
+        i => roll(131)(i) * 1000000007L + roll(137)(i))))
+      .otherwise(array().cast("array<bigint>"))
+  }
+
   test("minhash signature kernel == legacy expression (d2/d5/d10 path)") {
     val legacy = df()
       .select(col("doc_id"),
-        transform(Queries.toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
+        transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
       .filter(size(col("xs")) > 0)
       .select(col("doc_id"),
-        Queries.minPerm(col("xs"), 1299721, 104729).as("mh0"),
-        Queries.minPerm(col("xs"), 7919, 7507).as("mh1"),
-        Queries.minPerm(col("xs"), 104183, 337).as("mh2"),
-        Queries.minPerm(col("xs"), 909091, 5861).as("mh3"))
+        minPerm(col("xs"), 1299721, 104729).as("mh0"),
+        minPerm(col("xs"), 7919, 7507).as("mh1"),
+        minPerm(col("xs"), 104183, 337).as("mh2"),
+        minPerm(col("xs"), 909091, 5861).as("mh3"))
       .orderBy("doc_id").collect().toSeq
     val kernel = df()
       .select(col("doc_id"), Queries.minSigUdf(col("text")).as("sig"))
@@ -133,14 +157,14 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("full signature kernel == legacy hs/band expressions (sigKeyed path)") {
     val legacy = df()
       .select(col("doc_id"),
-        transform(Queries.toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
+        transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
       .filter(size(col("xs")) > 0)
       .select(col("doc_id"),
         array_sort(array_distinct(col("xs"))).as("hs"),
-        md5(concat_ws(":", Queries.minPerm(col("xs"), 1299721, 104729),
-          Queries.minPerm(col("xs"), 7919, 7507))).as("band0"),
-        md5(concat_ws(":", Queries.minPerm(col("xs"), 104183, 337),
-          Queries.minPerm(col("xs"), 909091, 5861))).as("band1"))
+        md5(concat_ws(":", minPerm(col("xs"), 1299721, 104729),
+          minPerm(col("xs"), 7919, 7507))).as("band0"),
+        md5(concat_ws(":", minPerm(col("xs"), 104183, 337),
+          minPerm(col("xs"), 909091, 5861))).as("band1"))
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getString(2), r.getString(3))).toSeq
     val kernel = Queries.sigKeyed(df()).orderBy("doc_id")
@@ -151,7 +175,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("simhash kernel == legacy nested-aggregate expression (d3)") {
     val legacy = df()
       .select(col("doc_id"),
-        transform(Queries.toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
+        transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
       .filter(size(col("xs")) > 0)
       .select(col("doc_id"),
         expr("""aggregate(sequence(0, 15), CAST(0 AS BIGINT), (acc, b) ->
@@ -170,7 +194,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = regexp_extract_all(col("text"), lit("\\S+"), lit(0))
     val legacy = df()
       .select(col("doc_id"), transform(w, tok => Queries.tokenHashCol(tok)).as("th"))
-      .select(col("doc_id"), Queries.shingleGramsCol.as("g"))
+      .select(col("doc_id"), shingleGramsCol.as("g"))
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
     val kernel = df()
@@ -214,7 +238,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // whitespace-only strings in the sample set
     val legacy = df()
       .select(col("doc_id"),
-        transform(Queries.toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
+        transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
       .filter(size(col("xs")) > 0)
       .select("doc_id").orderBy("doc_id").collect().map(_.getLong(0)).toSeq
     val kept = df().filter(col("text").rlike("\\S"))

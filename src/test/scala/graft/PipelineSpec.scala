@@ -155,9 +155,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("salted repartition produces identical results") {
     val corpus = CorpusGen.corpus(spark, rows = 33, partitions = 2).cache()
-    val plain = Pipeline.extract(spark, CorpusGen.inputView(corpus))
+    val input = CorpusGen.inputView(corpus)
+    val plain = Pipeline.extract(spark, input)
       .toDF().select("url", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val salted = Pipeline.extract(spark, CorpusGen.inputView(corpus), saltPartitions = 7)
+    // the caller salts, as ScalingBench does: rows move by url hash
+    val salted = Pipeline.extract(spark, input.repartition(7, pmod(xxhash64(col("url")), lit(7))))
       .toDF().select("url", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(plain == salted)
   }
@@ -195,28 +197,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(re2.count() == 60)
     val giantRows2 = re2.filter(length(col("html")) > thresh).count()
     assert(giantRows2 == 6, s"giants lost in fallback path: $giantRows2")
-  }
-
-  test("chunked giant extraction is byte-identical to the row-parallel geom path") {
-    import org.apache.spark.sql.functions._
-    // books are 24 pages: threshold 10 forces chunking (chunk size floors
-    // at threshold/2 = 5 -> 5 chunks per book); light kinds (1-4 pages)
-    // take the ordinary path
-    val corpus = CorpusGen.corpus(spark, rows = 30, partitions = 3, heavy = true).cache()
-    val input = CorpusGen.inputView(corpus)
-    val chunked = Pipeline.extractGeomChunked(spark, input, maxChunksPerDoc = 32,
-      giantThresholdPages = 10)
-      .toDF().select("url", "text", "mode", "ok", "pages").collect()
-      .map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getBoolean(3), r.getInt(4)))
-      .toMap
-    val plain = Pipeline.extractMode(spark, input, "geom")
-      .toDF().select("url", "text", "mode", "ok", "pages").collect()
-      .map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getBoolean(3), r.getInt(4)))
-      .toMap
-    assert(chunked.keySet == plain.keySet)
-    for ((url, p) <- plain) assert(chunked(url) == p, url)
-    // the giant path really ran: books are over the page threshold
-    assert(corpus.filter(col("pages") > 10).count() >= 10)
   }
 
   test("column pruning reaches the scan") {

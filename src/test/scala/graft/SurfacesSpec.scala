@@ -611,6 +611,19 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deduped.select("event_id").distinct().count() == n)
   }
 
+  test("stream runs delete the temp copy of a single-file source") {
+    // the file source needs a directory: a single-file table is copied into
+    // a stream_src* temp dir, which must not outlive the query
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def copies = tmp.list().filter(_.startsWith("stream_src")).toSet
+    val before = copies
+    val win = graft.spark.Streaming.windowedEventCounts(
+      spark, "/root/testdata/sf0.001/events.parquet", "t_win_copy")
+    assert(win.count() > 0)
+    val left = copies -- before
+    assert(left.isEmpty, s"source copies left in $tmp: $left")
+  }
+
   test("streaming sessions: no unbounded NoTimeout state in main sources") {
     val src = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/spark/Pipeline.scala")), "UTF-8")
