@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.spark.{CorpusGen, Pipeline}
+import graft.spark.{CorpusGen, LocalFileSystem, Pipeline}
 
 /** Per-round benchmark: one JSON line with per-query seconds plus the
   * extraction headline (docs/s + byte-identical match rate) on a corpus
@@ -27,7 +27,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
+    LocalFileSystem.register(spark)
   }
 
   /** Materialize a corpus parquet (untimed), then time the full extraction

@@ -15,6 +15,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.spark.LocalFileSystem.register(spark)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Generator ground truth for the extraction oracles: url/kind/pages/

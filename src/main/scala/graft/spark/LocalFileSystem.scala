@@ -1,0 +1,38 @@
+package graft.spark
+
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
+
+/** Hadoop's checksummed `file:` filesystem over a raw layer that sets
+  * permissions in-process. Without NativeIO, Hadoop's
+  * `RawLocalFileSystem.setPermission` forks `chmod` for every file and
+  * directory it creates: every parquet part, checkpoint log, state-store
+  * file and `.crc` sidecar. The `.crc` sidecars stay: only the raw layer
+  * changes. */
+class LocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(new LocalFileSystem.Raw)
+
+object LocalFileSystem {
+  final class Raw extends RawLocalFileSystem {
+    // `new FsPermission(bits)`: create paths pass an FsCreateModes, whose
+    // toString is not the rwx form
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val bits = permission.toShort
+      if ((bits & ~0x1ff) != 0) super.setPermission(p, permission) // sticky/ACL bits
+      else Files.setPosixFilePermissions(pathToFile(p).toPath,
+        PosixFilePermissions.fromString(new FsPermission(bits).toString))
+    }
+  }
+
+  /** Makes `spark`'s `file:` paths use this filesystem and returns `spark`.
+    * Hadoop caches filesystems by scheme and user, not by conf, so a
+    * `file:` filesystem the JVM built earlier (any session's read) would
+    * shadow `fs.file.impl`; the cache is off for `file:` on this session. */
+  def register(spark: SparkSession): SparkSession = {
+    spark.conf.set("fs.file.impl", classOf[LocalFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    spark
+  }
+}

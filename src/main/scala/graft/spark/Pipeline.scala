@@ -896,8 +896,10 @@ object Surfaces {
   /** Same kernel as a Structured Streaming job: file-source readStream over
     * a parquet directory, AvailableNow trigger, memory sink. Stateless map
     * -> no watermark needed; at 100 TB this is the same plan with a real
-    * source (Kafka/files) and an Iceberg sink. */
-  def streamingExtract(spark: SparkSession, corpusDir: String, queryName: String): DataFrame = {
+    * source (Kafka/files) and an Iceberg sink. Runs on the stream session
+    * like every stream; the returned table lives in that session. */
+  def streamingExtract(spark0: SparkSession, corpusDir: String, queryName: String): DataFrame = {
+    val spark = Streaming.streamSession(spark0)
     import spark.implicits._
     Streaming.runToMemory(corpusDir, queryName) { dir =>
       Streaming.parquetReader(spark, dir).parquet(dir)
@@ -922,19 +924,33 @@ object Streaming {
 
   /** Streaming state-partition sizing (round 7, guide §2.2 + §5): a
     * stateful micro-batch pays one state-store open/commit PER SHUFFLE
-    * PARTITION regardless of data volume, so partitions must be sized to
-    * STATE VOLUME, not inherited from the batch session (x22 measured
-    * 8s -> ~3s going 32 -> 8 in round 5; round 7 applies the same sizing
-    * to every stream). On a cluster this is state rows /
-    * target-rows-per-store. Partition count does not change any result:
-    * aggregations/sessionization are keyed, and every streaming query
-    * ends in a deterministic total-order sort. */
+    * PARTITION regardless of data volume, so partitions are sized to STATE
+    * VOLUME, not inherited from the batch session (x22 measured 8s -> ~3s
+    * going 32 -> 8 in round 5). Much of that per-store cost was process
+    * creation: each commit renamed and chmod-ed its delta, checksum and log
+    * files through forked `readlink`/`chmod` (~1,740 forks per perfbench
+    * `stream` pass on 4 vCPUs). With the forks gone (streamSession), 8
+    * still beat 4 and 16 in paired runs (BENCH/BASELINE.md). On a cluster
+    * this is state rows / target-rows-per-store. Partition count does not
+    * change any result: aggregations/sessionization are keyed, and every
+    * streaming query ends in a deterministic total-order sort. */
   private val StreamShufflePartitions = 8
 
-  /** Every stream runs on an ISOLATED child session (newSession shares
-    * the SparkContext but owns its SQLConf + temp-view catalog): the
-    * shuffle-partition sizing above must not leak into the caller's
-    * session, where it would reshape concurrently planned batch queries.
+  /** Every stream runs on an ISOLATED child session (newSession shares the
+    * SparkContext but owns its SQLConf + temp-view catalog), so the
+    * partition sizing above does not reshape the caller's batch queries.
+    *
+    * Checkpoint I/O stays in-process. Hadoop has no NativeIO here, and
+    * Spark's default FileContext checkpoint manager forks `readlink` on
+    * every rename of a checkpoint, state or checksum file. When the
+    * checkpoint root is local (`spark.sql.streaming.checkpointLocation`
+    * unset, so a temp dir, or resolving to `file:`), the session uses
+    * Spark's FileSystem-based manager, whose rename on the local
+    * filesystem is an atomic `File.renameTo`; other schemes (HDFS, object
+    * stores) keep the FileContext default. The `file:` filesystem is
+    * [[LocalFileSystem]], which sets permissions without forking `chmod`.
+    * Spark's checkpoint checksums and Hadoop's `.crc` files are kept.
+    *
     * The state-store provider is Spark's own key,
     * `spark.sql.streaming.stateStore.providerClass`, taken from the
     * caller's conf (`--conf`, `-Dspark.…` or set on the calling session):
@@ -943,20 +959,32 @@ object Streaming {
     * stay green on either provider; the RocksDB gate run is recorded in
     * BENCH/BASELINE.md. */
   private[graft] def streamSession(spark0: SparkSession): SparkSession = {
-    val s = spark0.newSession()
+    val s = LocalFileSystem.register(spark0.newSession())
     // newSession resets runtime conf to the context defaults — inherit a
     // provider choice made on the calling session (SurfacesSpec's RocksDB
     // gate sets it there)
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     spark0.conf.getOption(providerKey).foreach(s.conf.set(providerKey, _))
     s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
+    // the checkpoint root's scheme; an unset root is a scheme-less temp dir
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val scheme = spark0.conf.getOption("spark.sql.streaming.checkpointLocation")
+      .flatMap(loc => Option(new Path(loc).toUri.getScheme))
+      .getOrElse(FileSystem.getDefaultUri(spark0.sparkContext.hadoopConfiguration).getScheme)
+    if (scheme == "file")
+      s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
     s
   }
 
   /** A stream reader for the parquet table at `dir`, carrying the table's
-    * schema (a file source needs it up front). */
-  private[spark] def parquetReader(spark: SparkSession, dir: String): DataStreamReader =
-    spark.readStream.schema(spark.read.parquet(dir).schema)
+    * schema (a file source needs it up front), reading at most
+    * `maxFilesPerTrigger` files per micro-batch when given. */
+  private[spark] def parquetReader(spark: SparkSession, dir: String,
+      maxFilesPerTrigger: Option[Int] = None): DataStreamReader = {
+    val reader = spark.readStream.schema(spark.read.parquet(dir).schema)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+  }
 
   /** The one stream runner: runs `plan` over the parquet table at `source`
     * as an AvailableNow stream into the memory table `queryName` and
@@ -987,9 +1015,11 @@ object Streaming {
 
   /** The windowed-count streaming plan: tumbling 1-hour windows with a
     * 10-minute watermark. Exposed un-started so tests can assert the
-    * EventTimeWatermark node is in the plan (the state-eviction contract). */
-  def windowedEventCountsPlan(spark: SparkSession, eventsDir: String): DataFrame = {
-    parquetReader(spark, eventsDir).parquet(eventsDir)
+    * EventTimeWatermark node is in the plan (the state-eviction contract)
+    * and can run it to their own sink and checkpoint. */
+  def windowedEventCountsPlan(spark: SparkSession, eventsDir: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    parquetReader(spark, eventsDir, maxFilesPerTrigger).parquet(eventsDir)
       .withColumn("ts", col("ts").cast("timestamp")) // NTZ -> event-time type
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -1137,9 +1167,7 @@ object Streaming {
     val spark = streamSession(spark0)
     import spark.implicits._
     val q = runToMemory(eventsDir, queryName) { dir =>
-      val reader = parquetReader(spark, dir)
-      maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-        .parquet(dir)
+      parquetReader(spark, dir, maxFilesPerTrigger).parquet(dir)
         .select(col("user_id").cast("long"), col("ts").cast("timestamp").as("ts"), col("event_type"))
         .withWatermark("ts", "10 minutes")
         .as[(Long, java.sql.Timestamp, String)]

@@ -1574,11 +1574,14 @@ object Queries {
       // own tag: d11 and x31 never share an index within one session
       val (sid, base) = sessionScratch(spark, "sigidx_x31")
       val idxTable = s"graft_index_$sid"
-      // index write and delta write are independent — overlap (guide §2.6)
+      // index write and delta write are independent — overlap (guide §2.6);
+      // both are the stream's scratch and go through a stream session, whose
+      // local file I/O starts no process (Streaming.streamSession)
       val deltaDir = s"$base/delta"
+      val ss = graft.spark.Streaming.streamSession(spark)
       inParallel(spark)(
-        buildSignatureIndex(t(spark, dir, "documents"), idxTable, s"$base/sig"),
-        recrawlDelta(t(spark, dir, "documents"))
+        buildSignatureIndex(t(ss, dir, "documents"), idxTable, s"$base/sig"),
+        recrawlDelta(t(ss, dir, "documents"))
           .write.mode("overwrite").parquet(deltaDir))
       val pairs = graft.spark.Streaming.incrementalDedupPairs(spark, idxTable,
         deltaDir, "x31_" + java.lang.Long.toHexString(System.nanoTime()))

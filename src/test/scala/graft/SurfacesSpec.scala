@@ -624,6 +624,95 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(left.isEmpty, s"source copies left in $tmp: $left")
   }
 
+  test("a stateful stream on a local checkpoint starts no OS process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val events = "/root/testdata/sf0.001/events.parquet"
+    // the caller session builds (and Hadoop caches) a file: filesystem
+    // first; the stream must not run on that cached instance
+    assert(spark.read.parquet(events).count() > 0)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val pairs = try graft.spark.Streaming.attributedPurchases(spark, events, "t_nofork").count()
+      finally rec.stop()
+    val jfr = java.nio.file.Files.createTempFile("nofork", ".jfr")
+    try {
+      rec.dump(jfr)
+      // Spark deletes local temp dirs with `rm -rf` (JavaUtils), also in the
+      // background for the state stores and sessions of earlier tests: that
+      // is not checkpoint I/O and is left out
+      val forks = RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filterNot(_.getStackTrace.getFrames.asScala
+          .exists(_.getMethod.getName == "deleteRecursivelyUsingUnixNative"))
+        .map(_.getString("command"))
+      val n = forks.size
+      assert(n == 0, s"$n processes started, e.g. ${forks.take(3).mkString("; ")}")
+    } finally { rec.close(); java.nio.file.Files.delete(jfr) }
+    assert(pairs > 0)
+  }
+
+  test("a stateful stream stopped after its first batch resumes on its checkpoint") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("stream_restart")
+    // four source files, one per micro-batch, in mtime order; events are
+    // dealt to them by id, so later files carry rows behind the watermark
+    val src = Files.createDirectory(root.resolve("src"))
+    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    for (k <- 0 until 4) {
+      val tmp = root.resolve(s"part$k")
+      events.filter(pmod(col("event_id"), lit(4)) === k).coalesce(1).write.parquet(tmp.toString)
+      val st = Files.list(tmp)
+      val part = try st.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+        finally st.close()
+      val dst = Files.copy(part, src.resolve(s"$k.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      dst.toFile.setLastModified(1000000000L + k * 1000000L)
+    }
+    val ss = graft.spark.Streaming.streamSession(spark)
+    def start(name: String, trigger: Trigger): StreamingQuery =
+      graft.spark.Streaming.windowedEventCountsPlan(ss, src.toString, maxFilesPerTrigger = Some(1))
+        .writeStream.format("parquet")
+        .option("checkpointLocation", root.resolve(s"$name.ck").toString)
+        .option("path", root.resolve(name).toString)
+        .trigger(trigger).start()
+    def rows(name: String) = spark.read.parquet(root.resolve(name).toString)
+      .orderBy("window_start", "event_type").collect().toSeq
+    def list(dir: Path): Seq[Path] = {
+      val st = Files.walk(dir)
+      try st.iterator().asScala.filter(Files.isRegularFile(_)).toList finally st.close()
+    }
+
+    start("whole", Trigger.AvailableNow()).awaitTermination()
+    // a one-hour processing-time trigger runs batch 0 at once, then waits:
+    // stopping it there stops the stream between batches
+    val first = start("resumed", Trigger.ProcessingTime("1 hour"))
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    while ((first.lastProgress == null || first.status.isTriggerActive) &&
+        first.isActive && System.nanoTime() < deadline) Thread.sleep(50)
+    first.stop()
+    assert(first.exception.isEmpty, first.exception)
+    val ck = root.resolve("resumed.ck")
+    assert(list(ck.resolve("commits")).map(_.getFileName.toString).filterNot(_.endsWith(".crc")) == Seq("0"))
+    val rest = start("resumed", Trigger.AvailableNow())
+    rest.awaitTermination()
+    assert(rest.recentProgress.head.batchId == 1, "the restart did not resume at batch 1")
+    val whole = rows("whole")
+    assert(whole.nonEmpty)
+    assert(rows("resumed") == whole)
+
+    val files = list(ck)
+    val tmps = files.filter(_.getFileName.toString.endsWith(".tmp"))
+    assert(tmps.size == 0, s"temp files left in the checkpoint: ${tmps.take(3)}")
+    val committed = files.filterNot(_.getFileName.toString.endsWith(".crc"))
+    assert(committed.exists(_.toString.contains("/state/")), committed)
+    val unsummed = committed.filterNot(f => Files.exists(f.resolveSibling(s".${f.getFileName}.crc")))
+    assert(unsummed.size == 0, s"${unsummed.size} checkpoint files without a .crc: ${unsummed.take(3)}")
+  }
+
   test("streaming sessions: no unbounded NoTimeout state in main sources") {
     val src = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/spark/Pipeline.scala")), "UTF-8")
