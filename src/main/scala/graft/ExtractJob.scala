@@ -9,7 +9,8 @@ import graft.spark.{LocalFileSystem, Pipeline}
   * Usage: ExtractJob <inputDir> <outputDir> [mode]
   *   inputDir   parquet/Iceberg path with the input_hint schema
   *   outputDir  receives `extracted/` (append) and `metrics/` (append)
-  *   mode       tagged (default) | geom | legacy
+  *   mode       a name in Pipeline.Modes (default Pipeline.DefaultMode);
+  *              an unknown mode prints the usage and exits with status 2
   *
   * Behavior: resumable — urls already present in outputDir/extracted are
   * dropped with a left-anti join before the kernel runs, so re-running
@@ -20,9 +21,12 @@ import graft.spark.{LocalFileSystem, Pipeline}
   */
 object ExtractJob {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ExtractJob <inputDir> <outputDir> [tagged|geom|legacy]")
+    val mode = args.lift(2).getOrElse(Pipeline.DefaultMode)
+    if (args.length < 2 || !Pipeline.Modes.contains(mode)) {
+      System.err.println(s"usage: ExtractJob <inputDir> <outputDir> [${Pipeline.Modes.keys.mkString("|")}]")
+      sys.exit(2)
+    }
     val Array(inputDir, outputDir) = args.take(2)
-    val mode = if (args.length > 2) args(2) else "tagged"
 
     val builder = SparkSession.builder().appName(s"graft-extract-$mode")
     val spark =

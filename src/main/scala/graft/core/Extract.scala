@@ -158,12 +158,6 @@ object Extract {
 
   // ---------- the full per-document entry point ----------
 
-  final case class ExtractStats(
-      pages: Int,
-      glyphs: Long,
-      mode: String, // "tagged" | "geom" | "fallback-error"
-      warnings: Int)
-
   /** Extract text from PDF bytes in the default (tagged -> geometry) mode.
     * Never throws: a broken document yields Left. */
   def extractPdf(bytes: Array[Byte], password: Option[String] = None,

@@ -707,7 +707,7 @@ object Interp {
     out
   }
 
-  private def sjisBytesToCodesArr(bs: Array[Int]): Array[Int] = {
+  private[graft] def sjisBytesToCodesArr(bs: Array[Int]): Array[Int] = {
     val out = new scala.collection.mutable.ArrayBuffer[Int](bs.length)
     var i = 0
     while (i < bs.length) {
@@ -720,7 +720,7 @@ object Interp {
     out.toArray
   }
 
-  private def unicodeBytesToCodesArr(bs: Array[Int]): Array[Int] = {
+  private[graft] def unicodeBytesToCodesArr(bs: Array[Int]): Array[Int] = {
     val out = new scala.collection.mutable.ArrayBuffer[Int](bs.length / 2)
     var i = 0
     while (i + 1 < bs.length) {
@@ -742,37 +742,7 @@ object Interp {
     out.toArray
   }
 
-  private def jisBytesToCodesArr(bs: Array[Int]): Array[Int] = pairs2Arr(bs)
-
-  def sjisBytesToCodes(bs: List[Int]): List[Int] = bs match {
-    case Nil => Nil
-    case b :: rest if (b >= 0x81 && b <= 0x9F) || (b >= 0xE0 && b <= 0xFC) =>
-      rest match {
-        case t :: rs => (b * 256 + t) :: sjisBytesToCodes(rs)
-        case Nil => List(b)
-      }
-    case b :: rest => b :: sjisBytesToCodes(rest)
-  }
-
-  def unicodeBytesToCodes(bs: List[Int]): List[Int] = bs match {
-    case a :: b :: rest =>
-      val unit = a * 256 + b
-      if (unit >= 0xD800 && unit <= 0xDBFF) rest match {
-        case c :: d :: rs =>
-          val unit2 = c * 256 + d
-          if (unit2 >= 0xDC00 && unit2 <= 0xDFFF)
-            (0x10000 + ((unit - 0xD800) << 10) + (unit2 - 0xDC00)) :: unicodeBytesToCodes(rs)
-          else unit :: unicodeBytesToCodes(rest)
-        case _ => List(unit)
-      }
-      else unit :: unicodeBytesToCodes(rest)
-    case _ => Nil
-  }
-
-  def jisBytesToCodes(bs: List[Int]): List[Int] = bs match {
-    case a :: b :: rest => (a * 256 + b) :: jisBytesToCodes(rest)
-    case _ => Nil
-  }
+  private[graft] def jisBytesToCodesArr(bs: Array[Int]): Array[Int] = pairs2Arr(bs)
 
   /** ToUnicode first, then per-encoding fallback (Interpret.hs:701-768). */
   def codeToUnicode(fi: FontInfo, code: Int): String =
@@ -855,24 +825,6 @@ object Interp {
       }
     }
     out.toArray
-  }
-
-  def hexPairs(h: String): List[Int] = {
-    val out = List.newBuilder[Int]
-    var i = 0
-    while (i < h.length) {
-      val a = h.charAt(i)
-      if (i + 1 < h.length) {
-        val b = h.charAt(i + 1)
-        if (Lexer.isHexDigit(a) && Lexer.isHexDigit(b))
-          out += (Lexer.hexVal(a) << 4) | Lexer.hexVal(b)
-        i += 2
-      } else {
-        if (Lexer.isHexDigit(a)) out += Lexer.hexVal(a) << 4
-        i += 1
-      }
-    }
-    out.result()
   }
 
   private def tjElems(o: PObj): Option[List[TJElem]] = o match {

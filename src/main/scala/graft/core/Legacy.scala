@@ -673,9 +673,9 @@ object Legacy {
           val t = fm match {
             case Some(Encoding.DiffEncoding(m)) => psletter(m)
             case Some(Encoding.CIDmap(_)) => cidletter()
-            case Some(Encoding.SJISmap) => bytesletters(Interp.sjisBytesToCodes, sjisCodeToText)
-            case Some(Encoding.UnicodeMap) => bytesletters(Interp.unicodeBytesToCodes, unicodeCodeToText)
-            case Some(Encoding.JISmap) => bytesletters(Interp.jisBytesToCodes, jisCodeToText)
+            case Some(Encoding.SJISmap) => bytesletters(Interp.sjisBytesToCodesArr, sjisCodeToText)
+            case Some(Encoding.UnicodeMap) => bytesletters(Interp.unicodeBytesToCodesArr, unicodeCodeToText)
+            case Some(Encoding.JISmap) => bytesletters(Interp.jisBytesToCodesArr, jisCodeToText)
             case Some(Encoding.WithCharSet(_)) =>
               attemptT(bytesletterCmap(cmap)).orElse(attemptT(cidletters(cmap)))
             case Some(Encoding.NullMap) => psletter(TreeMap.empty)
@@ -728,8 +728,8 @@ object Legacy {
       if (count == 0) None else Some(out.result())
     }
 
-    private def bytesletters(toCodes: List[Int] => List[Int], toText: Int => String): Option[String] =
-      escapedBytes(extraSpace = false).map(bytes => toCodes(bytes).map(toText).mkString)
+    private def bytesletters(toCodes: Array[Int] => Array[Int], toText: Int => String): Option[String] =
+      escapedBytes(extraSpace = false).map(bytes => toCodes(bytes.toArray).map(toText).mkString)
 
     /** bytesletter (ContentStream.hs:336-360): 16-bit pairing + cmap lookup. */
     private def bytesletterCmap(cmap: Map[Int, String]): Option[String] =
@@ -892,20 +892,15 @@ object Legacy {
       skipSpaces()
       val enc = st.fontmaps.get(st.curfont)
       val cmap = st.cmaps.getOrElse(st.curfont, Map.empty)
-      val bytes = Interp.hexPairs(sb.toString)
+      val bytes = Interp.hexPairsArr(sb.toString)
       val codes = enc match {
-        case Some(Encoding.SJISmap) => Interp.sjisBytesToCodes(bytes)
-        case Some(Encoding.UnicodeMap) => Interp.unicodeBytesToCodes(bytes)
-        case Some(Encoding.JISmap) => Interp.jisBytesToCodes(bytes)
-        case Some(Encoding.CIDmap(_)) => asInt16Strict(bytes)
+        case Some(Encoding.SJISmap) => Interp.sjisBytesToCodesArr(bytes)
+        case Some(Encoding.UnicodeMap) => Interp.unicodeBytesToCodesArr(bytes)
+        // CID codes pair bytes strictly like JIS (asInt16, odd tail dropped)
+        case Some(Encoding.JISmap) | Some(Encoding.CIDmap(_)) => Interp.jisBytesToCodesArr(bytes)
         case _ => bytes
       }
       Some(codes.map(lookupUcs(enc, cmap, _)).mkString)
-    }
-
-    private def asInt16Strict(xs: List[Int]): List[Int] = xs match {
-      case a :: b :: rest => (a * 256 + b) :: asInt16Strict(rest)
-      case _ => Nil
     }
 
     private def sjisCodeToText(code: Int): String =

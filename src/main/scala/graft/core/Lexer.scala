@@ -421,7 +421,6 @@ object Lexer {
         if (cur.pos + n <= cur.buf.length) {
           val save = cur.pos
           cur.pos += n
-          val markSave = cur.pos
           // streamEndMarker: optional EOL then "endstream"
           skipStreamEol(cur)
           if (cur.consume("endstream")) {

@@ -48,14 +48,11 @@ object PdfError {
   final case class MissingKey(key: String, ctx: String) extends PdfError { def render = s"missing key $key in $ctx" }
   final case class UnsupportedFeature(msg: String) extends PdfError { def render = s"unsupported feature: $msg" }
   final case class DecryptionError(msg: String) extends PdfError { def render = s"cannot decrypt: $msg" }
-  final case class FontError(n: Int, msg: String) extends PdfError { def render = s"font error in object $n: $msg" }
 }
 
 sealed trait PdfWarning extends Product with Serializable
 object PdfWarning {
   final case class UnknownOperator(op: String) extends PdfWarning
-  final case class MissingToUnicode(n: Int) extends PdfWarning
-  final case class SubstitutedEncoding(n: Int, enc: String) extends PdfWarning
   final case class UnmappedCid(cid: Int) extends PdfWarning
   final case class PageContentFailed(ref: Int, reason: String) extends PdfWarning
 }

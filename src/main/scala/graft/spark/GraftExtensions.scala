@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: extract_text(binary[, mode]) -> string,
-  * mode in {tagged, geom, legacy} (default tagged) matching
-  * Pipeline.extractMode's three extractors.
+  * mode one of [[Pipeline.Modes]] (default [[Pipeline.DefaultMode]]),
+  * matching Pipeline.extractMode's extractors.
   *
   * The mapPartitions pipeline stays the production path (it keeps the
   * per-partition memoization and metrics hooks); this expression is the SQL
@@ -29,22 +29,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * back to interpreted per-row evaluation around this expression. */
 case class ExtractText(left: Expression, right: Expression) extends BinaryExpression {
 
-  def this(child: Expression) = this(child, Literal("tagged"))
+  def this(child: Expression) = this(child, Literal(Pipeline.DefaultMode))
 
   override def dataType: DataType = StringType
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType)
       TypeCheckResult.TypeCheckFailure("extract_text requires a BINARY first argument")
     else if (right.dataType != StringType || !right.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "extract_text mode must be a string literal ('tagged', 'geom' or 'legacy')")
+      TypeCheckResult.TypeCheckFailure(s"extract_text mode must be a string literal ($modeNames)")
     else right.eval() match {
-      case s: UTF8String if Set("tagged", "geom", "legacy")(s.toString) =>
+      case s: UTF8String if Pipeline.Modes.contains(s.toString) =>
         TypeCheckResult.TypeCheckSuccess
       case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"extract_text mode must be 'tagged', 'geom' or 'legacy', got $other")
+        TypeCheckResult.TypeCheckFailure(s"extract_text mode must be one of $modeNames, got $other")
     }
+  private def modeNames: String = Pipeline.Modes.keys.mkString("'", "', '", "'")
   override def prettyName: String = "extract_text"
 
   // foldable literal by checkInputDataTypes; resolved once, not per row

@@ -1,8 +1,10 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession, TypedColumn}
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.core.DocStructure.Document
 
 /** Spark-native extraction pipeline.
   *
@@ -51,50 +53,110 @@ object Pipeline {
     * larger rows are counted as errors instead of risking executor OOM. */
   val MaxPayloadBytes: Int = 512 << 20
 
-  /** The per-row kernel: format dispatch on the same codepath. Mode:
-    * tagged (default, structure tree with geometry fallback), geom (pure
-    * glyph layout), legacy (stream-order extractor). */
-  def extractRowMode(url: String, html: Array[Byte], textCol: String, mode: String,
-      maxPayloadBytes: Int = MaxPayloadBytes): ExtractedDoc = {
-    val t0 = System.nanoTime()
-    def done(mode: String, ok: Boolean, err: String, text: String, pages: Int): ExtractedDoc =
-      ExtractedDoc(url, text, mode, ok, err, pages, if (text == null) 0 else text.length,
-        (System.nanoTime() - t0) / 1000)
-    try {
-      val payload = if (html == null) Array.emptyByteArray else html
+  /** The extraction modes by name, the one place they are listed: tagged
+    * (structure tree with geometry fallback), geom (pure glyph layout) and
+    * legacy (stream-order extractor). An ok row of mode `m` is labelled
+    * `pdf-m`. */
+  val Modes: ListMap[String, Document => Either[PdfError, String]] = ListMap(
+    "tagged" -> (doc => Extract.taggedText(doc)),
+    "geom" -> (doc => Extract.geomText(doc)),
+    "legacy" -> (doc => Right(Legacy.legacyText(doc)._1)))
+
+  /** The mode a caller that names none gets: the table's first. */
+  val DefaultMode: String = Modes.head._1
+
+  private def pdfLabel(mode: String): String = s"pdf-$mode"
+
+  // ---------- the per-document runner ----------
+  //
+  // Every kernel surface is a row function run here: the runner projects
+  // (url, html, third), reads a null payload as empty and runs the row
+  // function per document inside `mapPartitions` under the one last-resort
+  // guard. `third` is the text column, `noText`, or diff's second payload.
+
+  private[spark] def noText: TypedColumn[Any, String] = lit(null).cast("string").as[String](Encoders.STRING)
+  private[spark] def textColumn: TypedColumn[Any, String] = col("text").as[String](Encoders.STRING)
+
+  /** The kernel is total by design; a row whose kernel throws all the same
+    * yields `failed`, what a `Left` yields on that surface, so one malformed
+    * document can never fail a 100 TB job's task. */
+  private def guarded[X, T](row: (String, Array[Byte], X) => T,
+      failed: (String, Array[Byte], Throwable) => T)(url: String, html: Array[Byte], x: X): T = {
+    val payload = if (html == null) Array.emptyByteArray else html
+    try row(url, payload, x)
+    catch { case e: Throwable => failed(url, payload, e) }
+  }
+
+  private def documents[X: Encoder](input: DataFrame,
+      third: TypedColumn[Any, X]): Dataset[(String, Array[Byte], X)] =
+    input.select(col("url"), col("html"), third)
+      .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY, implicitly[Encoder[X]]))
+
+  /** A surface with one output row per document. */
+  private[spark] def perDocument[X: Encoder, T: Encoder](input: DataFrame, third: TypedColumn[Any, X])(
+      failed: (String, Array[Byte], Throwable) => T)(row: (String, Array[Byte], X) => T): Dataset[T] =
+    documents(input, third).mapPartitions(_.map { case (url, html, x) => guarded(row, failed)(url, html, x) })
+
+  /** A surface with any number of output rows per document. A throw yields
+    * no rows; the rows are collected inside the guard, so a document that
+    * throws part-way yields none either. */
+  private[spark] def perDocumentRows[X: Encoder, T: Encoder](input: DataFrame, third: TypedColumn[Any, X])(
+      row: (String, Array[Byte], X) => IterableOnce[T]): Dataset[T] = {
+    val collected: (String, Array[Byte], X) => Seq[T] = (url, payload, x) => row(url, payload, x).iterator.toVector
+    val none: (String, Array[Byte], Throwable) => Seq[T] = (_, _, _) => Nil
+    documents(input, third).mapPartitions(_.flatMap { case (url, html, x) =>
+      guarded(collected, none)(url, html, x) })
+  }
+
+  /** The one PDF open: a payload that looks like a PDF and is within
+    * `maxPayloadBytes`. A null payload (diff's second side) is no PDF. */
+  private[spark] def openPdf(payload: Array[Byte],
+      maxPayloadBytes: Int = MaxPayloadBytes): Either[PdfError, Document] =
+    if (payload == null || !Html.looksLikePdf(payload)) Left(PdfError.ParseError("not a PDF"))
+    else if (payload.length > maxPayloadBytes) Left(PdfError.UnsupportedFeature("payload too large"))
+    else DocStructure.openDocument(payload, None)
+
+  // ---------- text extraction ----------
+
+  /** The extraction row function of `mode`, or an IllegalArgumentException
+    * for a mode the table does not list. Format dispatch on one codepath:
+    * PDF, then HTML, then the text column. */
+  private def extractRow(mode: String, maxPayloadBytes: Int): (String, Array[Byte], String) => ExtractedDoc = {
+    val modeText = Modes.getOrElse(mode, throw new IllegalArgumentException(
+      s"unknown extraction mode '$mode'; expected one of ${Modes.keys.mkString(", ")}"))
+    val label = pdfLabel(mode)
+    (url, payload, textCol) => {
+      val t0 = System.nanoTime()
+      def done(mode: String, ok: Boolean, err: String, text: String, pages: Int): ExtractedDoc =
+        ExtractedDoc(url, text, mode, ok, err, pages, if (text == null) 0 else text.length,
+          (System.nanoTime() - t0) / 1000)
       if (payload.length > maxPayloadBytes)
         done("error", ok = false, "payload too large", null, 0)
-      else if (Html.looksLikePdf(payload)) {
-        DocStructure.openDocument(payload, None) match {
-          case Right(doc) =>
-            val pages = DocStructure.pageRefs(doc).map(_.length).getOrElse(0)
-            val r = mode match {
-              case "geom" => Extract.geomText(doc)
-              case "legacy" => Right(Legacy.legacyText(doc)._1)
-              case _ => Extract.taggedText(doc)
-            }
-            r match {
-              case Right(text) => done(s"pdf-$mode", ok = true, "", text, pages)
-              case Left(e) => done("error", ok = false, e.render, null, pages)
-            }
-          case Left(e) => done("error", ok = false, e.render, null, 0)
-        }
-      } else if (Html.looksLikeHtml(payload)) {
-        done("html", ok = true, "", Html.extractHtml(payload), 1)
-      } else if (textCol != null) {
-        done("text", ok = true, "", textCol, 1)
-      } else {
-        done("error", ok = false, "unrecognized payload", null, 0)
+      else if (Html.looksLikePdf(payload)) openPdf(payload, maxPayloadBytes) match {
+        case Right(doc) =>
+          val pages = DocStructure.pageRefs(doc).map(_.length).getOrElse(0)
+          modeText(doc) match {
+            case Right(text) => done(label, ok = true, "", text, pages)
+            case Left(e) => done("error", ok = false, e.render, null, pages)
+          }
+        case Left(e) => done("error", ok = false, e.render, null, 0)
       }
-    } catch {
-      // the kernel is total by design; this is the last-resort guard so one
-      // malformed document can never fail a 100 TB job's task
-      case e: Throwable => done("error", ok = false,
-        s"kernel exception: ${e.getClass.getSimpleName}", null, 0)
+      else if (Html.looksLikeHtml(payload)) done("html", ok = true, "", Html.extractHtml(payload), 1)
+      else if (textCol != null) done("text", ok = true, "", textCol, 1)
+      else done("error", ok = false, "unrecognized payload", null, 0)
     }
   }
 
-  /** Full extraction over an input dataframe with the input_hint schema.
+  private val extractFailed: (String, Array[Byte], Throwable) => ExtractedDoc = (url, _, e) =>
+    ExtractedDoc(url, null, "error", ok = false, s"kernel exception: ${e.getClass.getSimpleName}", 0, 0, 0L)
+
+  /** The per-row kernel of [[extractMode]] for one document. */
+  def extractRowMode(url: String, html: Array[Byte], textCol: String, mode: String,
+      maxPayloadBytes: Int = MaxPayloadBytes): ExtractedDoc =
+    guarded(extractRow(mode, maxPayloadBytes), extractFailed)(url, html, textCol)
+
+  /** Full extraction over an input dataframe with the input_hint schema, in
+    * a mode of [[Modes]]; an unknown mode is rejected here, at the call.
     *
     * Scale notes: only (url, html, text) are selected -> Catalyst prunes the
     * scan to those columns; `mapPartitions` keeps JVM object reuse and the
@@ -108,16 +170,12 @@ object Pipeline {
     */
   def extractMode(spark: SparkSession, input: DataFrame, mode: String): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    input.select(col("url"), col("html"), col("text"))
-      .as[(String, Array[Byte], String)]
-      .mapPartitions { iter =>
-        iter.map { case (url, html, text) => extractRowMode(url, html, text, mode) }
-      }
+    perDocument(input, textColumn)(extractFailed)(extractRow(mode, MaxPayloadBytes))
   }
 
-  /** [[extractMode]] in the default tagged mode. */
+  /** [[extractMode]] in the default mode. */
   def extract(spark: SparkSession, input: DataFrame): Dataset[ExtractedDoc] =
-    extractMode(spark, input, "tagged")
+    extractMode(spark, input, DefaultMode)
 
   /** Byte-size-weighted redistribution for heavy-tailed corpora
     * (SURVEY §4.1): hash salting gives every giant an independent uniform
@@ -198,6 +256,7 @@ object Pipeline {
   /** Per-partition lineage rows (append these to the metrics table). */
   def partitionMetrics(spark: SparkSession, ds: Dataset[ExtractedDoc]): Dataset[PartitionMetrics] = {
     import spark.implicits._
+    val pdfLabels = Modes.keySet.map(pdfLabel)
     ds.mapPartitions { iter =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var docs = 0L
@@ -212,9 +271,9 @@ object Pipeline {
         docs += 1
         if (d.ok) okDocs += 1
         d.mode match {
-          case "pdf-tagged" | "pdf-geom" => pdf += 1
           case "html" => htmlD += 1
           case "text" => textD += 1
+          case m if pdfLabels(m) => pdf += 1
           case _ => err += 1
         }
         chars += d.chars
@@ -235,26 +294,17 @@ object Pipeline {
 
   def extractPages(spark: SparkSession, input: DataFrame): Dataset[PageText] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { iter =>
-        iter.flatMap { case (url, html) =>
-          val payload = if (html == null) Array.emptyByteArray else html
-          if (!Html.looksLikePdf(payload)) Iterator.empty
-          else DocStructure.openDocument(payload, None) match {
-            case Right(doc) =>
-              DocStructure.pageRefs(doc).getOrElse(Nil).iterator.zipWithIndex.map {
-                case (ref, idx) =>
-                  val txt = Interp.interpretPageItems(doc, ref) match {
-                    case Right(items) => Layout.layoutPageText(Layout.defaultOptions, items)
-                    case Left(_) => ""
-                  }
-                  PageText(url, idx + 1, txt)
-              }
-            case Left(_) => Iterator.empty
+    perDocumentRows(input, noText) { (url, payload, _) =>
+      openPdf(payload).toSeq.flatMap { doc =>
+        DocStructure.pageRefs(doc).getOrElse(Nil).zipWithIndex.map { case (ref, idx) =>
+          val txt = Interp.interpretPageItems(doc, ref) match {
+            case Right(items) => Layout.layoutPageText(Layout.defaultOptions, items)
+            case Left(_) => ""
           }
+          PageText(url, idx + 1, txt)
         }
       }
+    }
   }
 
   /** Paragraph-with-geometry row (the reference's PageRegion, Page.hs:93):
@@ -272,42 +322,31 @@ object Pipeline {
     * convention the extractors emit. */
   def extractRegions(spark: SparkSession, input: DataFrame): Dataset[RegionRow] = {
     import spark.implicits._
-    input.select(col("url"), col("html"), col("text"))
-      .as[(String, Array[Byte], String)]
-      .mapPartitions { iter =>
-        iter.flatMap { case (url, html, textCol) =>
-          val payload = if (html == null) Array.emptyByteArray else html
-          if (Html.looksLikePdf(payload))
-            DocStructure.openDocument(payload, None) match {
-              case Right(doc) =>
-                DocStructure.pageRefs(doc).getOrElse(Nil).iterator.zipWithIndex.flatMap {
-                  case (ref, idx) =>
-                    val items = Interp.interpretPageItems(doc, ref).getOrElse(Nil)
-                    graft.core.Page.pageRegions(idx + 1, Layout.defaultOptions, items)
-                      .iterator.map(r => RegionRow(url, r.page, r.paragraph,
-                        r.bbox.x0, r.bbox.y0, r.bbox.x1, r.bbox.y1, r.text))
-                }
-              case Left(_) => Iterator.empty
-            }
-          else {
-            val text =
-              if (Html.looksLikeHtml(payload)) Html.extractHtml(payload)
-              else if (textCol != null) textCol
-              else null
-            if (text == null) Iterator.empty
-            else {
-              // strip ALL trailing newlines (the rtrim convention the PDF
-              // branch and the oracles use — stripSuffix would diverge on
-              // content ending in a blank line)
-              var e = text.length
-              while (e > 0 && text.charAt(e - 1) == '\n') e -= 1
-              text.substring(0, e).split("\n\n", -1).iterator.zipWithIndex.map {
-                case (para, j) => RegionRow(url, 1, j + 1, 0, 0, 0, 0, para)
-              }
-            }
+    perDocumentRows(input, textColumn) { (url, payload, textCol) =>
+      if (Html.looksLikePdf(payload))
+        openPdf(payload).toSeq.flatMap { doc =>
+          DocStructure.pageRefs(doc).getOrElse(Nil).zipWithIndex.flatMap { case (ref, idx) =>
+            val items = Interp.interpretPageItems(doc, ref).getOrElse(Nil)
+            graft.core.Page.pageRegions(idx + 1, Layout.defaultOptions, items)
+              .map(r => RegionRow(url, r.page, r.paragraph,
+                r.bbox.x0, r.bbox.y0, r.bbox.x1, r.bbox.y1, r.text))
+          }
+        }
+      else {
+        val text = if (Html.looksLikeHtml(payload)) Html.extractHtml(payload) else textCol
+        if (text == null) Nil
+        else {
+          // strip ALL trailing newlines (the rtrim convention the PDF
+          // branch and the oracles use — stripSuffix would diverge on
+          // content ending in a blank line)
+          var e = text.length
+          while (e > 0 && text.charAt(e - 1) == '\n') e -= 1
+          text.substring(0, e).split("\n\n", -1).toSeq.zipWithIndex.map {
+            case (para, j) => RegionRow(url, 1, j + 1, 0, 0, 0, 0, para)
           }
         }
       }
+    }
   }
 
   /** Metadata/outline query surface (info/title/toc/trailer verbs). */
@@ -316,27 +355,19 @@ object Pipeline {
 
   def extractMeta(spark: SparkSession, input: DataFrame): Dataset[DocMeta] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { iter =>
-        iter.flatMap { case (url, html) =>
-          val payload = if (html == null) Array.emptyByteArray else html
-          if (!Html.looksLikePdf(payload)) Iterator.empty
-          else DocStructure.openDocument(payload, None) match {
-            case Right(doc) =>
-              val toc = Metadata.toc(doc)
-              Iterator.single(DocMeta(
-                url,
-                Metadata.title(doc).orNull,
-                Metadata.infoJson(doc).orNull,
-                Metadata.trailerJson(doc),
-                Metadata.pageRefs(doc).length,
-                toc.length,
-                toc.map(e => (" " * e.depth) + e.title).mkString("\n")))
-            case Left(_) => Iterator.empty
-          }
-        }
+    perDocumentRows(input, noText) { (url, payload, _) =>
+      openPdf(payload).toSeq.map { doc =>
+        val toc = Metadata.toc(doc)
+        DocMeta(
+          url,
+          Metadata.title(doc).orNull,
+          Metadata.infoJson(doc).orNull,
+          Metadata.trailerJson(doc),
+          Metadata.pageRefs(doc).length,
+          toc.length,
+          toc.map(e => (" " * e.depth) + e.title).mkString("\n"))
       }
+    }
   }
 }
 
@@ -361,25 +392,17 @@ object Surfaces {
 
   def extractImages(spark: SparkSession, input: DataFrame): Dataset[ImageRow] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { iter =>
-        iter.flatMap { case (url, html) =>
-          val payload = if (html == null) Array.emptyByteArray else html
-          if (!Html.looksLikePdf(payload)) Iterator.empty
-          else DocStructure.openDocument(payload, None) match {
-            case Right(doc) =>
-              val nPages = DocStructure.pageRefs(doc).map(_.length).getOrElse(0)
-              (1 to nPages).iterator.flatMap { page =>
-                Images.extractPageImages(doc, page).getOrElse(Nil).map { im =>
-                  ImageRow(url, page, im.index, im.format,
-                    im.bbox.x0, im.bbox.y0, im.bbox.x1, im.bbox.y1, im.bytes.length)
-                }
-              }
-            case Left(_) => Iterator.empty
+    perDocumentRows(input, noText) { (url, payload, _) =>
+      openPdf(payload).toSeq.flatMap { doc =>
+        val nPages = DocStructure.pageRefs(doc).map(_.length).getOrElse(0)
+        (1 to nPages).flatMap { page =>
+          Images.extractPageImages(doc, page).getOrElse(Nil).map { im =>
+            ImageRow(url, page, im.index, im.format,
+              im.bbox.x0, im.bbox.y0, im.bbox.x1, im.bbox.y1, im.bytes.length)
           }
         }
       }
+    }
   }
 
   // ---------- document diff (hpdft diff verb) ----------
@@ -388,35 +411,31 @@ object Surfaces {
       oldText: String, newText: String, pagesA: Int, pagesB: Int)
 
   /** Paragraph-level diff of two corpora joined on url. The join is the
-    * only shuffle; the per-pair LCS runs in the kernel. */
+    * only shuffle; the per-pair LCS runs in the kernel. The runner's
+    * `third` column is the second corpus's payload. */
   def diffDocuments(spark: SparkSession, a: DataFrame, b: DataFrame): Dataset[DiffRow] = {
     import spark.implicits._
-    val lhs = a.select(col("url"), col("html").as("htmlA"))
-    val rhs = b.select(col("url"), col("html").as("htmlB"))
-    lhs.join(rhs, Seq("url"))
-      .as[(String, Array[Byte], Array[Byte])]
-      .mapPartitions { iter =>
-        iter.flatMap { case (url, htmlA, htmlB) =>
-          (DocStructure.openDocument(htmlA, None), DocStructure.openDocument(htmlB, None)) match {
-            case (Right(da), Right(db)) =>
-              Diff.compareDocuments(Layout.defaultOptions, da, db) match {
-                case Right(res) =>
-                  val (pa, pb) = res.mismatch.map(m => (m.pagesA, m.pagesB)).getOrElse((0, 0))
-                  val changeRows = res.changes.map { c =>
-                    DiffRow(url, c.pageA.getOrElse(-1), c.pageB.getOrElse(-1),
-                      c.paraA.getOrElse(-1), c.paraB.getOrElse(-1),
-                      c.oldText, c.newText, pa, pb)
-                  }
-                  // a bare page-count mismatch must still surface as a row
-                  if (changeRows.isEmpty && res.mismatch.isDefined)
-                    List(DiffRow(url, -1, -1, -1, -1, "", "", pa, pb))
-                  else changeRows
-                case Left(_) => Nil
-              }
-            case _ => Nil
-          }
+    val pairs = a.select(col("url"), col("html"))
+      .join(b.select(col("url"), col("html").as("htmlB")), Seq("url"))
+    perDocumentRows(pairs, col("htmlB").as[Array[Byte]]) { (url, htmlA, htmlB) =>
+      val diff = for {
+        da <- openPdf(htmlA)
+        db <- openPdf(htmlB)
+        res <- Diff.compareDocuments(Layout.defaultOptions, da, db)
+      } yield {
+        val (pa, pb) = res.mismatch.map(m => (m.pagesA, m.pagesB)).getOrElse((0, 0))
+        val changeRows = res.changes.map { c =>
+          DiffRow(url, c.pageA.getOrElse(-1), c.pageB.getOrElse(-1),
+            c.paraA.getOrElse(-1), c.paraB.getOrElse(-1),
+            c.oldText, c.newText, pa, pb)
         }
+        // a bare page-count mismatch must still surface as a row
+        if (changeRows.isEmpty && res.mismatch.isDefined)
+          List(DiffRow(url, -1, -1, -1, -1, "", "", pa, pb))
+        else changeRows
       }
+      diff.getOrElse(Nil)
+    }
   }
 
   // ---------- multimodal binary features ----------
@@ -431,41 +450,37 @@ object Surfaces {
     * (no media libraries in this environment). */
   def binaryFeatures(spark: SparkSession, input: DataFrame): Dataset[BinaryFeatures] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { iter =>
-        iter.map { case (url, html) =>
-          val payload = if (html == null) Array.emptyByteArray else html
-          val kind =
-            if (Html.looksLikePdf(payload)) "pdf"
-            else if (Html.looksLikeHtml(payload)) "html"
-            else if (payload.length >= 3 && (payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8) "jpeg"
-            else "binary"
-          val hist = new Array[Long](16)
-          var ascii = 0L
-          var i = 0
-          while (i < payload.length) {
-            val v = payload(i) & 0xff
-            hist(v >> 4) += 1
-            if (v >= 0x20 && v < 0x7f) ascii += 1
-            i += 1
-          }
-          val n = math.max(payload.length, 1)
-          var entropy = 0.0
-          var k = 0
-          while (k < 16) {
-            if (hist(k) > 0) {
-              val p = hist(k).toDouble / n
-              entropy -= p * math.log(p) / math.log(2)
-            }
-            k += 1
-          }
-          // STUB feature extraction: normalized 16-bin byte histogram in
-          // place of a real decoded-media embedding
-          val vec = hist.map(h => (h.toDouble / n).toFloat)
-          BinaryFeatures(url, kind, payload.length, (entropy * 1000).round, ascii.toDouble / n, vec)
-        }
+    perDocument(input, noText)((url, payload, _) =>
+        BinaryFeatures(url, "error", payload.length, -1L, -1.0, null)) { (url, payload, _) =>
+      val kind =
+        if (Html.looksLikePdf(payload)) "pdf"
+        else if (Html.looksLikeHtml(payload)) "html"
+        else if (payload.length >= 3 && (payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8) "jpeg"
+        else "binary"
+      val hist = new Array[Long](16)
+      var ascii = 0L
+      var i = 0
+      while (i < payload.length) {
+        val v = payload(i) & 0xff
+        hist(v >> 4) += 1
+        if (v >= 0x20 && v < 0x7f) ascii += 1
+        i += 1
       }
+      val n = math.max(payload.length, 1)
+      var entropy = 0.0
+      var k = 0
+      while (k < 16) {
+        if (hist(k) > 0) {
+          val p = hist(k).toDouble / n
+          entropy -= p * math.log(p) / math.log(2)
+        }
+        k += 1
+      }
+      // STUB feature extraction: normalized 16-bin byte histogram in
+      // place of a real decoded-media embedding
+      val vec = hist.map(h => (h.toDouble / n).toFloat)
+      BinaryFeatures(url, kind, payload.length, (entropy * 1000).round, ascii.toDouble / n, vec)
+    }
   }
 
   // ---------- multimodal REAL image decode (JDK ImageIO) ----------
@@ -479,12 +494,17 @@ object Surfaces {
     * any training-corpus image. */
   val MaxImagePixels: Long = 64L * 1024 * 1024
 
+  /** The image format a payload sniffs as: png, jpeg or binary. */
+  private def imageFormat(payload: Array[Byte]): String =
+    if (payload.length >= 8 && (payload(0) & 0xff) == 0x89 && payload(1) == 'P') "png"
+    else if (payload.length >= 3 && (payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8) "jpeg"
+    else "binary"
+
   /** Sniff + bomb-guarded ImageIO decode; null when the payload is not a
-    * decodable image within MaxImagePixels. */
+    * decodable image within MaxImagePixels. ImageIO reports a corrupt
+    * stream by throwing an exception: that is its "not decodable". */
   private[spark] def readImage(payload: Array[Byte]): (String, java.awt.image.BufferedImage) = {
-    val isPng = payload.length >= 8 && (payload(0) & 0xff) == 0x89 && payload(1) == 'P'
-    val isJpeg = payload.length >= 3 && (payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8
-    val fmt = if (isPng) "png" else if (isJpeg) "jpeg" else "binary"
+    val fmt = imageFormat(payload)
     val img =
       if (fmt == "binary") null
       else
@@ -506,9 +526,13 @@ object Surfaces {
               } finally reader.dispose()
             }
           } finally if (iis != null) iis.close()
-        } catch { case _: Throwable => null }
+        } catch { case _: Exception => null }
     (fmt, img)
   }
+
+  /** The row of a payload that does not decode as an image. */
+  private def undecodedImage(url: String, payload: Array[Byte]): DecodedImage =
+    DecodedImage(url, imageFormat(payload), ok = false, -1, -1, null, -1L)
 
   /** REAL image decoding over an opaque binary column — no stub: JPEG and
     * PNG payloads decode through the JDK's ImageIO (no external deps), and
@@ -520,17 +544,16 @@ object Surfaces {
     * decoder instance per partition thread. */
   def decodeImages(spark: SparkSession, input: DataFrame): Dataset[DecodedImage] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, payload) => decodeImageRow(url, payload) })
+    perDocument(input, noText)((url, payload, _) => undecodedImage(url, payload)) {
+      (url, payload, _) => decodeImageRow(url, payload)
+    }
   }
 
   /** Row-local image decode (the per-row kernel of [[decodeImages]], kept
     * callable so the fuzz campaign can hammer it without a session). */
-  private[graft] def decodeImageRow(url: String, payload0: Array[Byte]): DecodedImage = {
-    val payload = if (payload0 == null) Array.emptyByteArray else payload0
+  private[graft] def decodeImageRow(url: String, payload: Array[Byte]): DecodedImage = {
     val (fmt, img) = readImage(payload)
-    if (img == null) DecodedImage(url, fmt, ok = false, -1, -1, null, -1L)
+    if (img == null) undecodedImage(url, payload)
     else {
       val w = img.getWidth
       val h = img.getHeight
@@ -573,36 +596,31 @@ object Surfaces {
     * refused, and that refusal is part of the row's contract
     * (decodeRefused must be true via UnsupportedFeature, never a
     * mis-decode). Rows without a JPX image are ok=false. Shuffle-free
-    * per-row kernel work like the other decode surfaces; never throws. */
+    * per-row kernel work like the other decode surfaces. */
   def jpxHeaderFacts(spark: SparkSession, input: DataFrame): Dataset[JpxFact] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, payload0) =>
-        val payload = if (payload0 == null) Array.emptyByteArray else payload0
-        val fact =
-          try {
-            for {
-              doc <- DocStructure.openDocument(payload, None).toOption
-              refs <- DocStructure.pageRefs(doc).toOption
-              firstPage <- refs.headOption
-              hits <- Interp.interpretPageImageHits(doc, firstPage).toOption
-              (ref, _) <- hits.headOption
-              dict <- doc.findDictByRef(ref)
-              if Filters.streamFilterNames(dict).getOrElse(Nil).contains("/JPXDecode")
-              bytes <- doc.undecodedStreamByRef(ref).toOption
-              hdr <- Jp2.headerFacts(bytes).toOption
-            } yield {
-              val refused = doc.rawStreamByRef(ref) match {
-                case Left(_: PdfError.UnsupportedFeature) => true
-                case _ => false
-              }
-              JpxFact(url, ok = true, hdr.format, hdr.width, hdr.height,
-                hdr.components, hdr.bpc, refused)
-            }
-          } catch { case _: Throwable => None }
-        fact.getOrElse(JpxFact(url, ok = false, null, -1, -1, -1, -1, decodeRefused = false))
-      })
+    def noJpx(url: String) = JpxFact(url, ok = false, null, -1, -1, -1, -1, decodeRefused = false)
+    perDocument(input, noText)((url, _, _) => noJpx(url)) { (url, payload, _) =>
+      val fact = for {
+        doc <- openPdf(payload).toOption
+        refs <- DocStructure.pageRefs(doc).toOption
+        firstPage <- refs.headOption
+        hits <- Interp.interpretPageImageHits(doc, firstPage).toOption
+        (ref, _) <- hits.headOption
+        dict <- doc.findDictByRef(ref)
+        if Filters.streamFilterNames(dict).getOrElse(Nil).contains("/JPXDecode")
+        bytes <- doc.undecodedStreamByRef(ref).toOption
+        hdr <- Jp2.headerFacts(bytes).toOption
+      } yield {
+        val refused = doc.rawStreamByRef(ref) match {
+          case Left(_: PdfError.UnsupportedFeature) => true
+          case _ => false
+        }
+        JpxFact(url, ok = true, hdr.format, hdr.width, hdr.height,
+          hdr.components, hdr.bpc, refused)
+      }
+      fact.getOrElse(noJpx(url))
+    }
   }
 
   final case class ScannedImage(url: String, ok: Boolean,
@@ -612,32 +630,30 @@ object Surfaces {
     * PDF row, re-decode the exported lossless PNG and emit dimensions +
     * decoded-pixel md5 — externally oracled against the generator's
     * bitmap construction facts. Same shuffle-free shape as the other
-    * decode surfaces; failures are ok=false rows, never throws. */
+    * decode surfaces; failures are ok=false rows. */
   def scannedImageFacts(spark: SparkSession, input: DataFrame): Dataset[ScannedImage] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, payload0) =>
-        val payload = if (payload0 == null) Array.emptyByteArray else payload0
-        val png =
-          try DocStructure.openDocument(payload, None).toOption
-            .flatMap(doc => Images.extractPageImages(doc, 1).toOption)
-            .flatMap(_.headOption)
-            .map(_.bytes)
-          catch { case _: Throwable => None }
-        png match {
-          case Some(bytes) =>
-            val d = decodeImageRow(url, bytes)
-            ScannedImage(url, d.ok, d.width, d.height, d.pixelMd5)
-          case None => ScannedImage(url, ok = false, -1, -1, null)
-        }
-      })
+    def noImage(url: String) = ScannedImage(url, ok = false, -1, -1, null)
+    perDocument(input, noText)((url, _, _) => noImage(url)) { (url, payload, _) =>
+      openPdf(payload).toOption
+        .flatMap(doc => Images.extractPageImages(doc, 1).toOption)
+        .flatMap(_.headOption) match {
+        case Some(im) =>
+          val d = decodeImageRow(url, im.bytes)
+          ScannedImage(url, d.ok, d.width, d.height, d.pixelMd5)
+        case None => noImage(url)
+      }
+    }
   }
 
   // ---------- multimodal image resize ----------
 
   final case class ResizedImage(url: String, format: String, ok: Boolean,
       width: Int, height: Int, outWidth: Int, outHeight: Int, pixelMd5: String)
+
+  /** The row of a payload that does not decode as an image. */
+  private def unresizedImage(url: String, payload: Array[Byte]): ResizedImage =
+    ResizedImage(url, imageFormat(payload), ok = false, -1, -1, -1, -1, null)
 
   /** Aspect-preserving downscale to `maxDim` via nearest-neighbor sampling
     * — pure integer index math (ix = x*W/outW), so the resized pixels are
@@ -647,17 +663,16 @@ object Surfaces {
   def resizeImages(spark: SparkSession, input: DataFrame, maxDim: Int = 16): Dataset[ResizedImage] = {
     import spark.implicits._
     require(maxDim > 0)
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, payload) => resizeImageRow(url, payload, maxDim) })
+    perDocument(input, noText)((url, payload, _) => unresizedImage(url, payload)) {
+      (url, payload, _) => resizeImageRow(url, payload, maxDim)
+    }
   }
 
   /** Row-local resize kernel of [[resizeImages]] (fuzz-callable). */
-  private[graft] def resizeImageRow(url: String, payload0: Array[Byte],
+  private[graft] def resizeImageRow(url: String, payload: Array[Byte],
       maxDim: Int): ResizedImage = {
-    val payload = if (payload0 == null) Array.emptyByteArray else payload0
     val (fmt, img) = readImage(payload)
-    if (img == null) ResizedImage(url, fmt, ok = false, -1, -1, -1, -1, null)
+    if (img == null) unresizedImage(url, payload)
     else {
       val w = img.getWidth
       val h = img.getHeight
@@ -698,6 +713,14 @@ object Surfaces {
       sampleRate: Int, channels: Int, bits: Int, nSamples: Int,
       sampleMd5: String, rmsMilli: Long)
 
+  private def isWav(payload: Array[Byte]): Boolean = payload.length >= 12 &&
+    payload(0) == 'R' && payload(1) == 'I' && payload(2) == 'F' && payload(3) == 'F' &&
+    payload(8) == 'W' && payload(9) == 'A' && payload(10) == 'V' && payload(11) == 'E'
+
+  /** The row of a payload that does not decode as audio. */
+  private def undecodedAudio(url: String, payload: Array[Byte]): DecodedAudio =
+    DecodedAudio(url, if (isWav(payload)) "wav" else "binary", ok = false, -1, -1, -1, -1, null, -1L)
+
   /** REAL audio decoding over an opaque binary column: WAV/PCM payloads go
     * through the JDK's javax.sound.sampled (no external deps) and emit
     * typed metadata (rate/channels/bits/frames), the md5 of the decoded
@@ -707,20 +730,17 @@ object Surfaces {
     * mapPartitions, no shuffle. */
   def decodeAudio(spark: SparkSession, input: DataFrame): Dataset[DecodedAudio] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, payload) => decodeAudioRow(url, payload) })
+    perDocument(input, noText)((url, payload, _) => undecodedAudio(url, payload)) {
+      (url, payload, _) => decodeAudioRow(url, payload)
+    }
   }
 
-  /** Row-local audio decode kernel of [[decodeAudio]] (fuzz-callable). */
-  private[graft] def decodeAudioRow(url: String, payload0: Array[Byte]): DecodedAudio = {
-    val payload = if (payload0 == null) Array.emptyByteArray else payload0
-    val isRiff = payload.length >= 12 &&
-      payload(0) == 'R' && payload(1) == 'I' && payload(2) == 'F' && payload(3) == 'F' &&
-      payload(8) == 'W' && payload(9) == 'A' && payload(10) == 'V' && payload(11) == 'E'
-    val fmt = if (isRiff) "wav" else "binary"
+  /** Row-local audio decode kernel of [[decodeAudio]] (fuzz-callable).
+    * javax.sound reports a corrupt stream by throwing an exception: that
+    * is its "not decodable". */
+  private[graft] def decodeAudioRow(url: String, payload: Array[Byte]): DecodedAudio = {
     val decoded =
-      if (!isRiff) None
+      if (!isWav(payload)) None
       else
         try {
           val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
@@ -742,9 +762,9 @@ object Surfaces {
             if (n == 0 || buf.size > maxPcm) None
             else Some((af, buf.toByteArray))
           } finally in.close()
-        } catch { case _: Throwable => None }
+        } catch { case _: Exception => None }
     decoded match {
-      case None => DecodedAudio(url, fmt, ok = false, -1, -1, -1, -1, null, -1L)
+      case None => undecodedAudio(url, payload)
       case Some((af, pcm)) =>
         val bits = af.getSampleSizeInBits
         val channels = af.getChannels
@@ -764,7 +784,7 @@ object Surfaces {
         // computed" so non-16-bit audio is never mistaken for silence
         val rmsMilli =
           if (bits == 16) (math.sqrt(sumSq.toDouble / n) * 1000).round else -1L
-        DecodedAudio(url, fmt, ok = true, af.getSampleRate.round, channels, bits,
+        DecodedAudio(url, "wav", ok = true, af.getSampleRate.round, channels, bits,
           nSamples, md5, rmsMilli)
     }
   }
@@ -833,14 +853,11 @@ object Surfaces {
     * mapPartitions flatMap, no shuffle. */
   def decodeVideoFrames(spark: SparkSession, input: DataFrame): Dataset[VideoFrame] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (url, payload) => videoFramesRow(url, payload) })
+    perDocumentRows(input, noText)((url, payload, _) => videoFramesRow(url, payload))
   }
 
   /** Row-local demux+decode kernel of [[decodeVideoFrames]] (fuzz-callable). */
-  private[graft] def videoFramesRow(url: String, payload0: Array[Byte]): Iterator[VideoFrame] = {
-    val payload = if (payload0 == null) Array.emptyByteArray else payload0
+  private[graft] def videoFramesRow(url: String, payload: Array[Byte]): Iterator[VideoFrame] =
     demuxAvi(payload) match {
       case None =>
         Iterator.single(VideoFrame(url, -1, -1, -1, -1, null, -1, -1, decodeOk = false))
@@ -853,7 +870,6 @@ object Surfaces {
             decodeOk = true)
         }
     }
-  }
 
   // ---------- multimodal frame sampling (stub decode) ----------
 
@@ -868,27 +884,22 @@ object Surfaces {
   def sampleFrames(spark: SparkSession, input: DataFrame, everyNBytes: Int = 4096,
       maxFrames: Int = 8): Dataset[FrameRow] = {
     import spark.implicits._
-    input.select(col("url"), col("html"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { iter =>
-        iter.flatMap { case (url, payload0) =>
-          val payload = if (payload0 == null) Array.emptyByteArray else payload0
-          val n = math.min(maxFrames, math.max(payload.length / everyNBytes, 0))
-          (0 until n).iterator.map { f =>
-            val off = f.toLong * everyNBytes
-            val hist = new Array[Float](8)
-            var i = off.toInt
-            val end = math.min(payload.length, i + everyNBytes)
-            while (i < end) { hist((payload(i) & 0xff) >> 5) += 1f; i += 1 }
-            val total = math.max(end - off.toInt, 1)
-            var k = 0
-            while (k < 8) { hist(k) /= total; k += 1 }
-            // stub "dimensions" derived deterministically from content
-            FrameRow(url, f, off, 16 + (payload(off.toInt) & 0x3f),
-              16 + (payload(math.min(off.toInt + 1, payload.length - 1)) & 0x3f), hist)
-          }
-        }
+    perDocumentRows(input, noText) { (url, payload, _) =>
+      val n = math.min(maxFrames, math.max(payload.length / everyNBytes, 0))
+      (0 until n).map { f =>
+        val off = f.toLong * everyNBytes
+        val hist = new Array[Float](8)
+        var i = off.toInt
+        val end = math.min(payload.length, i + everyNBytes)
+        while (i < end) { hist((payload(i) & 0xff) >> 5) += 1f; i += 1 }
+        val total = math.max(end - off.toInt, 1)
+        var k = 0
+        while (k < 8) { hist(k) /= total; k += 1 }
+        // stub "dimensions" derived deterministically from content
+        FrameRow(url, f, off, 16 + (payload(off.toInt) & 0x3f),
+          16 + (payload(math.min(off.toInt + 1, payload.length - 1)) & 0x3f), hist)
       }
+    }
   }
 
   // ---------- structured streaming extraction ----------
@@ -900,12 +911,8 @@ object Surfaces {
     * like every stream; the returned table lives in that session. */
   def streamingExtract(spark0: SparkSession, corpusDir: String, queryName: String): DataFrame = {
     val spark = Streaming.streamSession(spark0)
-    import spark.implicits._
     Streaming.runToMemory(corpusDir, queryName) { dir =>
-      Streaming.parquetReader(spark, dir).parquet(dir)
-        .select(col("url"), col("html"), col("text"))
-        .as[(String, Array[Byte], String)]
-        .map { case (url, html, text) => Pipeline.extractRowMode(url, html, text, "tagged") }
+      Pipeline.extract(spark, Streaming.parquetReader(spark, dir).parquet(dir))
     }
     spark.table(queryName)
   }

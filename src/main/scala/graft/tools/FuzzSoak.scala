@@ -82,6 +82,15 @@ object FuzzSoak {
               Legacy.legacyText(d)
               // image path: filter decode (incl. CCITT G4) + PNG re-encode
               Images.extractPageImages(d, 1)
+              // the page, region, metadata and diff surfaces' kernels
+              Metadata.title(d); Metadata.infoJson(d); Metadata.trailerJson(d); Metadata.toc(d)
+              for (refs <- DocStructure.pageRefs(d); (ref, idx) <- refs.zipWithIndex;
+                   items <- Interp.interpretPageItems(d, ref)) {
+                Layout.layoutPageText(Layout.defaultOptions, items)
+                Page.pageRegions(idx + 1, Layout.defaultOptions, items)
+              }
+              DocStructure.openDocument(base, None)
+                .foreach(Diff.compareDocuments(Layout.defaultOptions, d, _))
             }
             Html.extractHtml(m)
             // media decoders on a mutated media payload (and, every 4th

@@ -8,21 +8,20 @@ import graft.spark.{CorpusGen, Pipeline}
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val docs = sys.env.getOrElse("DOCS", "1000000").toLong
+    // MODE = a name in Pipeline.Modes (default Pipeline.DefaultMode) — each
+    // mode has its own rare-input code paths (layout heuristics,
+    // backtracking parser), so the smoke can exercise every mode against
+    // its ground truth column: `expected` for the default, else
+    // `expected_<mode>`
+    val mode = sys.env.getOrElse("MODE", Pipeline.DefaultMode)
+    require(Pipeline.Modes.contains(mode), s"MODE must be one of ${Pipeline.Modes.keys.mkString(", ")}")
+    val expectedCol = if (mode == Pipeline.DefaultMode) "expected" else s"expected_$mode"
     val spark = graft.Bench.buildSession(32)
     val tmp = java.nio.file.Files.createTempDirectory("smoke").toString
     var t0 = System.nanoTime()
     CorpusGen.corpus(spark, docs, 128).write.mode("overwrite").parquet(s"$tmp/c")
     println(f"SMOKE gen+write ${(System.nanoTime()-t0)/1e9}%.1f s")
     val stored = spark.read.parquet(s"$tmp/c")
-    // MODE=tagged (default) | geom | legacy — each mode has its own rare-
-    // input code paths (layout heuristics, backtracking parser), so the
-    // smoke can exercise all three against their per-mode ground truth
-    val mode = sys.env.getOrElse("MODE", "tagged")
-    val expectedCol = mode match {
-      case "geom" => "expected_geom"
-      case "legacy" => "expected_legacy"
-      case _ => "expected"
-    }
     t0 = System.nanoTime()
     val joined = Pipeline.extractMode(spark, stored, mode).toDF()
       .join(stored.select(col("url"), col("kind"), col(expectedCol).as("expected")), Seq("url"))

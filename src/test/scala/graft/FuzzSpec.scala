@@ -9,31 +9,7 @@ import graft.spark.FixtureGen
   * Left(typed error). This is the 100 TB robustness contract: one bad
   * byte-range in a crawl segment cannot fail a task. */
 class FuzzSpec extends AnyFunSuite {
-
-  private def mutate(bytes: Array[Byte], rnd: scala.util.Random): Array[Byte] = {
-    val out = bytes.clone()
-    rnd.nextInt(5) match {
-      case 0 => // flip random bytes
-        for (_ <- 0 until 1 + rnd.nextInt(8))
-          out(rnd.nextInt(out.length)) = rnd.nextInt(256).toByte
-        out
-      case 1 => // truncate
-        out.take(1 + rnd.nextInt(out.length))
-      case 2 => // delete a slice
-        val from = rnd.nextInt(out.length)
-        val len = 1 + rnd.nextInt(math.max(1, out.length / 4))
-        out.take(from) ++ out.drop(math.min(out.length, from + len))
-      case 3 => // duplicate a slice (simulates incremental-update garbage)
-        val from = rnd.nextInt(out.length)
-        val len = 1 + rnd.nextInt(math.max(1, out.length / 8))
-        out.take(from) ++ out.slice(from, math.min(out.length, from + len)) ++ out.drop(from)
-      case _ => // zero a run
-        val from = rnd.nextInt(out.length)
-        val len = 1 + rnd.nextInt(math.max(1, out.length / 8))
-        for (i <- from until math.min(out.length, from + len)) out(i) = 0
-        out
-    }
-  }
+  import FuzzSpec.mutate
 
   test("mutated PDFs never throw (tagged/geom/legacy modes)") {
     val rnd = new scala.util.Random(20260816L)
@@ -72,5 +48,34 @@ class FuzzSpec extends AnyFunSuite {
       Extract.extractPdf(m, None)
     }
     succeed
+  }
+}
+
+object FuzzSpec {
+  /** One seeded corruption of a document: flip bytes, truncate, delete,
+    * duplicate or zero a slice. */
+  def mutate(bytes: Array[Byte], rnd: scala.util.Random): Array[Byte] = {
+    val out = bytes.clone()
+    rnd.nextInt(5) match {
+      case 0 => // flip random bytes
+        for (_ <- 0 until 1 + rnd.nextInt(8))
+          out(rnd.nextInt(out.length)) = rnd.nextInt(256).toByte
+        out
+      case 1 => // truncate
+        out.take(1 + rnd.nextInt(out.length))
+      case 2 => // delete a slice
+        val from = rnd.nextInt(out.length)
+        val len = 1 + rnd.nextInt(math.max(1, out.length / 4))
+        out.take(from) ++ out.drop(math.min(out.length, from + len))
+      case 3 => // duplicate a slice (simulates incremental-update garbage)
+        val from = rnd.nextInt(out.length)
+        val len = 1 + rnd.nextInt(math.max(1, out.length / 8))
+        out.take(from) ++ out.slice(from, math.min(out.length, from + len)) ++ out.drop(from)
+      case _ => // zero a run
+        val from = rnd.nextInt(out.length)
+        val len = 1 + rnd.nextInt(math.max(1, out.length / 8))
+        for (i <- from until math.min(out.length, from + len)) out(i) = 0
+        out
+    }
   }
 }

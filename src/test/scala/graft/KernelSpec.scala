@@ -193,13 +193,13 @@ class KernelSpec extends AnyFunSuite {
   // ---- code splitting (Unit.hs:1355-1394) ----
 
   test("UTF-16BE surrogate pairs combine into one code") {
-    val codes = Interp.unicodeBytesToCodes(List(0xD8, 0x3D, 0xDE, 0x00)) // U+1F600
-    assert(codes == List(0x1F600))
-    assert(Interp.unicodeBytesToCodes(List(0x00, 0x41, 0x30, 0x42)) == List(0x41, 0x3042))
+    val codes = Interp.unicodeBytesToCodesArr(Array(0xD8, 0x3D, 0xDE, 0x00)) // U+1F600
+    assert(codes.toList == List(0x1F600))
+    assert(Interp.unicodeBytesToCodesArr(Array(0x00, 0x41, 0x30, 0x42)).toList == List(0x41, 0x3042))
   }
 
   test("SJIS lead bytes pair; ASCII passes through") {
-    assert(Interp.sjisBytesToCodes(List(0x41, 0x88, 0x9F, 0x42)) == List(0x41, 0x889F, 0x42))
+    assert(Interp.sjisBytesToCodesArr(Array(0x41, 0x88, 0x9F, 0x42)).toList == List(0x41, 0x889F, 0x42))
   }
 
   test("JIS X 0208 codes resolve via the charset table") {

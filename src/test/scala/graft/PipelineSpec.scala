@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.spark.{CorpusGen, Pipeline}
+import graft.spark.{CorpusGen, FixtureGen, Pipeline, Surfaces}
 
 /** End-to-end Spark pipeline tests: scan -> mapPartitions kernel ->
   * predicates/joins, with a byte-identical match-rate gate against the
@@ -71,13 +71,71 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partition metrics account for every document") {
-    val corpus = CorpusGen.corpus(spark, rows = 90, partitions = 5)
-    val extracted = Pipeline.extract(spark, CorpusGen.inputView(corpus))
-    val m = Pipeline.partitionMetrics(spark, extracted).toDF()
-      .agg(sum("docs"), sum("okDocs"), sum("errorDocs")).collect()(0)
-    assert(m.getLong(0) == 90)
-    assert(m.getLong(1) == 90)
-    assert(m.getLong(2) == 0)
+    val corpus = CorpusGen.corpus(spark, rows = 90, partitions = 5).cache()
+    for (mode <- Pipeline.Modes.keys) {
+      val extracted = Pipeline.extractMode(spark, CorpusGen.inputView(corpus), mode)
+      val m = Pipeline.partitionMetrics(spark, extracted).toDF()
+        .agg(sum("docs"), sum("okDocs"), sum("errorDocs"),
+          sum(col("pdfDocs") + col("htmlDocs") + col("textDocs"))).collect()(0)
+      assert(m.getLong(0) == 90, mode)
+      assert(m.getLong(1) == 90, mode)
+      assert(m.getLong(2) == 0, mode)
+      assert(m.getLong(3) == 90, mode)
+    }
+  }
+
+  test("an unknown extraction mode is rejected when extractMode is called") {
+    val input = CorpusGen.inputView(CorpusGen.corpus(spark, rows = 3, partitions = 1))
+    val e = intercept[IllegalArgumentException](Pipeline.extractMode(spark, input, "tagdged"))
+    assert(e.getMessage.contains("tagdged"), e.getMessage)
+  }
+
+  test("every per-document surface is total: bad rows leave the good rows' output unchanged") {
+    val s = spark
+    import s.implicits._
+    def docs(df: org.apache.spark.sql.DataFrame) = df.select("url", "html", "text")
+    val good = Seq(
+      CorpusGen.corpus(spark, rows = 18, partitions = 2),
+      CorpusGen.mediaCorpus(spark, rows = 6, partitions = 1),
+      CorpusGen.audioCorpus(spark, rows = 3, partitions = 1),
+      CorpusGen.videoCorpus(spark, rows = 3, partitions = 1),
+      CorpusGen.scannedCorpus(spark, rows = 8, partitions = 1),
+      CorpusGen.jpxCorpus(spark, rows = 3, partitions = 1)).map(docs).reduce(_ unionByName _).cache()
+    // a null payload, an empty one and seeded mutations of every PDF kind
+    val rnd = new scala.util.Random(20261018L)
+    val pdfs = (0L until 13L).map(FixtureGen.docFor(_).bytes) ++ Seq(FixtureGen.book(1).bytes,
+      FixtureGen.ccittImage(1).bytes, FixtureGen.jbig2Image(1).bytes, FixtureGen.jpxImage(1).bytes)
+    val bad = (Seq[(String, Array[Byte], String)](("bad/null", null, null),
+      ("bad/empty", Array.emptyByteArray, null)) ++
+      (for ((pdf, i) <- pdfs.zipWithIndex; rep <- 0 until 3)
+        yield (s"bad/mutated/$i/$rep", FuzzSpec.mutate(pdf, rnd), null: String)))
+      .toDF("url", "html", "text").repartition(3)
+    val variant = docs(CorpusGen.variantCorpus(spark, rows = 18, partitions = 2))
+    val surfaces: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] =
+      Pipeline.Modes.keys.toSeq.map(m =>
+        s"extractMode $m" -> ((in: org.apache.spark.sql.DataFrame) =>
+          Pipeline.extractMode(spark, in, m).toDF().drop("kernelMicros"))) ++ Seq(
+      "extractPages" -> (Pipeline.extractPages(spark, _).toDF()),
+      "extractRegions" -> (Pipeline.extractRegions(spark, _).toDF()),
+      "extractMeta" -> (Pipeline.extractMeta(spark, _).toDF()),
+      "extractImages" -> (Surfaces.extractImages(spark, _).toDF()),
+      "diffDocuments" -> (in => Surfaces.diffDocuments(spark, in, variant.unionByName(bad)).toDF()),
+      "binaryFeatures" -> (Surfaces.binaryFeatures(spark, _).toDF()),
+      "decodeImages" -> (Surfaces.decodeImages(spark, _).toDF()),
+      "jpxHeaderFacts" -> (Surfaces.jpxHeaderFacts(spark, _).toDF()),
+      "scannedImageFacts" -> (Surfaces.scannedImageFacts(spark, _).toDF()),
+      "resizeImages" -> (Surfaces.resizeImages(spark, _).toDF()),
+      "decodeAudio" -> (Surfaces.decodeAudio(spark, _).toDF()),
+      "decodeVideoFrames" -> (Surfaces.decodeVideoFrames(spark, _).toDF()),
+      "sampleFrames" -> (Surfaces.sampleFrames(spark, _, everyNBytes = 256).toDF()))
+    for ((name, surface) <- surfaces) {
+      def rows(in: org.apache.spark.sql.DataFrame) = surface(in)
+        .filter(!col("url").startsWith("bad/")).collect().map(_.toString).sorted.toSeq
+      val clean = rows(good)
+      assert(clean.nonEmpty, name)
+      // the job over the bad rows must finish and change no good row
+      assert(rows(good.unionByName(bad)) == clean, name)
+    }
   }
 
   test("observed decode counters ride the caller's action (observe metrics)") {

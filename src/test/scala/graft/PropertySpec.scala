@@ -77,8 +77,86 @@ class PropertySpec extends AnyFunSuite {
       val bytes = cps.flatMap { cp =>
         new String(Character.toChars(cp)).getBytes("UTF-16BE").map(_ & 0xff).toList
       }
-      assert(Interp.unicodeBytesToCodes(bytes) == cps)
+      assert(Interp.unicodeBytesToCodesArr(bytes.toArray).toList == cps)
     }
+  }
+
+  // Reference forms of the byte-to-code decoders (the direct transcription
+  // of the pattern-matching originals, Unit.hs:1355-1394 and
+  // StreamLex.hs:44-54); the interpreter and the legacy extractor run the
+  // Array forms, which must agree with these on every input.
+  private def sjisRef(bs: List[Int]): List[Int] = bs match {
+    case Nil => Nil
+    case b :: rest if (b >= 0x81 && b <= 0x9F) || (b >= 0xE0 && b <= 0xFC) =>
+      rest match {
+        case t :: rs => (b * 256 + t) :: sjisRef(rs)
+        case Nil => List(b)
+      }
+    case b :: rest => b :: sjisRef(rest)
+  }
+
+  private def unicodeRef(bs: List[Int]): List[Int] = bs match {
+    case a :: b :: rest =>
+      val unit = a * 256 + b
+      if (unit >= 0xD800 && unit <= 0xDBFF) rest match {
+        case c :: d :: rs =>
+          val unit2 = c * 256 + d
+          if (unit2 >= 0xDC00 && unit2 <= 0xDFFF)
+            (0x10000 + ((unit - 0xD800) << 10) + (unit2 - 0xDC00)) :: unicodeRef(rs)
+          else unit :: unicodeRef(rest)
+        case _ => List(unit)
+      }
+      else unit :: unicodeRef(rest)
+    case _ => Nil
+  }
+
+  private def jisRef(bs: List[Int]): List[Int] = bs match {
+    case a :: b :: rest => (a * 256 + b) :: jisRef(rest)
+    case _ => Nil
+  }
+
+  private def hexPairsRef(h: String): List[Int] = {
+    val out = List.newBuilder[Int]
+    var i = 0
+    while (i < h.length) {
+      val a = h.charAt(i)
+      if (i + 1 < h.length) {
+        val b = h.charAt(i + 1)
+        if (Lexer.isHexDigit(a) && Lexer.isHexDigit(b))
+          out += (Lexer.hexVal(a) << 4) | Lexer.hexVal(b)
+        i += 2
+      } else {
+        if (Lexer.isHexDigit(a)) out += Lexer.hexVal(a) << 4
+        i += 1
+      }
+    }
+    out.result()
+  }
+
+  test("byte-to-code decoders agree with their reference forms") {
+    // bytes weighted towards surrogate halves and SJIS lead bytes, with a
+    // tail that ends the input on a lone high surrogate, a high surrogate
+    // missing its low half, an SJIS lead byte or an odd byte
+    val byte = Gen.frequency(
+      3 -> Gen.choose(0x00, 0xFF), 1 -> Gen.choose(0xD8, 0xDB), 1 -> Gen.choose(0xDC, 0xDF),
+      1 -> Gen.choose(0x81, 0x9F), 1 -> Gen.choose(0xE0, 0xFC))
+    val tail = Gen.oneOf(List(Nil, List(0xD8), List(0xD8, 0x3D), List(0xD8, 0x3D, 0xDE),
+      List(0xD8, 0x3D, 0x00, 0x41), List(0x88), List(0xFC), List(0x41)))
+    val fixed = List(Nil, List(0x41), List(0xD8, 0x00), List(0xDB, 0xFF, 0xDC),
+      List(0xD8, 0x00, 0xD8, 0x00), List(0x41, 0x88), List(0x88, 0x9F, 0xE0))
+    def check(bs: List[Int]): Unit = {
+      val arr = bs.toArray
+      assert(Interp.sjisBytesToCodesArr(arr).toList == sjisRef(bs), bs)
+      assert(Interp.unicodeBytesToCodesArr(arr).toList == unicodeRef(bs), bs)
+      assert(Interp.jisBytesToCodesArr(arr).toList == jisRef(bs), bs)
+    }
+    fixed.foreach(check)
+    forAll(Gen.listOf(byte), tail)((body, t) => check(body ++ t))
+    val hexChar = Gen.oneOf("0123456789abcdefABCDEF xz\n".toSeq)
+    for (h <- Seq("", "a", "4", "41a", "4 1", "g1", "0aF"))
+      assert(Interp.hexPairsArr(h).toList == hexPairsRef(h), h)
+    forAll(Gen.listOf(hexChar).map(_.mkString))(h =>
+      assert(Interp.hexPairsArr(h).toList == hexPairsRef(h), h))
   }
 
   test("flate deflate/inflate round-trips") {

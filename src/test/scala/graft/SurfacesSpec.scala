@@ -624,34 +624,54 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(left.isEmpty, s"source copies left in $tmp: $left")
   }
 
-  test("a stateful stream on a local checkpoint starts no OS process") {
+  /** The commands of the OS processes `body` starts, recorded in-process
+    * with JFR. Spark deletes local temp dirs with `rm -rf` (JavaUtils), also
+    * in the background for the state stores and sessions of earlier tests:
+    * that is not the I/O under test and is left out. */
+  private def processStarts(body: => Unit): Seq[String] = {
     import jdk.jfr.Recording
     import jdk.jfr.consumer.RecordingFile
     import scala.jdk.CollectionConverters._
-    val events = "/root/testdata/sf0.001/events.parquet"
-    // the caller session builds (and Hadoop caches) a file: filesystem
-    // first; the stream must not run on that cached instance
-    assert(spark.read.parquet(events).count() > 0)
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
-    val pairs = try graft.spark.Streaming.attributedPurchases(spark, events, "t_nofork").count()
-      finally rec.stop()
+    try body finally rec.stop()
     val jfr = java.nio.file.Files.createTempFile("nofork", ".jfr")
     try {
       rec.dump(jfr)
-      // Spark deletes local temp dirs with `rm -rf` (JavaUtils), also in the
-      // background for the state stores and sessions of earlier tests: that
-      // is not checkpoint I/O and is left out
-      val forks = RecordingFile.readAllEvents(jfr).asScala
+      RecordingFile.readAllEvents(jfr).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
         .filterNot(_.getStackTrace.getFrames.asScala
           .exists(_.getMethod.getName == "deleteRecursivelyUsingUnixNative"))
         .map(_.getString("command"))
-      val n = forks.size
-      assert(n == 0, s"$n processes started, e.g. ${forks.take(3).mkString("; ")}")
     } finally { rec.close(); java.nio.file.Files.delete(jfr) }
+  }
+
+  test("a stateful stream on a local checkpoint starts no OS process") {
+    val events = "/root/testdata/sf0.001/events.parquet"
+    // the caller session builds (and Hadoop caches) a file: filesystem
+    // first; the stream must not run on that cached instance
+    assert(spark.read.parquet(events).count() > 0)
+    var pairs = 0L
+    val forks = processStarts {
+      pairs = graft.spark.Streaming.attributedPurchases(spark, events, "t_nofork").count()
+    }
+    val n = forks.size
+    assert(n == 0, s"$n processes started, e.g. ${forks.take(3).mkString("; ")}")
     assert(pairs > 0)
+  }
+
+  test("d11 and q12 write their scratch tables without starting an OS process") {
+    val dir = "/root/testdata/sf0.001"
+    // as above: the caller session's cached file: filesystem exists first
+    assert(spark.read.parquet(s"$dir/documents.parquet").count() > 0)
+    for (q <- Seq("d11_incremental_dedup", "q12_bucketed_join")) {
+      var rows = 0
+      val forks = processStarts { rows = graft.spark.Queries.queries(q)(spark, dir).collect().length }
+      val n = forks.size
+      assert(n == 0, s"$q: $n processes started, e.g. ${forks.take(3).mkString("; ")}")
+      assert(rows > 0, q)
+    }
   }
 
   test("a stateful stream stopped after its first batch resumes on its checkpoint") {
