@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import graft.spark.{CorpusGen, Pipeline}
 
 /** Two-cluster-size scaling evidence (north_rule: throughput scaling
@@ -16,33 +15,23 @@ import graft.spark.{CorpusGen, Pipeline}
 object ScalingBench {
 
   final case class Level(cpus: Int, docs: Long, bestSecs: Double, docsPerSec: Double,
-      matchRate: Double, reps: List[Double], saltedBestSecs: Double = 0.0,
-      weightedBestSecs: Double = 0.0)
-
-  /** Giant threshold for the skew variant: light kinds are <= ~3 KB, the
-    * ~400-page giants are >100 KB — anything over 50 KB is a giant. */
-  val SkewThresholdBytes = 50000L
+      matchRate: Double, reps: List[Double])
 
   def runLevel(cpus: Int, docs: Long, reps: Int, skew: Boolean = false): Level = {
     val spark = Bench.buildSession(cpus)
     try {
       val tmp = java.nio.file.Files.createTempDirectory(s"graft_scale_$cpus").toString
-      val giantEvery = sys.env.getOrElse("SPARK_GRAFT_GIANT_EVERY",
-        math.max(docs / 96, 1).toString).toLong
       val corpus =
-        if (skew) CorpusGen.heavyTailCorpus(spark, docs, cpus * 4, giantEvery = giantEvery)
+        if (skew) CorpusGen.heavyTailCorpus(spark, docs, cpus * 4)
         else CorpusGen.corpus(spark, docs, cpus * 4, heavy = true)
       corpus.write.mode("overwrite").parquet(s"$tmp/corpus")
       val stored = spark.read.parquet(s"$tmp/corpus")
-      // The primary (headline) plan never shuffles: the scan's byte-based
-      // splits (maxPartitionBytes=8m) are themselves size-weighted, so a
-      // task holds at most ceil(8MB/giant-size)+1 giants. The explicit
-      // strategies below exist for when a shuffle is forced anyway.
-      def scanInput = stored.select("url", "html", "text")
-      def weighted = Pipeline.sizeWeightedRepartition(
-        scanInput, cpus * 4, cpus * 4, SkewThresholdBytes)
-      def salted = scanInput
-        .repartition(cpus * 4, pmod(xxhash64(col("url")), lit(cpus * 4)))
+      // The plan never shuffles: the scan's byte-based splits
+      // (maxPartitionBytes=8m) are themselves size-weighted, so a task
+      // holds at most ceil(8MB/giant-size)+1 giants. On the heavy-tailed
+      // corpus this beat both url-hash salting and a size-ranked giant
+      // placement at 4N (BENCH/BASELINE.md "Heavy-tailed skew").
+      val scanInput = stored.select("url", "html", "text")
       // match-rate gate (untimed; also serves as JIT warmup)
       val gate = Pipeline.extract(spark, scanInput).toDF()
         .join(stored.select("url", "expected"), Seq("url"))
@@ -50,19 +39,14 @@ object ScalingBench {
           sum(when(col("text") === col("expected"), 1L).otherwise(0L)).as("m"))
         .collect()(0)
       val matchRate = gate.getLong(1).toDouble / math.max(gate.getLong(0), 1)
-      def time(input: => org.apache.spark.sql.DataFrame): Double = {
+      val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        Pipeline.extract(spark, input).toDF()
+        Pipeline.extract(spark, scanInput).toDF()
           .agg(sum(when(col("ok"), 1L).otherwise(0L))).collect()
         (System.nanoTime() - t0) / 1e9
-      }
-      val times = (1 to reps).map(_ => time(scanInput)).toList
-      // skew mode: weighted-repartition vs hash-salted contrast on the
-      // SAME corpus (best of the same rep count each)
-      val weightedBest = if (skew) (1 to reps).map(_ => time(weighted)).min else 0.0
-      val saltedBest = if (skew) (1 to reps).map(_ => time(salted)).min else 0.0
+      }.toList
       val best = times.min
-      Level(cpus, docs, best, docs / best, matchRate, times, saltedBest, weightedBest)
+      Level(cpus, docs, best, docs / best, matchRate, times)
     } finally spark.stop()
   }
 
@@ -78,12 +62,6 @@ object ScalingBench {
     val efficiency = r4N.docsPerSec / (4.0 * rN.docsPerSec)
 
     def fmtList(xs: List[Double]) = xs.map(x => f"$x%.2f").mkString("[", ",", "]")
-    val skewExtra = if (skew)
-      ",\"skew\":true,\"salted_best_secs_n\":" + f"${rN.saltedBestSecs}%.2f" +
-        ",\"salted_best_secs_4n\":" + f"${r4N.saltedBestSecs}%.2f" +
-        ",\"weighted_best_secs_n\":" + f"${rN.weightedBestSecs}%.2f" +
-        ",\"weighted_best_secs_4n\":" + f"${r4N.weightedBestSecs}%.2f"
-    else ""
     println(
       "{\"metric\":\"scaling_efficiency\",\"value\":" + f"$efficiency%.3f" +
         ",\"unit\":\"ratio\",\"docs\":" + docs +
@@ -93,7 +71,8 @@ object ScalingBench {
         ",\"reps_n\":" + fmtList(rN.reps) +
         ",\"reps_4n\":" + fmtList(r4N.reps) +
         ",\"match_rate_n\":" + rN.matchRate +
-        ",\"match_rate_4n\":" + r4N.matchRate + skewExtra + "}")
+        ",\"match_rate_4n\":" + r4N.matchRate +
+        (if (skew) ",\"skew\":true" else "") + "}")
 
     if (args.contains("--write-md")) {
       val md =

@@ -30,8 +30,12 @@ object CorpusGen {
 
   def row(i: Long): CorpusRow = row(i, heavy = false)
 
-  def row(i: Long, heavy: Boolean): CorpusRow = {
-    val d = if (heavy) FixtureGen.docForHeavy(i) else FixtureGen.docFor(i)
+  def row(i: Long, heavy: Boolean): CorpusRow =
+    row(i, if (heavy) FixtureGen.docForHeavy(i) else FixtureGen.docFor(i))
+
+  /** Row i of a corpus carrying document `d`; only a `textrow` payload has
+    * a text column (its extraction falls back to it). */
+  private def row(i: Long, d: FixtureGen.Doc): CorpusRow =
     CorpusRow(
       url = s"https://corpus.test/${d.kind}/$i",
       warc_ts = new Timestamp(epochMs + i * 1000L),
@@ -48,69 +52,35 @@ object CorpusGen {
       page_texts = d.pageTexts,
       title = d.title,
       regions = d.regions)
-  }
 
-  /** Build the corpus as a DataFrame. Rows are generated ON THE EXECUTORS
-    * from the row index (spark.range), so generation itself scales: no
-    * driver-side materialization, any target size. */
-  def corpus(spark: SparkSession, rows: Long, partitions: Int = 0,
-      heavy: Boolean = false): DataFrame = {
+  /** Rows `doc(i)` for i in [0, rows), generated ON THE EXECUTORS from the
+    * row index (spark.range), so generation itself scales: no driver-side
+    * materialization, any target size. */
+  private def build(spark: SparkSession, rows: Long, partitions: Int)(
+      doc: Long => FixtureGen.Doc): DataFrame = {
     import spark.implicits._
     val base = if (partitions > 0) spark.range(0, rows, 1, partitions) else spark.range(rows)
-    base.as[Long].mapPartitions(_.map(i => row(i, heavy))).toDF()
+    base.as[Long].mapPartitions(_.map(i => row(i, doc(i)))).toDF()
   }
 
-  /** Heavy-tailed corpus (rare ~1000x-size giants): the skew-bench input
-    * for Pipeline.sizeWeightedRepartition. */
+  /** The corpus: FixtureGen's kinds in turn, or with `heavy` every other
+    * row a 24-page book. */
+  def corpus(spark: SparkSession, rows: Long, partitions: Int = 0,
+      heavy: Boolean = false): DataFrame =
+    build(spark, rows, partitions)(
+      if (heavy) FixtureGen.docForHeavy else FixtureGen.docFor)
+
+  /** Heavy-tailed corpus (a ~1000x-size giant every 100th row): the
+    * skew-bench input. */
   def heavyTailCorpus(spark: SparkSession, rows: Long, partitions: Int,
-      giantEvery: Long, giantPages: Int = 4000): DataFrame = {
-    import spark.implicits._
-    spark.range(0, rows, 1, partitions).as[Long].mapPartitions(_.map { i =>
-      val d = FixtureGen.docForHeavyTail(i, giantEvery, giantPages)
-      CorpusRow(
-        url = s"https://corpus.test/${d.kind}/$i",
-        warc_ts = new Timestamp(epochMs + i * 1000L),
-        html = d.bytes,
-        text = if (d.kind == "textrow") d.expected else null,
-        lang = d.lang,
-        expected = d.expected,
-        kind = d.kind,
-        pages = d.pages,
-        expected_geom = d.expectedGeom,
-        expected_legacy = d.expectedLegacy,
-        toc_entries = d.tocEntries,
-        toc_text = d.tocText,
-        page_texts = d.pageTexts,
-        title = d.title,
-        regions = d.regions)
-    }).toDF()
-  }
+      giantPages: Int = 4000): DataFrame =
+    build(spark, rows, partitions)(FixtureGen.docForHeavyTail(_, giantPages))
 
   /** Long many-paragraph documents (FixtureGen.longDoc) for the
-    * realistic-budget chunking surface: same CorpusRow shape, every row a
-    * 6-page/48-paragraph PDF with construction-fact page_texts/regions. */
-  def longCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame = {
-    import spark.implicits._
-    spark.range(0, rows, 1, partitions).as[Long].mapPartitions(_.map { i =>
-      val d = FixtureGen.longDoc(i)
-      CorpusRow(
-        url = s"https://corpus.test/${d.kind}/$i",
-        warc_ts = new Timestamp(epochMs + i * 1000L),
-        html = d.bytes,
-        text = null,
-        lang = d.lang,
-        expected = d.expected,
-        kind = d.kind,
-        pages = d.pages,
-        expected_geom = d.expectedGeom,
-        expected_legacy = d.expectedLegacy,
-        toc_entries = d.tocEntries,
-        toc_text = d.tocText,
-        page_texts = d.pageTexts,
-        title = d.title,
-        regions = d.regions)
-    }).toDF()
-  }
+    * realistic-budget chunking surface: every row a 6-page/48-paragraph PDF
+    * with construction-fact page_texts/regions. */
+  def longCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
+    build(spark, rows, partitions)(FixtureGen.longDoc)
 
   /** Input-shape view (drops the ground-truth columns). */
   def inputView(corpus: DataFrame): DataFrame =

@@ -352,11 +352,6 @@ object FixtureGen {
     * fully predictable. */
   def book(i: Long): Doc = bookN(i, 24)
 
-  /** A giant book: at the 4000-page default (~2.2 MB, ~0.6 s kernel) a
-    * single giant is a task-stalling unit next to the ~600 B light kinds —
-    * a >1000x byte spread, the heavy-tailed shape a crawl corpus has. */
-  def giantBook(i: Long, giantPages: Int = 4000): Doc = bookN(i, giantPages)
-
   def bookN(i: Long, nPages: Int): Doc = {
     val parasPerPage = 5
     val linesPerPara = 6
@@ -1178,9 +1173,10 @@ object FixtureGen {
   def docForHeavy(i: Long): Doc =
     if (i % 2 == 0) book(i) else docFor(i)
 
-  /** Heavy-tailed row: a rare giant book (every `giantEvery` rows) in a
-    * sea of light documents — the skew shape that breaks plain hash
-    * salting (two giants colocating stalls a task). */
-  def docForHeavyTail(i: Long, giantEvery: Long, giantPages: Int = 4000): Doc =
-    if (i % giantEvery == 0) giantBook(i, giantPages) else docFor(i)
+  /** Heavy-tailed row: a rare giant book (every 100th row) in a sea of
+    * light documents. At the 4000-page default (~2.2 MB, ~0.6 s kernel) a
+    * giant is a task-stalling unit next to the ~600 B light kinds — a
+    * >1000x byte spread, the heavy-tailed shape a crawl corpus has. */
+  def docForHeavyTail(i: Long, giantPages: Int = 4000): Doc =
+    if (i % 100 == 0) bookN(i, giantPages) else docFor(i)
 }

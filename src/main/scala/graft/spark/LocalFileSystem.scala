@@ -26,13 +26,20 @@ object LocalFileSystem {
     }
   }
 
-  /** Makes `spark`'s `file:` paths use this filesystem and returns `spark`.
-    * Hadoop caches filesystems by scheme and user, not by conf, so a
-    * `file:` filesystem the JVM built earlier (any session's read) would
-    * shadow `fs.file.impl`; the cache is off for `file:` on this session. */
+  /** Makes the `file:` paths of every session of `spark`'s context use
+    * this filesystem and returns `spark`. It is set on the context's Hadoop
+    * configuration, which every session's Hadoop conf starts from, so one
+    * call covers the sessions built before and after it; calling it again
+    * changes nothing. Hadoop caches filesystems by scheme and user, not by
+    * conf, so a `file:` filesystem the JVM built earlier (any session's
+    * read) would shadow `fs.file.impl`; the cache is off for `file:`. */
   def register(spark: SparkSession): SparkSession = {
-    spark.conf.set("fs.file.impl", classOf[LocalFileSystem].getName)
-    spark.conf.set("fs.file.impl.disable.cache", "true")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = classOf[LocalFileSystem].getName
+    if (conf.get("fs.file.impl") != impl) {
+      conf.set("fs.file.impl.disable.cache", "true")
+      conf.set("fs.file.impl", impl)
+    }
     spark
   }
 }

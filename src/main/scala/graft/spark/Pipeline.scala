@@ -11,19 +11,11 @@ import graft.core.DocStructure.Document
   * The unit of parallelism is the document row: the pure JVM kernel
   * (graft.core) runs inside `mapPartitions` over a Catalyst-planned scan, so
   * column pruning / predicate pushdown stay fully effective on the input
-  * table and everything cross-document (salting, metrics, resume) is plain
+  * table and everything cross-document (metrics, resume) is plain
   * declarative Spark. Designed for 10^12-row Iceberg tables; tested on
   * parquet in local mode — the plan shape is identical.
   */
 object Pipeline {
-
-  /** Input row (BASELINE.json input_hint schema). */
-  final case class PageRow(
-      url: String,
-      warc_ts: java.sql.Timestamp,
-      html: Array[Byte],
-      text: String,
-      lang: String)
 
   /** Extraction result row: all-primitive fields -> Tungsten-friendly. */
   final case class ExtractedDoc(
@@ -162,11 +154,11 @@ object Pipeline {
     * scan to those columns; `mapPartitions` keeps JVM object reuse and the
     * per-document caches partition-local; no shuffle is introduced at all —
     * extraction is embarrassingly parallel and writes can stay
-    * shuffle-free. Skew from giant PDFs is bounded by MaxPayloadBytes and
-    * surfaced via kernelMicros in the metrics. When the source file layout
-    * is skewed (crawl segments of wildly different row counts) the caller
-    * salts the input first, e.g. `repartition(n, pmod(xxhash64(url), n))`,
-    * or places giants with [[sizeWeightedRepartition]].
+    * shuffle-free. Size skew is bounded by the scan's byte splits
+    * (`spark.sql.files.maxPartitionBytes`: a split holds few giant rows)
+    * and by MaxPayloadBytes, and surfaced via kernelMicros in the metrics;
+    * on a heavy-tailed corpus the unshuffled scan measured fastest
+    * (BENCH/BASELINE.md "Heavy-tailed skew").
     */
   def extractMode(spark: SparkSession, input: DataFrame, mode: String): Dataset[ExtractedDoc] = {
     import spark.implicits._
@@ -176,65 +168,6 @@ object Pipeline {
   /** [[extractMode]] in the default mode. */
   def extract(spark: SparkSession, input: DataFrame): Dataset[ExtractedDoc] =
     extractMode(spark, input, DefaultMode)
-
-  /** Byte-size-weighted redistribution for heavy-tailed corpora
-    * (SURVEY §4.1): hash salting gives every giant an independent uniform
-    * partition, so two 500 MB PDFs still colocate with birthday-collision
-    * probability — and one such collision stalls a task for the whole
-    * job's tail. This makes giant placement EXACT:
-    *
-    *   - rows <= `giantThresholdBytes` are salted by url hash as usual;
-    *   - giant rows get dedicated partitions assigned round-robin over
-    *     their size-DESCENDING global rank (first-fit-decreasing-style),
-    *     so no slot ever holds more than ceil(G/slots) giants regardless
-    *     of hash luck. (Plain `repartition(n)` round-robin is only
-    *     per-input-partition exact — streams from different input
-    *     partitions still collide.)
-    *
-    * The rank is computed on a SKINNY (url, size) projection — the heavy
-    * payload bytes never pass through the single-task window — and joined
-    * back by broadcast (giants are rare by definition). `repartitionByRange`
-    * on the slot id maps each slot to its own partition (range bounds
-    * split at the distinct slot values). The union concatenates both
-    * partitionings without a further shuffle. Cost: two extra read passes
-    * over the giant subset (rank + range sampling); on a real Iceberg
-    * table you would precompute a size column at write time and both
-    * passes prune to (url, size) via column stats. Use giantSlots ~
-    * smallPartitions: when giants are fewer than slots each gets a
-    * partition to itself, and beyond that counts stay exact.
-    *
-    * The exact rank is BOUNDED: only the `maxRankedGiants` LARGEST giants
-    * go through the ordered window (the `orderBy.limit` is a distributed
-    * top-K — TakeOrderedAndProject — so the one single-task sort ever run
-    * is over at most maxRankedGiants skinny rows, ~tens of MB at the 2^20
-    * default, regardless of corpus size). Giants beyond the top-K — by
-    * definition the SMALLEST giants, whose hash collisions cost the least —
-    * fall back to uniform url-hash slots. This keeps the plan safe even in
-    * a pathological >10^6-giants regime while staying exact where
-    * exactness pays. */
-  def sizeWeightedRepartition(input: DataFrame, smallPartitions: Int, giantSlots: Int,
-      giantThresholdBytes: Long, maxRankedGiants: Int = 1 << 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sz = length(col("html")).cast("long")
-    val smalls = input.where(coalesce(sz, lit(0L)) <= giantThresholdBytes)
-      .repartition(smallPartitions, pmod(xxhash64(col("url")), lit(smallPartitions)))
-    val slots = input.where(sz > giantThresholdBytes)
-      .select(col("url"), sz.as("giant_sz"))
-      .orderBy(col("giant_sz").desc, col("url")) // with limit: distributed top-K
-      .limit(maxRankedGiants)
-      .withColumn("giant_slot", pmod(
-        row_number().over(Window.orderBy(col("giant_sz").desc, col("url"))) - 1,
-        lit(giantSlots)))
-      .select(col("url"), col("giant_slot"))
-    val giants = input.where(sz > giantThresholdBytes)
-      .join(broadcast(slots), Seq("url"), "left")
-      // beyond the ranked top-K (rare): uniform hash over the same slots
-      .withColumn("giant_slot",
-        coalesce(col("giant_slot"), pmod(xxhash64(col("url")), lit(giantSlots))))
-      .repartitionByRange(giantSlots, col("giant_slot"))
-      .drop("giant_slot")
-    smalls.unionByName(giants)
-  }
 
   /** Attach decode counters (docs, ok, decode failures, chars, kernel
     * time) to an extraction Dataset as an observe() metric: the counters

@@ -217,8 +217,10 @@ object Queries {
     * within one JVM — cross-process disjointness needs it. Queries that
     * may share one session take distinct tags. `base` is deleted when the
     * JVM exits (normal exit covers test/Verify/bench runs; a kill -9
-    * leaves at most one dir for the OS tmp reaper). */
+    * leaves at most one dir for the OS tmp reaper). The files are written
+    * through [[LocalFileSystem]], so the writes start no process. */
   private def sessionScratch(spark: SparkSession, tag: String): (String, String) = {
+    LocalFileSystem.register(spark)
     val sid = s"${tag}_${ProcessHandle.current().pid()}_" +
       java.lang.Integer.toHexString(System.identityHashCode(spark))
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_$sid"
@@ -284,13 +286,8 @@ object Queries {
       // (PlanSpec pins this). At 100 TB this is how a repeatedly-joined
       // fact pair amortizes its shuffle: pay the bucketed write once,
       // join shuffle-free forever after. Table names and location are
-      // scoped PER SESSION (sessionScratch). The tables are scratch and are
-      // written through a stream session, whose local file I/O starts no
-      // process (Streaming.streamSession); the caller's session then
-      // refreshes them, or a rerun would read the files the last run's
-      // relations listed.
+      // scoped PER SESSION (sessionScratch).
       val (sid, base) = sessionScratch(spark, "bucketed")
-      val ss = graft.spark.Streaming.streamSession(spark)
       val liTable = s"graft_li_$sid"
       val ordTable = s"graft_ord_$sid"
       // round 7: pre-partition each write by its bucket key into the
@@ -303,19 +300,18 @@ object Queries {
       // write)
       // the two table writes are independent — overlap them (guide §2.6)
       inParallel(spark)(
-        t(ss, dir, "lineitem")
+        t(spark, dir, "lineitem")
           .select("l_orderkey", "l_quantity", "l_extendedprice")
           .repartition(8, col("l_orderkey"))
           .write.mode("overwrite")
           .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
           .option("path", s"$base/li").saveAsTable(liTable),
-        t(ss, dir, "orders")
+        t(spark, dir, "orders")
           .select("o_orderkey", "o_orderstatus")
           .repartition(8, col("o_orderkey"))
           .write.mode("overwrite")
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
           .option("path", s"$base/ord").saveAsTable(ordTable))
-      Seq(liTable, ordTable).foreach(spark.catalog.refreshTable)
       spark.table(liTable)
         .join(spark.table(ordTable), col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderstatus")
@@ -1420,23 +1416,18 @@ object Queries {
       .bucketBy(8, "band").sortBy("band")
       .option("path", path).saveAsTable(table)
 
-  /** The incremental pass of d11: a recrawl delta (doc_id, text) verified
-    * against the persisted signature index — new<->old candidates from
-    * probing the bucketed index, new<->new candidates within the delta,
-    * both at Jaccard >= 0.5 with d6's first-band-wins pair dedupe. Output:
-    * (doc_id, status in {dup_old, dup_new, new}, cluster). */
+  /** The incremental pass of d11: a recrawl delta's signature frame `dk`
+    * (`sigKeyed` of (doc_id, text)) verified against the persisted
+    * signature index — new<->old candidates from probing the bucketed
+    * index, new<->new candidates within the delta, both at Jaccard >= 0.5
+    * with d6's first-band-wins pair dedupe. Output: (doc_id, status in
+    * {dup_old, dup_new, new}, cluster). `dk` feeds four subtrees (two
+    * probe sides, the within-delta pair join's both sides, the
+    * classification base), so callers pass it materialized
+    * (`localCheckpoint`, the d7 precedent; released by the ContextCleaner)
+    * rather than re-scanning the documents and re-running the kernel per
+    * subtree. Bounded by the delta. */
   private[graft] def incrementalDedup(spark: SparkSession, idxTable: String,
-      delta: DataFrame): DataFrame =
-    // round 7: the delta's signatures feed FOUR subtrees (two probe sides,
-    // the within-delta pair join's both sides, the classification base) —
-    // materialize them once (localCheckpoint, the d7 precedent; released
-    // by the ContextCleaner) instead of re-scanning the documents parquet
-    // and re-running the kernel per subtree. Bounded by the delta.
-    incrementalDedupKeyed(spark, idxTable, sigKeyed(delta).localCheckpoint(true))
-
-  /** [[incrementalDedup]] over an ALREADY-materialized signature frame
-    * (d11 builds it concurrently with the index write — guide §2.6). */
-  private[graft] def incrementalDedupKeyed(spark: SparkSession, idxTable: String,
       dk: DataFrame): DataFrame = {
     val probe = bandedSigs(dk)
     // new<->old: delta bands probe the bucketed index
@@ -1484,16 +1475,11 @@ object Queries {
       // engines), fresh documents (%10=1) and a second copy of each fresh
       // document (within-delta duplicates).
       // The index write and the delta's signature materialization are
-      // independent — overlap them (guide §2.6). The index is scratch and
-      // is written through a stream session, whose local file I/O starts
-      // no process (Streaming.streamSession), and refreshed on the caller's
-      // session, as in q12.
-      val ss = graft.spark.Streaming.streamSession(spark)
+      // independent — overlap them (guide §2.6).
       val dk = inParallel(spark)(
-        buildSignatureIndex(t(ss, dir, "documents"), idxTable, s"$base/sig"),
+        buildSignatureIndex(t(spark, dir, "documents"), idxTable, s"$base/sig"),
         sigKeyed(recrawlDelta(t(spark, dir, "documents"))).localCheckpoint(true))
-      spark.catalog.refreshTable(idxTable)
-      incrementalDedupKeyed(spark, idxTable, dk)
+      incrementalDedup(spark, idxTable, dk)
     },
     Some(s"""WITH delta AS (
             |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
@@ -1584,14 +1570,11 @@ object Queries {
       // own tag: d11 and x31 never share an index within one session
       val (sid, base) = sessionScratch(spark, "sigidx_x31")
       val idxTable = s"graft_index_$sid"
-      // index write and delta write are independent — overlap (guide §2.6);
-      // both are the stream's scratch and go through a stream session, whose
-      // local file I/O starts no process (Streaming.streamSession)
+      // index write and delta write are independent — overlap (guide §2.6)
       val deltaDir = s"$base/delta"
-      val ss = graft.spark.Streaming.streamSession(spark)
       inParallel(spark)(
-        buildSignatureIndex(t(ss, dir, "documents"), idxTable, s"$base/sig"),
-        recrawlDelta(t(ss, dir, "documents"))
+        buildSignatureIndex(t(spark, dir, "documents"), idxTable, s"$base/sig"),
+        recrawlDelta(t(spark, dir, "documents"))
           .write.mode("overwrite").parquet(deltaDir))
       val pairs = graft.spark.Streaming.incrementalDedupPairs(spark, idxTable,
         deltaDir, "x31_" + java.lang.Long.toHexString(System.nanoTime()))
@@ -1779,43 +1762,6 @@ object Queries {
   private val Ipv4Re = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
   private val PhoneRe = "\\b\\d{3}-\\d{4}\\b"
 
-  /** t6's PII counts + redaction in one compiled pass over the SAME
-    * java.util.regex patterns Spark's regexp_* use (count == number of
-    * find() matches; replacement chain email -> ip -> phone in the same
-    * order; md5 = lowercase hex over UTF-8 bytes, as Spark md5) — was six
-    * separate interpreted regex expression evaluations per row. Pinned in
-    * KernelParitySpec. */
-  final case class PiiStats(emails: Int, ips: Int, phones: Int, redacted_md5: String)
-  private[graft] val piiUdf = {
-    val eRe = java.util.regex.Pattern.compile(EmailRe)
-    val iRe = java.util.regex.Pattern.compile(Ipv4Re)
-    val pRe = java.util.regex.Pattern.compile(PhoneRe)
-    udf((body: String) =>
-      if (body == null) null
-      else {
-        def cnt(p: java.util.regex.Pattern): Int = {
-          val m = p.matcher(body)
-          var n = 0
-          while (m.find()) n += 1
-          n
-        }
-        val redacted = pRe.matcher(
-          iRe.matcher(
-            eRe.matcher(body).replaceAll("<EMAIL>")).replaceAll("<IP>"))
-          .replaceAll("<PHONE>")
-        val dig = java.security.MessageDigest.getInstance("MD5")
-          .digest(redacted.getBytes("UTF-8"))
-        val hex = new StringBuilder(32)
-        var i = 0
-        while (i < dig.length) {
-          hex.append(Character.forDigit((dig(i) >> 4) & 0xf, 16))
-          hex.append(Character.forDigit(dig(i) & 0xf, 16))
-          i += 1
-        }
-        PiiStats(cnt(eRe), cnt(iRe), cnt(pRe), hex.toString)
-      })
-  }
-
   private val t6 = Q(
     (spark, dir) => {
       // PII detection + redaction (emails / IPv4s / phone-style numbers).
@@ -1832,15 +1778,12 @@ object Queries {
             lit(".7 ext 555-0142")))
           .otherwise(lit("")))
       d.select(col("doc_id"), injected.as("body"))
-        // round 7: one compiled pass (piiUdf) for the six regex
-        // evaluations + md5 — same patterns, same values
-        .select(col("doc_id"), piiUdf(col("body")).as("p"))
-        .select(
-          col("doc_id"),
-          col("p.emails").as("emails"),
-          col("p.ips").as("ips"),
-          col("p.phones").as("phones"),
-          col("p.redacted_md5").as("redacted_md5"))
+        .select(col("doc_id"),
+          size(regexp_extract_all(col("body"), lit(EmailRe), lit(0))).as("emails"),
+          size(regexp_extract_all(col("body"), lit(Ipv4Re), lit(0))).as("ips"),
+          size(regexp_extract_all(col("body"), lit(PhoneRe), lit(0))).as("phones"),
+          md5(regexp_replace(regexp_replace(regexp_replace(col("body"),
+            EmailRe, "<EMAIL>"), Ipv4Re, "<IP>"), PhoneRe, "<PHONE>")).as("redacted_md5"))
         .withColumn("has_pii", col("emails") + col("ips") + col("phones") > 0)
         .orderBy("doc_id")
     },

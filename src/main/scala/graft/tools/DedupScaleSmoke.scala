@@ -165,7 +165,8 @@ object DedupScaleSmoke {
             }
             DocRow(id, text, "en", "recrawl", text.length.toLong)
           }).toDF()
-          val out = graft.spark.Queries.incrementalDedup(spark, idxTable, delta)
+          val out = graft.spark.Queries.incrementalDedup(spark, idxTable,
+            graft.spark.Queries.sigKeyed(delta).localCheckpoint(true))
           val byStatus = out.groupBy("status").count().collect()
             .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted
           (byStatus.map(_.split("=")(1).toLong).sum,

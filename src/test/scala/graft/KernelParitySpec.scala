@@ -501,16 +501,15 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kernelWide == legacyWide)
   }
 
-  test("bigram + PII kernels == legacy regex expressions (t10, t6)") {
+  test("bigram kernel == legacy regex expression (t10)") {
     val sp = spark
     import sp.implicits._
-    val pii = Seq(
+    val texts = Seq(
       "contact user7@example.com or 10.0.12.7 ext 555-0142",
       "a@b.co c@d.org 1.2.3.4 999-9999 no match here",
       "overlap 10.0.0.110.0.0.2 edge a@b.cd.",
       "") ++ samples
-    val df = pii.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("doc_id", "text")
-    // t10 bigrams
+    val df = texts.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("doc_id", "text")
     val w = regexp_extract_all(col("text"), lit("\\S+"), lit(0))
     val bigrams = when(size(col("w")) >= 2,
       transform(sequence(lit(1), size(col("w")) - 1),
@@ -523,27 +522,6 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.spark.Queries.bigramsUdf(col("text")).as("bg")).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getSeq[String](1))).toSeq
     assert(kernelBg == legacyBg)
-    // t6 PII counts + redacted md5 (same regexes, same replacement order)
-    val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-    val Ipv4Re = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
-    val PhoneRe = "\\b\\d{3}-\\d{4}\\b"
-    val legacyPii = df.select(col("doc_id"),
-      size(regexp_extract_all(col("text"), lit(EmailRe), lit(0))),
-      size(regexp_extract_all(col("text"), lit(Ipv4Re), lit(0))),
-      size(regexp_extract_all(col("text"), lit(PhoneRe), lit(0))),
-      md5(regexp_replace(regexp_replace(regexp_replace(col("text"),
-        EmailRe, "<EMAIL>"), Ipv4Re, "<IP>"), PhoneRe, "<PHONE>")))
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4))).toSeq
-    val kernelPii = df.select(col("doc_id"),
-      graft.spark.Queries.piiUdf(col("text")).as("p"))
-      .select(col("doc_id"), col("p.emails"), col("p.ips"), col("p.phones"),
-        col("p.redacted_md5"))
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4))).toSeq
-    assert(kernelPii == legacyPii)
-    // the PII rows really contain matches (the pin is not vacuous)
-    assert(kernelPii.take(2).map(_._2).sum >= 3)
   }
 
   test("3-gram kernel == legacy substring expression incl. short-text quirk (d4)") {

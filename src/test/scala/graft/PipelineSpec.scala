@@ -212,49 +212,25 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("salted repartition produces identical results") {
-    val corpus = CorpusGen.corpus(spark, rows = 33, partitions = 2).cache()
-    val input = CorpusGen.inputView(corpus)
-    val plain = Pipeline.extract(spark, input)
-      .toDF().select("url", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    // the caller salts, as ScalingBench does: rows move by url hash
-    val salted = Pipeline.extract(spark, input.repartition(7, pmod(xxhash64(col("url")), lit(7))))
-      .toDF().select("url", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(plain == salted)
-  }
-
-  test("size-weighted repartition: giants land in distinct slots, results identical") {
-    import org.apache.spark.sql.functions._
-    // 60 rows with a giant every 10 -> 6 giants, 6 slots -> exactly 1 each
-    val corpus = CorpusGen.heavyTailCorpus(spark, rows = 60, partitions = 4,
-      giantEvery = 10, giantPages = 400).cache()
-    val input = CorpusGen.inputView(corpus).select("url", "html", "text")
-    val thresh = 50000L
-    val giants = input.filter(length(col("html")) > thresh).count()
-    assert(giants == 6, s"expected 6 giants, corpus produced $giants")
-    val re = Pipeline.sizeWeightedRepartition(input, smallPartitions = 4,
-      giantSlots = 6, giantThresholdBytes = thresh)
-    val perPartition = re
-      .select(spark_partition_id().as("pid"), (length(col("html")) > thresh).as("giant"))
-      .filter(col("giant"))
-      .groupBy("pid").count().collect()
-    assert(perPartition.length == 6, perPartition.mkString(","))
-    assert(perPartition.forall(_.getLong(1) == 1L),
-      "a slot holds >1 giant: " + perPartition.mkString(","))
-    // row set is preserved and extraction results are unchanged
-    assert(re.count() == 60)
-    val plain = Pipeline.extract(spark, input)
-      .toDF().select("url", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val weighted = Pipeline.extract(spark, re)
-      .toDF().select("url", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(plain == weighted)
-    // bounded-rank fallback: with maxRankedGiants < giant count, the
-    // overflow giants take uniform hash slots — nothing is lost and the
-    // top-ranked giants still round-robin exactly
-    val re2 = Pipeline.sizeWeightedRepartition(input, smallPartitions = 4,
-      giantSlots = 6, giantThresholdBytes = thresh, maxRankedGiants = 3)
-    assert(re2.count() == 60)
-    val giantRows2 = re2.filter(length(col("html")) > thresh).count()
-    assert(giantRows2 == 6, s"giants lost in fallback path: $giantRows2")
+    def byUrl(input: org.apache.spark.sql.DataFrame): Map[String, String] =
+      Pipeline.extract(spark, input)
+        .toDF().select("url", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // the caller salts, as a forced shuffle would: rows move by url hash
+    def salted(input: org.apache.spark.sql.DataFrame) =
+      input.repartition(7, pmod(xxhash64(col("url")), lit(7)))
+    val input = CorpusGen.inputView(CorpusGen.corpus(spark, rows = 33, partitions = 2).cache())
+    assert(byUrl(input) == byUrl(salted(input)))
+    // a heavy-tailed corpus: giant rows extract identically at either
+    // partitioning, and every one of them extracts its expected text
+    val heavy = CorpusGen.heavyTailCorpus(spark, rows = 60, partitions = 4,
+      giantPages = 400).cache()
+    val heavyInput = CorpusGen.inputView(heavy)
+    assert(byUrl(heavyInput) == byUrl(salted(heavyInput)))
+    val giants = Pipeline.extract(spark, heavyInput).toDF()
+      .join(heavy.filter(col("pages") === 400).select("url", "expected"), Seq("url"))
+      .select(col("url"), col("ok"), col("text") === col("expected")).collect()
+    assert(giants.nonEmpty)
+    assert(giants.forall(r => r.getBoolean(1) && r.getBoolean(2)), giants.mkString(","))
   }
 
   test("column pruning reaches the scan") {
