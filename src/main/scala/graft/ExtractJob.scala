@@ -52,26 +52,19 @@ object ExtractJob {
         Pipeline.resumeRemaining(input, spark.read.parquet(extractedPath))
       else input
 
-    val extracted = Pipeline.extractMode(spark, remaining, mode)
-      .toDF()
-      .observe("extract_totals",
-        count(lit(1)).as("docs"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("ok_docs"),
-        sum(col("chars").cast("long")).as("chars"))
-      .cache()
+    // the decode counters ride the write (no summary job of their own)
+    val (observed, obs) = Pipeline.observeExtraction(
+      Pipeline.extractMode(spark, remaining, mode))
+    val extracted = observed.cache()
 
     extracted.write.mode(SaveMode.Append).parquet(extractedPath)
-    Pipeline.partitionMetrics(spark, extracted.as[Pipeline.ExtractedDoc](
-      org.apache.spark.sql.Encoders.product[Pipeline.ExtractedDoc]))
+    val totals = obs.get
+    Pipeline.partitionMetrics(spark, extracted)
       .toDF()
       .withColumn("run_ts", current_timestamp())
       .write.mode(SaveMode.Append).parquet(metricsPath)
 
-    val summary = extracted.agg(
-      count(lit(1)).as("docs"),
-      coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)).as("ok"),
-      coalesce(sum(when(col("ok"), 0L).otherwise(1L)), lit(0L)).as("errors")).collect()(0)
-    println(s"""{"job":"extract","mode":"$mode","docs":${summary.getLong(0)},"ok":${summary.getLong(1)},"errors":${summary.getLong(2)}}""")
+    println(s"""{"job":"extract","mode":"$mode","docs":${totals("docs")},"ok":${totals("ok_docs")},"errors":${totals("decode_failures")}}""")
     spark.stop()
   }
 

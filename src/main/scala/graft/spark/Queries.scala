@@ -443,35 +443,22 @@ object Queries {
     }
   }
 
-  /** d2/d5/d10 signature (the 4 minhash permutations). */
-  final case class MinSig(mh0: Long, mh1: Long, mh2: Long, mh3: Long)
-  /** d6/d11/x31 signature (sorted distinct hash set + permutations). */
+  /** The MinHash signature (sorted distinct hash set + the 4 permutations). */
   final case class FullSig(hs: Array[Long], mh0: Long, mh1: Long, mh2: Long, mh3: Long)
   /** t7's row-local repetition stats. */
   final case class RepStats(tokens: Int, bigrams: Int, distinct_bigrams: Int,
       top_word_count: java.lang.Integer)
 
-  private def minSigOf(xs: Array[Long]): MinSig =
-    MinSig(Kernels.minPerm(xs, 1299721, 104729), Kernels.minPerm(xs, 7919, 7507),
-      Kernels.minPerm(xs, 104183, 337), Kernels.minPerm(xs, 909091, 5861))
-
-  /** NULL for no tokens — callers filter, replicating filter(size(xs)>0). */
-  private[graft] val minSigUdf = udf((text: String) =>
-    if (text == null) null
-    else {
-      val xs = Kernels.distinctTokenHashes(text)
-      if (xs.isEmpty) null else minSigOf(xs)
-    })
-
+  /** NULL for no tokens — [[sigKeyed]] filters first, replicating
+    * filter(size(xs)>0). */
   private[graft] val fullSigUdf = udf((text: String) =>
     if (text == null) null
     else {
       val xs = Kernels.distinctTokenHashes(text)
       if (xs.isEmpty) null
-      else {
-        val m = minSigOf(xs)
-        FullSig(Kernels.sortedDistinct(xs), m.mh0, m.mh1, m.mh2, m.mh3)
-      }
+      else FullSig(Kernels.sortedDistinct(xs),
+        Kernels.minPerm(xs, 1299721, 104729), Kernels.minPerm(xs, 7919, 7507),
+        Kernels.minPerm(xs, 104183, 337), Kernels.minPerm(xs, 909091, 5861))
     })
 
   /** 16-bit simhash over the distinct-token hashes: one compiled pass
@@ -616,15 +603,19 @@ object Queries {
       }
     })
 
-  /** s2/s3's 8-plane sign-LSH bucket in one compiled pass: the plane
-    * values cos(i*(k+1)*0.7 + k) are data-independent constants
-    * (precomputed with the same Math.cos the Catalyst cos calls), the
-    * projection is the same float-widened in-order double fold, the
-    * bucket the same sum of set bits. The HOF form re-built the 64-entry
-    * cosine array per row PER PLANE — 512 interpreted cos() calls per
-    * row. Pinned in KernelParitySpec. */
-  private[graft] val signBucket8Udf = {
-    val planes = Array.tabulate(8)(k =>
+  /** Sign-LSH bits over `planes` (<= 64) hyperplanes in one compiled
+    * pass: bit k is set when the embedding's projection on plane k,
+    * sum_i emb[i] * cos(i*(k+1)*0.7 + k), is > 0. s2/s3 bucket on 8
+    * planes; d7 bands 64 planes 16 at a time. The plane values are
+    * data-independent constants (precomputed with the same Math.cos the
+    * Catalyst cos calls), the projection is the same float-widened
+    * in-order double fold, the bits the same sum of set bits. The HOF
+    * form re-built the 64-entry cosine array per row PER PLANE — 512
+    * interpreted cos() calls per row at 8 planes. Pinned in
+    * KernelParitySpec. */
+  private[graft] def signBits(planes: Int) = {
+    require(planes >= 1 && planes <= 64, s"signBits: $planes planes")
+    val table = Array.tabulate(planes)(k =>
       Array.tabulate(64)(i => math.cos(i.toDouble * (k + 1) * 0.7 + k)))
     udf((emb: Seq[Float]) =>
       if (emb == null) null // the legacy projection null-propagated
@@ -632,8 +623,8 @@ object Queries {
         val x = emb.toArray
         var bucket = 0L
         var k = 0
-        while (k < 8) {
-          val p = planes(k)
+        while (k < planes) {
+          val p = table(k)
           var acc = 0.0
           var i = 0
           // the legacy transform built cos values for the FULL embedding
@@ -651,25 +642,38 @@ object Queries {
       })
   }
 
+  /** (doc_id, hs, mh0..mh3, band0, band1) MinHash signature rows for a
+    * (doc_id, text) set: the 4 permutations, their 2x2 LSH band keys and
+    * the distinct-token-hash set the verify stage rides. The one
+    * signature frame: d2 and d5 select from it, d10 links on its band
+    * keys, d6, d11 and x31 verify on it. Row-local, shuffle-free by
+    * construction. */
+  private[graft] def sigKeyed(df: DataFrame): DataFrame =
+    // `text rlike \S` == "has >= 1 token" == the legacy filter(size(xs)>0)
+    // == sig non-null (KernelParitySpec pins the equivalence). Filtering
+    // BEFORE the kernel instead of on sig-is-null keeps the UDF out of
+    // the pushed-down filter — Catalyst otherwise evaluates the UDF
+    // TWICE per row (once below the pushed filter, once in the project;
+    // guide §4.4), which doubled every signature pass.
+    df.filter(col("text").rlike("\\S"))
+      .select(col("doc_id"), fullSigUdf(col("text")).as("sig"))
+      .select(col("doc_id"), col("sig.hs").as("hs"),
+        col("sig.mh0").as("mh0"), col("sig.mh1").as("mh1"),
+        col("sig.mh2").as("mh2"), col("sig.mh3").as("mh3"),
+        md5(concat_ws(":", col("sig.mh0"), col("sig.mh1"))).as("band0"),
+        md5(concat_ws(":", col("sig.mh2"), col("sig.mh3"))).as("band1"))
+
   private val d2 = Q(
     (spark, dir) => {
       // MinHash over the distinct-token set, computed ROW-LOCALLY: 4
       // permutations (a*x+b) mod p folded over per-row token hashes, banded
       // 2x2 -> bucket keys for LSH near-dup joins. At 100 TB the token
       // stream never shuffles — the plan's only exchange is the
-      // deterministic output sort (PlanSpec pins this). Round 7: the
-      // signature runs in the compiled kernel (minSigUdf — identical
-      // arithmetic, KernelParitySpec), not per-char Catalyst aggregates.
-      t(spark, dir, "documents")
-        // rlike pre-filter == legacy size(xs)>0; keeps the kernel out of
-        // the pushed filter (single evaluation — guide §4.4, see sigKeyed)
-        .filter(col("text").rlike("\\S"))
-        .select(col("doc_id"), minSigUdf(col("text")).as("sig"))
-        .select(col("doc_id"),
-          col("sig.mh0").as("mh0"), col("sig.mh1").as("mh1"),
-          col("sig.mh2").as("mh2"), col("sig.mh3").as("mh3"))
-        .withColumn("band0", md5(concat_ws(":", col("mh0"), col("mh1"))))
-        .withColumn("band1", md5(concat_ws(":", col("mh2"), col("mh3"))))
+      // deterministic output sort (PlanSpec pins this). The signature
+      // runs in the compiled kernel (sigKeyed — identical arithmetic,
+      // KernelParitySpec), not per-char Catalyst aggregates.
+      sigKeyed(t(spark, dir, "documents"))
+        .select("doc_id", "mh0", "mh1", "mh2", "mh3", "band0", "band1")
         .orderBy("doc_id")
     },
     Some(s"""WITH toks AS (
@@ -742,10 +746,8 @@ object Queries {
       // sizes bound the candidate-join cost; no O(pairs) output). Signatures
       // are row-local; the only exchanges are the bucket aggregation
       // (partial -> final, map-side combined) and the output sort.
-      t(spark, dir, "documents")
-        .filter(col("text").rlike("\\S")) // == legacy size(xs)>0; §4.4
-        .select(minSigUdf(col("text")).as("sig"))
-        .groupBy(md5(concat_ws(":", col("sig.mh0"), col("sig.mh1"))).as("bucket"))
+      sigKeyed(t(spark, dir, "documents"))
+        .groupBy(col("band0").as("bucket"))
         .agg(count(lit(1)).as("docs"),
           (count(lit(1)) * (count(lit(1)) - 1) / 2).cast("long").as("candidate_pairs"))
         .orderBy("bucket")
@@ -765,24 +767,6 @@ object Queries {
             |  CAST(count(*) * (count(*) - 1) / 2 AS BIGINT) AS candidate_pairs
             |FROM sig GROUP BY 1 ORDER BY 1""".stripMargin))
 
-  /** (doc_id, hs, band0, band1) signature rows for a (doc_id, text) set:
-    * the d2 MinHash band keys plus the distinct-token-hash set the verify
-    * stage rides (d6). Row-local, shuffle-free by construction; shared by
-    * d6 (full-corpus verify) and d11 (incremental verify vs a persisted
-    * index). */
-  private[graft] def sigKeyed(df: DataFrame): DataFrame =
-    // `text rlike \S` == "has >= 1 token" == the legacy filter(size(xs)>0)
-    // == sig non-null (KernelParitySpec pins the equivalence). Filtering
-    // BEFORE the kernel instead of on sig-is-null keeps the UDF out of
-    // the pushed-down filter — Catalyst otherwise evaluates the UDF
-    // TWICE per row (once below the pushed filter, once in the project;
-    // guide §4.4), which doubled every signature pass.
-    df.filter(col("text").rlike("\\S"))
-      .select(col("doc_id"), fullSigUdf(col("text")).as("sig"))
-      .select(col("doc_id"), col("sig.hs").as("hs"),
-        md5(concat_ws(":", col("sig.mh0"), col("sig.mh1"))).as("band0"),
-        md5(concat_ws(":", col("sig.mh2"), col("sig.mh3"))).as("band1"))
-
   private val d6 = Q(
     (spark, dir) => {
       // The VERIFY stage of minhash dedup, run the way a 100 TB pipeline
@@ -801,7 +785,10 @@ object Queries {
       // bytes. Exact up to mod-1e9+7 hash collisions (~|toks|^2/1e9 per
       // pair — and the oracle replays the identical hash arithmetic, so
       // parity is exact by construction, collisions included).
-      val keyed = sigKeyed(t(spark, dir, "documents"))
+      // `keyed` feeds four subtrees (both rep sides, the members, the rep
+      // payload), so it is materialized once (the d7/d11 precedent): the
+      // signature kernel runs once per row, not once per subtree.
+      val keyed = sigKeyed(t(spark, dir, "documents")).localCheckpoint(true)
       val members = keyed.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
         col("band0").as("b0b"), col("band1").as("b1b"))
       def repSide(bandCol: String) = keyed
@@ -968,6 +955,10 @@ object Queries {
     }.reduce(_.unionByName(_))
   }
 
+  /** Band `j` of a [[signBits]] value: its 16 bits from plane 16j. */
+  private[graft] def signBand(bits: Column, j: Int): Column =
+    shiftrightunsigned(bits, 16 * j).bitwiseAND(0xffffL)
+
   private val d7 = Q(
     (spark, dir) => {
       // Embedding-cosine near-dup detection: every vector gets a
@@ -989,40 +980,21 @@ object Queries {
         transform(col("embedding"), (x, i) =>
           when(i === pmod(col("vec_id"), lit(64)).cast("int"), lit(0.05f)).otherwise(x))
           .as("embedding"))
-      // the signature table feeds both sides of four joins — cache it (at
-      // scale this is the persisted signature table every LSH pipeline
-      // materializes; recomputing 64 projections 8x is the alternative).
-      // The 64 projections run as a primitive-array mapPartitions kernel,
-      // not Catalyst higher-order functions: a 64x64 float GEMV per row is
-      // exactly the shape interpreted HOF lambdas evaluate worst (boxed
-      // doubles + an intermediate array per projection — measured 2.4s of
-      // this query's runtime at sf0.1 for 16M flops). The fold order and
-      // float->double promotion are IDENTICAL to the HOF form (in-order
-      // acc += emb[i]*plane[i]), so the DuckDB oracle replay is unchanged.
-      val sp2 = spark
-      import sp2.implicits._
-      val planes = Array.tabulate(64)(k =>
-        Array.tabulate(64)(i => math.cos(i.toDouble * (k + 1) * 0.7 + k)))
-      val planesB = spark.sparkContext.broadcast(planes)
-      val allv = base.unionByName(pert).as[(Long, Array[Float])]
-        .mapPartitions { iter =>
-          val pl = planesB.value
-          iter.map { case (id, emb) =>
-            val bands = new Array[Long](4)
-            var k = 0
-            while (k < 64) {
-              val p = pl(k)
-              var acc = 0.0
-              var i = 0
-              val n = math.min(emb.length, 64)
-              while (i < n) { acc += emb(i) * p(i); i += 1 }
-              if (acc > 0) bands(k >> 4) |= 1L << (k & 15)
-              k += 1
-            }
-            (id, emb, bands(0), bands(1), bands(2), bands(3))
-          }
-        }
-        .toDF("id", "embedding", "band0", "band1", "band2", "band3")
+      // the signature table feeds both sides of four joins — materialize
+      // it (at scale this is the persisted signature table every LSH
+      // pipeline materializes; recomputing 64 projections 8x is the
+      // alternative). The 64 projections run in the compiled signBits
+      // kernel s2/s3 share, not Catalyst higher-order functions: a 64x64
+      // float GEMV per row is exactly the shape interpreted HOF lambdas
+      // evaluate worst (boxed doubles + an intermediate array per
+      // projection — measured 2.4s of this query's runtime at sf0.1 for
+      // 16M flops). The fold order and float->double promotion are
+      // IDENTICAL to the HOF form (in-order acc += emb[i]*plane[i]), so
+      // the DuckDB oracle replay is unchanged. Band j is planes 16j..16j+15.
+      val allv = base.unionByName(pert)
+        .withColumn("bits", signBits(64)(col("embedding")))
+        .select(col("id") +: col("embedding") +:
+          (0 until 4).map(j => signBand(col("bits"), j).as(s"band$j")): _*)
         // localCheckpoint, not cache: the signature table feeds 4 joins +
         // the bucket-size audit, and checkpoint blocks are released by the
         // ContextCleaner when the result is dropped — cache() entries pin
@@ -1146,15 +1118,7 @@ object Queries {
            |FROM fl GROUP BY doc_id ORDER BY doc_id""".stripMargin))
 
   private val d10 = Q(
-    (spark0, dir) => {
-      // Planned under an ISOLATED child session (spark0.newSession shares
-      // the SparkContext but owns its SQLConf): the propagation rounds run
-      // with few shuffle partitions, and pinning that on the CALLER's
-      // session would leak into any query planned concurrently. On a
-      // cluster this is the same move — per-job sessions sized to each
-      // job's data, never mutating a shared session's conf.
-      val spark = spark0.newSession()
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
+    (spark, dir) => {
       // Dedup cluster assignment: connected components over the LSH bucket
       // graph (docs sharing either minhash band key are linked through the
       // bucket's min-doc representative — star edges, so the edge count is
@@ -1164,13 +1128,15 @@ object Queries {
       // the data never collects, and convergence is O(component diameter)
       // steps (star edges keep diameters tiny). This is the keeper-
       // assignment step a corpus-scale dedup actually ships.
-      val sig = t(spark, dir, "documents")
-        .filter(col("text").rlike("\\S")) // == legacy size(xs)>0; §4.4
-        .select(col("doc_id"), minSigUdf(col("text")).as("sig"))
-        .select(col("doc_id"),
-          md5(concat_ws(":", col("sig.mh0"), col("sig.mh1"))).as("band0"),
-          md5(concat_ws(":", col("sig.mh2"), col("sig.mh3"))).as("band1"))
-        .cache()
+      // Every intermediate is localCheckpointed, not cached: each round
+      // then plans against leaves instead of the whole signature lineage
+      // and runs on the checkpoint's AQE-coalesced partitions instead of
+      // the session's shuffle partitions (measured 2.9 -> 2.3 s for d10
+      // at sf0.1 on 4 vCPUs), and the ContextCleaner releases the blocks
+      // once the result is dropped — no unpersist bookkeeping.
+      val sig = sigKeyed(t(spark, dir, "documents"))
+        .select("doc_id", "band0", "band1")
+        .localCheckpoint(true)
       // contract the graph to bucket REPRESENTATIVES first: every doc
       // points at its two bucket-min reps, and those two reps are linked
       // through the doc — so components over the (tiny) rep graph
@@ -1181,36 +1147,23 @@ object Queries {
       // minutes at sf0.1.
       val withReps = List("band0", "band1").foldLeft(sig) { (df, b) =>
         df.join(sig.groupBy(col(b)).agg(min(col("doc_id")).as(s"rep_$b")), b)
-      }.select(col("doc_id"), col("rep_band0"), col("rep_band1")).cache()
+      }.select(col("doc_id"), col("rep_band0"), col("rep_band1")).localCheckpoint(true)
       val half = withReps
         .select(col("rep_band0").as("src"), col("rep_band1").as("dst"))
         .filter(col("src") =!= col("dst")).distinct()
       val edges = half
         .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
-        .cache()
-      // Round 7 (guide §2: scale-adaptive partitioning): the propagation
-      // rounds run on the CONTRACTED rep graph, whose size is known here
-      // — one count of the (cached) edge set sizes the rounds' shuffle
-      // partitions to the graph (~50k edges per partition, at least 1,
-      // at most the session's parallelism) instead of a constant. At
-      // sf0.1 the rep graph is a few hundred edges, so each round's 5-6
-      // tiny stages run on 1 partition instead of 4 — pure scheduler
-      // overhead removed; a 100 TB rep graph sizes up automatically.
-      val edgeCount = edges.count()
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
-          edgeCount / 50000 + 1)).toString)
+        .localCheckpoint(true)
       var labels = withReps
         .select(explode(array(col("rep_band0"), col("rep_band1"))).as("v"))
         .distinct()
-        .select(col("v"), col("v").as("lbl")).cache()
+        .select(col("v"), col("v").as("lbl")).localCheckpoint(true)
       // Each round MUST materialize: the path-halving self-join references
       // the round's frame twice, so a lazy chain doubles the plan tree per
       // round (2^rounds nodes — Catalyst never finishes). The rep graph is
-      // tiny, so the per-round cost is scheduler/shuffle overhead — hence
-      // the child session's 4 shuffle partitions (on a cluster you size
-      // these to the rep-graph volume, orders of magnitude below the
-      // corpus).
+      // tiny, so the per-round cost is scheduler/shuffle overhead; AQE's
+      // partition coalescing sizes the rounds' shuffles to the rep graph
+      // (orders of magnitude below the corpus).
       var changed = 1L
       var iter = 0
       while (changed > 0 && iter < 15) {
@@ -1239,25 +1192,17 @@ object Queries {
             least(hop("lbl"), coalesce(col("lbl2"), hop("lbl"))).as("nl"))
           .localCheckpoint(true)
         changed = next.filter(col("nl") < col("lbl0")).count()
-        val newLabels = next.select(col("v"), col("nl").as("lbl"))
-        labels.unpersist(false)
-        labels = newLabels
+        labels = next.select(col("v"), col("nl").as("lbl"))
         iter += 1
       }
       require(changed == 0, s"label propagation did not converge in $iter iterations")
-      // materialize the (small) assignment, then drop every intermediate
-      // cache — a long-lived session would otherwise accumulate the
-      // signature/edge partitions in executor storage memory across
-      // invocations (at cluster scale this materialization is the write of
-      // the component table itself)
-      val out = withReps
+      // materialize the (small) assignment (at cluster scale this is the
+      // write of the component table itself)
+      withReps
         .join(labels, withReps("rep_band0") === labels("v"))
         .select(col("doc_id"), col("lbl").as("component"))
         .orderBy("doc_id")
         .localCheckpoint(true)
-      sig.unpersist(false); withReps.unpersist(false)
-      edges.unpersist(false); labels.unpersist(false)
-      out
     },
     // DuckDB replays the components as a transitive closure via a
     // recursive CTE over the same star edges — min reachable label ==
@@ -2184,10 +2129,10 @@ object Queries {
       val e = t(spark, dir, "embeddings")
       // deterministic pseudo-hyperplanes from the dimension index —
       // round 7: one compiled pass over precomputed plane constants
-      // (signBucket8Udf) instead of 8 interpreted projections that each
+      // (signBits) instead of 8 interpreted projections that each
       // rebuilt the 64-entry cosine array per row
       e.select(col("vec_id"), col("label"),
-        signBucket8Udf(col("embedding")).as("bucket"))
+        signBits(8)(col("embedding")).as("bucket"))
         .orderBy("vec_id")
     },
     Some("""SELECT vec_id, label,
@@ -2485,7 +2430,7 @@ object Queries {
       val e = t(spark, dir, "embeddings")
       // round 7: compiled plane projection + cosine kernels (see s2/s1)
       val bucketed = e.select(col("vec_id"), col("embedding"),
-        signBucket8Udf(col("embedding")).as("bucket"))
+        signBits(8)(col("embedding")).as("bucket"))
       val queries = bucketed.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("bucket"))
       val w = org.apache.spark.sql.expressions.Window

@@ -93,17 +93,32 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       "ab", "abc", "abcd", "ab ab ab") ++ generated
   }
 
-  /** The legacy s2/s3 sign-LSH plane expressions over column `c`. */
-  private def signPlanes(c: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
-    (0 until 8).map { k =>
+  /** The legacy sign-LSH plane expressions over column `c`: planes
+    * `first until first + planes`, plane k's full-length projection > 0
+    * setting bit k - first (s2/s3: 8 planes; d7: 64, band j = the 16
+    * from 16j). */
+  private def signPlanes(c: Column, planes: Int, first: Int = 0): Seq[Column] =
+    (first until first + planes).map { k =>
       val proj = aggregate(
         zip_with(c,
           transform(sequence(lit(0), size(c) - 1),
             i => cos(i.cast("double") * (k + 1) * 0.7 + k)),
           (x, h) => x * h),
         lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L << k)).otherwise(lit(0L))
+      when(proj > 0, lit(1L << (k - first))).otherwise(lit(0L))
     }
+
+  /** signBits(8) (s2/s3), signBits(64) and d7's four band keys over
+    * `c` == the legacy plane expressions, per row of `d` keyed by `id`. */
+  private def pinSignBits(d: DataFrame, id: String, c: String): Unit = {
+    val bits = Queries.signBits(64)(col(c))
+    val kernel = d.select(col(id) +: Queries.signBits(8)(col(c)) +: bits +:
+      (0 until 4).map(j => Queries.signBand(bits, j)): _*)
+    val legacy = d.select(col(id) +: signPlanes(col(c), 8).reduce(_ + _) +:
+      signPlanes(col(c), 64).reduce(_ + _) +:
+      (0 until 4).map(j => signPlanes(col(c), 16, 16 * j).reduce(_ + _)): _*)
+    assert(kernel.orderBy(id).collect().toSeq == legacy.orderBy(id).collect().toSeq)
+  }
 
   private def df() = {
     val sp = spark
@@ -135,41 +150,48 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .otherwise(array().cast("array<bigint>"))
   }
 
-  test("minhash signature kernel == legacy expression (d2/d5/d10 path)") {
-    val legacy = df()
-      .select(col("doc_id"),
-        transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
-      .filter(size(col("xs")) > 0)
-      .select(col("doc_id"),
-        minPerm(col("xs"), 1299721, 104729).as("mh0"),
-        minPerm(col("xs"), 7919, 7507).as("mh1"),
-        minPerm(col("xs"), 104183, 337).as("mh2"),
-        minPerm(col("xs"), 909091, 5861).as("mh3"))
-      .orderBy("doc_id").collect().toSeq
-    val kernel = df()
-      .select(col("doc_id"), Queries.minSigUdf(col("text")).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id"), col("sig.mh0"), col("sig.mh1"), col("sig.mh2"), col("sig.mh3"))
-      .orderBy("doc_id").collect().toSeq
-    assert(kernel == legacy)
-  }
-
-  test("full signature kernel == legacy hs/band expressions (sigKeyed path)") {
-    val legacy = df()
+  /** The legacy MinHash signature columns over `df()`: doc_id, hs,
+    * mh0..mh3, band0, band1 for every row with >= 1 token. */
+  private def legacySig(): DataFrame =
+    df()
       .select(col("doc_id"),
         transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
       .filter(size(col("xs")) > 0)
       .select(col("doc_id"),
         array_sort(array_distinct(col("xs"))).as("hs"),
+        minPerm(col("xs"), 1299721, 104729).as("mh0"),
+        minPerm(col("xs"), 7919, 7507).as("mh1"),
+        minPerm(col("xs"), 104183, 337).as("mh2"),
+        minPerm(col("xs"), 909091, 5861).as("mh3"),
         md5(concat_ws(":", minPerm(col("xs"), 1299721, 104729),
           minPerm(col("xs"), 7919, 7507))).as("band0"),
         md5(concat_ws(":", minPerm(col("xs"), 104183, 337),
           minPerm(col("xs"), 909091, 5861))).as("band1"))
-      .orderBy("doc_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getString(2), r.getString(3))).toSeq
-    val kernel = Queries.sigKeyed(df()).orderBy("doc_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getString(2), r.getString(3))).toSeq
-    assert(kernel == legacy)
+
+  test("minhash signature kernel == legacy expression (d2/d5/d10 path)") {
+    // d2's own output (d5 groups on its band0, d10 links on band0/band1),
+    // run end to end on the samples written as a documents table
+    val dir = new java.io.File(tmp, "d2").getPath
+    df().write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val cols = Seq("doc_id", "mh0", "mh1", "mh2", "mh3", "band0", "band1")
+    val kernel = Queries.all("d2_minhash_lsh").fn(spark, dir)
+    assert(kernel.columns.toSeq == cols, kernel.columns.mkString(","))
+    def rows(d: DataFrame) = d.select(cols.map(col): _*).orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), (1 to 4).map(r.getLong), r.getString(5), r.getString(6))).toSeq
+    assert(rows(kernel) == rows(legacySig()))
+  }
+
+  test("full signature kernel == legacy hs/band expressions (sigKeyed path)") {
+    // the one MinHash frame: d2/d5/d10 read mh0..mh3 and the band keys,
+    // d6/d11/x31 the hash set and the band keys
+    val cols = Seq("doc_id", "hs", "mh0", "mh1", "mh2", "mh3", "band0", "band1")
+    val legacy = legacySig()
+    val kernel = Queries.sigKeyed(df())
+    assert(kernel.columns.toSet == cols.toSet, kernel.columns.mkString(","))
+    def rows(d: DataFrame) = d.select(cols.map(col): _*).orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1), (2 to 5).map(r.getLong),
+        r.getString(6), r.getString(7))).toSeq
+    assert(rows(kernel) == rows(legacy))
   }
 
   test("simhash kernel == legacy nested-aggregate expression (d3)") {
@@ -371,37 +393,11 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       pinBothPaths(cosRows(legacyD))(
         dd.select(col("id"), PairKernels.cosSim6D(col("a"), col("b"))).orderBy("id"))(cosRows)
     }
-    // 8-plane sign bucket (s2/s3): the legacy per-plane projection
-    val planes = (0 until 8).map { k =>
-      val proj = aggregate(
-        zip_with(col("a"),
-          transform(sequence(lit(0), size(col("a")) - 1),
-            i => cos(i.cast("double") * (k + 1) * 0.7 + k)),
-          (x, h) => x * h),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L << k)).otherwise(lit(0L))
-    }
-    val legacyBucket = df.select(col("id"), planes.reduce(_ + _))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val kernelBucket = df.select(col("id"), Queries.signBucket8Udf(col("a")))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(kernelBucket == legacyBucket)
-    // and on the real embeddings table, not just synthetic vectors
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val le = e.select(col("vec_id"),
-      (0 until 8).map { k =>
-        val proj = aggregate(
-          zip_with(col("embedding"),
-            transform(sequence(lit(0), size(col("embedding")) - 1),
-              i => cos(i.cast("double") * (k + 1) * 0.7 + k)),
-            (x, h) => x * h),
-          lit(0.0), (acc, x) => acc + x)
-        when(proj > 0, lit(1L << k)).otherwise(lit(0L))
-      }.reduce(_ + _).as("bkt"))
-      .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val ke = e.select(col("vec_id"), Queries.signBucket8Udf(col("embedding")).as("bkt"))
-      .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(ke == le)
+    // sign-LSH bits (s2/s3 bucket, d7 bands): the legacy per-plane
+    // projections, on synthetic vectors and on the real embeddings table
+    pinSignBits(df, "id", "a")
+    pinSignBits(spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"),
+      "vec_id", "embedding")
   }
 
   test("kernels preserve legacy null/NaN/degenerate-input semantics") {
@@ -450,8 +446,11 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, null.asInstanceOf[Array[Long]], Array(1L, 2L))).toDF("id", "a", "b")
     pinBothPaths(Seq(true, true))(nullsL
       .select(col("id"), PairKernels.interSize(col("a"), col("b"))).orderBy("id"))(nullFlags)
-    assert(withNulls.select(Queries.signBucket8Udf(col("b")))
-      .collect().map(_.isNullAt(0)).toSeq == Seq(true, false, false))
+    val bits64 = Queries.signBits(64)(col("b"))
+    assert(withNulls.select(col("id") +: Queries.signBits(8)(col("b")) +: bits64 +:
+      (0 until 4).map(j => Queries.signBand(bits64, j)): _*).orderBy("id")
+      .collect().map(r => (1 to 6).map(r.isNullAt)).toSeq ==
+      Seq(true, false, false).map(Seq.fill(6)(_)))
     // ragged lengths: legacy zip_with pads with null -> null sim; the
     // kernel returns null for unequal lengths
     val ragged = Seq((1L, Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f)))
@@ -488,17 +487,11 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       pinBothPaths(Seq(true, true))(asDouble(src)
         .select(col("id"), PairKernels.cosSim6D(col("a"), col("b"))).orderBy("id"))(nullFlags)
     }
-    // dim > 64: the sign-bucket kernel must reproduce the legacy
+    // dim > 64: the sign-bit kernel must reproduce the legacy
     // full-length projection, not truncate at the precomputed table
     val rnd = new scala.util.Random(23)
-    val wide = (0L until 20L).map(i => (i, Array.fill(100)((rnd.nextDouble() * 2 - 1).toFloat)))
-      .toDF("vec_id", "embedding")
-    val legacyWide = wide.select(col("vec_id"), signPlanes(col("embedding")).reduce(_ + _))
-      .orderBy("vec_id").collect().map(_.getLong(1)).toSeq
-    val kernelWide = wide.select(col("vec_id"),
-      Queries.signBucket8Udf(col("embedding"))).orderBy("vec_id")
-      .collect().map(_.getLong(1)).toSeq
-    assert(kernelWide == legacyWide)
+    pinSignBits((0L until 20L).map(i => (i, Array.fill(100)((rnd.nextDouble() * 2 - 1).toFloat)))
+      .toDF("vec_id", "embedding"), "vec_id", "embedding")
   }
 
   test("bigram kernel == legacy regex expression (t10)") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.spark.{CorpusGen, CosSim6D, CosSim6F, InterSize, Pipeline, Queries}
@@ -244,6 +245,33 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val exchanges = "Exchange".r.findAllIn(plan).length
     assert(exchanges <= 2, s"$exchanges exchanges:\n${plan.take(3000)}")
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
+  }
+
+  test("LSH query results do not depend on shuffle partitions or AQE (d2, d5-d7, d10, d11, s2, s3)") {
+    // Bench's full-row checksum: row count + order-free hash sum
+    def checksum(s: SparkSession, q: String): (Long, Any) = {
+      val df = Queries.queries(q)(s, sfDir)
+      val r = df.agg(count(lit(1)),
+        sum(pmod(xxhash64(df.columns.toSeq.map(c => col(c).cast("string")): _*),
+          lit(1000000007L)))).collect()(0)
+      (r.getLong(0), r.get(1))
+    }
+    // AQE's coalescing would shrink 7 partitions of sf0.001 back to ~1,
+    // so the AQE run keeps all 7 (skew/join rewrites stay on)
+    val variants = Seq("1" -> "false", "7" -> "true").map { case (n, aqe) =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", n)
+      s.conf.set("spark.sql.adaptive.enabled", aqe)
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      s"$n shuffle partitions, AQE $aqe" -> s
+    }
+    for (q <- Seq("d2_minhash_lsh", "d5_lsh_buckets", "d6_near_dup_verify",
+        "d7_embed_neardup", "d10_dedup_components", "d11_incremental_dedup",
+        "s2_ann_lsh_bucket", "s3_ann_search")) {
+      val expected = checksum(spark, q)
+      assert(expected._1 > 0, q)
+      for ((label, s) <- variants) assert(checksum(s, q) == expected, s"$q, $label")
+    }
   }
 
   test("anti-join resume broadcasts the done set when small") {
