@@ -32,7 +32,13 @@ object LocalFileSystem {
     * call covers the sessions built before and after it; calling it again
     * changes nothing. Hadoop caches filesystems by scheme and user, not by
     * conf, so a `file:` filesystem the JVM built earlier (any session's
-    * read) would shadow `fs.file.impl`; the cache is off for `file:`. */
+    * read) would shadow `fs.file.impl`; the cache is off for `file:`.
+    *
+    * A local warehouse directory is created here, in-process. The catalog
+    * creates it (the default database's location) at its first table
+    * write, through the shared state's Hadoop conf: a copy taken when the
+    * first session started, maybe before this call, whose stock `file:`
+    * filesystem forks `chmod` for a directory it creates. */
   def register(spark: SparkSession): SparkSession = {
     val conf = spark.sparkContext.hadoopConfiguration
     val impl = classOf[LocalFileSystem].getName
@@ -40,6 +46,9 @@ object LocalFileSystem {
       conf.set("fs.file.impl.disable.cache", "true")
       conf.set("fs.file.impl", impl)
     }
+    val warehouse = new Path(spark.conf.get("spark.sql.warehouse.dir")).toUri
+    if (Option(warehouse.getScheme).forall(_ == "file"))
+      Files.createDirectories(java.nio.file.Paths.get(warehouse.getPath))
     spark
   }
 }

@@ -897,7 +897,13 @@ object Streaming {
     * RocksDBStateStoreProvider is the cluster configuration, where state
     * lives off-heap and survives executor GC pressure. The same oracles
     * stay green on either provider; the RocksDB gate run is recorded in
-    * BENCH/BASELINE.md. */
+    * BENCH/BASELINE.md.
+    *
+    * No-data micro-batches stay on by default: a stream whose output waits
+    * on the watermark (the windowed counts' Append windows, the sessions'
+    * event-time timeouts) emits it in the batch that runs after the data
+    * is gone. A stream that emits only for data turns them off on its
+    * session (x21, x22), since there they only evict state. */
   private[graft] def streamSession(spark0: SparkSession): SparkSession = {
     val s = LocalFileSystem.register(spark0.newSession())
     // newSession resets runtime conf to the context defaults — inherit a
@@ -917,6 +923,14 @@ object Streaming {
     s
   }
 
+  /** Turns off no-data micro-batches on the session of a stream that emits
+    * rows only for data (a dedup, an inner stream-stream join): there such
+    * a batch only evicts state, which the next data batch evicts anyway. */
+  private def eventOnly(s: SparkSession): SparkSession = {
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    s
+  }
+
   /** A stream reader for the parquet table at `dir`, carrying the table's
     * schema (a file source needs it up front), reading at most
     * `maxFilesPerTrigger` files per micro-batch when given. */
@@ -927,22 +941,24 @@ object Streaming {
   }
 
   /** The one stream runner: runs `plan` over the parquet table at `source`
-    * as an AvailableNow stream into the memory table `queryName` and
+    * as an AvailableNow stream into the memory table `queryName`, or, given
+    * `eachBatch`, hands each micro-batch to that function instead, and
     * returns the finished query. The file source needs a directory, so a
     * single-file table is copied into a `stream_src*` temp dir for the
-    * run; the copy is deleted once the query has terminated (the memory
-    * sink holds the output, nothing reads the copy afterwards). */
+    * run; the copy is deleted once the query has terminated (the sink holds
+    * the output, nothing reads the copy afterwards). */
   private[spark] def runToMemory(source: String, queryName: String,
-      mode: OutputMode = OutputMode.Append())(plan: String => Dataset[_]): StreamingQuery = {
+      eachBatch: Option[(DataFrame, Long) => Unit] = None)(plan: String => Dataset[_]): StreamingQuery = {
     import java.nio.file.Files
     val src = java.nio.file.Paths.get(source)
     val copy = if (Files.isDirectory(src)) None else Some(Files.createTempDirectory("stream_src").toFile)
     try {
       val dir = copy.fold(source) { d => Files.copy(src, d.toPath.resolve(src.getFileName)); d.toString }
-      val q = plan(dir).writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(mode)
+      val stream = plan(dir)
+      val q = (eachBatch match {
+        case Some(f) => stream.toDF().writeStream.foreachBatch(f)
+        case None => stream.writeStream.format("memory")
+      }).queryName(queryName)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -993,7 +1009,7 @@ object Streaming {
     * dropDuplicates whose key set grows forever (the same bounded-state
     * contract as the windowed counts and sessions). */
   def dedupedEventStream(spark0: SparkSession, eventsDir: String, queryName: String): DataFrame = {
-    val spark = streamSession(spark0)
+    val spark = eventOnly(streamSession(spark0))
     runToMemory(eventsDir, queryName) { dir =>
       val reader = parquetReader(spark, dir)
       def src = reader.parquet(dir)
@@ -1019,7 +1035,7 @@ object Streaming {
     // (streamSession — the r5 measurement that motivated the sizing,
     // 8s -> ~3s at 8 vs 32, was made on this query; the partition count
     // is pinned at stream START and baked into the checkpoint)
-    val spark = streamSession(spark0)
+    val spark = eventOnly(streamSession(spark0))
     runToMemory(eventsDir, queryName) { dir =>
       val reader = parquetReader(spark, dir)
       def src(tpe: String, alias: String) = reader.parquet(dir)
@@ -1036,38 +1052,31 @@ object Streaming {
     spark.table(queryName)
   }
 
-  /** STREAM-STATIC incremental dedup (the streaming production shape of
-    * d11): a recrawl stream's band keys probe the persisted bucketed
-    * signature index via a stream-static inner equi-join — the join
-    * itself is stateless (no watermark; every candidate verifies in the
-    * micro-batch it arrives), so an unbounded recrawl feed dedups
-    * against a 100 TB standing corpus with per-batch work proportional
-    * to the batch. Band keying is row-local (same minhash arithmetic as
-    * the batch path); candidates verify at Jaccard >= 0.5 with d6's
-    * first-band-wins dedupe, and the per-document min-cluster reduction
-    * runs INSIDE the stream (a near-dup-heavy corpus yields ~1,000
-    * candidates per document — reducing before the sink moves one row
-    * per document instead of every verified pair). The reduction keys
-    * state by doc_id, bounded by the delta's distinct documents; a
-    * forever-stream would window it by arrival batch instead. Returns
-    * (doc_b, cluster_old) — the matched documents and their oldest
-    * matching index doc. */
+  /** Streaming incremental dedup (the streaming production shape of d11):
+    * each micro-batch of a recrawl stream probes the persisted bucketed
+    * signature index with the first-hit walk
+    * ([[Queries.firstVerifiedNearDups]]), which stops each probe row at its
+    * smallest verified index doc instead of verifying the whole hot bucket
+    * (most of the index). Band keying is row-local (same minhash arithmetic
+    * as the batch path). No state: an unbounded recrawl feed dedups against
+    * a 100 TB standing corpus with per-batch work proportional to the
+    * batch, and each batch moves one row per matched document to the
+    * driver, as a memory sink would. Returns (doc_b, cluster_old): the
+    * matched documents and their oldest matching index doc. */
   def incrementalDedupPairs(spark0: SparkSession, idxTable: String,
       deltaDir: String, queryName: String): DataFrame = {
     val spark = streamSession(spark0)
-    // Broadcasting the DELTA side (delta-proportional by definition) runs
-    // the verify over the bucketed index scan's full parallelism —
-    // streaming plans have no AQE, and the default choice broadcast the
-    // static index instead, leaving the verify on however few partitions
-    // the micro-batch's files mapped to.
-    runToMemory(deltaDir, queryName, OutputMode.Complete()) { dir =>
-      val stream = parquetReader(spark, dir).parquet(dir)
-      Queries.verifiedNearDups(Queries.bandedSigs(Queries.sigKeyed(stream)),
-          spark.table(idxTable))((p, i) => broadcast(p).join(i, "band"))
-        .groupBy(col("doc_b"))
-        .agg(min(col("doc_a")).as("cluster_old"))
+    val best = scala.collection.mutable.HashMap.empty[Long, Long]
+    val walk: (DataFrame, Long) => Unit = (batch, _) => {
+      val hits = Queries.firstVerifiedNearDups(
+        Queries.bandedSigs(Queries.sigKeyed(batch)), spark.table(idxTable))
+      best.synchronized(hits.foreach { case (b, a) =>
+        if (best.get(b).forall(a < _)) best(b) = a
+      })
     }
-    spark.table(queryName)
+    runToMemory(deltaDir, queryName, Some(walk))(dir => parquetReader(spark, dir).parquet(dir))
+    import spark.implicits._
+    best.synchronized(best.toSeq).toDF("doc_b", "cluster_old")
   }
 
   final case class UserSession(user_id: Long, events: Long, firstTs: java.sql.Timestamp,

@@ -1345,6 +1345,59 @@ object Queries {
         size(col("hs_a")) + size(col("hs_b")))
   }
 
+  /** One side of a banded pair: doc, band0 and the token-hash set, copied
+    * out of Catalyst's row (null when the set is null: it never verifies). */
+  private final case class BandedSig(doc: Long, b0: String,
+      hs: org.apache.spark.sql.catalyst.util.ArrayData)
+
+  /** [[verifiedNearDups]] reduced to `min(doc_a)` per `doc_b`, without
+    * verifying every candidate pair: the smallest verified `doc_a` is the
+    * first one met in ascending order, so each probe row walks its band's
+    * index rows by `doc_id` and stops at its first hit. `probe` (small:
+    * delta-sized) is collected and broadcast; every index partition sorts
+    * its rows of the probed bands by `doc_id` and walks them, and the min
+    * over the partitions' first hits is the answer. The pair test is the
+    * verify's own: first-band-wins (a band-1 match counts only when the
+    * band0s differ), then `3·|a∩b| ≥ |a|+|b|`. A probe row with no hit
+    * walks its whole bucket, as the full verify does for every probe row.
+    * Rows with a null band or doc_id are skipped: they join nothing and a
+    * null doc_a is never a min. Returns doc_b -> the smallest verified
+    * doc_a, for the probe docs that have one. */
+  private[graft] def firstVerifiedNearDups(probe: DataFrame, index: DataFrame): Map[Long, Long] = {
+    val bc = index.sparkSession.sparkContext.broadcast(
+      bandedRows(probe, _ => true).collect().groupMap(_._1)(_._2))
+    try bandedRows(index, band => bc.value.contains(band)).mapPartitions { rows =>
+      rows.toArray.groupMap(_._1)(_._2).iterator.flatMap { case (band, idx) =>
+        val is0 = band.startsWith("0:")
+        val walk = idx.sortBy(_.doc)
+        bc.value(band).iterator.flatMap { p =>
+          walk.find { a =>
+            (is0 || (a.b0 != null && p.b0 != null && a.b0 != p.b0)) &&
+              a.hs != null && p.hs != null && {
+                val n = PairKernels.interSizeOf(a.hs, p.hs)
+                n >= 0 && 3L * n >= a.hs.numElements() + p.hs.numElements()
+              }
+          }.map(a => p.doc -> a.doc)
+        }
+      }
+    }.collect().groupMapReduce(_._1)(_._2)(math.min)
+    finally bc.destroy()
+  }
+
+  /** (band, sig) of a [[bandedSigs]]-shaped frame's rows whose band passes
+    * `keep`, read off Catalyst's rows: the sets stay Catalyst arrays, so the
+    * walk runs the verify's own [[PairKernels.interSizeOf]] on them, a null
+    * element included (it never verifies). */
+  private def bandedRows(df: DataFrame, keep: String => Boolean) =
+    df.select(col("band"), col("doc_id").cast("long"), col("b0"), col("hs"))
+      .queryExecution.toRdd.flatMap { r =>
+        val band = if (r.isNullAt(0) || r.isNullAt(1)) null else r.getUTF8String(0).toString
+        if (band == null || !keep(band)) None
+        else Some(band -> BandedSig(r.getLong(1),
+          if (r.isNullAt(2)) null else r.getUTF8String(2).toString,
+          if (r.isNullAt(3)) null else r.getArray(3).copy()))
+      }
+
   /** Persist (overwrite) the signature index for a (doc_id, text) corpus,
     * BUCKETED BY band: every later incremental probe reads it
     * co-partitioned and shuffles only the delta. */
@@ -1506,8 +1559,8 @@ object Queries {
   private val x31 = Q(
     (spark, dir) => {
       // STREAMING incremental dedup: the d11 recrawl delta arrives as a
-      // STREAM and probes the persisted bucketed signature index through
-      // a stateless stream-static join (Streaming.incrementalDedupPairs).
+      // STREAM and probes the persisted bucketed signature index with a
+      // per-batch first-hit walk (Streaming.incrementalDedupPairs).
       // vs d11: no within-delta (new<->new) linking — a stream classifies
       // against the STANDING corpus; intra-batch dups are the batch
       // compactor's job — so the oracle is d11's old_match half with

@@ -305,6 +305,70 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("first-hit walk == full verify + min(doc_a) (x31)") {
+    val sp = spark
+    import sp.implicits._
+    def full(probe: DataFrame, index: DataFrame): Map[Long, Long] =
+      Queries.verifiedNearDups(probe, index)(_.join(_, "band"))
+        .groupBy("doc_b").agg(min("doc_a")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // a null ELEMENT in `hs` for the doc ids in `nulls`; read back from
+    // parquet the arrays are containsNull = true, as the index is
+    def frame(rows: Seq[(Long, Array[Long], String, String)], nulls: Set[Long], name: String) =
+      viaParquet(rows.toDF("doc_id", "hs", "b0", "band")
+        .withColumn("hs", when(col("doc_id").isin(nulls.toSeq: _*),
+          concat(col("hs"), array(lit(null).cast("bigint")))).otherwise(col("hs"))), name)
+    // the index spread round-robin over 3 partitions: a band's rows land in several
+    def spread(df: DataFrame) = df.repartition(3)
+    def bandsOverPartitions(df: DataFrame) =
+      df.select(spark_partition_id().as("p"), col("band")).distinct()
+        .groupBy("band").count().filter(col("count") > 1).count()
+
+    // constructed buckets, one case each
+    def s(xs: Long*) = xs.toArray
+    val idx = frame(Seq(
+      (1L, s(1, 2, 3), "k0", "1:z"), // same band0 as probe 500: first-band-wins rejects it
+      (2L, s(1, 2, 3), "k1", "1:z"),
+      (3L, s(1, 2, 3, 4), "t", "0:t"), // 3·2 == 4+2: verifies at the threshold
+      (4L, s(7, 8), "e", "0:e"),       // a band-0 hit carries equal band0s
+      (9L, s(7, 8), "e", "0:e"),       // a second hit: the walk must report 4, not 9
+      (0L, s(5, 6), "n", "0:n"),       // with its null element: never verifies
+      (6L, s(5, 6), "n", "0:n")), Set(0L), "walk_idx")
+    val probe = frame(Seq(
+      (500L, s(1, 2, 3), "k0", "1:z"),
+      (501L, s(1, 2), "t", "0:t"),
+      (502L, s(7, 8), "e", "0:e"),
+      (503L, s(100, 101), "e", "0:e"), // a bucket with no hit
+      (504L, s(5, 6), "n", "0:n"),
+      (505L, s(1, 2), "x", "0:none")), Set.empty, "walk_probe")
+    val want = Map(500L -> 2L, 501L -> 3L, 502L -> 4L, 504L -> 6L)
+    assert(full(probe, idx) == want)
+    assert(Queries.firstVerifiedNearDups(probe, spread(idx)) == want)
+
+    // randomized buckets: few bands and a small token universe, so buckets
+    // hold many candidates, several hits each, equal doc ids and misses
+    var noHit, multiHit, spanning = 0L
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      def hs() = Queries.Kernels.sortedDistinct(Array.fill(2 + rnd.nextInt(9))(rnd.nextInt(14).toLong))
+      def row(doc: Long) = {
+        val b0 = s"k${rnd.nextInt(3)}"
+        (doc, hs(), b0, if (rnd.nextBoolean()) s"0:$b0" else s"1:k${rnd.nextInt(3)}")
+      }
+      val index = spread(frame((0 until 150).map(_ => row(rnd.nextInt(70).toLong)),
+        Set(5L, 17L, 33L), s"walk_idx_$seed"))
+      val probes = frame((0 until 50).map(i => row(1000L + i)), Set(1003L, 1020L), s"walk_probe_$seed")
+      val got = Queries.firstVerifiedNearDups(probes, index)
+      assert(got == full(probes, index), s"seed $seed")
+      val pairs = Queries.verifiedNearDups(probes, index)(_.join(_, "band"))
+      noHit += probes.select(col("doc_id").as("doc_b")).distinct().count() - got.size
+      multiHit += pairs.groupBy("doc_b").agg(countDistinct("doc_a").as("n"))
+        .filter(col("n") > 1).count()
+      spanning += bandsOverPartitions(index)
+    }
+    assert(noHit > 0 && multiHit > 0 && spanning > 0, (noHit, multiHit, spanning))
+  }
+
   test("BigDecimal.valueOf HALF_UP == Spark round(double, 6) (s5 distances)") {
     val sp = spark
     import sp.implicits._

@@ -611,6 +611,53 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deduped.select("event_id").distinct().count() == n)
   }
 
+  /** The ids of the micro-batches the stream named `queryName` runs inside
+    * `body`, read off the context's listener bus (streams run on child
+    * sessions, and their progress events reach every SparkListener). */
+  private def batchIds(queryName: String)(body: => Unit): Seq[Long] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = events.add(e)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def seen = events.toArray.toSeq
+    def runs = seen.collect { case e: QueryStartedEvent if e.name == queryName => e.runId }.toSet
+    try {
+      body
+      // the bus delivers asynchronously; a run's termination comes last
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while ((runs.isEmpty || !runs.forall(r => seen.exists {
+          case e: QueryTerminatedEvent => e.runId == r
+          case _ => false
+        })) && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val rs = runs
+    assert(rs.size == 1, s"$queryName ran ${rs.size} times")
+    seen.collect { case e: QueryProgressEvent if rs(e.progress.runId) => e.progress.batchId }
+  }
+
+  test("x21 and x22 run no no-data batch; the windowed counts keep theirs") {
+    // a dedup and an inner stream-stream join emit only for data: a
+    // no-data batch would only evict state. The windowed counts emit their
+    // Append windows in the no-data batch after the data.
+    val events = "/root/testdata/sf0.001/events.parquet"
+    var rows = 0L
+    assert(batchIds("t_join_batches") {
+      rows = graft.spark.Streaming.attributedPurchases(spark, events, "t_join_batches").count()
+    } == Seq(0L))
+    assert(rows > 0)
+    assert(batchIds("t_dedup_batches") {
+      rows = graft.spark.Streaming.dedupedEventStream(spark, events, "t_dedup_batches").count()
+    } == Seq(0L))
+    assert(rows > 0)
+    assert(batchIds("t_win_batches") {
+      rows = graft.spark.Streaming.windowedEventCounts(spark, events, "t_win_batches").count()
+    } == Seq(0L, 1L))
+    assert(rows > 0)
+  }
+
   test("stream runs delete the temp copy of a single-file source") {
     // the file source needs a directory: a single-file table is copied into
     // a stream_src* temp dir, which must not outlive the query
@@ -627,11 +674,15 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The commands of the OS processes `body` starts, recorded in-process
     * with JFR. Spark deletes local temp dirs with `rm -rf` (JavaUtils), also
     * in the background for the state stores and sessions of earlier tests:
-    * that is not the I/O under test and is left out. */
+    * that is not the I/O under test and is left out. Spark's driver probes
+    * the page size once per JVM (`getconf PAGESIZE`, when its first
+    * heartbeat loads `ProcfsMetricsGetter`); that probe is paid before the
+    * recording starts, so a test run alone sees the same as in the suite. */
   private def processStarts(body: => Unit): Seq[String] = {
     import jdk.jfr.Recording
     import jdk.jfr.consumer.RecordingFile
     import scala.jdk.CollectionConverters._
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
@@ -747,13 +798,12 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = graft.spark.Streaming.windowedEventCountsPlan(spark, dir)
       .queryExecution.analyzed.toString
     assert(plan.contains("EventTimeWatermark"), plan.take(2000))
-    // Complete output mode retains all groups forever — allowed in
-    // exactly ONE place: x31's incrementalDedupPairs, whose group key is
-    // the delta's doc_id (state bounded by the delta, documented at the
-    // site). Any new use must justify its state bound here.
+    // Complete output mode retains all groups forever: no stream uses it
+    // (x31's dedup reduces per micro-batch with a first-hit walk, without
+    // state). A new use must justify its state bound here.
     val src = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/spark/Pipeline.scala")), "UTF-8")
-    assert("OutputMode\\.Complete".r.findAllIn(src).length == 1,
+    assert("OutputMode\\.Complete".r.findAllIn(src).isEmpty,
       "unexpected Complete-mode use (retains all groups forever)")
   }
 
