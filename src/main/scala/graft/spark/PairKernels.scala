@@ -7,11 +7,12 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType,
   LongType}
 
-/** The per-candidate-pair array kernels of the dedup verify (d6, d11, x31)
-  * and the vector searches (d7, s1, s3, s4, s5), as native Catalyst
-  * expressions: they read `ArrayData.getLong/getFloat/getDouble` in place
-  * and generate code (no CodegenFallback), so the verify runs inside the
-  * join's WholeStageCodegen stage.
+/** The per-candidate-pair array kernels of the dedup verify (d6; d11 and
+  * x31 call [[PairKernels.interSizeOf]] from their first-hit walk) and the
+  * vector searches (d7, s1, s3, s4, s5), as native Catalyst expressions:
+  * they read `ArrayData.getLong/getFloat/getDouble` in place and generate
+  * code (no CodegenFallback), so the verify runs inside the join's
+  * WholeStageCodegen stage.
   *
   * Why not a Scala UDF: a UDF's arguments go through the
   * ExpressionEncoder, which boxes every array element and copies the

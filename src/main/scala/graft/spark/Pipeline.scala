@@ -1061,10 +1061,10 @@ object Streaming {
     * as the batch path). No state: an unbounded recrawl feed dedups against
     * a 100 TB standing corpus with per-batch work proportional to the
     * batch, and each batch moves one row per matched document to the
-    * driver, as a memory sink would. Returns (doc_b, cluster_old): the
+    * driver, as a memory sink would. Returns doc_b -> cluster_old: the
     * matched documents and their oldest matching index doc. */
   def incrementalDedupPairs(spark0: SparkSession, idxTable: String,
-      deltaDir: String, queryName: String): DataFrame = {
+      deltaDir: String, queryName: String): Map[Long, Long] = {
     val spark = streamSession(spark0)
     val best = scala.collection.mutable.HashMap.empty[Long, Long]
     val walk: (DataFrame, Long) => Unit = (batch, _) => {
@@ -1075,8 +1075,7 @@ object Streaming {
       })
     }
     runToMemory(deltaDir, queryName, Some(walk))(dir => parquetReader(spark, dir).parquet(dir))
-    import spark.implicits._
-    best.synchronized(best.toSeq).toDF("doc_b", "cluster_old")
+    best.synchronized(best.toMap)
   }
 
   final case class UserSession(user_id: Long, events: Long, firstTs: java.sql.Timestamp,

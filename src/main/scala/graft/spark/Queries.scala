@@ -1316,54 +1316,32 @@ object Queries {
     explode(array(concat(lit("0:"), col("band0")),
       concat(lit("1:"), col("band1")))).as("band"))
 
-  /** The near-duplicate verify shared by d11 and x31: `probe` and `index`
-    * are [[bandedSigs]]-shaped frames, `join` pairs them on `band` (each
-    * caller picks its strategy and any extra predicate). Returns the
-    * verified candidate pairs (doc_b from the probe, doc_a from the index):
-    * d6's first-band-wins dedupe (a band-1 match only counts when the
-    * band0s differ), then Jaccard >= 0.5. */
-  private[graft] def verifiedNearDups(probe: DataFrame, index: DataFrame)(
-      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    // is0 (band-0 row?) is a per-PROBE-ROW fact precomputed here: the
-    // first-band-wins filter would otherwise evaluate a substring +
-    // string-compare once per candidate PAIR (millions on this dup-heavy
-    // corpus) instead of once per probe band row (thousands)
-    val p = probe.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
-      col("b0").as("b0b"), col("band"),
-      (substring(col("band"), 1, 2) === "0:").as("is0"))
-    val i = index.select(col("band"), col("doc_id").as("doc_a"),
-      col("hs").as("hs_a"), col("b0").as("b0a"))
-    // Jaccard >= 1/2 as PURE INTEGER arithmetic: i/(a+b-i) >= 1/2 <=>
-    // 3i >= a+b. One intersect per candidate even after the predicate is
-    // pushed into the join condition (a ratio form evaluates it three
-    // times) and no float rounding at the threshold (the r5 d6
-    // parity-window class). PairKernels.interSize is the native
-    // sorted-merge intersect; its doc has the per-pair cost it removed.
-    join(p, i)
-      .filter(col("is0") || col("b0a") =!= col("b0b"))
-      .filter(PairKernels.interSize(col("hs_a"), col("hs_b")) * 3 >=
-        size(col("hs_a")) + size(col("hs_b")))
-  }
-
   /** One side of a banded pair: doc, band0 and the token-hash set, copied
     * out of Catalyst's row (null when the set is null: it never verifies). */
   private final case class BandedSig(doc: Long, b0: String,
       hs: org.apache.spark.sql.catalyst.util.ArrayData)
 
-  /** [[verifiedNearDups]] reduced to `min(doc_a)` per `doc_b`, without
-    * verifying every candidate pair: the smallest verified `doc_a` is the
-    * first one met in ascending order, so each probe row walks its band's
-    * index rows by `doc_id` and stops at its first hit. `probe` (small:
-    * delta-sized) is collected and broadcast; every index partition sorts
-    * its rows of the probed bands by `doc_id` and walks them, and the min
-    * over the partitions' first hits is the answer. The pair test is the
-    * verify's own: first-band-wins (a band-1 match counts only when the
-    * band0s differ), then `3·|a∩b| ≥ |a|+|b|`. A probe row with no hit
-    * walks its whole bucket, as the full verify does for every probe row.
-    * Rows with a null band or doc_id are skipped: they join nothing and a
-    * null doc_a is never a min. Returns doc_b -> the smallest verified
-    * doc_a, for the probe docs that have one. */
-  private[graft] def firstVerifiedNearDups(probe: DataFrame, index: DataFrame): Map[Long, Long] = {
+  /** The near-duplicate verify of d11 and x31: for each probe doc, the
+    * smallest verified index doc, found without verifying every candidate
+    * pair. `probe` and `index` are [[bandedSigs]]-shaped frames; a pair
+    * is a candidate when it shares a band. The pair test is d6's
+    * first-band-wins (a band-1 match counts only when the band0s differ),
+    * then Jaccard >= 1/2 as integer arithmetic, `3·|a∩b| ≥ |a|+|b|` (no
+    * float rounding at the threshold). The smallest verified `doc_a` is
+    * the first one met in ascending order, so each probe row walks its
+    * band's index rows by `doc_id` and stops at its first hit. `probe`
+    * (small: delta-sized) is collected and broadcast; every index
+    * partition sorts its rows of the probed bands by `doc_id` and walks
+    * them where they are read, and the min over the partitions' first hits
+    * is the answer. With `below`, only index docs smaller than the probe
+    * doc count (a delta walking itself links each doc to an earlier one),
+    * so a probe row stops at the first index row with `doc_id` ≥ its own.
+    * A probe row with no hit walks its whole bucket. Rows with a null
+    * band or doc_id are skipped: they pair with nothing and a null doc_a
+    * is never a min. Returns doc_b -> the smallest verified doc_a, for the
+    * probe docs that have one. */
+  private[graft] def firstVerifiedNearDups(probe: DataFrame, index: DataFrame,
+      below: Boolean = false): Map[Long, Long] = {
     val bc = index.sparkSession.sparkContext.broadcast(
       bandedRows(probe, _ => true).collect().groupMap(_._1)(_._2))
     try bandedRows(index, band => bc.value.contains(band)).mapPartitions { rows =>
@@ -1371,7 +1349,7 @@ object Queries {
         val is0 = band.startsWith("0:")
         val walk = idx.sortBy(_.doc)
         bc.value(band).iterator.flatMap { p =>
-          walk.find { a =>
+          (if (below) walk.takeWhile(_.doc < p.doc) else walk).find { a =>
             (is0 || (a.b0 != null && p.b0 != null && a.b0 != p.b0)) &&
               a.hs != null && p.hs != null && {
                 val n = PairKernels.interSizeOf(a.hs, p.hs)
@@ -1399,8 +1377,9 @@ object Queries {
       }
 
   /** Persist (overwrite) the signature index for a (doc_id, text) corpus,
-    * BUCKETED BY band: every later incremental probe reads it
-    * co-partitioned and shuffles only the delta. */
+    * bucketed by band, one sorted file per bucket. The incremental verify
+    * ([[firstVerifiedNearDups]]) walks it where it is read: the index is
+    * never shuffled or broadcast, only the delta-sized probe moves. */
   private[graft] def buildSignatureIndex(docs: DataFrame, table: String,
       path: String): Unit =
     bandedSigs(sigKeyed(docs))
@@ -1416,28 +1395,32 @@ object Queries {
 
   /** The incremental pass of d11: a recrawl delta's signature frame `dk`
     * (`sigKeyed` of (doc_id, text)) verified against the persisted
-    * signature index — new<->old candidates from probing the bucketed
-    * index, new<->new candidates within the delta, both at Jaccard >= 0.5
-    * with d6's first-band-wins pair dedupe. Output: (doc_id, status in
-    * {dup_old, dup_new, new}, cluster). `dk` feeds four subtrees (two
-    * probe sides, the within-delta pair join's both sides, the
-    * classification base), so callers pass it materialized
-    * (`localCheckpoint`, the d7 precedent; released by the ContextCleaner)
-    * rather than re-scanning the documents and re-running the kernel per
-    * subtree. Bounded by the delta. */
+    * signature index — new<->old by walking the index, new<->new by the
+    * delta walking itself under `doc_a < doc_b`, both with
+    * [[firstVerifiedNearDups]]. Output: (doc_id, status in
+    * {dup_old, dup_new, new}, cluster). `dk` feeds both walks' probe, the
+    * within-delta walk's index and the classification base, so callers
+    * pass it materialized (`localCheckpoint`, the d7 precedent; released
+    * by the ContextCleaner) rather than re-scanning the documents and
+    * re-running the kernel per use. Bounded by the delta. */
   private[graft] def incrementalDedup(spark: SparkSession, idxTable: String,
       dk: DataFrame): DataFrame = {
     val probe = bandedSigs(dk)
-    // new<->old: delta bands probe the bucketed index
-    val oldMatch = verifiedNearDups(probe, spark.table(idxTable))(_.join(_, "band"))
-      .groupBy(col("doc_b").as("doc_id")).agg(min("doc_a").as("cluster_old"))
-    // new<->new: within-delta candidates, linked to the smaller doc_id
-    val newMatch = verifiedNearDups(probe, probe)(
-      _.join(_, "band").filter(col("doc_a") < col("doc_b")))
-      .groupBy(col("doc_b").as("doc_id")).agg(min("doc_a").as("cluster_new"))
-    dk.select("doc_id")
-      .join(oldMatch, Seq("doc_id"), "left")
-      .join(newMatch, Seq("doc_id"), "left")
+    classifyDelta(dk, firstVerifiedNearDups(probe, spark.table(idxTable)),
+      firstVerifiedNearDups(probe, probe, below = true))
+  }
+
+  /** A recrawl delta's classification, ordered by doc_id: each doc of
+    * `base` (a [[sigKeyed]] frame) with its oldest matching index doc
+    * (`oldMatch`: status dup_old), else its smallest matching earlier
+    * delta doc (`newMatch`: dup_new), else itself (new). */
+  private def classifyDelta(base: DataFrame, oldMatch: Map[Long, Long],
+      newMatch: Map[Long, Long]): DataFrame = {
+    val spark = base.sparkSession
+    import spark.implicits._
+    base.select("doc_id")
+      .join(oldMatch.toSeq.toDF("doc_id", "cluster_old"), Seq("doc_id"), "left")
+      .join(newMatch.toSeq.toDF("doc_id", "cluster_new"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("cluster_old").isNotNull, lit("dup_old"))
           .when(col("cluster_new").isNotNull, lit("dup_new"))
@@ -1451,17 +1434,18 @@ object Queries {
     (spark, dir) => {
       // Incremental dedup against a PERSISTED signature index — the 100 TB
       // production shape: a recrawl batch never re-dedups the corpus; it
-      // joins its band keys against the EXISTING signature table and
-      // verifies only new<->old and new<->new candidates, so the
-      // incremental pass's shuffle is proportional to the DELTA, not the
+      // matches its band keys against the EXISTING signature table and
+      // verifies only new<->old and new<->new candidates, so what the
+      // incremental pass moves is proportional to the DELTA, not the
       // corpus (DedupScaleSmoke measures this at the 1M/4M tiers). The
       // index holds one row per (band, doc): the positional band key
-      // ('0:'/'1:' prefix keeps LSH bands positional under ONE join
+      // ('0:'/'1:' prefix keeps LSH bands positional under ONE key
       // column), the doc's band0 (for d6-style first-band-wins candidate
       // dedupe) and its distinct token-hash set (the verify payload —
       // ~8 bytes/token buys never re-reading the corpus on a recrawl).
-      // The index is written BUCKETED BY band: the new<->old join reads it
-      // co-partitioned with ZERO exchange — only the delta side shuffles
+      // Both legs run the first-hit walk (firstVerifiedNearDups): the
+      // delta's band rows are broadcast and the index is walked where it
+      // is read — no exchange on the index side, nothing of it broadcast
       // (PlanSpec pins this).
       val (sid, base) = sessionScratch(spark, "sigidx")
       val idxTable = s"graft_index_$sid"
@@ -1574,24 +1558,12 @@ object Queries {
         buildSignatureIndex(t(spark, dir, "documents"), idxTable, s"$base/sig"),
         recrawlDelta(t(spark, dir, "documents"))
           .write.mode("overwrite").parquet(deltaDir))
-      val pairs = graft.spark.Streaming.incrementalDedupPairs(spark, idxTable,
+      val oldMatch = graft.spark.Streaming.incrementalDedupPairs(spark, idxTable,
         deltaDir, "x31_" + java.lang.Long.toHexString(System.nanoTime()))
-      // batch classification over the streamed pairs — rebuilt on the
-      // PAIRS' session (every stream runs on an isolated child session;
-      // mixing sessions in one plan is undefined)
-      val s2 = pairs.sparkSession
-      val best = pairs.select(col("doc_b").as("doc_id"), col("cluster_old"))
-      // classification base = docs with >=1 token (sigKeyed), matching
-      // d11's Spark side and the oracle's dkeyed base (ADVICE r6: a
-      // hypothetical empty-text delta doc must not emit a spurious 'new'
-      // row that the oracle lacks)
-      sigKeyed(recrawlDelta(t(s2, dir, "documents"))).select("doc_id")
-        .join(best, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("cluster_old").isNotNull, lit("dup_old"))
-            .otherwise(lit("new")).as("status"),
-          coalesce(col("cluster_old"), col("doc_id")).as("cluster"))
-        .orderBy("doc_id")
+      // base = docs with >=1 token (sigKeyed), as d11's and the oracle's
+      // dkeyed base: an empty-text delta doc must not emit a 'new' row
+      // that the oracle lacks
+      classifyDelta(sigKeyed(recrawlDelta(t(spark, dir, "documents"))), oldMatch, Map.empty)
     },
     Some(s"""WITH delta AS (
             |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0

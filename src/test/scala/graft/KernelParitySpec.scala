@@ -293,7 +293,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
         df.select(col("id"), PairKernels.interSize(col("a"), col("b"))).orderBy("id")) {
         _.map(r => (r.getLong(0), r.getInt(1))).toSeq
       }
-      // inside a broadcast join's condition, as x31 runs it: each streamed
+      // inside a broadcast join's condition: each streamed
       // row's array meets ~100 build rows, in either argument position
       val l = df.filter(col("id") < 300).select((col("id") % 3).as("k"), col("a"))
       val r = df.filter(col("id") < 300).select((col("id") % 3).as("k2"), col("b"))
@@ -305,13 +305,33 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("first-hit walk == full verify + min(doc_a) (x31)") {
+  /** The full verify the first-hit walk is pinned against (d11 ran it
+    * until the walk replaced it): every candidate pair of two
+    * [[Queries.bandedSigs]]-shaped frames joined on `band` (with `below`,
+    * only doc_a < doc_b), through first-band-wins (a band-1 match counts
+    * only when the band0s differ) and `3·|a∩b| ≥ |a|+|b|` as Catalyst
+    * expressions. Returns the verified (doc_b, doc_a, ...) pairs. */
+  private def verifiedNearDups(probe: DataFrame, index: DataFrame, below: Boolean): DataFrame = {
+    val p = probe.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
+      col("b0").as("b0b"), col("band"),
+      (substring(col("band"), 1, 2) === "0:").as("is0"))
+    val i = index.select(col("band"), col("doc_id").as("doc_a"),
+      col("hs").as("hs_a"), col("b0").as("b0a"))
+    val pairs = p.join(i, "band")
+    (if (below) pairs.filter(col("doc_a") < col("doc_b")) else pairs)
+      .filter(col("is0") || col("b0a") =!= col("b0b"))
+      .filter(PairKernels.interSize(col("hs_a"), col("hs_b")) * 3 >=
+        size(col("hs_a")) + size(col("hs_b")))
+  }
+
+  test("first-hit walk == full verify + min(doc_a) (d11, x31)") {
     val sp = spark
     import sp.implicits._
-    def full(probe: DataFrame, index: DataFrame): Map[Long, Long] =
-      Queries.verifiedNearDups(probe, index)(_.join(_, "band"))
-        .groupBy("doc_b").agg(min("doc_a")).collect()
+    def minPerProbe(pairs: DataFrame): Map[Long, Long] =
+      pairs.groupBy("doc_b").agg(min("doc_a")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def full(probe: DataFrame, index: DataFrame, below: Boolean = false) =
+      minPerProbe(verifiedNearDups(probe, index, below))
     // a null ELEMENT in `hs` for the doc ids in `nulls`; read back from
     // parquet the arrays are containsNull = true, as the index is
     def frame(rows: Seq[(Long, Array[Long], String, String)], nulls: Set[Long], name: String) =
@@ -345,9 +365,22 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(full(probe, idx) == want)
     assert(Queries.firstVerifiedNearDups(probe, spread(idx)) == want)
 
+    // within a delta (d11 new<->new): the probe is its own index and only
+    // smaller index docs count
+    val delta = frame(Seq(
+      (10L, s(1, 2, 3), "r", "0:r"),    // doc 10 twice in one bucket: neither
+      (10L, s(1, 2, 3, 4), "r", "0:r"), // row may link 10 to itself
+      (11L, s(1, 2, 3), "r", "0:r"),
+      (20L, s(4, 5), "p", "1:q"),       // its bucket's only hit is 21, larger
+      (21L, s(4, 5), "o", "1:q"),
+      (30L, s(6, 7), "u", "0:u")), Set.empty, "walk_delta") // verifies only its own row
+    val wantDelta = Map(11L -> 10L, 21L -> 20L)
+    assert(full(delta, delta, below = true) == wantDelta)
+    assert(Queries.firstVerifiedNearDups(delta, spread(delta), below = true) == wantDelta)
+
     // randomized buckets: few bands and a small token universe, so buckets
     // hold many candidates, several hits each, equal doc ids and misses
-    var noHit, multiHit, spanning = 0L
+    var noHit, multiHit, spanning, repeated, largerOnly, self = 0L
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed)
       def hs() = Queries.Kernels.sortedDistinct(Array.fill(2 + rnd.nextInt(9))(rnd.nextInt(14).toLong))
@@ -360,13 +393,24 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val probes = frame((0 until 50).map(i => row(1000L + i)), Set(1003L, 1020L), s"walk_probe_$seed")
       val got = Queries.firstVerifiedNearDups(probes, index)
       assert(got == full(probes, index), s"seed $seed")
-      val pairs = Queries.verifiedNearDups(probes, index)(_.join(_, "band"))
+      val pairs = verifiedNearDups(probes, index, below = false)
       noHit += probes.select(col("doc_id").as("doc_b")).distinct().count() - got.size
       multiHit += pairs.groupBy("doc_b").agg(countDistinct("doc_a").as("n"))
         .filter(col("n") > 1).count()
       spanning += bandsOverPartitions(index)
+
+      val d = frame((0 until 120).map(_ => row(rnd.nextInt(60).toLong)),
+        Set(5L, 17L, 33L), s"walk_delta_$seed")
+      assert(Queries.firstVerifiedNearDups(d, spread(d), below = true) == full(d, d, below = true),
+        s"within, seed $seed")
+      val unbounded = verifiedNearDups(d, d, below = false)
+      repeated += d.groupBy("band", "doc_id").count().filter(col("count") > 1).count()
+      largerOnly += minPerProbe(unbounded.filter(col("doc_a") =!= col("doc_b")))
+        .count { case (b, a) => a > b }
+      self += unbounded.filter(col("doc_a") === col("doc_b")).count()
     }
     assert(noHit > 0 && multiHit > 0 && spanning > 0, (noHit, multiHit, spanning))
+    assert(repeated > 0 && largerOnly > 0 && self > 0, (repeated, largerOnly, self))
   }
 
   test("BigDecimal.valueOf HALF_UP == Spark round(double, 6) (s5 distances)") {
