@@ -860,6 +860,7 @@ object Streaming {
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout,
     OutputMode, StreamingQuery, Trigger}
+  import org.apache.spark.sql.types.StructType
   import scala.jdk.CollectionConverters._
 
   /** Streaming state-partition sizing (round 7, guide §2.2 + §5): a
@@ -879,6 +880,19 @@ object Streaming {
   /** Every stream runs on an ISOLATED child session (newSession shares the
     * SparkContext but owns its SQLConf + temp-view catalog), so the
     * partition sizing above does not reshape the caller's batch queries.
+    * The child carries the stream's SQL conf: the 8 state partitions, the
+    * checkpoint manager below, the caller's state-store provider, and, on
+    * a stream that emits only for data, no no-data batches (`eventOnly`).
+    *
+    * The child's ARTIFACT isolation is off: its tasks run in the
+    * executor's default session state, so the JVM's generated classes
+    * serve every stream. Janino's cache (`CodeGenerator`) is keyed by the
+    * context class loader and the code, an executor gives each isolated
+    * session its own class loader (keyed by the session's uuid), and each
+    * stream start runs its batches on a clone with a fresh uuid: isolated,
+    * every call recompiled byte-identical code (x22 ~30 classes, x31 5).
+    * The streams add no jars or classes of their own, so isolation bought
+    * nothing here.
     *
     * Checkpoint I/O stays in-process. Hadoop has no NativeIO here, and
     * Spark's default FileContext checkpoint manager forks `readlink` on
@@ -905,7 +919,11 @@ object Streaming {
     * is gone. A stream that emits only for data turns them off on its
     * session (x21, x22), since there they only evict state. */
   private[graft] def streamSession(spark0: SparkSession): SparkSession = {
-    val s = LocalFileSystem.register(spark0.newSession())
+    val s = spark0.newSession()
+    // read once, lazily, by the session's artifact manager: set before
+    // anything else touches the session; the stream's clones inherit it
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    LocalFileSystem.register(s)
     // newSession resets runtime conf to the context defaults — inherit a
     // provider choice made on the calling session (SurfacesSpec's RocksDB
     // gate sets it there)
@@ -932,11 +950,13 @@ object Streaming {
   }
 
   /** A stream reader for the parquet table at `dir`, carrying the table's
-    * schema (a file source needs it up front), reading at most
+    * schema (a file source needs it up front): `schema` when the caller
+    * knows it, else the one a batch read infers (a job), reading at most
     * `maxFilesPerTrigger` files per micro-batch when given. */
   private[spark] def parquetReader(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataStreamReader = {
-    val reader = spark.readStream.schema(spark.read.parquet(dir).schema)
+      maxFilesPerTrigger: Option[Int] = None,
+      schema: Option[StructType] = None): DataStreamReader = {
+    val reader = spark.readStream.schema(schema.getOrElse(spark.read.parquet(dir).schema))
     maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
   }
 
@@ -1061,10 +1081,13 @@ object Streaming {
     * as the batch path). No state: an unbounded recrawl feed dedups against
     * a 100 TB standing corpus with per-batch work proportional to the
     * batch, and each batch moves one row per matched document to the
-    * driver, as a memory sink would. Returns doc_b -> cluster_old: the
-    * matched documents and their oldest matching index doc. */
+    * driver, as a memory sink would. `deltaSchema` is the delta's schema
+    * as written, so the stream starts without a schema-inference job.
+    * Returns doc_b -> cluster_old: the matched documents and their oldest
+    * matching index doc. */
   def incrementalDedupPairs(spark0: SparkSession, idxTable: String,
-      deltaDir: String, queryName: String): Map[Long, Long] = {
+      deltaDir: String, deltaSchema: StructType,
+      queryName: String): Map[Long, Long] = {
     val spark = streamSession(spark0)
     val best = scala.collection.mutable.HashMap.empty[Long, Long]
     val walk: (DataFrame, Long) => Unit = (batch, _) => {
@@ -1074,7 +1097,8 @@ object Streaming {
         if (best.get(b).forall(a < _)) best(b) = a
       })
     }
-    runToMemory(deltaDir, queryName, Some(walk))(dir => parquetReader(spark, dir).parquet(dir))
+    runToMemory(deltaDir, queryName, Some(walk))(dir =>
+      parquetReader(spark, dir, schema = Some(deltaSchema)).parquet(dir))
     best.synchronized(best.toMap)
   }
 

@@ -1294,19 +1294,23 @@ object Queries {
   /** The deterministic recrawl delta d11/x31 verify against the index:
     * exact re-crawls (%10=0), near-dup re-crawls with one appended token
     * (%10=5), fresh documents (%10=1) and a second copy of each fresh
-    * document (within-delta duplicates) — all derivable by DuckDB. */
+    * document (within-delta duplicates) — all derivable by DuckDB. One
+    * scan: each kept document explodes into its delta rows (two for a
+    * fresh one). KernelParitySpec pins it against a four-way union of
+    * filtered scans. */
   private[graft] def recrawlDelta(docs: DataFrame): DataFrame = {
+    val r = pmod(col("doc_id"), lit(10))
     val freshText = concat(lit("fresh "), col("doc_id").cast("string"),
       lit(" block "), substring(md5(col("text")), 1, 16))
-    docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 5)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat(col("text"), lit(" recrawlnote")).as("text")))
-      .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 1)
-        .select((col("doc_id") + 200000).as("doc_id"), freshText.as("text")))
-      .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 1)
-        .select((col("doc_id") + 300000).as("doc_id"), freshText.as("text")))
+    def row(offset: Int, text: Column) =
+      struct((col("doc_id") + offset).as("doc_id"), text.as("text"))
+    docs.filter(r.isin(0, 1, 5))
+      .select(explode(
+        when(r === 1, array(row(200000, freshText), row(300000, freshText)))
+          .otherwise(array(row(100000,
+            when(r === 5, concat(col("text"), lit(" recrawlnote"))).otherwise(col("text"))))))
+        .as("d"))
+      .select("d.doc_id", "d.text")
   }
 
   /** One index/probe row per (band, doc): positional band key, the doc's
@@ -1341,24 +1345,34 @@ object Queries {
     * is never a min. Returns doc_b -> the smallest verified doc_a, for the
     * probe docs that have one. */
   private[graft] def firstVerifiedNearDups(probe: DataFrame, index: DataFrame,
-      below: Boolean = false): Map[Long, Long] = {
-    val bc = index.sparkSession.sparkContext.broadcast(
+      below: Boolean = false): Map[Long, Long] =
+    firstHitWalks(probe)(walk => walk(index, below))
+
+  /** [[firstVerifiedNearDups]] for several walks of one probe: `probe`'s
+    * band rows are collected and broadcast once, and `body` gets the walk
+    * of an index (with `below`) against them. d11's two legs share one
+    * collect and one broadcast. */
+  private[graft] def firstHitWalks[T](probe: DataFrame)(
+      body: ((DataFrame, Boolean) => Map[Long, Long]) => T): T = {
+    val bc = probe.sparkSession.sparkContext.broadcast(
       bandedRows(probe, _ => true).collect().groupMap(_._1)(_._2))
-    try bandedRows(index, band => bc.value.contains(band)).mapPartitions { rows =>
-      rows.toArray.groupMap(_._1)(_._2).iterator.flatMap { case (band, idx) =>
-        val is0 = band.startsWith("0:")
-        val walk = idx.sortBy(_.doc)
-        bc.value(band).iterator.flatMap { p =>
-          (if (below) walk.takeWhile(_.doc < p.doc) else walk).find { a =>
-            (is0 || (a.b0 != null && p.b0 != null && a.b0 != p.b0)) &&
-              a.hs != null && p.hs != null && {
-                val n = PairKernels.interSizeOf(a.hs, p.hs)
-                n >= 0 && 3L * n >= a.hs.numElements() + p.hs.numElements()
-              }
-          }.map(a => p.doc -> a.doc)
+    try body { (index, below) =>
+      bandedRows(index, band => bc.value.contains(band)).mapPartitions { rows =>
+        rows.toArray.groupMap(_._1)(_._2).iterator.flatMap { case (band, idx) =>
+          val is0 = band.startsWith("0:")
+          val walk = idx.sortBy(_.doc)
+          bc.value(band).iterator.flatMap { p =>
+            (if (below) walk.takeWhile(_.doc < p.doc) else walk).find { a =>
+              (is0 || (a.b0 != null && p.b0 != null && a.b0 != p.b0)) &&
+                a.hs != null && p.hs != null && {
+                  val n = PairKernels.interSizeOf(a.hs, p.hs)
+                  n >= 0 && 3L * n >= a.hs.numElements() + p.hs.numElements()
+                }
+            }.map(a => p.doc -> a.doc)
+          }
         }
-      }
-    }.collect().groupMapReduce(_._1)(_._2)(math.min)
+      }.collect().groupMapReduce(_._1)(_._2)(math.min)
+    }
     finally bc.destroy()
   }
 
@@ -1383,11 +1397,12 @@ object Queries {
   private[graft] def buildSignatureIndex(docs: DataFrame, table: String,
       path: String): Unit =
     bandedSigs(sigKeyed(docs))
-      // round 7: pre-partition by the bucket key (repartition and
-      // bucketBy share Murmur3 hash partitioning) so the signature
-      // kernel + sort + parquet encode run on all 8 bucket tasks rather
-      // than on the corpus scan's splits, and each bucket lands in ONE
-      // sorted file (q12 got the same treatment)
+      // pre-partition by the bucket key (repartition and bucketBy share
+      // Murmur3 hash partitioning) so each bucket lands in ONE sorted file
+      // (q12 got the same treatment) and the sort + parquet encode run on
+      // the 8 bucket tasks. The band key is the kernel's output, so the
+      // kernel runs before the exchange, on the corpus scan's splits (one
+      // task for a single-row-group table, which writes the whole shuffle)
       .repartition(8, col("band"))
       .write.mode("overwrite")
       .bucketBy(8, "band").sortBy("band")
@@ -1396,8 +1411,8 @@ object Queries {
   /** The incremental pass of d11: a recrawl delta's signature frame `dk`
     * (`sigKeyed` of (doc_id, text)) verified against the persisted
     * signature index — new<->old by walking the index, new<->new by the
-    * delta walking itself under `doc_a < doc_b`, both with
-    * [[firstVerifiedNearDups]]. Output: (doc_id, status in
+    * delta walking itself under `doc_a < doc_b`, both first-hit walks of
+    * one probe broadcast ([[firstHitWalks]]). Output: (doc_id, status in
     * {dup_old, dup_new, new}, cluster). `dk` feeds both walks' probe, the
     * within-delta walk's index and the classification base, so callers
     * pass it materialized (`localCheckpoint`, the d7 precedent; released
@@ -1406,8 +1421,8 @@ object Queries {
   private[graft] def incrementalDedup(spark: SparkSession, idxTable: String,
       dk: DataFrame): DataFrame = {
     val probe = bandedSigs(dk)
-    classifyDelta(dk, firstVerifiedNearDups(probe, spark.table(idxTable)),
-      firstVerifiedNearDups(probe, probe, below = true))
+    firstHitWalks(probe)(walk =>
+      classifyDelta(dk, walk(spark.table(idxTable), false), walk(probe, true)))
   }
 
   /** A recrawl delta's classification, ordered by doc_id: each doc of
@@ -1457,10 +1472,12 @@ object Queries {
       // engines), fresh documents (%10=1) and a second copy of each fresh
       // document (within-delta duplicates).
       // The index write and the delta's signature materialization are
-      // independent — overlap them (guide §2.6).
+      // independent — overlap them (guide §2.6), both over one documents
+      // frame (one schema inference).
+      val docs = t(spark, dir, "documents")
       val dk = inParallel(spark)(
-        buildSignatureIndex(t(spark, dir, "documents"), idxTable, s"$base/sig"),
-        sigKeyed(recrawlDelta(t(spark, dir, "documents"))).localCheckpoint(true))
+        buildSignatureIndex(docs, idxTable, s"$base/sig"),
+        sigKeyed(recrawlDelta(docs)).localCheckpoint(true))
       incrementalDedup(spark, idxTable, dk)
     },
     Some(s"""WITH delta AS (
@@ -1552,18 +1569,23 @@ object Queries {
       // own tag: d11 and x31 never share an index within one session
       val (sid, base) = sessionScratch(spark, "sigidx_x31")
       val idxTable = s"graft_index_$sid"
-      // index write and delta write are independent — overlap (guide §2.6)
+      // index write and delta write are independent — overlap (guide §2.6),
+      // both over one documents frame (one schema inference). The delta is
+      // derived once: the stream and the classification read it as
+      // written, with its known schema (no inference job)
+      val docs = t(spark, dir, "documents")
+      val delta = recrawlDelta(docs)
       val deltaDir = s"$base/delta"
       inParallel(spark)(
-        buildSignatureIndex(t(spark, dir, "documents"), idxTable, s"$base/sig"),
-        recrawlDelta(t(spark, dir, "documents"))
-          .write.mode("overwrite").parquet(deltaDir))
+        buildSignatureIndex(docs, idxTable, s"$base/sig"),
+        delta.write.mode("overwrite").parquet(deltaDir))
       val oldMatch = graft.spark.Streaming.incrementalDedupPairs(spark, idxTable,
-        deltaDir, "x31_" + java.lang.Long.toHexString(System.nanoTime()))
+        deltaDir, delta.schema, "x31_" + java.lang.Long.toHexString(System.nanoTime()))
       // base = docs with >=1 token (sigKeyed), as d11's and the oracle's
       // dkeyed base: an empty-text delta doc must not emit a 'new' row
       // that the oracle lacks
-      classifyDelta(sigKeyed(recrawlDelta(t(spark, dir, "documents"))), oldMatch, Map.empty)
+      classifyDelta(sigKeyed(spark.read.schema(delta.schema).parquet(deltaDir)),
+        oldMatch, Map.empty)
     },
     Some(s"""WITH delta AS (
             |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0

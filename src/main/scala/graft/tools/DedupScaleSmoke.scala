@@ -143,9 +143,9 @@ object DedupScaleSmoke {
     // incremental pass at each delta size. The claim under measurement:
     // what the incremental pass MOVES is proportional to the DELTA, not
     // the corpus — the index is walked where it is read (sequential scan,
-    // no exchange, never broadcast); the delta's band rows (once per leg:
-    // new<->old, new<->new) and the classification's match maps are
-    // broadcast and its sort shuffles delta-sized rows, so a 4x delta
+    // no exchange, never broadcast); the delta's band rows (once, shared by
+    // the new<->old and new<->new legs) and the classification's match
+    // maps are broadcast and its sort shuffles delta-sized rows, so a 4x delta
     // should broadcast and shuffle ~4x the bytes while the base corpus
     // never moves.
     sys.env.get("DELTAS").foreach { spec =>

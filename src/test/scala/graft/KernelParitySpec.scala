@@ -413,6 +413,45 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(repeated > 0 && largerOnly > 0 && self > 0, (repeated, largerOnly, self))
   }
 
+  test("one-scan recrawl delta == the four-way union of filtered scans (d11, x31)") {
+    val sp = spark
+    import sp.implicits._
+    // the reference: one filtered scan per delta kind
+    def union(docs: DataFrame): DataFrame = {
+      val freshText = concat(lit("fresh "), col("doc_id").cast("string"),
+        lit(" block "), substring(md5(col("text")), 1, 16))
+      docs.filter(pmod(col("doc_id"), lit(10)) === 0)
+        .select((col("doc_id") + 100000).as("doc_id"), col("text"))
+        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 5)
+          .select((col("doc_id") + 100000).as("doc_id"),
+            concat(col("text"), lit(" recrawlnote")).as("text")))
+        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 1)
+          .select((col("doc_id") + 200000).as("doc_id"), freshText.as("text")))
+        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 1)
+          .select((col("doc_id") + 300000).as("doc_id"), freshText.as("text")))
+    }
+    // every residue mod 10 on both signs, each with a null, an empty, a
+    // blank and a non-BMP text; and null doc_ids
+    val texts = Seq(null, "", "  ", "a b a", "ünï 𝔘 c")
+    val rows = (-30L to 30L).map(i => (Option(i), texts(((i % 5 + 5) % 5).toInt))) ++
+      Seq((None, "orphan"), (None, null))
+    val path = new java.io.File(tmp, "recrawl_docs").getPath
+    rows.toDF("doc_id", "text").write.mode("overwrite").parquet(path)
+    val docs = spark.read.parquet(path)
+    def sorted(df: DataFrame) = df.collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.getString(1))))
+      .sortBy(_.toString).toSeq
+    val got = Queries.recrawlDelta(docs)
+    val want = union(docs)
+    // residue 0: 7 ids in [-30, 30], residue 5: 6, residue 1: 6 twice
+    assert(sorted(want).size == 25 && sorted(want).exists(_._2.isEmpty), sorted(want))
+    assert(sorted(got) == sorted(want))
+    assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType))
+    // one scan of the input (the reference reads it four times)
+    def scans(df: DataFrame) = df.queryExecution.optimizedPlan.collectLeaves().size
+    assert(scans(got) == 1 && scans(want) == 4, (scans(got), scans(want)))
+  }
+
   test("BigDecimal.valueOf HALF_UP == Spark round(double, 6) (s5 distances)") {
     val sp = spark
     import sp.implicits._

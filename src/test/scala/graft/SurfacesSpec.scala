@@ -658,6 +658,28 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows > 0)
   }
 
+  test("stream calls reuse the JVM's generated classes: a second call compiles nothing") {
+    // each stream starts on a fresh child session; with artifact isolation
+    // on, each start has its own executor class loader, and Janino's cache
+    // (keyed by loader and code) recompiles every class on every call
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = "/root/testdata/sf0.001"
+    def compiles(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    def x22(name: String): Unit = assert(graft.spark.Streaming.attributedPurchases(
+      spark, s"$dir/events.parquet", name).count() > 0)
+    def x31(): Unit =
+      assert(graft.spark.Queries.queries("x31_stream_incremental")(spark, dir).collect().nonEmpty)
+    compiles(x22("t_codegen_first"))
+    assert(compiles(x22("t_codegen_second")) == 0, "x22's second call compiled")
+    compiles(x31())
+    assert(compiles(x31()) == 0, "x31's second call compiled")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
+  }
+
   test("stream runs delete the temp copy of a single-file source") {
     // the file source needs a directory: a single-file table is copied into
     // a stream_src* temp dir, which must not outlive the query
