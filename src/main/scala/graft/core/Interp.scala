@@ -1,5 +1,7 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets
+
 import scala.collection.immutable.TreeMap
 import scala.collection.mutable.ArrayBuffer
 import PObj._
@@ -48,6 +50,10 @@ object Interp {
     var operands: List[PObj] = Nil
     var mcStack: List[MCEntry] = Nil
     val nbuf = new Array[Double](6) // reusable numeric-operand buffer
+    /** `Tf`'s font per (resources dict, font name): the lookup is a pure
+      * function of both, and a stream selects the same few fonts over and
+      * over. Keyed by identity: the resources dicts are the document's. */
+    val fonts = new java.util.IdentityHashMap[Dict, java.util.HashMap[String, Option[FontInfo]]]
   }
 
   /** Interpret a page's content (by page object ref). */
@@ -217,21 +223,31 @@ object Interp {
     PNum(if (neg) -v else v)
   }
 
+  /** `len` bytes from `start` as chars 0-255, one char per byte. */
+  private def latin1(buf: Array[Byte], start: Int, len: Int): String =
+    new String(buf, start, len, StandardCharsets.ISO_8859_1)
+
   private def readName(cur: Cursor): AnyRef = {
     val start = cur.pos
     cur.pos += 1
-    val sb = new StringBuilder("/")
-    while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) {
-      sb.append(cur.peek.toChar); cur.pos += 1
-    }
-    if (cur.pos - start > 1) PName(sb.toString)
+    while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) cur.pos += 1
+    if (cur.pos - start > 1) PName(latin1(cur.buf, start, cur.pos - start))
     else { cur.pos = start; null }
   }
 
   /** Literal string in content streams (Interpret.hs:985-1012): octal up to
-    * 3 digits (extra octal digits dropped), unknown escape -> '?'. */
+    * 3 digits (extra octal digits dropped), unknown escape -> '?'. A
+    * literal with no escape and no nested parenthesis is its bytes. */
   private def readLiteral(cur: Cursor): AnyRef = {
     cur.pos += 1
+    val buf = cur.buf
+    var end = cur.pos
+    while (end < buf.length && buf(end) != ')' && buf(end) != '(' && buf(end) != '\\') end += 1
+    if (end < buf.length && buf(end) == ')') {
+      val s = latin1(buf, cur.pos, end - cur.pos)
+      cur.pos = end + 1
+      return PText(s)
+    }
     val sb = new StringBuilder
     var depth = 1
     while (true) {
@@ -311,29 +327,45 @@ object Interp {
     null
   }
 
-  /** Known operator names interned so hot streams don't allocate a string
-    * per operator token. */
-  private val knownOps: java.util.HashMap[String, String] = {
-    val m = new java.util.HashMap[String, String]
-    for (op <- List("q", "Q", "cm", "BT", "ET", "Tf", "Tc", "Tw", "Tz", "TL", "Ts",
-      "Tr", "Td", "TD", "Tm", "T*", "Tj", "TJ", "Do", "m", "l", "c", "v", "y",
-      "re", "h", "n", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "W", "W*",
-      "BDC", "BMC", "EMC", "BI", "ID", "EI", "gs", "cs", "CS", "rg", "RG", "g",
-      "G", "k", "K", "d", "i", "j", "J", "M", "ri", "sh", "w", "SC", "SCN",
-      "sc", "scn", "d0", "d1", "MP", "DP", "BX", "EX", "true", "false", "null"))
-      m.put(op, op)
-    m
+  /** The operators `execOp` knows, all of 1-3 bytes, open-addressed by
+    * their bytes packed into an Int (first byte lowest; operator bytes are
+    * never 0, so the packing is one-to-one): a known operator comes back
+    * as its interned name without building a String per token. */
+  private val opKeys = new Array[Int](256)
+  private val opNames = new Array[String](256)
+  private def opSlot(key: Int): Int = (key * 0x9E3779B1) >>> 24
+  for (op <- List("q", "Q", "cm", "BT", "ET", "Tf", "Tc", "Tw", "Tz", "TL", "Ts",
+    "Tr", "Td", "TD", "Tm", "T*", "Tj", "TJ", "Do", "m", "l", "c", "v", "y",
+    "re", "h", "n", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "W", "W*",
+    "BDC", "BMC", "EMC", "BI", "ID", "EI", "gs", "cs", "CS", "rg", "RG", "g",
+    "G", "k", "K", "d", "i", "j", "J", "M", "ri", "sh", "w", "SC", "SCN",
+    "sc", "scn", "d0", "d1", "MP", "DP", "BX", "EX")) {
+    val key = op.zipWithIndex.map { case (c, i) => c << (8 * i) }.sum
+    var slot = opSlot(key)
+    while (opNames(slot) != null) slot = (slot + 1) & 255
+    opKeys(slot) = key
+    opNames(slot) = op
   }
+
+  private def knownOp(buf: Array[Byte], start: Int, len: Int): String =
+    if (len > 3) null
+    else {
+      var key = 0
+      var i = 0
+      while (i < len) { key |= (buf(start + i) & 0xff) << (8 * i); i += 1 }
+      var slot = opSlot(key)
+      while (opNames(slot) != null && opKeys(slot) != key) slot = (slot + 1) & 255
+      opNames(slot)
+    }
 
   private def readOperator(cur: Cursor): AnyRef = {
     val start = cur.pos
-    val sb = new StringBuilder
-    while (!cur.atEnd && isOpChar(cur.peek)) { sb.append(cur.peek.toChar); cur.pos += 1 }
-    if (sb.isEmpty) { cur.pos = start; null }
+    while (!cur.atEnd && isOpChar(cur.peek)) cur.pos += 1
+    val len = cur.pos - start
+    if (len == 0) null
     else {
-      val raw = sb.toString
-      val interned = knownOps.get(raw)
-      if (interned != null) interned else raw
+      val known = knownOp(cur.buf, start, len)
+      if (known != null) known else latin1(cur.buf, start, len)
     }
   }
 
@@ -568,8 +600,9 @@ object Interp {
   // ---------- text ----------
 
   private def resolveFont(fontName: String, size: Double, st: IState): Unit = {
-    val fi = st.fontOverrides.get(fontName).orElse(
-      lookupFontResource(st.doc, st.res, fontName))
+    val byName = st.fonts.computeIfAbsent(st.res, _ => new java.util.HashMap[String, Option[FontInfo]])
+    val fi = byName.computeIfAbsent(fontName, name =>
+      st.fontOverrides.get(name).orElse(lookupFontResource(st.doc, st.res, name)))
     st.gs.fontRes = Some(fontName)
     st.gs.font = fi
     st.gs.fontSize = size
@@ -664,7 +697,8 @@ object Interp {
         var k = 0
         while (k < codes.length) {
           val code = codes(k)
-          text.append(codeToUnicode(fi, code))
+          val s = codeToUnicode(fi, code)
+          if (s.length == 1) text.append(s.charAt(0)) else text.append(s)
           var tx = 0.0
           var ty = 0.0
           if (wmodeV) {
@@ -744,8 +778,20 @@ object Interp {
 
   private[graft] def jisBytesToCodesArr(bs: Array[Int]): Array[Int] = pairs2Arr(bs)
 
-  /** ToUnicode first, then per-encoding fallback (Interpret.hs:701-768). */
+  /** [[codeToUnicodeUncached]] through the font's table for codes below
+    * 65536 (1- and 2-byte codes). */
   def codeToUnicode(fi: FontInfo, code: Int): String =
+    if (code >= 0 && code < 0x10000) {
+      val pages = fi.codeText
+      var page = pages(code >>> 8)
+      if (page == null) { page = new Array[String](256); pages(code >>> 8) = page }
+      var s = page(code & 0xff)
+      if (s == null) { s = codeToUnicodeUncached(fi, code); page(code & 0xff) = s }
+      s
+    } else codeToUnicodeUncached(fi, code)
+
+  /** ToUnicode first, then per-encoding fallback (Interpret.hs:701-768). */
+  def codeToUnicodeUncached(fi: FontInfo, code: Int): String =
     fi.toUnicode.get(code) match {
       case Some(s) => s
       case None => fi.encoding match {

@@ -1,6 +1,8 @@
 package graft.core
 
-import Util.{firstChar, lastChar, medianOf, strip, stripEnd, stripStart}
+import scala.collection.mutable
+
+import Util.{firstChar, lastChar, medianOf, strip, stripEnd}
 import PageItem._
 
 /** Line and paragraph reconstruction from interpreted page items.
@@ -205,7 +207,11 @@ object Layout {
 
   def dominantWMode(glyphs: List[Glyph]): Int = {
     if (glyphs.isEmpty) 0
-    else {
+    else if (glyphs.forall(g => g.wmode == 0 || g.wmode == 1)) {
+      // the two wmodes fonts have: 1 wins a tie, as the later key
+      val vertical = glyphs.count(_.wmode == 1)
+      if (vertical >= glyphs.length - vertical) 1 else 0
+    } else {
       // maximumBy over ascending-key toList: LAST maximal element wins
       // (Haskell maximumBy keeps the later element on ties)
       val counts = glyphs.groupBy(_.wmode).view.mapValues(_.size).toList.sortBy(_._1)
@@ -214,10 +220,23 @@ object Layout {
     }
   }
 
+  /** Widths of the x span (glyph starts and ends) and of the y span, at
+    * least 1 each. min/max compare as `java.lang.Double.compare` does (NaN
+    * above everything, -0.0 below 0.0), as `List.max`/`min` under the
+    * default Ordering[Double] do. */
   def pageExtents(glyphs: List[Glyph]): (Double, Double) = {
-    val xs = glyphs.flatMap(g => List(g.x, g.x + g.width))
-    val ys = glyphs.map(_.y)
-    (math.max(1, xs.max - xs.min), math.max(1, ys.max - ys.min))
+    def lo(a: Double, b: Double) = if (java.lang.Double.compare(a, b) <= 0) a else b
+    def hi(a: Double, b: Double) = if (java.lang.Double.compare(a, b) >= 0) a else b
+    var xMin, xMax = glyphs.head.x
+    var yMin, yMax = glyphs.head.y
+    for (g <- glyphs) {
+      val end = g.x + g.width
+      xMin = lo(lo(xMin, g.x), end)
+      xMax = hi(hi(xMax, g.x), end)
+      yMin = lo(yMin, g.y)
+      yMax = hi(yMax, g.y)
+    }
+    (math.max(1, xMax - xMin), math.max(1, yMax - yMin))
   }
 
   def baselineOf(wmode: Int, g: Glyph): Double = if (wmode == 1) g.x else g.y
@@ -383,63 +402,50 @@ object Layout {
   private case object Bottom extends Band
   private case object Middle extends Band
 
-  /** stripHeadersFooters (Layout.hs:657-769). */
+  /** stripHeadersFooters (Layout.hs:657-769). Each non-empty page's extent
+    * and each line's band are computed once, and only band lines are
+    * normalized, once each: a middle-band line is never removed, so its
+    * text is never read. */
   def stripHeadersFooters(pageCount: Int, pagesLines: List[List[Line]]): List[List[Line]] = {
     val threshold = {
       val raw = math.ceil(0.2 * pageCount).toInt
       math.max(3, math.min(raw, 5))
     }
-    val pageInfos = pagesLines.filter(_.nonEmpty).map(ls => (ls, pageBaselineExtent(ls)))
-
-    def countBandCores(band: Band): Map[String, Int] = {
-      var m = Map.empty[String, Int]
-      for ((ls, extent) <- pageInfos; l <- ls if lineBand(extent, l) == band) {
-        val core = headerFooterCore(l.text)
-        m = m.updated(core, m.getOrElse(core, 0) + 1)
-      }
-      m
-    }
-    def repeatedCores(counts: Map[String, Int]): Set[String] =
-      if (pageCount >= 3) counts.collect { case (core, c) if c >= threshold => core }.toSet
-      else Set.empty
-
-    val repTop = repeatedCores(countBandCores(Top))
-    val repBottom = repeatedCores(countBandCores(Bottom))
-
-    def isRemoved(extent: (Double, Double), l: Line): Boolean = {
-      val band = lineBand(extent, l)
-      val norm = normalizeHeaderFooterText(l.text)
-      shouldRemove(band, norm, pageCount, repTop, repBottom)
+    val pages = pagesLines.map(ls => if (ls.isEmpty) null else new BandLines(ls))
+    val topCounts = new mutable.HashMap[String, Int]
+    val bottomCounts = new mutable.HashMap[String, Int]
+    def counts(band: Band) = if (band == Top) topCounts else bottomCounts
+    for (p <- pages if p != null; i <- p.lines.indices if p.bands(i) != Middle) {
+      val c = counts(p.bands(i))
+      c.update(p.cores(i), c.getOrElse(p.cores(i), 0) + 1)
     }
 
-    pagesLines.map { ls =>
-      if (ls.isEmpty) ls
-      else {
-        val extent = pageBaselineExtent(ls)
-        val flags = ls.map(isRemoved(extent, _))
-        if (ls.length <= 2) {
-          if (flags.contains(true)) ls.zip(flags).collect { case (l, false) => l } else ls
-        } else ls.zip(flags).collect { case (l, false) => l }
+    def isRemoved(p: BandLines, i: Int): Boolean =
+      p.bands(i) != Middle && {
+        if (isBarePageNumber(p.norms(i))) pageCount >= 2
+        else pageCount >= 3 && counts(p.bands(i)).getOrElse(p.cores(i), 0) >= threshold
       }
+
+    pagesLines.zip(pages).map { case (ls, p) =>
+      if (p == null || !p.lines.indices.exists(isRemoved(p, _))) ls
+      else p.lines.indices.collect { case i if !isRemoved(p, i) => p.lines(i) }.toList
     }
   }
 
-  private def shouldRemove(band: Band, norm: String, pageCount: Int,
-      repTop: Set[String], repBottom: Set[String]): Boolean = {
-    if (band == Middle) false
-    else if (isBarePageNumber(norm)) pageCount >= 2
-    else {
-      val core = norm.filter(_ != '#')
-      val repeated = band match {
-        case Top => repTop
-        case Bottom => repBottom
-        case Middle => Set.empty[String]
-      }
-      repeated.contains(core)
+  /** One non-empty page's lines with each line's band and, for a band
+    * line, its normalized text and that text without '#' (its core);
+    * both are null for a middle-band line. */
+  private final class BandLines(ls: List[Line]) {
+    val lines: Array[Line] = ls.toArray
+    val bands: Array[Band] = {
+      val extent = pageBaselineExtent(ls)
+      lines.map(lineBand(extent, _))
     }
+    val norms: Array[String] = Array.tabulate(lines.length) { i =>
+      if (bands(i) == Middle) null else normalizeHeaderFooterText(lines(i).text)
+    }
+    val cores: Array[String] = norms.map(n => if (n == null) null else n.filter(_ != '#'))
   }
-
-  def headerFooterCore(t: String): String = normalizeHeaderFooterText(t).filter(_ != '#')
 
   private def lineBand(extent: (Double, Double), l: Line): Band = {
     val (lo, hi) = extent
@@ -456,35 +462,46 @@ object Layout {
     (baselines.min, baselines.max)
   }
 
-  def normalizeHeaderFooterText(t: String): String =
-    replaceRomanNumerals(replaceAsciiDigits(t.filterNot(Util.isHsSpace)))
-
-  private def replaceAsciiDigits(t: String): String = {
-    val sb = new StringBuilder
-    var inRun = false
-    for (c <- t) {
-      if (c >= '0' && c <= '9') {
-        if (!inRun) sb.append('#')
-        inRun = true
-      } else { sb.append(c); inRun = false }
+  /** Drops hs-spaces, then turns each ASCII digit run into one '#', then
+    * each run of 1-7 roman-numeral letters into one '#' (a longer run keeps
+    * all but its last 7 letters before the '#'). One pass: digits and '#'
+    * are not roman letters, so the runs are those of the space-free text. */
+  def normalizeHeaderFooterText(t: String): String = {
+    val sb = new java.lang.StringBuilder(t.length)
+    var inDigits = false
+    var romanStart = -1 // sb index of the current roman run, -1 outside one
+    def endRoman(): Unit =
+      if (romanStart >= 0) {
+        sb.setLength(math.max(romanStart, sb.length - 7))
+        sb.append('#')
+        romanStart = -1
+      }
+    var i = 0
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (!Util.isHsSpace(c)) {
+        if (c >= '0' && c <= '9') {
+          endRoman()
+          if (!inDigits) sb.append('#')
+          inDigits = true
+        } else {
+          inDigits = false
+          if (isRomanDigit(c)) {
+            if (romanStart < 0) romanStart = sb.length
+            sb.append(c)
+          } else {
+            endRoman()
+            sb.append(c)
+          }
+        }
+      }
+      i += 1
     }
+    endRoman()
     sb.toString
   }
 
   private def isRomanDigit(c: Char): Boolean = "ivxlcdmIVXLCDM".indexOf(c) >= 0
-
-  private def replaceRomanNumerals(t: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < t.length) {
-      var j = i
-      while (j < t.length && isRomanDigit(t.charAt(j))) j += 1
-      val tokLen = j - i
-      if (tokLen > 0 && tokLen <= 7) { sb.append('#'); i = j }
-      else { sb.append(t.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
 
   def isBarePageNumber(t: String): Boolean =
     t.nonEmpty && t.contains('#') && t.forall(c => c == '#' || c == '-' || c == '/' || c == '.')
@@ -585,16 +602,28 @@ object Layout {
       case _ => false
     }
 
+  /** A lettered ("a.") or 1-2 digit numbered ("12.") item start, after
+    * leading hs-spaces; hs-spaces may sit before the dot. */
   def listMarkerStart(l: Line): Boolean = {
-    val t = stripStart(l.text)
-    def lettered: Boolean = t.headOption.exists(c => c >= 'a' && c <= 'z') &&
-      stripStart(t.drop(1)).headOption.contains('.')
-    def numbered: Boolean = t.headOption.exists(_.isDigit) && {
-      val ds = t.takeWhile(_.isDigit)
-      ds.nonEmpty && ds.length <= 2 &&
-        stripStart(t.drop(ds.length)).headOption.contains('.')
+    val t = l.text
+    var i = 0
+    while (i < t.length && Util.isHsSpace(t.charAt(i))) i += 1
+    if (i == t.length) false
+    else {
+      val c = t.charAt(i)
+      var j = i + 1
+      if (c >= 'a' && c <= 'z') dotAfterSpaces(t, j)
+      else if (c.isDigit) {
+        while (j < t.length && t.charAt(j).isDigit) j += 1
+        j - i <= 2 && dotAfterSpaces(t, j)
+      } else false
     }
-    lettered || numbered
+  }
+
+  private def dotAfterSpaces(t: String, from: Int): Boolean = {
+    var k = from
+    while (k < t.length && Util.isHsSpace(t.charAt(k))) k += 1
+    k < t.length && t.charAt(k) == '.'
   }
 
   private def hangWrappedContinuation(prev: Line, cur: Line): Boolean =

@@ -7,9 +7,12 @@ import scala.collection.immutable.TreeMap
   * Re-expression of the reference's dynamic PDF value ADT
   * (/root/reference/src/PDF/Definition.hs:29-42). Dictionaries use ordered
   * maps so that every iteration is deterministic (the reference's Data.Map
-  * iterates in ascending key order).
+  * iterates in ascending key order). An abstract class, not a trait: the
+  * content-stream tokenizer tests every token against PObj, and a class
+  * test is one compare where an interface test searches the tested
+  * class's secondary supertypes.
   */
-sealed trait PObj extends Product with Serializable
+sealed abstract class PObj extends Product with Serializable
 object PObj {
   final case class PDict(d: TreeMap[String, PObj]) extends PObj
   /** `rawBytes`: the pre-decoding string bytes, set by the lexer when the
@@ -104,13 +107,23 @@ final case class FontInfo(
     defaultWidth: Double,
     isType0: Boolean) {
 
+  /** `Interp.codeToUnicode` of each code below 65536, in 256-code pages
+    * allocated and filled on first use. A memo of a pure function of the
+    * fields, so not part of equality; fonts are memoized per document, so
+    * one table serves a document. */
+  private[core] lazy val codeText: Array[Array[String]] = new Array[Array[String]](256)
+
+  /** `simpleWidths` with `defaultWidth` in place of a missing entry. */
+  private lazy val simpleWidthArr: Array[Double] =
+    simpleWidths.iterator.map(_.getOrElse(defaultWidth)).toArray
+
   /** Horizontal width in glyph units (DocumentStructure.hs:962, 989). */
   def width(code: Int): Double =
     if (isType0) cidWidths.getOrElse(code, defaultWidth)
     else {
       val idx = code - simpleFirstChar
-      if (idx >= 0 && idx < simpleWidths.length) simpleWidths(idx).getOrElse(defaultWidth)
-      else defaultWidth
+      val ws = simpleWidthArr
+      if (idx >= 0 && idx < ws.length) ws(idx) else defaultWidth
     }
 
   /** Vertical displacement w1 in glyph units (DocumentStructure.hs:967, 990). */

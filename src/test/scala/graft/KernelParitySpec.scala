@@ -711,4 +711,179 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       e.isInstanceOf[org.apache.spark.SparkException] && e.getMessage.contains("cancelled")),
       caller.getSuppressed.map(_.toString).mkString("\n"))
   }
+
+  // ---- extraction kernel: header/footer strip and the per-font code table ----
+
+  /** The header/footer strip as it stood before it normalized band lines
+    * only (Layout.hs:657-769, quirks included): every line is normalized,
+    * band lines twice. The reference expression the one-pass strip is
+    * pinned against. */
+  private object LegacyHeaderFooter {
+    sealed trait Band
+    case object Top extends Band
+    case object Bottom extends Band
+    case object Middle extends Band
+
+    def strip(pageCount: Int, pagesLines: List[List[graft.core.Line]]): List[List[graft.core.Line]] = {
+      val threshold = math.max(3, math.min(math.ceil(0.2 * pageCount).toInt, 5))
+      val pageInfos = pagesLines.filter(_.nonEmpty).map(ls => (ls, graft.core.Layout.pageBaselineExtent(ls)))
+      def countBandCores(band: Band): Map[String, Int] = {
+        var m = Map.empty[String, Int]
+        for ((ls, extent) <- pageInfos; l <- ls if lineBand(extent, l) == band) {
+          val core = normalize(l.text).filter(_ != '#')
+          m = m.updated(core, m.getOrElse(core, 0) + 1)
+        }
+        m
+      }
+      def repeatedCores(counts: Map[String, Int]): Set[String] =
+        if (pageCount >= 3) counts.collect { case (core, c) if c >= threshold => core }.toSet
+        else Set.empty
+      val repTop = repeatedCores(countBandCores(Top))
+      val repBottom = repeatedCores(countBandCores(Bottom))
+      def isRemoved(extent: (Double, Double), l: graft.core.Line): Boolean = {
+        val band = lineBand(extent, l)
+        val norm = normalize(l.text)
+        if (band == Middle) false
+        else if (graft.core.Layout.isBarePageNumber(norm)) pageCount >= 2
+        else (if (band == Top) repTop else repBottom).contains(norm.filter(_ != '#'))
+      }
+      pagesLines.map { ls =>
+        if (ls.isEmpty) ls
+        else {
+          val extent = graft.core.Layout.pageBaselineExtent(ls)
+          val flags = ls.map(isRemoved(extent, _))
+          if (ls.length <= 2) {
+            if (flags.contains(true)) ls.zip(flags).collect { case (l, false) => l } else ls
+          } else ls.zip(flags).collect { case (l, false) => l }
+        }
+      }
+    }
+
+    private def lineBand(extent: (Double, Double), l: graft.core.Line): Band = {
+      val (lo, hi) = extent
+      val span = hi - lo
+      if (span <= 0) Middle
+      else if (l.baseline >= hi - 0.15 * span) Top
+      else if (l.baseline <= lo + 0.15 * span) Bottom
+      else Middle
+    }
+
+    def normalize(t: String): String = {
+      val noSpace = t.filterNot(graft.core.Util.isHsSpace)
+      val digits = new StringBuilder
+      var inRun = false
+      for (c <- noSpace) {
+        if (c >= '0' && c <= '9') {
+          if (!inRun) digits.append('#')
+          inRun = true
+        } else { digits.append(c); inRun = false }
+      }
+      val d = digits.toString
+      val out = new StringBuilder
+      var i = 0
+      while (i < d.length) {
+        var j = i
+        while (j < d.length && "ivxlcdmIVXLCDM".indexOf(d.charAt(j)) >= 0) j += 1
+        if (j - i > 0 && j - i <= 7) { out.append('#'); i = j }
+        else { out.append(d.charAt(i)); i += 1 }
+      }
+      out.toString
+    }
+  }
+
+  /** Header/footer-shaped text: page numbers (arabic, roman, "- 4 -",
+    * "3/10"), words made of roman letters, '#', running heads, with the
+    * separators drawn from hs-space variants. */
+  private def headerFooterText(rnd: scala.util.Random): String = {
+    val tokens = Vector("civil", "mix", "xiv", "MMXXIV", "mmmmmmmmm", "viiiiiiiii", "Chapter", "Page",
+      "Running Header", "Body text", "12", "2024", "1 2", "3", "-", "/", ".", "#", "# 3", "iv.",
+      "i", "Dm", "x7y", "第3章", "𝐀", "")
+    val seps = Vector("", " ", "  ", " ", "　", "\t", " ")
+    (0 until 1 + rnd.nextInt(3)).map(_ => seps(rnd.nextInt(seps.length)) +
+      tokens(rnd.nextInt(tokens.length))).mkString + seps(rnd.nextInt(seps.length))
+  }
+
+  test("one-pass header/footer normalization == the three-pass reference") {
+    val rnd = new scala.util.Random(17)
+    val alphabet = "ivxlcdmIVXLCDM0123456789#-/.  　\tab第𝐀"
+    val texts = Seq("", " ", "page xiv", "iiiiiiii", "i i i i i i i i", "1 2 3", "x1x", "#12#") ++
+      (1 to 3000).map(_ => headerFooterText(rnd)) ++
+      (1 to 3000).map(_ => Seq.fill(rnd.nextInt(14))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    for (t <- texts)
+      assert(graft.core.Layout.normalizeHeaderFooterText(t) == LegacyHeaderFooter.normalize(t), t)
+  }
+
+  test("band-lines-once header/footer strip == the normalize-every-line reference") {
+    val rnd = new scala.util.Random(19)
+    def line(baseline: Double, text: String) =
+      graft.core.Line(baseline, 72, 300, 10, 72, 0, text, Nil, lastSuper = false)
+    // a few running heads and foots repeat across pages; body lines vary
+    val heads = Vector.fill(4)(headerFooterText(rnd))
+    def page(kind: Int): List[graft.core.Line] = kind match {
+      case 0 => Nil
+      case 1 => List(line(rnd.nextInt(800).toDouble, headerFooterText(rnd)))
+      case 2 => List(line(700, heads(rnd.nextInt(heads.length))), line(100, headerFooterText(rnd)))
+      case _ =>
+        val (lo, hi) = (100.0, 700.0)
+        val span = hi - lo
+        val body = List.fill(1 + rnd.nextInt(6))(
+          line(lo + 1 + rnd.nextInt(598), if (rnd.nextInt(4) == 0) heads(rnd.nextInt(heads.length)) else headerFooterText(rnd)))
+        // lines exactly on each 15% band edge, and the extent's own ends
+        val edges = List(line(hi - 0.15 * span, heads(rnd.nextInt(heads.length))),
+          line(lo + 0.15 * span, headerFooterText(rnd)))
+        rnd.shuffle(line(hi, heads(rnd.nextInt(heads.length))) :: line(lo, heads(rnd.nextInt(heads.length))) ::
+          (body ++ edges.filter(_ => rnd.nextBoolean())))
+    }
+    var removedSome = 0
+    for (_ <- 1 to 3000) {
+      val nPages = Seq(1, 2, 3, 6)(rnd.nextInt(4))
+      val pages = List.fill(nPages)(page(rnd.nextInt(5)))
+      // applyHeaderFooterStrip counts fallback pages too: pageCount >= pages
+      val pageCount = nPages + (if (rnd.nextInt(4) == 0) rnd.nextInt(3) else 0)
+      val got = graft.core.Layout.stripHeadersFooters(pageCount, pages)
+      assert(got == LegacyHeaderFooter.strip(pageCount, pages), s"pageCount=$pageCount pages=$pages")
+      if (got != pages) removedSome += 1
+    }
+    assert(removedSome > 300, s"only $removedSome of 3000 cases removed a line")
+  }
+
+  test("per-font code table == the uncached lookup for every encoding") {
+    import graft.core.{Encoding, FontInfo, Interp}
+    import scala.collection.immutable.TreeMap
+    val diff = Encoding.DiffEncoding(TreeMap(65 -> "/A", 66 -> "/bullet", 67 -> "/uni263A", 68 -> "/uniZZ",
+      69 -> "/nosuchglyph", 300 -> "/B", 0x8140 -> "/circle"))
+    val encodings = Seq(diff, Encoding.CIDmap("Adobe-Japan1"), Encoding.CIDmap("Adobe-GB1"),
+      Encoding.WithCharSet("ZapfDingbats"), Encoding.WithCharSet("Symbol"), Encoding.SJISmap,
+      Encoding.UnicodeMap, Encoding.JISmap, Encoding.NullMap)
+    val toUnicodes = Seq(Map.empty[Int, String],
+      Map(65 -> "Z", 200 -> "fi", 0x3042 -> "あ", 0x10000 -> "𐀀", 0x8140 -> "　"))
+    val codes = (0 to 300) ++ Seq(0x3021, 0x3042, 0x8140, 0x889F, 0xE040, 0xFFFF, 0x10000, 0x1F600)
+    for (enc <- encodings; tuc <- toUnicodes; bpc <- Seq(1, 2)) {
+      val fi = FontInfo(enc, tuc, 0, Vector.empty, Map.empty, Map.empty, FontInfo.DefaultVerticalW1,
+        0, bpc, 0, isType0 = bpc == 2)
+      for (round <- 1 to 2; code <- codes)
+        assert(Interp.codeToUnicode(fi, code) == Interp.codeToUnicodeUncached(fi, code), s"$enc $tuc $bpc $code")
+      // the table serves the second lookup, and is no part of equality
+      assert(codes.filter(_ < 0x10000).forall(c => Interp.codeToUnicode(fi, c) eq Interp.codeToUnicode(fi, c)))
+      assert(fi == fi.copy() && fi.hashCode == fi.copy().hashCode)
+    }
+  }
+
+  test("loop page extents and dominant wmode == the collection expressions") {
+    import graft.core.{Glyph, Layout}
+    val rnd = new scala.util.Random(23)
+    val odd = Vector(Double.NaN, -0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity, -5.0, 1e300)
+    def num(): Double = if (rnd.nextInt(8) == 0) odd(rnd.nextInt(odd.length)) else rnd.nextInt(900) - 50.0
+    def same(a: Double, b: Double) = java.lang.Double.compare(a, b) == 0
+    for (_ <- 1 to 5000) {
+      val wmodes = if (rnd.nextInt(10) == 0) Vector(0, 1, 2) else Vector(0, 1)
+      val gs = List.fill(1 + rnd.nextInt(8))(Glyph("a", num(), num(), num(), 10, "/F", wmodes(rnd.nextInt(wmodes.length)), None))
+      val xs = gs.flatMap(g => List(g.x, g.x + g.width))
+      val ys = gs.map(_.y)
+      val (w, h) = Layout.pageExtents(gs)
+      assert(same(w, math.max(1, xs.max - xs.min)) && same(h, math.max(1, ys.max - ys.min)), gs)
+      val counts = gs.groupBy(_.wmode).view.mapValues(_.size).toList.sortBy(_._1)
+      assert(Layout.dominantWMode(gs) == counts.filter(_._2 == counts.map(_._2).max).last._1, gs)
+    }
+  }
 }

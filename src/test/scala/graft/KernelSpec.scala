@@ -148,6 +148,21 @@ class KernelSpec extends AnyFunSuite {
     assert(!Layout.isBarePageNumber(Layout.normalizeHeaderFooterText("Chapter 3")))
   }
 
+  test("listMarkerStart: lettered, numbered, 3-digit and hs-space-led lines") {
+    def marker(t: String) = Layout.listMarkerStart(Line(0, 0, 0, 10, 0, 0, t, Nil, lastSuper = false))
+    // lettered: one a-z letter, then a dot after optional hs-spaces
+    assert(marker("a. item") && marker("b .x") && marker("z."))
+    assert(!marker("A. item") && !marker("ab. item") && !marker("a item"))
+    // numbered: one or two digits (any Unicode digit), then the dot
+    assert(marker("1. item") && marker("12 . item") && marker("\uff11\uff12. item"))
+    assert(!marker("7") && !marker("1x. item"))
+    // a 3-digit number is no list marker
+    assert(!marker("123. item") && !marker("100."))
+    // leading hs-spaces (ASCII, ideographic, no-break) are skipped
+    assert(marker("  7. item") && marker("\u3000 b. x") && marker("\u00a0\t12.x"))
+    assert(!marker("") && !marker("   ") && !marker("\u3000"))
+  }
+
   test("endsWithTerminal unwinds closing chars") {
     assert(Layout.endsWithTerminal("done!"))
     assert(Layout.endsWithTerminal("「終わり。」"))
