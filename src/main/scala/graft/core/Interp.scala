@@ -230,8 +230,11 @@ object Interp {
   private def readName(cur: Cursor): AnyRef = {
     val start = cur.pos
     cur.pos += 1
-    while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) cur.pos += 1
-    if (cur.pos - start > 1) PName(latin1(cur.buf, start, cur.pos - start))
+    val sb = new StringBuilder("/")
+    while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) {
+      sb.append(cur.peek.toChar); cur.pos += 1
+    }
+    if (cur.pos - start > 1) PName(sb.toString)
     else { cur.pos = start; null }
   }
 
@@ -327,45 +330,28 @@ object Interp {
     null
   }
 
-  /** The operators `execOp` knows, all of 1-3 bytes, open-addressed by
-    * their bytes packed into an Int (first byte lowest; operator bytes are
-    * never 0, so the packing is one-to-one): a known operator comes back
-    * as its interned name without building a String per token. */
-  private val opKeys = new Array[Int](256)
-  private val opNames = new Array[String](256)
-  private def opSlot(key: Int): Int = (key * 0x9E3779B1) >>> 24
-  for (op <- List("q", "Q", "cm", "BT", "ET", "Tf", "Tc", "Tw", "Tz", "TL", "Ts",
-    "Tr", "Td", "TD", "Tm", "T*", "Tj", "TJ", "Do", "m", "l", "c", "v", "y",
-    "re", "h", "n", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "W", "W*",
-    "BDC", "BMC", "EMC", "BI", "ID", "EI", "gs", "cs", "CS", "rg", "RG", "g",
-    "G", "k", "K", "d", "i", "j", "J", "M", "ri", "sh", "w", "SC", "SCN",
-    "sc", "scn", "d0", "d1", "MP", "DP", "BX", "EX")) {
-    val key = op.zipWithIndex.map { case (c, i) => c << (8 * i) }.sum
-    var slot = opSlot(key)
-    while (opNames(slot) != null) slot = (slot + 1) & 255
-    opKeys(slot) = key
-    opNames(slot) = op
+  /** Known operator names interned so hot streams don't allocate a string
+    * per operator token. */
+  private val knownOps: java.util.HashMap[String, String] = {
+    val m = new java.util.HashMap[String, String]
+    for (op <- List("q", "Q", "cm", "BT", "ET", "Tf", "Tc", "Tw", "Tz", "TL", "Ts",
+      "Tr", "Td", "TD", "Tm", "T*", "Tj", "TJ", "Do", "m", "l", "c", "v", "y",
+      "re", "h", "n", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "W", "W*",
+      "BDC", "BMC", "EMC", "BI", "ID", "EI", "gs", "cs", "CS", "rg", "RG", "g",
+      "G", "k", "K", "d", "i", "j", "J", "M", "ri", "sh", "w", "SC", "SCN",
+      "sc", "scn", "d0", "d1", "MP", "DP", "BX", "EX", "true", "false", "null"))
+      m.put(op, op)
+    m
   }
-
-  private def knownOp(buf: Array[Byte], start: Int, len: Int): String =
-    if (len > 3) null
-    else {
-      var key = 0
-      var i = 0
-      while (i < len) { key |= (buf(start + i) & 0xff) << (8 * i); i += 1 }
-      var slot = opSlot(key)
-      while (opNames(slot) != null && opKeys(slot) != key) slot = (slot + 1) & 255
-      opNames(slot)
-    }
 
   private def readOperator(cur: Cursor): AnyRef = {
     val start = cur.pos
     while (!cur.atEnd && isOpChar(cur.peek)) cur.pos += 1
-    val len = cur.pos - start
-    if (len == 0) null
+    if (cur.pos == start) null
     else {
-      val known = knownOp(cur.buf, start, len)
-      if (known != null) known else latin1(cur.buf, start, len)
+      val raw = latin1(cur.buf, start, cur.pos - start)
+      val interned = knownOps.get(raw)
+      if (interned != null) interned else raw
     }
   }
 

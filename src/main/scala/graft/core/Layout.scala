@@ -205,38 +205,17 @@ object Layout {
     }
   }
 
+  /** The more common wmode, 1 on a tie (Haskell maximumBy over the
+    * ascending-key counts keeps the later key). Fonts have wmode 0 or 1. */
   def dominantWMode(glyphs: List[Glyph]): Int = {
-    if (glyphs.isEmpty) 0
-    else if (glyphs.forall(g => g.wmode == 0 || g.wmode == 1)) {
-      // the two wmodes fonts have: 1 wins a tie, as the later key
-      val vertical = glyphs.count(_.wmode == 1)
-      if (vertical >= glyphs.length - vertical) 1 else 0
-    } else {
-      // maximumBy over ascending-key toList: LAST maximal element wins
-      // (Haskell maximumBy keeps the later element on ties)
-      val counts = glyphs.groupBy(_.wmode).view.mapValues(_.size).toList.sortBy(_._1)
-      val maxC = counts.map(_._2).max
-      counts.filter(_._2 == maxC).last._1
-    }
+    val vertical = glyphs.count(_.wmode == 1)
+    if (glyphs.nonEmpty && vertical >= glyphs.length - vertical) 1 else 0
   }
 
-  /** Widths of the x span (glyph starts and ends) and of the y span, at
-    * least 1 each. min/max compare as `java.lang.Double.compare` does (NaN
-    * above everything, -0.0 below 0.0), as `List.max`/`min` under the
-    * default Ordering[Double] do. */
   def pageExtents(glyphs: List[Glyph]): (Double, Double) = {
-    def lo(a: Double, b: Double) = if (java.lang.Double.compare(a, b) <= 0) a else b
-    def hi(a: Double, b: Double) = if (java.lang.Double.compare(a, b) >= 0) a else b
-    var xMin, xMax = glyphs.head.x
-    var yMin, yMax = glyphs.head.y
-    for (g <- glyphs) {
-      val end = g.x + g.width
-      xMin = lo(lo(xMin, g.x), end)
-      xMax = hi(hi(xMax, g.x), end)
-      yMin = lo(yMin, g.y)
-      yMax = hi(yMax, g.y)
-    }
-    (math.max(1, xMax - xMin), math.max(1, yMax - yMin))
+    val xs = glyphs.flatMap(g => List(g.x, g.x + g.width))
+    val ys = glyphs.map(_.y)
+    (math.max(1, xs.max - xs.min), math.max(1, ys.max - ys.min))
   }
 
   def baselineOf(wmode: Int, g: Glyph): Double = if (wmode == 1) g.x else g.y

@@ -109,8 +109,11 @@ final case class FontInfo(
 
   /** `Interp.codeToUnicode` of each code below 65536, in 256-code pages
     * allocated and filled on first use. A memo of a pure function of the
-    * fields, so not part of equality; fonts are memoized per document, so
-    * one table serves a document. */
+    * fields, so not part of equality. A font read by reference is memoized
+    * per document (`Document.fontInfoByRef`), so its table serves the
+    * document; an inline font dict or a repaired `/C0_`-style font is a
+    * new FontInfo per page (`Interp.lookupFontResource`), so its table
+    * lasts one page. */
   private[core] lazy val codeText: Array[Array[String]] = new Array[Array[String]](256)
 
   /** `simpleWidths` with `defaultWidth` in place of a missing entry. */

