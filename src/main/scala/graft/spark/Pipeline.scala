@@ -588,22 +588,22 @@ object Surfaces {
   private def unresizedImage(url: String, payload: Array[Byte]): ResizedImage =
     ResizedImage(url, imageFormat(payload), ok = false, -1, -1, -1, -1, null)
 
-  /** Aspect-preserving downscale to `maxDim` via nearest-neighbor sampling
-    * — pure integer index math (ix = x*W/outW), so the resized pixels are
-    * a deterministic function of the decoded image on every JVM (no
-    * interpolation float variance). Images already within bounds pass
-    * through unchanged. Same decode guard as decodeImages. */
-  def resizeImages(spark: SparkSession, input: DataFrame, maxDim: Int = 16): Dataset[ResizedImage] = {
+  /** Aspect-preserving downscale to 12 pixels on the longest side via
+    * nearest-neighbor sampling — pure integer index math (ix = x*W/outW),
+    * so the resized pixels are a deterministic function of the decoded
+    * image on every JVM (no interpolation float variance). Images already
+    * within bounds pass through unchanged. Same decode guard as
+    * decodeImages. */
+  def resizeImages(spark: SparkSession, input: DataFrame): Dataset[ResizedImage] = {
     import spark.implicits._
-    require(maxDim > 0)
     perDocument(input, noText)((url, payload, _) => unresizedImage(url, payload)) {
-      (url, payload, _) => resizeImageRow(url, payload, maxDim)
+      (url, payload, _) => resizeImageRow(url, payload)
     }
   }
 
   /** Row-local resize kernel of [[resizeImages]] (fuzz-callable). */
-  private[graft] def resizeImageRow(url: String, payload: Array[Byte],
-      maxDim: Int): ResizedImage = {
+  private[graft] def resizeImageRow(url: String, payload: Array[Byte]): ResizedImage = {
+    val maxDim = 12
     val (fmt, img) = readImage(payload)
     if (img == null) unresizedImage(url, payload)
     else {
@@ -813,12 +813,13 @@ object Surfaces {
     * with typed metadata and a per-frame feature vector. The DECODE IS A
     * STUB (deterministic byte-window histogram standing in for a real
     * video/image decoder — no media libraries in this container); the
-    * Spark-side plumbing (schema, flatMap fan-out, batch shape) is real. */
-  def sampleFrames(spark: SparkSession, input: DataFrame, everyNBytes: Int = 4096,
-      maxFrames: Int = 8): Dataset[FrameRow] = {
+    * Spark-side plumbing (schema, flatMap fan-out, batch shape) is real.
+    * One frame per 256-byte window, at most 8 per document. */
+  def sampleFrames(spark: SparkSession, input: DataFrame): Dataset[FrameRow] = {
     import spark.implicits._
+    val everyNBytes = 256
     perDocumentRows(input, noText) { (url, payload, _) =>
-      val n = math.min(maxFrames, math.max(payload.length / everyNBytes, 0))
+      val n = math.min(8, math.max(payload.length / everyNBytes, 0))
       (0 until n).map { f =>
         val off = f.toLong * everyNBytes
         val hist = new Array[Float](8)
@@ -1073,26 +1074,28 @@ object Streaming {
   }
 
   /** Streaming incremental dedup (the streaming production shape of d11):
-    * each micro-batch of a recrawl stream probes the persisted bucketed
-    * signature index with the first-hit walk
+    * each micro-batch of a recrawl stream probes the signature index
+    * persisted at `indexDir` with the first-hit walk
     * ([[Queries.firstVerifiedNearDups]]), which stops each probe row at its
     * smallest verified index doc instead of verifying the whole hot bucket
     * (most of the index). Band keying is row-local (same minhash arithmetic
     * as the batch path). No state: an unbounded recrawl feed dedups against
     * a 100 TB standing corpus with per-batch work proportional to the
     * batch, and each batch moves one row per matched document to the
-    * driver, as a memory sink would. `deltaSchema` is the delta's schema
-    * as written, so the stream starts without a schema-inference job.
+    * driver, as a memory sink would. The index is read once per stream, and
+    * every micro-batch walks that one frame. `deltaSchema` is the delta's
+    * schema as written, so the stream starts without a schema-inference job.
     * Returns doc_b -> cluster_old: the matched documents and their oldest
     * matching index doc. */
-  def incrementalDedupPairs(spark0: SparkSession, idxTable: String,
+  def incrementalDedupPairs(spark0: SparkSession, indexDir: String,
       deltaDir: String, deltaSchema: StructType,
       queryName: String): Map[Long, Long] = {
     val spark = streamSession(spark0)
+    val index = Queries.signatureIndex(spark, indexDir)
     val best = scala.collection.mutable.HashMap.empty[Long, Long]
     val walk: (DataFrame, Long) => Unit = (batch, _) => {
       val hits = Queries.firstVerifiedNearDups(
-        Queries.bandedSigs(Queries.sigKeyed(batch)), spark.table(idxTable))
+        Queries.bandedSigs(Queries.sigKeyed(batch)), index)
       best.synchronized(hits.foreach { case (b, a) =>
         if (best.get(b).forall(a < _)) best(b) = a
       })

@@ -16,7 +16,7 @@ object Queries {
 
   final case class Q(
       fn: (SparkSession, String) => DataFrame,
-      oracle: Option[String])
+      oracle: String)
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -36,12 +36,12 @@ object Queries {
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
     },
-    Some("""SELECT l_returnflag, l_linestatus,
+    """SELECT l_returnflag, l_linestatus,
            |  CAST(round(sum(CAST(l_quantity AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_qty,
            |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_base_price,
            |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS sum_disc_price,
            |  count(*) AS count_order
-           |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
+           |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
 
   private val q2 = Q(
     (spark, dir) => {
@@ -58,12 +58,12 @@ object Queries {
           count(lit(1)).as("order_cnt"))
         .orderBy("n_name")
     },
-    Some("""SELECT n_name,
+    """SELECT n_name,
            |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS revenue,
            |  count(*) AS order_cnt
            |FROM orders JOIN customer ON o_custkey = c_custkey
            |JOIN nation ON c_nationkey = n_nationkey
-           |GROUP BY 1 ORDER BY 1""".stripMargin))
+           |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val q3 = Q(
     (spark, dir) =>
@@ -72,9 +72,9 @@ object Queries {
           round(col("o_totalprice").cast("decimal(18,2)"), 2).cast("double").as("o_total"))
         .orderBy(col("o_total").desc, col("o_orderkey").asc)
         .limit(10),
-    Some("""SELECT o_orderkey, o_custkey,
+    """SELECT o_orderkey, o_custkey,
            |  CAST(round(CAST(o_totalprice AS DECIMAL(18,2)), 2) AS DOUBLE) AS o_total
-           |FROM orders ORDER BY o_total DESC, o_orderkey ASC LIMIT 10""".stripMargin))
+           |FROM orders ORDER BY o_total DESC, o_orderkey ASC LIMIT 10""".stripMargin)
 
   private val q4 = Q(
     (spark, dir) => {
@@ -85,9 +85,9 @@ object Queries {
         .select(col("user_id"), col("event_id").as("last_event_id"), col("event_type").as("last_event_type"))
         .orderBy("user_id")
     },
-    Some("""SELECT user_id, event_id AS last_event_id, event_type AS last_event_type
+    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type
            |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-           |      FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin))
+           |      FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin)
 
   private val q5 = Q(
     (spark, dir) => {
@@ -98,9 +98,9 @@ object Queries {
         .agg(count(lit(1)).as("customers_without_orders"))
         .orderBy("c_nationkey")
     },
-    Some("""SELECT c_nationkey, count(*) AS customers_without_orders
+    """SELECT c_nationkey, count(*) AS customers_without_orders
            |FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-           |GROUP BY 1 ORDER BY 1""".stripMargin))
+           |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val q6 = Q(
     (spark, dir) => {
@@ -114,10 +114,10 @@ object Queries {
           max(col("ts")).as("last_ts"))
         .orderBy("user_id", "event_type")
     },
-    Some("""SELECT user_id, event_type, count(*) AS events,
+    """SELECT user_id, event_type, count(*) AS events,
            |  CAST(round(sum(CAST(value AS DECIMAL(18,4))), 4) AS DOUBLE) AS sum_value,
            |  min(ts) AS first_ts, max(ts) AS last_ts
-           |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
+           |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
 
   private val q7 = Q(
     (spark, dir) => {
@@ -132,11 +132,11 @@ object Queries {
           count(lit(1)).as("line_cnt"))
         .orderBy("o_orderpriority", "order_month")
     },
-    Some("""SELECT o_orderpriority, strftime(o_orderdate, '%Y-%m') AS order_month,
+    """SELECT o_orderpriority, strftime(o_orderdate, '%Y-%m') AS order_month,
            |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS revenue,
            |  count(*) AS line_cnt
            |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
+           |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
 
   private val q8 = Q(
     (spark, dir) => {
@@ -151,12 +151,12 @@ object Queries {
           round(sum(col("s_acctbal").cast("decimal(18,2)")), 2).cast("double").as("acctbal_sum"))
         .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
     },
-    Some("""SELECT r_name, n_name, count(*) AS suppliers,
+    """SELECT r_name, n_name, count(*) AS suppliers,
            |  CAST(round(sum(CAST(s_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS acctbal_sum
            |FROM supplier JOIN nation ON s_nationkey = n_nationkey
            |JOIN region ON n_regionkey = r_regionkey
            |GROUP BY ROLLUP (r_name, n_name)
-           |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin))
+           |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin)
 
   private val q9 = Q(
     (spark, dir) =>
@@ -170,11 +170,11 @@ object Queries {
           round(col("p_retailprice").cast("decimal(18,2)"), 2).cast("double").as("price"),
           col("type_avg"))
         .orderBy("p_partkey"),
-    Some("""SELECT p_partkey, p_type,
+    """SELECT p_partkey, p_type,
            |  CAST(round(CAST(p_retailprice AS DECIMAL(18,2)), 2) AS DOUBLE) AS price, type_avg
            |FROM (SELECT *, CAST(round(avg(CAST(p_retailprice AS DECIMAL(18,2))) OVER (PARTITION BY p_type), 2) AS DOUBLE) AS type_avg
            |      FROM part)
-           |WHERE p_retailprice > type_avg ORDER BY p_partkey""".stripMargin))
+           |WHERE p_retailprice > type_avg ORDER BY p_partkey""".stripMargin)
 
   private val q10 = Q(
     (spark, dir) =>
@@ -182,10 +182,10 @@ object Queries {
       t(spark, dir, "customer").select(col("c_nationkey").as("nationkey")).distinct()
         .intersect(t(spark, dir, "supplier").select(col("s_nationkey").as("nationkey")).distinct())
         .orderBy("nationkey"),
-    Some("""SELECT DISTINCT c_nationkey AS nationkey FROM customer
+    """SELECT DISTINCT c_nationkey AS nationkey FROM customer
            |INTERSECT
            |SELECT DISTINCT s_nationkey AS nationkey FROM supplier
-           |ORDER BY nationkey""".stripMargin))
+           |ORDER BY nationkey""".stripMargin)
 
   private val q11 = Q(
     (spark, dir) =>
@@ -198,11 +198,11 @@ object Queries {
           min(col("k")).as("min_k"),
           max(col("k")).as("max_k"))
         .orderBy("event_type"),
-    Some("""SELECT event_type, count(*) AS events,
+    """SELECT event_type, count(*) AS events,
            |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
            |  min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
            |  max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-           |FROM events GROUP BY 1 ORDER BY 1""".stripMargin))
+           |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val cleanupRegistered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -319,10 +319,10 @@ object Queries {
           round(sum(col("l_quantity").cast("decimal(18,2)")), 2).cast("double").as("sum_qty"))
         .orderBy("o_orderstatus")
     },
-    Some("""SELECT o_orderstatus, count(*) AS line_items,
+    """SELECT o_orderstatus, count(*) AS line_items,
            |  CAST(round(sum(CAST(l_quantity AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_qty
            |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |GROUP BY 1 ORDER BY 1""".stripMargin))
+           |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   // ---------- training-data ops: deduplication ----------
 
@@ -332,8 +332,8 @@ object Queries {
         .groupBy(md5(col("text")).as("content_hash"))
         .agg(count(lit(1)).as("copies"), min(col("doc_id")).as("keeper_doc_id"))
         .orderBy("content_hash"),
-    Some("""SELECT md5(text) AS content_hash, count(*) AS copies, min(doc_id) AS keeper_doc_id
-           |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin))
+    """SELECT md5(text) AS content_hash, count(*) AS copies, min(doc_id) AS keeper_doc_id
+           |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)
 
   /** Identical 48-bit token hash on both engines:
     * fold (acc*31 + charcode) % 1000000007 over the token's chars.
@@ -676,7 +676,7 @@ object Queries {
         .select("doc_id", "mh0", "mh1", "mh2", "mh3", "band0", "band1")
         .orderBy("doc_id")
     },
-    Some(s"""WITH toks AS (
+    s"""WITH toks AS (
             |  SELECT doc_id, $duckTokenHash AS x
             |  FROM (SELECT doc_id, unnest(list_distinct(list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0))) AS t
             |        FROM documents)
@@ -691,7 +691,7 @@ object Queries {
             |SELECT doc_id, mh0, mh1, mh2, mh3,
             |  md5(concat(CAST(mh0 AS VARCHAR), ':', CAST(mh1 AS VARCHAR))) AS band0,
             |  md5(concat(CAST(mh2 AS VARCHAR), ':', CAST(mh3 AS VARCHAR))) AS band1
-            |FROM sig ORDER BY doc_id""".stripMargin))
+            |FROM sig ORDER BY doc_id""".stripMargin)
 
   private val d3 = Q(
     (spark, dir) => {
@@ -707,7 +707,7 @@ object Queries {
         .select(col("doc_id"), simhash16Udf(col("text")).as("simhash16"))
         .orderBy("doc_id")
     },
-    Some(s"""WITH toks AS (
+    s"""WITH toks AS (
             |  SELECT doc_id, $duckTokenHash AS x
             |  FROM (SELECT doc_id, unnest(list_distinct(list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0))) AS t
             |        FROM documents)
@@ -719,7 +719,7 @@ object Queries {
             |)
             |SELECT doc_id,
             |  CAST(sum(CASE WHEN vote > 0 THEN CAST(1 AS BIGINT) << b ELSE 0 END) AS BIGINT) AS simhash16
-            |FROM votes GROUP BY 1 ORDER BY 1""".stripMargin))
+            |FROM votes GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val d4 = Q(
     (spark, dir) => {
@@ -734,11 +734,11 @@ object Queries {
         greatest(length(col("text")) - 2, lit(0)).as("total_3grams"))
         .orderBy("doc_id")
     },
-    Some("""SELECT doc_id,
+    """SELECT doc_id,
            |  count(DISTINCT text[i:i+2]) AS distinct_3grams,
            |  greatest(len(text) - 2, 0) AS total_3grams
            |FROM documents, LATERAL (SELECT unnest(range(1, greatest(len(text)-2, 0) + 1)) AS i)
-           |GROUP BY doc_id, len(text) ORDER BY doc_id""".stripMargin))
+           |GROUP BY doc_id, len(text) ORDER BY doc_id""".stripMargin)
 
   private val d5 = Q(
     (spark, dir) => {
@@ -752,7 +752,7 @@ object Queries {
           (count(lit(1)) * (count(lit(1)) - 1) / 2).cast("long").as("candidate_pairs"))
         .orderBy("bucket")
     },
-    Some(s"""WITH toks AS (
+    s"""WITH toks AS (
             |  SELECT doc_id, $duckTokenHash AS x
             |  FROM (SELECT doc_id, unnest(list_distinct(list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0))) AS t
             |        FROM documents)
@@ -765,7 +765,7 @@ object Queries {
             |SELECT md5(concat(CAST(mh0 AS VARCHAR), ':', CAST(mh1 AS VARCHAR))) AS bucket,
             |  count(*) AS docs,
             |  CAST(count(*) * (count(*) - 1) / 2 AS BIGINT) AS candidate_pairs
-            |FROM sig GROUP BY 1 ORDER BY 1""".stripMargin))
+            |FROM sig GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val d6 = Q(
     (spark, dir) => {
@@ -811,7 +811,7 @@ object Queries {
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
     },
-    Some(s"""WITH d AS (
+    s"""WITH d AS (
             |  SELECT doc_id, list_sort(list_distinct(list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0))) AS toks
             |  FROM documents
             |), toksu AS (
@@ -851,7 +851,7 @@ object Queries {
             |FROM cand
             |WHERE round(CAST(len(list_intersect(hs_a, hs_b)) AS DOUBLE) /
             |      (len(hs_a) + len(hs_b) - len(list_intersect(hs_a, hs_b))), 4) >= 0.5
-            |ORDER BY 1, 2""".stripMargin))
+            |ORDER BY 1, 2""".stripMargin)
 
   /** All-pairs candidate generation within sign-LSH band buckets, with a
     * bucket-size safety cap. Input: the cached signature table
@@ -866,25 +866,6 @@ object Queries {
     * healthy corpus 65k band keys give buckets of ~1 and the cap never
     * bites, so the d7 oracle is unchanged.
     */
-  /** Per-band oversize-bucket audit rows — the x6-style metrics surface
-    * for the LSH cap: (band, dropped_buckets, dropped_rows, dropped_pairs),
-    * one row per band, zeros on a healthy corpus. Appendable to the same
-    * metrics table as Pipeline.partitionMetrics. */
-  private[graft] def signLshDropAudit(allv: DataFrame, cap: Long): DataFrame =
-    signLshDropAudit((0 until 4).map { j =>
-      allv.groupBy(col(s"band$j")).agg(count(lit(1)).as("n")).filter(col("n") > cap)
-    })
-
-  private def signLshDropAudit(big: Seq[DataFrame]): DataFrame =
-    big.zipWithIndex.map { case (df, j) =>
-      df.agg(
-        coalesce(count(lit(1)), lit(0L)).as("dropped_buckets"),
-        coalesce(sum(col("n")), lit(0L)).as("dropped_rows"),
-        coalesce(sum((col("n") * (col("n") - 1) / 2).cast("long")), lit(0L)).as("dropped_pairs"))
-        .select(lit(j).as("band"), col("dropped_buckets"),
-          col("dropped_rows"), col("dropped_pairs"))
-    }.reduce(_.unionByName(_))
-
   private[graft] def signLshBandPairs(allv: DataFrame, cap: Long = 64L): DataFrame = {
     // Round 7: the per-band oversize keys come from ONE aggregation over
     // the exploded (band, key) pairs — four groupBy jobs + four
@@ -905,21 +886,17 @@ object Queries {
     // listeners / event log — what a cluster's ops pipeline exports) as
     // metrics rows, not a driver log line. A pair oversize in SEVERAL bands
     // is counted once per band here; the recovery below means only pairs
-    // oversize in EVERY shared band are truly lost. The audit inputs are
-    // the already-collected oversize rows (local relations — no re-scan).
+    // oversize in EVERY shared band are truly lost. The audit input is the
+    // already-collected oversize rows' sizes (a local relation — no re-scan).
     val sp = allv.sparkSession
     import sp.implicits._
-    val big = (0 until 4).map { j =>
-      bigRows.filter(_.getInt(0) == j).map(r => (r.getLong(1), r.getLong(2))).toSeq
-        .toDF(s"band$j", "n")
-    }
     val obs = org.apache.spark.sql.Observation()
-    signLshDropAudit(big)
+    bigRows.map(_.getLong(2)).toSeq.toDF("n")
       .observe(obs,
-        coalesce(sum(col("dropped_buckets")), lit(0L)).as("dropped_buckets"),
-        coalesce(sum(col("dropped_rows")), lit(0L)).as("dropped_rows"),
-        coalesce(sum(col("dropped_pairs")), lit(0L)).as("dropped_pairs"))
-      .collect() // the audit action the observation rides (4 tiny rows)
+        count(lit(1)).as("dropped_buckets"),
+        coalesce(sum(col("n")), lit(0L)).as("dropped_rows"),
+        coalesce(sum((col("n") * (col("n") - 1) / 2).cast("long")), lit(0L)).as("dropped_pairs"))
+      .collect() // the audit action the observation rides (one row per dropped bucket)
     val dropped = obs.get
     if (dropped("dropped_buckets").asInstanceOf[Long] > 0)
       System.err.println(
@@ -1015,7 +992,7 @@ object Queries {
         .filter(col("sim") >= 0.9)
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH base AS (
+    """WITH base AS (
            |  SELECT vec_id AS id, embedding FROM embeddings
            |), pert AS (
            |  SELECT vec_id + 10000 AS id,
@@ -1073,7 +1050,7 @@ object Queries {
            |       sqrt(list_reduce(list_transform(emb_b, x -> CAST(x * x AS DOUBLE)), (x, y) -> x + y))), 6) AS sim
            |  FROM cand
            |)
-           |SELECT id_a, id_b, sim FROM pairs WHERE sim >= 0.9 ORDER BY 1, 2""".stripMargin))
+           |SELECT id_a, id_b, sim FROM pairs WHERE sim >= 0.9 ORDER BY 1, 2""".stripMargin)
 
   private val d8 = Q(
     (spark, dir) => {
@@ -1100,7 +1077,7 @@ object Queries {
           round(col("dup_shingles").cast("double") / col("shingles"), 4))
         .orderBy("doc_id")
     },
-    Some(s"""WITH toks AS (
+    s"""WITH toks AS (
            |  SELECT doc_id,
            |    list_transform(regexp_extract_all(text, '\\S+'),
            |      t -> $duckTokenHash) AS th
@@ -1115,7 +1092,7 @@ object Queries {
            |SELECT doc_id, count(*) AS shingles,
            |  CAST(sum(CASE WHEN docs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS dup_shingles,
            |  round(CAST(sum(CASE WHEN docs >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) AS dup_frac
-           |FROM fl GROUP BY doc_id ORDER BY doc_id""".stripMargin))
+           |FROM fl GROUP BY doc_id ORDER BY doc_id""".stripMargin)
 
   private val d10 = Q(
     (spark, dir) => {
@@ -1207,7 +1184,7 @@ object Queries {
     // DuckDB replays the components as a transitive closure via a
     // recursive CTE over the same star edges — min reachable label ==
     // propagation fixpoint, engine-independently.
-    Some(s"""WITH RECURSIVE toks AS (
+    s"""WITH RECURSIVE toks AS (
             |  SELECT doc_id, $duckTokenHash AS x
             |  FROM (SELECT doc_id, unnest(list_distinct(list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0))) AS t
             |        FROM documents)
@@ -1238,7 +1215,7 @@ object Queries {
             |  SELECT ed.src AS v, r.lbl FROM edges ed JOIN reach r ON r.v = ed.dst
             |)
             |SELECT v AS doc_id, min(lbl) AS component
-            |FROM reach GROUP BY 1 ORDER BY 1""".stripMargin))
+            |FROM reach GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val d9 = Q(
     (spark, dir) => {
@@ -1270,7 +1247,7 @@ object Queries {
         .withColumn("contaminated", col("contaminated_shingles") > 0)
         .orderBy("doc_id")
     },
-    Some(s"""WITH toks AS (
+    s"""WITH toks AS (
            |  SELECT doc_id,
            |    list_transform(regexp_extract_all(
            |      text || CASE WHEN doc_id % 50 = 0 OR doc_id % 11 = 0
@@ -1289,7 +1266,7 @@ object Queries {
            |  sum(CASE WHEN b.g IS NOT NULL THEN 1 ELSE 0 END) > 0 AS contaminated
            |FROM sh s LEFT JOIN bench b ON s.g = b.g
            |WHERE s.doc_id % 50 <> 0
-           |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin))
+           |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin)
 
   /** The deterministic recrawl delta d11/x31 verify against the index:
     * exact re-crawls (%10=0), near-dup re-crawls with one appended token
@@ -1390,39 +1367,43 @@ object Queries {
           if (r.isNullAt(3)) null else r.getArray(3).copy()))
       }
 
-  /** Persist (overwrite) the signature index for a (doc_id, text) corpus,
-    * bucketed by band, one sorted file per bucket. The incremental verify
+  /** Persist (overwrite) the signature index for a (doc_id, text) corpus
+    * as a parquet directory, read back by path. The incremental verify
     * ([[firstVerifiedNearDups]]) walks it where it is read: the index is
     * never shuffled or broadcast, only the delta-sized probe moves. */
-  private[graft] def buildSignatureIndex(docs: DataFrame, table: String,
-      path: String): Unit =
+  private[graft] def buildSignatureIndex(docs: DataFrame, path: String): Unit =
     bandedSigs(sigKeyed(docs))
-      // pre-partition by the bucket key (repartition and bucketBy share
-      // Murmur3 hash partitioning) so each bucket lands in ONE sorted file
-      // (q12 got the same treatment) and the sort + parquet encode run on
-      // the 8 bucket tasks. The band key is the kernel's output, so the
-      // kernel runs before the exchange, on the corpus scan's splits (one
-      // task for a single-row-group table, which writes the whole shuffle)
+      // one file per hash partition of the band key, so each band is
+      // walked in one task (the walk's answer does not depend on it: it
+      // takes the min over the partitions' first hits); the parquet encode
+      // runs on the 8 partition tasks. The band key is the kernel's
+      // output, so the kernel runs before the exchange, on the corpus
+      // scan's splits (one task for a single-row-group table, which writes
+      // the whole shuffle)
       .repartition(8, col("band"))
-      .write.mode("overwrite")
-      .bucketBy(8, "band").sortBy("band")
-      .option("path", path).saveAsTable(table)
+      .write.mode("overwrite").parquet(path)
+
+  /** The signature index [[buildSignatureIndex]] wrote at `path`, read by
+    * path with its known columns, so no schema-inference job runs. */
+  private[graft] def signatureIndex(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema("doc_id BIGINT, hs ARRAY<BIGINT>, b0 STRING, band STRING")
+      .parquet(path)
 
   /** The incremental pass of d11: a recrawl delta's signature frame `dk`
     * (`sigKeyed` of (doc_id, text)) verified against the persisted
-    * signature index — new<->old by walking the index, new<->new by the
-    * delta walking itself under `doc_a < doc_b`, both first-hit walks of
-    * one probe broadcast ([[firstHitWalks]]). Output: (doc_id, status in
-    * {dup_old, dup_new, new}, cluster). `dk` feeds both walks' probe, the
-    * within-delta walk's index and the classification base, so callers
-    * pass it materialized (`localCheckpoint`, the d7 precedent; released
-    * by the ContextCleaner) rather than re-scanning the documents and
-    * re-running the kernel per use. Bounded by the delta. */
-  private[graft] def incrementalDedup(spark: SparkSession, idxTable: String,
-      dk: DataFrame): DataFrame = {
+    * signature `index` ([[signatureIndex]]) — new<->old by walking the
+    * index, new<->new by the delta walking itself under `doc_a < doc_b`,
+    * both first-hit walks of one probe broadcast ([[firstHitWalks]]).
+    * Output: (doc_id, status in {dup_old, dup_new, new}, cluster). `dk`
+    * feeds both walks' probe, the within-delta walk's index and the
+    * classification base, so callers pass it materialized
+    * (`localCheckpoint`, the d7 precedent; released by the ContextCleaner)
+    * rather than re-scanning the documents and re-running the kernel per
+    * use. Bounded by the delta. */
+  private[graft] def incrementalDedup(index: DataFrame, dk: DataFrame): DataFrame = {
     val probe = bandedSigs(dk)
     firstHitWalks(probe)(walk =>
-      classifyDelta(dk, walk(spark.table(idxTable), false), walk(probe, true)))
+      classifyDelta(dk, walk(index, false), walk(probe, true)))
   }
 
   /** A recrawl delta's classification, ordered by doc_id: each doc of
@@ -1462,8 +1443,7 @@ object Queries {
       // delta's band rows are broadcast and the index is walked where it
       // is read — no exchange on the index side, nothing of it broadcast
       // (PlanSpec pins this).
-      val (sid, base) = sessionScratch(spark, "sigidx")
-      val idxTable = s"graft_index_$sid"
+      val (_, base) = sessionScratch(spark, "sigidx")
       // pass 1 (the standing corpus, paid once): persist the signature index
       // pass 2: the recrawl delta, constructed deterministically from the
       // documents table so DuckDB can replay it — exact re-crawls (%10=0),
@@ -1476,11 +1456,11 @@ object Queries {
       // frame (one schema inference).
       val docs = t(spark, dir, "documents")
       val dk = inParallel(spark)(
-        buildSignatureIndex(docs, idxTable, s"$base/sig"),
+        buildSignatureIndex(docs, s"$base/sig"),
         sigKeyed(recrawlDelta(docs)).localCheckpoint(true))
-      incrementalDedup(spark, idxTable, dk)
+      incrementalDedup(signatureIndex(spark, s"$base/sig"), dk)
     },
-    Some(s"""WITH delta AS (
+    s"""WITH delta AS (
             |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
             |  UNION ALL
             |  SELECT doc_id + 100000, text || ' recrawlnote' FROM documents WHERE doc_id % 10 = 5
@@ -1555,20 +1535,19 @@ object Queries {
             |FROM dkeyed k
             |LEFT JOIN old_match o USING (doc_id)
             |LEFT JOIN new_match n USING (doc_id)
-            |ORDER BY doc_id""".stripMargin))
+            |ORDER BY doc_id""".stripMargin)
 
   private val x31 = Q(
     (spark, dir) => {
       // STREAMING incremental dedup: the d11 recrawl delta arrives as a
-      // STREAM and probes the persisted bucketed signature index with a
+      // STREAM and probes the persisted signature index with a
       // per-batch first-hit walk (Streaming.incrementalDedupPairs).
       // vs d11: no within-delta (new<->new) linking — a stream classifies
       // against the STANDING corpus; intra-batch dups are the batch
       // compactor's job — so the oracle is d11's old_match half with
       // statuses {dup_old, new}.
       // own tag: d11 and x31 never share an index within one session
-      val (sid, base) = sessionScratch(spark, "sigidx_x31")
-      val idxTable = s"graft_index_$sid"
+      val (_, base) = sessionScratch(spark, "sigidx_x31")
       // index write and delta write are independent — overlap (guide §2.6),
       // both over one documents frame (one schema inference). The delta is
       // derived once: the stream and the classification read it as
@@ -1577,9 +1556,9 @@ object Queries {
       val delta = recrawlDelta(docs)
       val deltaDir = s"$base/delta"
       inParallel(spark)(
-        buildSignatureIndex(docs, idxTable, s"$base/sig"),
+        buildSignatureIndex(docs, s"$base/sig"),
         delta.write.mode("overwrite").parquet(deltaDir))
-      val oldMatch = graft.spark.Streaming.incrementalDedupPairs(spark, idxTable,
+      val oldMatch = graft.spark.Streaming.incrementalDedupPairs(spark, s"$base/sig",
         deltaDir, delta.schema, "x31_" + java.lang.Long.toHexString(System.nanoTime()))
       // base = docs with >=1 token (sigKeyed), as d11's and the oracle's
       // dkeyed base: an empty-text delta doc must not emit a 'new' row
@@ -1587,7 +1566,7 @@ object Queries {
       classifyDelta(sigKeyed(spark.read.schema(delta.schema).parquet(deltaDir)),
         oldMatch, Map.empty)
     },
-    Some(s"""WITH delta AS (
+    s"""WITH delta AS (
             |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
             |  UNION ALL
             |  SELECT doc_id + 100000, text || ' recrawlnote' FROM documents WHERE doc_id % 10 = 5
@@ -1649,7 +1628,7 @@ object Queries {
             |  coalesce(o.cluster_old, k.doc_id) AS cluster
             |FROM dkeyed k
             |LEFT JOIN old_match o USING (doc_id)
-            |ORDER BY doc_id""".stripMargin))
+            |ORDER BY doc_id""".stripMargin)
 
   // ---------- training-data ops: text analysis ----------
 
@@ -1661,11 +1640,11 @@ object Queries {
         size(array_distinct(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))).as("distinct_tokens"),
         length(col("text")).as("chars"))
         .orderBy("doc_id"),
-    Some("""SELECT doc_id,
+    """SELECT doc_id,
            |  len(regexp_extract_all(text, '\S+')) AS tokens,
            |  len(list_distinct(regexp_extract_all(text, '\S+'))) AS distinct_tokens,
            |  len(text) AS chars
-           |FROM documents ORDER BY doc_id""".stripMargin))
+           |FROM documents ORDER BY doc_id""".stripMargin)
 
   private val t2 = Q(
     (spark, dir) => {
@@ -1683,14 +1662,14 @@ object Queries {
             (col("punct") + col("digits")).cast("double") / greatest(col("chars"), lit(1)) < 0.3)
         .orderBy("doc_id")
     },
-    Some("""SELECT doc_id, len(text) AS chars,
+    """SELECT doc_id, len(text) AS chars,
            |  len(regexp_extract_all(text, '\S+')) AS tokens,
            |  len(regexp_extract_all(text, '[.,!?;:]')) AS punct,
            |  len(regexp_extract_all(text, '[0-9]')) AS digits,
            |  len(regexp_extract_all(lower(text), '\b(the|a|of|and|to|in|is|that|it|for)\b')) AS stopwords,
            |  (len(text) >= 50 AND len(regexp_extract_all(text, '\S+')) >= 10
            |   AND CAST(len(regexp_extract_all(text, '[.,!?;:]')) + len(regexp_extract_all(text, '[0-9]')) AS DOUBLE) / greatest(len(text), 1) < 0.3) AS quality_ok
-           |FROM documents ORDER BY doc_id""".stripMargin))
+           |FROM documents ORDER BY doc_id""".stripMargin)
 
   private val t3 = Q(
     (spark, dir) => {
@@ -1710,7 +1689,7 @@ object Queries {
             .otherwise("und"))
         .orderBy("doc_id")
     },
-    Some("""SELECT doc_id, lang AS labeled_lang,
+    """SELECT doc_id, lang AS labeled_lang,
            |  len(regexp_extract_all(lower(text), '\b(the|and|of|is|that|with|for)\b')) AS en_hits,
            |  len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht|mit)\b')) AS de_hits,
            |  len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|y|con|por)\b')) AS es_hits,
@@ -1722,7 +1701,7 @@ object Queries {
            |     AND len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht|mit)\b')) > 0 THEN 'de'
            |    WHEN len(regexp_extract_all(lower(text), '\b(el|la|los|las|es|y|con|por)\b')) > 0 THEN 'es'
            |    ELSE 'und' END AS detected_lang
-           |FROM documents ORDER BY doc_id""".stripMargin))
+           |FROM documents ORDER BY doc_id""".stripMargin)
 
   private val t5 = Q(
     (spark, dir) =>
@@ -1733,10 +1712,10 @@ object Queries {
           lit("'s|'t|'re|'ve|'m|'ll|'d| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+"), lit(0))).as("bpe_tokens"),
         size(regexp_extract_all(col("text"), lit("\\S+"), lit(0))).as("ws_tokens"))
         .orderBy("doc_id"),
-    Some("SELECT doc_id, " +
+    "SELECT doc_id, " +
       "len(regexp_extract_all(text, '''s|''t|''re|''ve|''m|''ll|''d| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+')) AS bpe_tokens, " +
       "len(regexp_extract_all(text, '\\S+')) AS ws_tokens " +
-      "FROM documents ORDER BY doc_id"))
+      "FROM documents ORDER BY doc_id")
 
   private val t4 = Q(
     (spark, dir) =>
@@ -1744,8 +1723,8 @@ object Queries {
         col("doc_id"),
         md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("fingerprint"))
         .orderBy("doc_id"),
-    Some("""SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fingerprint
-           |FROM documents ORDER BY doc_id""".stripMargin))
+    """SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fingerprint
+           |FROM documents ORDER BY doc_id""".stripMargin)
 
   // PII regexes usable verbatim by BOTH engines (Java regex and DuckDB's
   // RE2): character classes + bounded quantifiers only — no lookaround, no
@@ -1779,7 +1758,7 @@ object Queries {
         .withColumn("has_pii", col("emails") + col("ips") + col("phones") > 0)
         .orderBy("doc_id")
     },
-    Some(s"""WITH body AS (
+    s"""WITH body AS (
             |  SELECT doc_id, text || CASE WHEN doc_id % 3 = 0
             |    THEN ' contact user' || doc_id || '@example.com or 10.0.' || (doc_id % 256) || '.7 ext 555-0142'
             |    ELSE '' END AS body
@@ -1794,7 +1773,7 @@ object Queries {
             |  (len(regexp_extract_all(body, '$EmailRe')) +
             |   len(regexp_extract_all(body, '$Ipv4Re')) +
             |   len(regexp_extract_all(body, '$PhoneRe'))) > 0 AS has_pii
-            |FROM body ORDER BY doc_id""".stripMargin))
+            |FROM body ORDER BY doc_id""".stripMargin)
 
   private val t7 = Q(
     (spark, dir) => {
@@ -1826,7 +1805,7 @@ object Queries {
           col("bigram_ratio") >= 0.5 && col("top_word_frac") <= 0.2)
         .orderBy("doc_id")
     },
-    Some("""WITH t AS (
+    """WITH t AS (
            |  SELECT doc_id, regexp_extract_all(text, '\S+') AS w FROM documents
            |), b AS (
            |  SELECT doc_id, w,
@@ -1848,7 +1827,7 @@ object Queries {
            |     THEN round(CAST(len(list_distinct(big)) AS DOUBLE) / len(big), 4)
            |     ELSE 1.0 END >= 0.5
            |   AND round(CAST(top_word_count AS DOUBLE) / greatest(len(w), 1), 4) <= 0.2) AS repetition_ok
-           |FROM b ORDER BY doc_id""".stripMargin))
+           |FROM b ORDER BY doc_id""".stripMargin)
 
   private val t8 = Q(
     (spark, dir) => {
@@ -1877,7 +1856,7 @@ object Queries {
           round(col("docs_kept") * lit(100.0) / col("docs_in"), 2))
         .orderBy("source")
     },
-    Some("""SELECT source,
+    """SELECT source,
            |  10 + (CAST(regexp_extract(source, '\d+') AS BIGINT) * 7) % 80 AS rate_pct,
            |  count(*) AS docs_in,
            |  CAST(sum(CASE WHEN ((doc_id % 97) * (doc_id % 89) * 31 + doc_id * 17 + 7) % 100
@@ -1887,7 +1866,7 @@ object Queries {
            |    < 10 + (CAST(regexp_extract(source, '\d+') AS BIGINT) * 7) % 80
            |    THEN 1 ELSE 0 END) AS DOUBLE) * 100.0 / count(*), 2) AS kept_pct
            |FROM documents
-           |GROUP BY 1, 2 ORDER BY source""".stripMargin))
+           |GROUP BY 1, 2 ORDER BY source""".stripMargin)
 
   private val t9 = Q(
     (spark, dir) => {
@@ -1907,10 +1886,10 @@ object Queries {
           Window.orderBy(col("freq").desc, col("token").asc)))
         .select("rank", "token", "freq")
     },
-    Some("""SELECT row_number() OVER (ORDER BY count(*) DESC, t ASC) AS rank,
+    """SELECT row_number() OVER (ORDER BY count(*) DESC, t ASC) AS rank,
            |  t AS token, count(*) AS freq
            |FROM (SELECT unnest(regexp_extract_all(text, '\S+')) AS t FROM documents)
-           |GROUP BY t ORDER BY freq DESC, token ASC LIMIT 50""".stripMargin))
+           |GROUP BY t ORDER BY freq DESC, token ASC LIMIT 50""".stripMargin)
 
   private val t10 = Q(
     (spark, dir) => {
@@ -1937,7 +1916,7 @@ object Queries {
         .withColumn("fluent", col("avg_bigram_freq") >= 29.5)
         .orderBy("doc_id")
     },
-    Some("""WITH bg AS (
+    """WITH bg AS (
            |  SELECT doc_id, w[i] || ' ' || w[i+1] AS bg
            |  FROM (SELECT doc_id, regexp_extract_all(text, '\S+') AS w FROM documents),
            |    LATERAL (SELECT unnest(range(1, greatest(len(w), 1))) AS i)
@@ -1949,7 +1928,7 @@ object Queries {
            |  round(CAST(sum(m.freq) AS DOUBLE) / count(*), 4) AS avg_bigram_freq,
            |  round(CAST(sum(m.freq) AS DOUBLE) / count(*), 4) >= 29.5 AS fluent
            |FROM bg b JOIN model m USING (bg)
-           |GROUP BY 1 ORDER BY 1""".stripMargin))
+           |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val t12 = Q(
     (spark, dir) => {
@@ -1997,7 +1976,7 @@ object Queries {
         (score >= 0.5).as("pred"), col("y").cast("int").as("label"))
         .orderBy("doc_id")
     },
-    Some("""WITH feats AS (
+    """WITH feats AS (
            |  SELECT doc_id,
            |    CASE WHEN n_chars >= 300 THEN 1.0 ELSE 0.0 END AS y,
            |    CAST(least(n_chars, 600) AS DOUBLE) / 600.0 AS f1,
@@ -2040,7 +2019,7 @@ object Queries {
            |  round(w.a + w.b*f.f1 + w.c*f.f2 + w.d*f.f3, 6) AS score,
            |  (w.a + w.b*f.f1 + w.c*f.f2 + w.d*f.f3) >= 0.5 AS pred,
            |  CAST(f.y AS INT) AS label
-           |FROM feats f, w3 w ORDER BY f.doc_id""".stripMargin))
+           |FROM feats f, w3 w ORDER BY f.doc_id""".stripMargin)
 
   private val t11 = Q(
     (spark, dir) => {
@@ -2091,7 +2070,7 @@ object Queries {
         .withColumn("canon_dups", count(lit(1)).over(w))
         .orderBy("doc_id")
     },
-    Some("""WITH messy AS (
+    """WITH messy AS (
            |  SELECT doc_id,
            |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'http' END) || '://' ||
            |    (CASE WHEN doc_id % 3 = 0 THEN 'WWW.Example.COM'
@@ -2134,7 +2113,7 @@ object Queries {
            |)
            |SELECT doc_id, url, canon,
            |  count(*) OVER (PARTITION BY canon) AS canon_dups
-           |FROM canon ORDER BY doc_id""".stripMargin))
+           |FROM canon ORDER BY doc_id""".stripMargin)
 
   // ---------- similarity search over embeddings ----------
 
@@ -2155,7 +2134,7 @@ object Queries {
         .select("qid", "vec_id", "rank", "sim")
         .orderBy("qid", "rank")
     },
-    Some("""WITH pairs AS (
+    """WITH pairs AS (
            |  SELECT q.vec_id AS qid, e.vec_id AS vec_id,
            |    round(
            |      list_reduce(list_transform(range(1, len(q.embedding)+1), i -> CAST(q.embedding[i] * e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
@@ -2166,7 +2145,7 @@ object Queries {
            |  SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rank
            |  FROM pairs
            |)
-           |SELECT qid, vec_id, rank, sim FROM ranked WHERE rank <= 5 ORDER BY qid, rank""".stripMargin))
+           |SELECT qid, vec_id, rank, sim FROM ranked WHERE rank <= 5 ORDER BY qid, rank""".stripMargin)
 
   private val s2 = Q(
     (spark, dir) => {
@@ -2182,12 +2161,12 @@ object Queries {
         signBits(8)(col("embedding")).as("bucket"))
         .orderBy("vec_id")
     },
-    Some("""SELECT vec_id, label,
+    """SELECT vec_id, label,
            |  CAST((SELECT sum(CASE WHEN pr > 0 THEN CAST(1 AS BIGINT) << k ELSE 0 END)
            |   FROM (SELECT k, (SELECT sum(embedding[i+1] * cos(i * (k+1) * 0.7 + k))
            |                    FROM (SELECT unnest(range(0, len(embedding))) AS i)) AS pr
            |         FROM (SELECT unnest(range(0, 8)) AS k))) AS BIGINT) AS bucket
-           |FROM embeddings ORDER BY vec_id""".stripMargin))
+           |FROM embeddings ORDER BY vec_id""".stripMargin)
 
   private val s4 = Q(
     (spark, dir) => {
@@ -2224,7 +2203,7 @@ object Queries {
         .select("qid", "vec_id", "cell", "rank", "sim")
         .orderBy("qid", "rank")
     },
-    Some("""WITH cent AS (
+    """WITH cent AS (
            |  SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16
            |), assigned AS (
            |  SELECT e.vec_id, e.embedding, c.cid,
@@ -2251,7 +2230,7 @@ object Queries {
            |  FROM pairs
            |)
            |SELECT qid, vec_id, cell, rank, sim FROM ranked WHERE rank <= 3
-           |ORDER BY qid, rank""".stripMargin))
+           |ORDER BY qid, rank""".stripMargin)
 
   /** One assignment row per (vector, centroid) from the compiled kernel. */
   final case class AssignCell(cid: Long, cdist: Double, crank: Int)
@@ -2396,7 +2375,7 @@ object Queries {
     // the oracle replays the identical Lloyd arithmetic: same init, same
     // in-order per-dimension sums, same rounded-distance + cid tie-break
     // assignment, three unrolled iterations as chained CTEs
-    Some("""WITH e AS (
+    """WITH e AS (
            |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
            |  FROM embeddings
            |), c0 AS (
@@ -2467,7 +2446,7 @@ object Queries {
            |  FROM pairs
            |)
            |SELECT qid, vec_id, cell, rank, sim FROM ranked WHERE rank <= 3
-           |ORDER BY qid, rank""".stripMargin))
+           |ORDER BY qid, rank""".stripMargin)
 
   private val s3 = Q(
     (spark, dir) => {
@@ -2491,7 +2470,7 @@ object Queries {
         .select("qid", "vec_id", "bucket", "rank", "sim")
         .orderBy("qid", "rank")
     },
-    Some("""WITH bucketed AS (
+    """WITH bucketed AS (
            |  SELECT vec_id, embedding,
            |    CAST((SELECT sum(CASE WHEN pr > 0 THEN CAST(1 AS BIGINT) << k ELSE 0 END)
            |     FROM (SELECT k, (SELECT sum(embedding[i+1] * cos(i * (k+1) * 0.7 + k))
@@ -2510,7 +2489,7 @@ object Queries {
            |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rank
            |  FROM pairs
            |)
-           |SELECT qid, vec_id, bucket, rank, sim FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin))
+           |SELECT qid, vec_id, bucket, rank, sim FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin)
 
   // ---------- extraction queries over the synthetic corpus ----------
 
@@ -2534,9 +2513,9 @@ object Queries {
         .select("url", "mode", "ok", "pages", "chars")
         .orderBy("url")
     },
-    Some(s"""SELECT url, $auxModeSql AS mode, TRUE AS ok, pages,
+    s"""SELECT url, $auxModeSql AS mode, TRUE AS ok, pages,
             |  CAST(len(text) AS INT) AS chars
-            |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin))
+            |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin)
 
   private val x2 = Q(
     (spark, _) => {
@@ -2546,8 +2525,8 @@ object Queries {
         .select(col("url"), col("kind"), col("text"))
         .orderBy("url")
     },
-    Some("""SELECT url, kind, text
-           |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin))
+    """SELECT url, kind, text
+           |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin)
 
   private val x3 = Q(
     (spark, _) => {
@@ -2558,9 +2537,9 @@ object Queries {
         .select("url", "mode")
         .orderBy("url")
     },
-    Some(s"""SELECT url, $auxModeSql AS mode
+    s"""SELECT url, $auxModeSql AS mode
             |FROM read_parquet('__AUX__/*.parquet')
-            |WHERE regexp_matches(text, 'sentence that') ORDER BY url""".stripMargin))
+            |WHERE regexp_matches(text, 'sentence that') ORDER BY url""".stripMargin)
 
   private val x4 = Q(
     (spark, _) => {
@@ -2573,10 +2552,10 @@ object Queries {
     // title (/Info /Title), page count and outline-entry count are generator
     // construction facts; the trailerJson rendering (kernel-side, oracle
     // would be circular) stays covered by SurfacesSpec unit tests
-    Some("""SELECT url, title, pages, toc_entries AS "tocEntries"
+    """SELECT url, title, pages, toc_entries AS "tocEntries"
            |FROM read_parquet('__AUX__/*.parquet')
            |WHERE kind NOT IN ('html', 'textrow')
-           |ORDER BY url""".stripMargin))
+           |ORDER BY url""".stripMargin)
 
   private val x5 = Q(
     (spark, _) => {
@@ -2586,11 +2565,11 @@ object Queries {
         .orderBy("url", "page")
     },
     // per-page layout text is generator ground truth (page_texts array)
-    Some("""SELECT url, CAST(i AS INT) AS page, page_texts[i] AS text
+    """SELECT url, CAST(i AS INT) AS page, page_texts[i] AS text
            |FROM read_parquet('__AUX__/*.parquet'),
            |     LATERAL (SELECT unnest(range(1, len(page_texts) + 1)) AS i)
            |WHERE len(page_texts) > 0
-           |ORDER BY url, page""".stripMargin))
+           |ORDER BY url, page""".stripMargin)
 
   private val x6 = Q(
     (spark, _) => {
@@ -2605,7 +2584,7 @@ object Queries {
     // slices partition p = [floor(p*180/8), floor((p+1)*180/8)), i.e.
     // p = (i*8 + 7) // 180; per-row kind/mode/chars come from the aux
     // ground truth, so DuckDB reproduces the metrics rows exactly
-    Some("""WITH r AS (
+    """WITH r AS (
            |  SELECT CAST(regexp_extract(url, '/(\d+)$', 1) AS INT) AS i,
            |         kind, len(text) AS chars
            |  FROM read_parquet('__AUX__/*.parquet')
@@ -2618,7 +2597,7 @@ object Queries {
            |  CAST(sum(CASE WHEN kind = 'textrow' THEN 1 ELSE 0 END) AS BIGINT) AS "textDocs",
            |  CAST(0 AS BIGINT) AS "errorDocs",
            |  CAST(sum(chars) AS BIGINT) AS chars
-           |FROM r GROUP BY 1 ORDER BY 1""".stripMargin))
+           |FROM r GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val x7 = Q(
     (spark, _) => {
@@ -2626,10 +2605,10 @@ object Queries {
       Pipeline.extractMode(spark, CorpusGen.inputView(c), "geom")
         .toDF().select("url", "mode", "ok", "chars", "text").orderBy("url")
     },
-    Some(s"""SELECT url,
+    s"""SELECT url,
             |  CASE WHEN kind = 'html' THEN 'html' WHEN kind = 'textrow' THEN 'text' ELSE 'pdf-geom' END AS mode,
             |  TRUE AS ok, CAST(len(text_geom) AS INT) AS chars, text_geom AS text
-            |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin))
+            |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin)
 
   private val x8 = Q(
     (spark, _) => {
@@ -2639,15 +2618,15 @@ object Queries {
     },
     // legacy-mode stream-order expectations (generator-encoded, pinned
     // byte-exact against the reference on the 45 legacy goldens)
-    Some(s"""SELECT url,
+    s"""SELECT url,
             |  CASE WHEN kind = 'html' THEN 'html' WHEN kind = 'textrow' THEN 'text' ELSE 'pdf-legacy' END AS mode,
             |  TRUE AS ok, CAST(len(text_legacy) AS INT) AS chars, text_legacy AS text
-            |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin))
+            |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin)
 
   private val x14 = Q(
     (spark, _) => {
       val c = corpus(spark)
-      Surfaces.sampleFrames(spark, CorpusGen.inputView(c), everyNBytes = 256)
+      Surfaces.sampleFrames(spark, CorpusGen.inputView(c))
         .toDF().select("url", "frameIdx", "byteOffset", "width", "height")
         .orderBy("url", "frameIdx")
     },
@@ -2656,7 +2635,7 @@ object Queries {
     // recomputes frame offsets and the byte-derived stub dimensions
     // independently: frames = min(8, len/256), width/height from the bytes
     // at offset and offset+1 (clamped to the payload end).
-    Some("""WITH r AS (
+    """WITH r AS (
            |  SELECT url, octet_length(payload) AS n, hex(payload) AS hx
            |  FROM read_parquet('__AUX__/*.parquet')
            |  WHERE octet_length(coalesce(payload, ''::BLOB)) >= 256
@@ -2670,7 +2649,7 @@ object Queries {
            |    + strpos('0123456789ABCDEF', substr(hx, 2*off + 2, 1)) - 1) & 63) AS INT) AS width,
            |  CAST(16 + (((strpos('0123456789ABCDEF', substr(hx, 2*off2 + 1, 1)) - 1) * 16
            |    + strpos('0123456789ABCDEF', substr(hx, 2*off2 + 2, 1)) - 1) & 63) AS INT) AS height
-           |FROM frames ORDER BY url, "frameIdx"""".stripMargin))
+           |FROM frames ORDER BY url, "frameIdx"""".stripMargin)
 
   private val x9 = Q(
     (spark, _) => {
@@ -2681,12 +2660,12 @@ object Queries {
     // the jpegimage kind is the only image-bearing fixture; its placement
     // (cm 100 0 0 50 72 600 -> unit square at 72,600..172,650), format and
     // 32-byte payload are generator construction facts
-    Some("""SELECT url, 1 AS page, 1 AS idx, 'jpeg' AS format,
+    """SELECT url, 1 AS page, 1 AS idx, 'jpeg' AS format,
            |  CAST(72 AS DOUBLE) AS x0, CAST(600 AS DOUBLE) AS y0,
            |  CAST(172 AS DOUBLE) AS x1, CAST(650 AS DOUBLE) AS y1,
            |  32 AS "sizeBytes"
            |FROM read_parquet('__AUX__/*.parquet')
-           |WHERE kind = 'jpegimage' ORDER BY url""".stripMargin))
+           |WHERE kind = 'jpegimage' ORDER BY url""".stripMargin)
 
   private val x10 = Q(
     (spark, _) => {
@@ -2703,7 +2682,7 @@ object Queries {
     // equal neighbours — the paragraph LCS therefore degenerates to
     // pointwise replace rows, which plain SQL reproduces. Comparison is
     // whitespace-normalized (strip + collapse runs) like the kernel's.
-    Some("""WITH d AS (
+    """WITH d AS (
            |  SELECT url, pages_a, page_texts_a, page_texts_b
            |  FROM read_parquet('__AUXDIFF__/*.parquet')
            |  WHERE kind NOT IN ('html', 'textrow')
@@ -2720,7 +2699,7 @@ object Queries {
            |FROM paras, LATERAL (SELECT unnest(range(1, len(pa) + 1)) AS k)
            |WHERE trim(regexp_replace(pa[k], '\s+', ' ', 'g'))
            |   <> trim(regexp_replace(pb[k], '\s+', ' ', 'g'))
-           |ORDER BY url, "pageA", "paraA", "paraB"""".stripMargin))
+           |ORDER BY url, "pageA", "paraA", "paraB"""".stripMargin)
 
   private val x11 = Q(
     (spark, _) => {
@@ -2736,7 +2715,7 @@ object Queries {
     // kernel's sequential accumulation), printable-ASCII fraction as an
     // exact integer division. textrow rows have a 3-byte magic payload ->
     // 'binary'; everything else sniffs as pdf/html by construction.
-    Some("""WITH r AS (
+    """WITH r AS (
            |  SELECT url, kind AS fkind,
            |    octet_length(coalesce(payload, ''::BLOB)) AS n,
            |    hex(coalesce(payload, ''::BLOB)) AS hx
@@ -2768,7 +2747,7 @@ object Queries {
            |  CAST(round(coalesce(e.entropy, 0) * 1000) AS BIGINT) AS "entropyMilli",
            |  CAST(coalesce(a.a, 0) AS DOUBLE) / greatest(n, 1) AS "asciiFrac"
            |FROM r LEFT JOIN ent e USING (url) LEFT JOIN ac a USING (url)
-           |ORDER BY url""".stripMargin))
+           |ORDER BY url""".stripMargin)
 
   private val x12 = Q(
     (spark, _) => {
@@ -2782,9 +2761,9 @@ object Queries {
       Surfaces.streamingExtract(spark, dir, name)
         .select("url", "mode", "ok", "chars", "text").orderBy("url")
     },
-    Some(s"""SELECT url, $auxModeSql AS mode, TRUE AS ok,
+    s"""SELECT url, $auxModeSql AS mode, TRUE AS ok,
             |  CAST(len(text) AS INT) AS chars, text
-            |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin))
+            |FROM read_parquet('__AUX__/*.parquet') ORDER BY url""".stripMargin)
 
   private val x13 = Q(
     (spark, _) => {
@@ -2796,9 +2775,9 @@ object Queries {
         .orderBy("url")
     },
     // outline titles/depths are generator construction facts
-    Some("""SELECT url, toc_entries AS "tocEntries", toc_text AS "tocText"
+    """SELECT url, toc_entries AS "tocEntries", toc_text AS "tocText"
            |FROM read_parquet('__AUX__/*.parquet')
-           |WHERE toc_entries > 0 ORDER BY url""".stripMargin))
+           |WHERE toc_entries > 0 ORDER BY url""".stripMargin)
 
   private val x17 = Q(
     (spark, _) => {
@@ -2812,17 +2791,17 @@ object Queries {
     // facts for both JPEG and PNG, and for lossless PNG the decoded pixel
     // md5 must equal the md5 of the pre-encoding pixel bytes. (JPEG is
     // lossy: its pixel hash is decoder-defined, so it stays null.)
-    Some("""SELECT url,
+    """SELECT url,
            |  CASE kind WHEN 'media_jpeg' THEN 'jpeg' WHEN 'media_png' THEN 'png'
            |       ELSE 'binary' END AS format,
            |  ok, width, height, pixel_md5 AS "pixelMd5"
            |FROM read_parquet('__AUXMEDIA__/*.parquet')
-           |ORDER BY url""".stripMargin))
+           |ORDER BY url""".stripMargin)
 
   private val x19 = Q(
     (spark, _) => {
       val c = CorpusGen.mediaCorpus(spark, rows = 60, partitions = 4)
-      Surfaces.resizeImages(spark, c.select("url", "html"), maxDim = 12)
+      Surfaces.resizeImages(spark, c.select("url", "html"))
         .toDF().select("url", "format", "ok", "width", "height", "outWidth", "outHeight")
         .orderBy("url")
     },
@@ -2831,7 +2810,7 @@ object Queries {
     // pass-through when already within bounds. The resized PIXELS are
     // pinned separately by a unit test against an independent
     // nearest-neighbor computation over the authored PNG pixel array.
-    Some("""SELECT url,
+    """SELECT url,
            |  CASE kind WHEN 'media_jpeg' THEN 'jpeg' WHEN 'media_png' THEN 'png'
            |       ELSE 'binary' END AS format,
            |  ok,
@@ -2843,7 +2822,7 @@ object Queries {
            |       WHEN greatest(width, height) <= 12 THEN height
            |       ELSE greatest(1, height * 12 // greatest(width, height)) END AS INT) AS "outHeight"
            |FROM read_parquet('__AUXMEDIA__/*.parquet')
-           |ORDER BY url""".stripMargin))
+           |ORDER BY url""".stripMargin)
 
   private val x18 = Q(
     (spark, _) => {
@@ -2857,12 +2836,12 @@ object Queries {
     // construction facts: the generator authored the RIFF header fields
     // AND the raw PCM sample bytes, and PCM is lossless — the decoder must
     // hand back the exact bytes (sample md5) and the exact header metadata.
-    Some("""SELECT url,
+    """SELECT url,
            |  CASE kind WHEN 'audio_wav' THEN 'wav' ELSE 'binary' END AS format,
            |  ok, sample_rate AS "sampleRate", channels, bits,
            |  n_samples AS "nSamples", sample_md5 AS "sampleMd5"
            |FROM read_parquet('__AUXAUDIO__/*.parquet')
-           |ORDER BY url""".stripMargin))
+           |ORDER BY url""".stripMargin)
 
   private val x20 = Q(
     (spark, _) => {
@@ -2878,7 +2857,7 @@ object Queries {
     // frame's exact JPEG bytes, so a correct demuxer must return the
     // authored per-frame md5s in order, and the decoded frame dimensions
     // must equal the authored container dimensions.
-    Some("""SELECT url, CAST(i AS INT) AS "frameIdx", fps, width, height,
+    """SELECT url, CAST(i AS INT) AS "frameIdx", fps, width, height,
            |  frame_md5s[CAST(i + 1 AS INT)] AS "frameMd5",
            |  width AS "decodedW", height AS "decodedH", TRUE AS "decodeOk"
            |FROM read_parquet('__AUXVIDEO__/*.parquet'),
@@ -2888,7 +2867,7 @@ object Queries {
            |SELECT url, CAST(-1 AS INT), CAST(-1 AS INT), CAST(-1 AS INT), CAST(-1 AS INT),
            |  NULL, CAST(-1 AS INT), CAST(-1 AS INT), FALSE
            |FROM read_parquet('__AUXVIDEO__/*.parquet') WHERE NOT ok
-           |ORDER BY url, "frameIdx"""".stripMargin))
+           |ORDER BY url, "frameIdx"""".stripMargin)
 
   private val x21 = Q(
     (spark, dir) => {
@@ -2905,9 +2884,9 @@ object Queries {
     },
     // at-least-once redelivery dedup: the streaming output aggregates to
     // the batch distinct-per-type counts iff every duplicate was dropped
-    Some("""SELECT event_type, count(*) AS events,
+    """SELECT event_type, count(*) AS events,
            |  CAST(count(DISTINCT event_id) AS BIGINT) AS distinct_events
-           |FROM events GROUP BY 1 ORDER BY 1""".stripMargin))
+           |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val x22 = Q(
     (spark, dir) => {
@@ -2922,14 +2901,14 @@ object Queries {
     // inner stream-stream joins emit matched pairs regardless of the
     // watermark (it only bounds state), so the finite run's output is
     // exactly the batch join — pure SQL for the oracle
-    Some("""SELECT c.user_id, count(*) AS attributed_pairs,
+    """SELECT c.user_id, count(*) AS attributed_pairs,
            |  CAST(count(DISTINCT p.event_id) AS BIGINT) AS purchases,
            |  CAST(count(DISTINCT c.event_id) AS BIGINT) AS clicks
            |FROM events c JOIN events p ON c.user_id = p.user_id
            |  AND c.event_type = 'click' AND p.event_type = 'purchase'
            |  AND CAST(p.ts AS TIMESTAMP) >= CAST(c.ts AS TIMESTAMP)
            |  AND CAST(p.ts AS TIMESTAMP) <= CAST(c.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-           |GROUP BY 1 ORDER BY 1""".stripMargin))
+           |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private val x23 = Q(
     (spark, _) => {
@@ -2963,7 +2942,7 @@ object Queries {
     // DuckDB replays the merge from both corpora's constructed expected
     // text (the aux + aux-diff tables) — a hash match verifies extraction
     // on both sides AND the delta classification.
-    Some("""WITH ax AS (
+    """WITH ax AS (
            |  SELECT url, text, CAST(regexp_extract(url, '(\d+)$', 1) AS BIGINT) AS i
            |  FROM read_parquet('__AUX__/*.parquet')
            |), vd AS (
@@ -2982,7 +2961,7 @@ object Queries {
            |       WHEN y.text = t.text THEN 'unchanged'
            |       ELSE 'changed' END AS status
            |FROM y FULL OUTER JOIN t ON y.url = t.url
-           |ORDER BY url""".stripMargin))
+           |ORDER BY url""".stripMargin)
 
   private val c1 = Q(
     (spark, _) => {
@@ -3013,7 +2992,7 @@ object Queries {
     // DuckDB replays the whole pipeline from the generator's expected
     // text (the aux table): a hash match proves extraction, the quality
     // features, the dedup grouping AND the keeper rule all agree.
-    Some("""WITH orig AS (
+    """WITH orig AS (
            |  SELECT url, text FROM read_parquet('__AUX__/*.parquet')
            |), mir AS (
            |  SELECT 'mirror://' || url AS url, text FROM orig
@@ -3032,7 +3011,7 @@ object Queries {
            |  CASE WHEN NOT (f.chars >= 25 AND f.tokens >= 4) THEN 'short'
            |       WHEN f.url <> k.keeper_url THEN 'dup'
            |       ELSE 'keep' END AS decision
-           |FROM feat f JOIN keeper k USING (h) ORDER BY f.url""".stripMargin))
+           |FROM feat f JOIN keeper k USING (h) ORDER BY f.url""".stripMargin)
 
   private val x15 = Q(
     (spark, dir) =>
@@ -3042,7 +3021,7 @@ object Queries {
     // Append-mode semantics are pure SQL: tumbling 1h windows whose end the
     // final watermark (max ts - 10 min) has passed — so a batch engine can
     // oracle the STREAMING query output exactly.
-    Some("""WITH e AS (
+    """WITH e AS (
            |  SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events
            |), mx AS (SELECT max(ts) AS m FROM e)
            |SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -3050,7 +3029,7 @@ object Queries {
            |  CAST(round(sum(CAST(value AS DECIMAL(18,4))), 4) AS DOUBLE) AS sum_value
            |FROM e
            |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= (SELECT m FROM mx) - INTERVAL 10 MINUTE
-           |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
+           |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
 
   private val x16 = Q(
     (spark, dir) => {
@@ -3067,7 +3046,7 @@ object Queries {
     // the batch oracle reconstructs the same sessions by gap clustering
     // (cumulative sum of >30-min breaks per user); KMV distinct counts are
     // exact below K=256, so per-session counts compare exactly
-    Some("""WITH e AS (
+    """WITH e AS (
            |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
            |), g AS (
            |  SELECT user_id, ts, event_type,
@@ -3083,7 +3062,7 @@ object Queries {
            |SELECT user_id, min(ts) AS first_ts, count(*) AS events,
            |  max(ts) AS last_ts,
            |  CAST(count(DISTINCT event_type) AS INT) AS distinct_types
-           |FROM s GROUP BY user_id, sid ORDER BY user_id, first_ts""".stripMargin))
+           |FROM s GROUP BY user_id, sid ORDER BY user_id, first_ts""".stripMargin)
 
   private val x24 = Q(
     (spark, _) => {
@@ -3105,7 +3084,7 @@ object Queries {
     // boxes parse the generator's "page|para|x0|y0|x1|y1" strings; texts
     // split each page's ground-truth text on the blank-line paragraph
     // separator — paragraph j of page p is split j of page_texts[p]
-    Some("""WITH exp AS (
+    """WITH exp AS (
            |  SELECT url, page_texts, regions
            |  FROM read_parquet('__AUX__/*.parquet') WHERE len(regions) > 0
            |), boxes AS (
@@ -3140,7 +3119,7 @@ object Queries {
            |  UNION ALL
            |  SELECT url, page, para, x0, y0, x1, y1, text FROM non_pdf
            |)
-           |ORDER BY url, page, para""".stripMargin))
+           |ORDER BY url, page, para""".stripMargin)
 
   private val x25 = Q(
     (spark, _) => {
@@ -3156,8 +3135,8 @@ object Queries {
       spark.sql("""SELECT url, extract_text(html) AS text FROM crawl_x25
                   |WHERE url NOT LIKE '%textrow%' ORDER BY url""".stripMargin)
     },
-    Some("""SELECT url, text FROM read_parquet('__AUX__/*.parquet')
-           |WHERE kind <> 'textrow' ORDER BY url""".stripMargin))
+    """SELECT url, text FROM read_parquet('__AUX__/*.parquet')
+           |WHERE kind <> 'textrow' ORDER BY url""".stripMargin)
 
   private val x27 = Q(
     (spark, _) => {
@@ -3170,8 +3149,8 @@ object Queries {
       spark.sql("""SELECT url, extract_text(html, 'legacy') AS text FROM crawl_x27
                   |WHERE url NOT LIKE '%textrow%' ORDER BY url""".stripMargin)
     },
-    Some("""SELECT url, text_legacy AS text FROM read_parquet('__AUX__/*.parquet')
-           |WHERE kind <> 'textrow' ORDER BY url""".stripMargin))
+    """SELECT url, text_legacy AS text FROM read_parquet('__AUX__/*.parquet')
+           |WHERE kind <> 'textrow' ORDER BY url""".stripMargin)
 
   private val x28 = Q(
     (spark, _) => {
@@ -3198,11 +3177,11 @@ object Queries {
         (s"https://corpus.test/formparent/$i", names.mkString(","), text)
       }.toDF("url", "form_names", "form_text").orderBy("url")
     },
-    Some("""SELECT 'https://corpus.test/formparent/' || CAST(i AS VARCHAR) AS url,
+    """SELECT 'https://corpus.test/formparent/' || CAST(i AS VARCHAR) AS url,
            |  'Fm0' AS form_names,
            |  'Outer form ' || CAST(i AS VARCHAR) || chr(10) || chr(10) ||
            |  'Inner form ' || CAST(i AS VARCHAR) || chr(10) AS form_text
-           |FROM range(24) t(i) ORDER BY url""".stripMargin))
+           |FROM range(24) t(i) ORDER BY url""".stripMargin)
 
   private val x29 = Q(
     (spark, _) => {
@@ -3220,7 +3199,7 @@ object Queries {
         (s"https://corpus.test/classic/$i", at(1), at(4))
       }.toDF("url", "obj_catalog", "obj_content").orderBy("url")
     },
-    Some("""WITH d AS (
+    """WITH d AS (
            |  SELECT i,
            |    32 + len('Classic document ' || CAST(i AS VARCHAR) || ' body text') AS n
            |  FROM range(24) t(i)
@@ -3229,7 +3208,7 @@ object Queries {
            |  '[' || chr(10) || '/Pages: 2' || chr(10) || '/Type: /Catalog]' AS obj_catalog,
            |  '[' || chr(10) || '/Length: ' || CAST(CAST(n AS DOUBLE) AS VARCHAR) ||
            |    ', ' || chr(10) || '  <stream ' || CAST(n AS VARCHAR) || ' bytes>]' AS obj_content
-           |FROM d ORDER BY url""".stripMargin))
+           |FROM d ORDER BY url""".stripMargin)
 
   /** Token budget shared by the chunking queries' Spark folds AND their
     * oracle SQL (interpolated) — one constant, no silent drift. */
@@ -3249,9 +3228,9 @@ object Queries {
         .toDF()
         .orderBy("url")
     },
-    Some("""SELECT url, CAST(TRUE AS BOOLEAN) AS ok, width, height,
+    """SELECT url, CAST(TRUE AS BOOLEAN) AS ok, width, height,
            |  pixel_md5 AS "pixelMd5"
-           |FROM read_parquet('__AUXSCAN__/*.parquet') ORDER BY url""".stripMargin))
+           |FROM read_parquet('__AUXSCAN__/*.parquet') ORDER BY url""".stripMargin)
 
   private val x30 = Q(
     (spark, _) => {
@@ -3269,9 +3248,9 @@ object Queries {
         .toDF()
         .orderBy("url")
     },
-    Some("""SELECT url, ok, format, width, height, components, bpc,
+    """SELECT url, ok, format, width, height, components, bpc,
            |  ok AS "decodeRefused"
-           |FROM read_parquet('__AUXJPX__/*.parquet') ORDER BY url""".stripMargin))
+           |FROM read_parquet('__AUXJPX__/*.parquet') ORDER BY url""".stripMargin)
 
   /** Layout-aware chunking on region boundaries (the pretraining-chunker
     * shape pageRegions exists for): paragraphs accumulate in reading
@@ -3300,7 +3279,7 @@ object Queries {
     (spark, _) => regionChunkQuery(spark, CorpusGen.inputView(corpus(spark)), ChunkBudget),
     // DuckDB rebuilds the paragraphs from the generator page_texts ground
     // truth (same split as x24) and replays the identical window math
-    Some(regionChunkOracle(ChunkBudget, "__AUX__")))
+    regionChunkOracle(ChunkBudget, "__AUX__"))
 
   private def regionChunkOracle(budget: Int, aux: String): String =
     s"""WITH exp AS (
@@ -3380,7 +3359,7 @@ object Queries {
     // DuckDB replays the greedy reset with a recursive CTE walking each
     // document's paragraphs in (page, para) order — per-step state is
     // (chunk, acc), identical arithmetic to the Spark fold
-    Some(greedyChunkOracle(ChunkBudget, "__AUX__")))
+    greedyChunkOracle(ChunkBudget, "__AUX__"))
 
   private def greedyChunkOracle(budget: Int, aux: String): String =
     s"""WITH RECURSIVE exp AS (
@@ -3507,20 +3486,20 @@ object Queries {
   private val c6 = Q(
     (spark, _) => packQuery(spark, CorpusGen.inputView(corpus(spark)),
       ChunkBudget, capacity = 32, shards = 8),
-    Some(packOracle(ChunkBudget, 32, 8, "__AUX__")))
+    packOracle(ChunkBudget, 32, 8, "__AUX__"))
 
   private val c7 = Q(
     (spark, _) => packQuery(spark, longInput(spark),
       LongChunkBudget, capacity = 640, shards = 4),
-    Some(packOracle(LongChunkBudget, 640, 4, "__AUXLONG__")))
+    packOracle(LongChunkBudget, 640, 4, "__AUXLONG__"))
 
   private val c4 = Q(
     (spark, _) => regionChunkQuery(spark, longInput(spark), LongChunkBudget),
-    Some(regionChunkOracle(LongChunkBudget, "__AUXLONG__")))
+    regionChunkOracle(LongChunkBudget, "__AUXLONG__"))
 
   private val c5 = Q(
     (spark, _) => greedyChunkQuery(spark, longInput(spark), LongChunkBudget),
-    Some(greedyChunkOracle(LongChunkBudget, "__AUXLONG__")))
+    greedyChunkOracle(LongChunkBudget, "__AUXLONG__"))
 
   // ---------- registry ----------
 
@@ -3608,5 +3587,5 @@ object Queries {
     all.map { case (k, v) => k -> v.fn }
 
   val oracleSql: Map[String, String] =
-    all.collect { case (k, Q(_, Some(sql))) => k -> sql }
+    all.map { case (k, v) => k -> v.oracle }
 }

@@ -149,12 +149,12 @@ object DedupScaleSmoke {
     // should broadcast and shuffle ~4x the bytes while the base corpus
     // never moves.
     sys.env.get("DELTAS").foreach { spec =>
-      val idxTable = "graft_smoke_sig_index"
       run("build_signature_index") {
         graft.spark.Queries.buildSignatureIndex(
-          spark.read.parquet(s"$dir/documents.parquet"), idxTable, s"$dir/sigidx")
-        (spark.table(idxTable).count(), "")
+          spark.read.parquet(s"$dir/documents.parquet"), s"$dir/sigidx")
+        (graft.spark.Queries.signatureIndex(spark, s"$dir/sigidx").count(), "")
       }
+      val index = graft.spark.Queries.signatureIndex(spark, s"$dir/sigidx")
       for (n <- spec.split(",").map(_.trim.toLong)) {
         run(s"incremental_dedup_delta_$n") {
           // recrawl mix: half exact re-crawls of existing docs, a quarter
@@ -175,7 +175,7 @@ object DedupScaleSmoke {
             }
             DocRow(id, text, "en", "recrawl", text.length.toLong)
           }).toDF()
-          val out = graft.spark.Queries.incrementalDedup(spark, idxTable,
+          val out = graft.spark.Queries.incrementalDedup(index,
             graft.spark.Queries.sigKeyed(delta).localCheckpoint(true))
           val byStatus = out.groupBy("status").count().collect()
             .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted

@@ -99,7 +99,7 @@ object FuzzSoak {
               if (k % 4 == 0) m
               else mutate(mediaBases((t * 5 + k) % mediaBases.length), rnd)
             graft.spark.Surfaces.decodeImageRow("fuzz", mm)
-            graft.spark.Surfaces.resizeImageRow("fuzz", mm, 16)
+            graft.spark.Surfaces.resizeImageRow("fuzz", mm)
             graft.spark.Surfaces.decodeAudioRow("fuzz", mm)
             graft.spark.Surfaces.videoFramesRow("fuzz", mm).foreach(_ => ())
             // JP2/J2K header walk must be total on arbitrary bytes

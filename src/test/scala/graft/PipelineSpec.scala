@@ -127,7 +127,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "resizeImages" -> (Surfaces.resizeImages(spark, _).toDF()),
       "decodeAudio" -> (Surfaces.decodeAudio(spark, _).toDF()),
       "decodeVideoFrames" -> (Surfaces.decodeVideoFrames(spark, _).toDF()),
-      "sampleFrames" -> (Surfaces.sampleFrames(spark, _, everyNBytes = 256).toDF()))
+      "sampleFrames" -> (Surfaces.sampleFrames(spark, _).toDF()))
     for ((name, surface) <- surfaces) {
       def rows(in: org.apache.spark.sql.DataFrame) = surface(in)
         .filter(!col("url").startsWith("bad/")).collect().map(_.toString).sorted.toSeq

@@ -163,7 +163,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("image resize: nearest-neighbor pixels match an independent computation") {
     val c = CorpusGen.mediaCorpus(spark, rows = 18, partitions = 2)
-    val rows = Surfaces.resizeImages(spark, c.select(col("url"), col("html")), maxDim = 12)
+    val rows = Surfaces.resizeImages(spark, c.select(col("url"), col("html")))
       .toDF().collect().map(r => r.getAs[String]("url") -> r).toMap
     var pngChecked = 0
     for (i <- 0 until 18 if i % 3 == 1) { // media_png rows
@@ -268,7 +268,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("frame sampling emits typed rows with stub features") {
     val c = CorpusGen.corpus(spark, rows = 12, partitions = 2)
-    val frames = Surfaces.sampleFrames(spark, CorpusGen.inputView(c), everyNBytes = 256).toDF().collect()
+    val frames = Surfaces.sampleFrames(spark, CorpusGen.inputView(c)).toDF().collect()
     assert(frames.nonEmpty)
     assert(frames.forall(_.getAs[Seq[Float]]("featureVec").length == 8))
     assert(frames.forall(r => r.getAs[Int]("width") >= 16 && r.getAs[Int]("height") >= 16))
@@ -745,6 +745,39 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(n == 0, s"$q: $n processes started, e.g. ${forks.take(3).mkString("; ")}")
       assert(rows > 0, q)
     }
+  }
+
+  test("d11 and x31 write their signature index as files: no catalog table") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.catalog.CreateTableEvent
+    val dir = "/root/testdata/sf0.001"
+    // the session catalog posts every table it creates to the listener
+    // bus; a saveAsTable in overwrite mode creates its table on every call
+    val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val fenced = new java.util.concurrent.Semaphore(0)
+    val fence = "catalog fence"
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case c: CreateTableEvent => created.add(c.name)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == fence) fenced.release()
+    }
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try for (q <- Seq("d11_incremental_dedup", "x31_stream_incremental")) {
+      val before = tables
+      assert(graft.spark.Queries.queries(q)(spark, dir).collect().nonEmpty, q)
+      // the bus delivers in order: the fence job's start follows every
+      // catalog event of the query
+      sc.setJobDescription(fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fenced.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS), q)
+      assert(created.isEmpty, s"$q created catalog tables: $created")
+      assert(tables == before, s"$q left tables: ${tables -- before}")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("a stateful stream stopped after its first batch resumes on its checkpoint") {
