@@ -145,6 +145,7 @@ object Bench {
         ",\"secs\":" + fmt(ex.secs) +
         ",\"docs_per_sec\":" + f"${ex.docsPerSec}%.1f" +
         ",\"match_rate\":" + ex.matchRate + "}}")
+    LocalFileSystem.deleteTree(new java.io.File(tmp))
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

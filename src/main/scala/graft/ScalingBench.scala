@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.spark.{CorpusGen, Pipeline}
+import graft.spark.{CorpusGen, LocalFileSystem, Pipeline}
 
 /** Two-cluster-size scaling evidence (north_rule: throughput scaling
   * efficiency >= 0.8 from N to 4N executors). No real cluster exists in
@@ -19,8 +19,8 @@ object ScalingBench {
 
   def runLevel(cpus: Int, docs: Long, reps: Int, skew: Boolean = false): Level = {
     val spark = Bench.buildSession(cpus)
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_scale_$cpus").toString
     try {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_scale_$cpus").toString
       val corpus =
         if (skew) CorpusGen.heavyTailCorpus(spark, docs, cpus * 4)
         else CorpusGen.corpus(spark, docs, cpus * 4, heavy = true)
@@ -47,7 +47,10 @@ object ScalingBench {
       }.toList
       val best = times.min
       Level(cpus, docs, best, docs / best, matchRate, times)
-    } finally spark.stop()
+    } finally {
+      spark.stop()
+      LocalFileSystem.deleteTree(new java.io.File(tmp))
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.sql.Timestamp
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deterministic synthetic extraction corpus in the BASELINE.json
   * input_hint shape: (url, warc_ts, html, text, lang). Row i carries
@@ -53,34 +54,33 @@ object CorpusGen {
       title = d.title,
       regions = d.regions)
 
-  /** Rows `doc(i)` for i in [0, rows), generated ON THE EXECUTORS from the
+  /** Rows `row(i)` for i in [0, rows), generated ON THE EXECUTORS from the
     * row index (spark.range), so generation itself scales: no driver-side
     * materialization, any target size. */
-  private def build(spark: SparkSession, rows: Long, partitions: Int)(
-      doc: Long => FixtureGen.Doc): DataFrame = {
+  private def build[T <: Product : TypeTag](spark: SparkSession, rows: Long, partitions: Int)(
+      row: Long => T): DataFrame = {
     import spark.implicits._
     val base = if (partitions > 0) spark.range(0, rows, 1, partitions) else spark.range(rows)
-    base.as[Long].mapPartitions(_.map(i => row(i, doc(i)))).toDF()
+    base.as[Long].mapPartitions(_.map(row)).toDF()
   }
 
   /** The corpus: FixtureGen's kinds in turn, or with `heavy` every other
     * row a 24-page book. */
   def corpus(spark: SparkSession, rows: Long, partitions: Int = 0,
       heavy: Boolean = false): DataFrame =
-    build(spark, rows, partitions)(
-      if (heavy) FixtureGen.docForHeavy else FixtureGen.docFor)
+    build(spark, rows, partitions)(i => row(i, heavy))
 
   /** Heavy-tailed corpus (a ~1000x-size giant every 100th row): the
     * skew-bench input. */
   def heavyTailCorpus(spark: SparkSession, rows: Long, partitions: Int,
       giantPages: Int = 4000): DataFrame =
-    build(spark, rows, partitions)(FixtureGen.docForHeavyTail(_, giantPages))
+    build(spark, rows, partitions)(i => row(i, FixtureGen.docForHeavyTail(i, giantPages)))
 
   /** Long many-paragraph documents (FixtureGen.longDoc) for the
     * realistic-budget chunking surface: every row a 6-page/48-paragraph PDF
     * with construction-fact page_texts/regions. */
   def longCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
-    build(spark, rows, partitions)(FixtureGen.longDoc)
+    build(spark, rows, partitions)(i => row(i, FixtureGen.longDoc(i)))
 
   /** Input-shape view (drops the ground-truth columns). */
   def inputView(corpus: DataFrame): DataFrame =
@@ -93,7 +93,6 @@ object CorpusGen {
     * closure; returns None when the reference checkout is absent. */
   def referenceCorpus(spark: SparkSession, rows: Long, partitions: Int,
       fixturesDir: String = "/root/reference/data/fixtures"): Option[DataFrame] = {
-    import spark.implicits._
     val dir = java.nio.file.Paths.get(fixturesDir)
     if (!java.nio.file.Files.isDirectory(dir)) return None
     val stream = java.nio.file.Files.list(dir)
@@ -111,7 +110,7 @@ object CorpusGen {
       } else None
     }.toArray
     if (fixtures.isEmpty) return None
-    Some(spark.range(0, rows, 1, partitions).as[Long].mapPartitions(_.map { i =>
+    Some(build(spark, rows, partitions) { i =>
       val (name, bytes, expected) = fixtures((i % fixtures.length).toInt)
       CorpusRow(
         url = s"https://fixtures.test/$name/$i",
@@ -129,7 +128,7 @@ object CorpusGen {
         page_texts = Nil,
         title = null,
         regions = Nil)
-    }).toDF())
+    })
   }
 
   /** Multimodal media corpus for the real image-decode surface: rows carry
@@ -150,10 +149,8 @@ object CorpusGen {
       height: Int,
       pixel_md5: String)
 
-  def mediaCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame = {
-    import spark.implicits._
-    spark.range(0, rows, 1, partitions).as[Long].mapPartitions(_.map { i =>
-      def md5(bs: Array[Byte]): String = Surfaces.md5Hex(bs)
+  def mediaCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
+    build(spark, rows, partitions) { i =>
       val (kind, m) = (i % 3) match {
         case 0 => ("media_jpeg", FixtureGen.mediaJpeg(i))
         case 1 => ("media_png", FixtureGen.mediaPng(i))
@@ -171,9 +168,8 @@ object CorpusGen {
         ok = m.format != "binary",
         width = m.width,
         height = m.height,
-        pixel_md5 = if (m.pixels == null) null else md5(m.pixels))
-    }).toDF()
-  }
+        pixel_md5 = if (m.pixels == null) null else Surfaces.md5Hex(m.pixels))
+    }
 
   /** Scanned-PDF corpus for the fax/JBIG2 image-decode surfaces: each row
     * is a one-page PDF whose image XObject is CCITT G4 / G3 1-D / G3 mixed
@@ -192,9 +188,8 @@ object CorpusGen {
       height: Int,
       pixel_md5: String)
 
-  def scannedCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame = {
-    import spark.implicits._
-    spark.range(0, rows, 1, partitions).as[Long].mapPartitions(_.map { i =>
+  def scannedCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
+    build(spark, rows, partitions) { i =>
       val (kind, d, bitmap) = (i % 8) match {
         case 0 => ("scan_g4", FixtureGen.ccittImage(i), FixtureGen.ccittBitmap(i))
         case 1 => ("scan_g3", FixtureGen.ccittImageG3(i), FixtureGen.ccittG3Bitmap(i))
@@ -222,8 +217,7 @@ object CorpusGen {
         width = bitmap.head.length,
         height = bitmap.length,
         pixel_md5 = Surfaces.md5Hex(gray))
-    }).toDF()
-  }
+    }
 
   /** JPX corpus for the header-facts surface (x30): 2 of 3 rows are
     * one-page PDFs with a /JPXDecode image XObject (JP2 box container /
@@ -244,9 +238,8 @@ object CorpusGen {
       components: Int,
       bpc: Int)
 
-  def jpxCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame = {
-    import spark.implicits._
-    spark.range(0, rows, 1, partitions).as[Long].mapPartitions(_.map { i =>
+  def jpxCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
+    build(spark, rows, partitions) { i =>
       if (i % 3 == 2) {
         val d = FixtureGen.jpegImage(i)
         JpxRow(s"https://media.test/jpx_not/$i", new Timestamp(epochMs + i * 1000L),
@@ -257,8 +250,7 @@ object CorpusGen {
         JpxRow(s"https://media.test/jpx_$fmt/$i", new Timestamp(epochMs + i * 1000L),
           d.bytes, null, "en", s"jpx_$fmt", ok = true, fmt, w, h, nc, bpc)
       }
-    }).toDF()
-  }
+    }
 
   /** Audio corpus for the real WAV/PCM decode surface: 2 of 3 rows carry an
     * authored RIFF/PCM payload (header fields + exact sample bytes are
@@ -277,10 +269,8 @@ object CorpusGen {
       n_samples: Int,
       sample_md5: String)
 
-  def audioCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame = {
-    import spark.implicits._
-    spark.range(0, rows, 1, partitions).as[Long].mapPartitions(_.map { i =>
-      def md5(bs: Array[Byte]): String = Surfaces.md5Hex(bs)
+  def audioCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
+    build(spark, rows, partitions) { i =>
       if (i % 3 == 2) {
         AudioRow(s"https://media.test/audio_bin/$i", new Timestamp(epochMs + i * 1000L),
           Array.tabulate[Byte](48)(k => ((k * 29 + i) % 241).toByte), null, "und",
@@ -289,10 +279,9 @@ object CorpusGen {
         val w = FixtureGen.mediaWav(i)
         AudioRow(s"https://media.test/audio_wav/$i", new Timestamp(epochMs + i * 1000L),
           w.bytes, null, "und", "audio_wav", ok = true,
-          w.sampleRate, w.channels, w.bits, w.nSamples, md5(w.pcm))
+          w.sampleRate, w.channels, w.bits, w.nSamples, Surfaces.md5Hex(w.pcm))
       }
-    }).toDF()
-  }
+    }
 
   /** Video corpus for the real MJPEG/AVI frame-decode surface: 2 of 3 rows
     * carry an authored AVI container (header fields, frame count, fps AND
@@ -312,10 +301,8 @@ object CorpusGen {
       n_frames: Int,
       frame_md5s: Seq[String])
 
-  def videoCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame = {
-    import spark.implicits._
-    spark.range(0, rows, 1, partitions).as[Long].mapPartitions(_.map { i =>
-      def md5(bs: Array[Byte]): String = Surfaces.md5Hex(bs)
+  def videoCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
+    build(spark, rows, partitions) { i =>
       if (i % 3 == 2) {
         VideoRow(s"https://media.test/video_bin/$i", new Timestamp(epochMs + i * 1000L),
           Array.tabulate[Byte](56)(k => ((k * 41 + i) % 239).toByte), null, "und",
@@ -324,19 +311,16 @@ object CorpusGen {
         val v = FixtureGen.mediaAvi(i)
         VideoRow(s"https://media.test/video_avi/$i", new Timestamp(epochMs + i * 1000L),
           v.bytes, null, "und", "video_avi", ok = true,
-          v.width, v.height, v.fps, v.nFrames, v.frames.map(md5))
+          v.width, v.height, v.fps, v.nFrames, v.frames.map(Surfaces.md5Hex))
       }
-    }).toDF()
-  }
+    }
 
   /** Variant corpus: same urls and kinds, different body text (for the
     * document-diff surface). Carries the VARIANT's own ground-truth columns
     * (expected/page_texts/toc/...) so the diff surface can be oracled from
     * generator construction facts on both sides. */
-  def variantCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame = {
-    import spark.implicits._
-    val base = spark.range(0, rows, 1, partitions)
-    base.as[Long].mapPartitions(_.map { i =>
+  def variantCorpus(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
+    build(spark, rows, partitions) { i =>
       val d = FixtureGen.kinds((i % FixtureGen.kinds.length).toInt)(i + 1100)
       // the url keeps the ORIGINAL row's identity (same kind by index),
       // everything else is the variant document's own ground truth
@@ -352,6 +336,5 @@ object CorpusGen {
         page_texts = d.pageTexts,
         title = d.title,
         regions = d.regions)
-    }).toDF()
-  }
+    }
 }

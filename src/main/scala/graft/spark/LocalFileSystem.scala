@@ -51,4 +51,12 @@ object LocalFileSystem {
       Files.createDirectories(java.nio.file.Paths.get(warehouse.getPath))
     spark
   }
+
+  /** Deletes `f` and everything under it, in-process: Spark's own
+    * recursive delete forks `rm -rf`. */
+  def deleteTree(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(deleteTree)
+    f.delete(): Unit
+  }
 }

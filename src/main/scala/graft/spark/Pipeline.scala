@@ -843,12 +843,11 @@ object Surfaces {
     * -> no watermark needed; at 100 TB this is the same plan with a real
     * source (Kafka/files) and an Iceberg sink. Runs on the stream session
     * like every stream; the returned table lives in that session. */
-  def streamingExtract(spark0: SparkSession, corpusDir: String, queryName: String): DataFrame = {
+  def streamingExtract(spark0: SparkSession, corpusDir: String): DataFrame = {
     val spark = Streaming.streamSession(spark0)
-    Streaming.runToMemory(corpusDir, queryName) { dir =>
+    Streaming.runToMemory(corpusDir) { dir =>
       Pipeline.extract(spark, Streaming.parquetReader(spark, dir).parquet(dir))
     }
-    spark.table(queryName)
   }
 }
 
@@ -859,10 +858,9 @@ object Surfaces {
 object Streaming {
   import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout,
-    OutputMode, StreamingQuery, Trigger}
+  import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, GroupState,
+    GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
   import org.apache.spark.sql.types.StructType
-  import scala.jdk.CollectionConverters._
 
   /** Streaming state-partition sizing (round 7, guide §2.2 + §5): a
     * stateful micro-batch pays one state-store open/commit PER SHUFFLE
@@ -961,33 +959,32 @@ object Streaming {
     maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
   }
 
-  /** The one stream runner: runs `plan` over the parquet table at `source`
-    * as an AvailableNow stream into the memory table `queryName`, or, given
-    * `eachBatch`, hands each micro-batch to that function instead, and
-    * returns the finished query. The file source needs a directory, so a
-    * single-file table is copied into a `stream_src*` temp dir for the
-    * run; the copy is deleted once the query has terminated (the sink holds
-    * the output, nothing reads the copy afterwards). */
-  private[spark] def runToMemory(source: String, queryName: String,
-      eachBatch: Option[(DataFrame, Long) => Unit] = None)(plan: String => Dataset[_]): StreamingQuery = {
+  /** Runs `plan` over the parquet table at `source` as an AvailableNow
+    * stream into a memory table and returns the table's rows once the
+    * query has terminated. The runner names the table, unique per call, so
+    * no caller picks a name and concurrent calls cannot share a sink. */
+  private[spark] def runToMemory(source: String)(plan: String => Dataset[_]): DataFrame = {
+    val name = "stream_" + java.util.UUID.randomUUID().toString.replace('-', '_')
+    run(source)(plan(_).writeStream.format("memory").queryName(name)).sparkSession.table(name)
+  }
+
+  /** The one stream runner: starts the stream `start` builds over the
+    * directory holding the parquet table at `source`, with an AvailableNow
+    * trigger, and returns the query once it has terminated. The file
+    * source needs a directory, so a single-file table is copied into a
+    * `stream_src*` temp dir for the run; the copy is deleted once the query
+    * has terminated (the sink holds the output, nothing reads the copy
+    * afterwards). */
+  private def run(source: String)(start: String => DataStreamWriter[_]): StreamingQuery = {
     import java.nio.file.Files
     val src = java.nio.file.Paths.get(source)
     val copy = if (Files.isDirectory(src)) None else Some(Files.createTempDirectory("stream_src").toFile)
     try {
       val dir = copy.fold(source) { d => Files.copy(src, d.toPath.resolve(src.getFileName)); d.toString }
-      val stream = plan(dir)
-      val q = (eachBatch match {
-        case Some(f) => stream.toDF().writeStream.foreachBatch(f)
-        case None => stream.writeStream.format("memory")
-      }).queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val q = start(dir).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       q
-    } finally copy.foreach { dir =>
-      dir.listFiles().foreach(_.delete())
-      dir.delete()
-    }
+    } finally copy.foreach(LocalFileSystem.deleteTree)
   }
 
   /** The windowed-count streaming plan: tumbling 1-hour windows with a
@@ -1015,10 +1012,9 @@ object Streaming {
     * retain every window ever seen: a state-store OOM at 100 TB.) Windows
     * still inside the final watermark stay in state and are not emitted —
     * the price of eviction on a finite run. */
-  def windowedEventCounts(spark0: SparkSession, eventsDir: String, queryName: String): DataFrame = {
+  def windowedEventCounts(spark0: SparkSession, eventsDir: String): DataFrame = {
     val spark = streamSession(spark0)
-    runToMemory(eventsDir, queryName)(windowedEventCountsPlan(spark, _))
-    spark.table(queryName)
+    runToMemory(eventsDir)(windowedEventCountsPlan(spark, _))
   }
 
   /** Streaming exact-dedup of an at-least-once delivery stream. The input
@@ -1029,9 +1025,9 @@ object Streaming {
     * time — constant state on an unbounded stream, unlike a plain
     * dropDuplicates whose key set grows forever (the same bounded-state
     * contract as the windowed counts and sessions). */
-  def dedupedEventStream(spark0: SparkSession, eventsDir: String, queryName: String): DataFrame = {
+  def dedupedEventStream(spark0: SparkSession, eventsDir: String): DataFrame = {
     val spark = eventOnly(streamSession(spark0))
-    runToMemory(eventsDir, queryName) { dir =>
+    runToMemory(eventsDir) { dir =>
       val reader = parquetReader(spark, dir)
       def src = reader.parquet(dir)
         .select(col("event_id").cast("long").as("event_id"),
@@ -1040,7 +1036,6 @@ object Streaming {
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark("event_id")
     }
-    spark.table(queryName)
   }
 
   /** Stream-stream event-time join (click -> purchase attribution): a
@@ -1051,13 +1046,13 @@ object Streaming {
     * stream-stream join would buffer both streams forever). Inner join:
     * matches emit as soon as both rows have arrived; the watermark only
     * gates state cleanup. */
-  def attributedPurchases(spark0: SparkSession, eventsDir: String, queryName: String): DataFrame = {
+  def attributedPurchases(spark0: SparkSession, eventsDir: String): DataFrame = {
     // isolated child session with state-sized shuffle partitions
     // (streamSession — the r5 measurement that motivated the sizing,
     // 8s -> ~3s at 8 vs 32, was made on this query; the partition count
     // is pinned at stream START and baked into the checkpoint)
     val spark = eventOnly(streamSession(spark0))
-    runToMemory(eventsDir, queryName) { dir =>
+    runToMemory(eventsDir) { dir =>
       val reader = parquetReader(spark, dir)
       def src(tpe: String, alias: String) = reader.parquet(dir)
         .filter(col("event_type") === tpe)
@@ -1070,7 +1065,6 @@ object Streaming {
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("interval 1 hour"))
     }
-    spark.table(queryName)
   }
 
   /** Streaming incremental dedup (the streaming production shape of d11):
@@ -1088,8 +1082,7 @@ object Streaming {
     * Returns doc_b -> cluster_old: the matched documents and their oldest
     * matching index doc. */
   def incrementalDedupPairs(spark0: SparkSession, indexDir: String,
-      deltaDir: String, deltaSchema: StructType,
-      queryName: String): Map[Long, Long] = {
+      deltaDir: String, deltaSchema: StructType): Map[Long, Long] = {
     val spark = streamSession(spark0)
     val index = Queries.signatureIndex(spark, indexDir)
     val best = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -1100,8 +1093,8 @@ object Streaming {
         if (best.get(b).forall(a < _)) best(b) = a
       })
     }
-    runToMemory(deltaDir, queryName, Some(walk))(dir =>
-      parquetReader(spark, dir, schema = Some(deltaSchema)).parquet(dir))
+    run(deltaDir)(dir =>
+      parquetReader(spark, dir, schema = Some(deltaSchema)).parquet(dir).writeStream.foreachBatch(walk))
     best.synchronized(best.toMap)
   }
 
@@ -1111,16 +1104,6 @@ object Streaming {
   /** Session idle gap: a user key whose last event is this far behind the
     * event-time watermark has its session finalized and its state DROPPED. */
   val SessionGapMs: Long = 30 * 60 * 1000L
-
-  /** State rows remaining after the last userSessions run (from the final
-    * StreamingQueryProgress) — a test hook for the bounded-keys contract. */
-  @volatile var lastSessionStateRows: Long = -1L
-
-  /** Custom state-store metric keys from the last userSessions run — a
-    * test hook proving WHICH provider actually served the stream (RocksDB
-    * reports rocksdb* metrics; the HDFS-backed default reports none of
-    * them), not merely that the conf was set. */
-  @volatile var lastSessionStateMetrics: Set[String] = Set.empty
 
   /** Custom keyed state: per-user EVENT-TIME sessionization via
     * flatMapGroupsWithState (KeyValueGroupedDataset). Sessions are defined
@@ -1137,11 +1120,11 @@ object Streaming {
     * a KMV sketch, exact below K), and the key count is bounded by
     * event-time eviction. Batch inserts go through Kmv.bulkAdd (one
     * sort + merge per session per micro-batch), not copy-on-insert. */
-  def userSessions(spark0: SparkSession, eventsDir: String, queryName: String,
+  def userSessions(spark0: SparkSession, eventsDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val spark = streamSession(spark0)
     import spark.implicits._
-    val q = runToMemory(eventsDir, queryName) { dir =>
+    runToMemory(eventsDir) { dir =>
       parquetReader(spark, dir, maxFilesPerTrigger).parquet(dir)
         .select(col("user_id").cast("long"), col("ts").cast("timestamp").as("ts"), col("event_type"))
         .withWatermark("ts", "10 minutes")
@@ -1189,15 +1172,6 @@ object Streaming {
             }
         }
     }
-    lastSessionStateRows = q.recentProgress.reverse
-      .find(_.stateOperators.nonEmpty)
-      .map(_.stateOperators(0).numRowsTotal)
-      .getOrElse(-1L)
-    lastSessionStateMetrics = q.recentProgress.reverse
-      .find(_.stateOperators.nonEmpty)
-      .map(_.stateOperators(0).customMetrics.keySet.asScala.toSet)
-      .getOrElse(Set.empty)
-    spark.table(queryName)
   }
 
   /** Collapse the Append-mode session snapshot stream to one row per

@@ -225,14 +225,8 @@ object Queries {
       java.lang.Integer.toHexString(System.identityHashCode(spark))
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_$sid"
     if (cleanupRegistered.add(base))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(base))
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        LocalFileSystem.deleteTree(new java.io.File(base))))
     (sid, base)
   }
 
@@ -335,18 +329,7 @@ object Queries {
     """SELECT md5(text) AS content_hash, count(*) AS copies, min(doc_id) AS keeper_doc_id
            |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)
 
-  /** Identical 48-bit token hash on both engines:
-    * fold (acc*31 + charcode) % 1000000007 over the token's chars.
-    * Round 7: the hot dedup paths use the compiled Kernels.tokenHash
-    * instead (same arithmetic, pinned by KernelParitySpec); this
-    * expression form remains the cross-engine reference and hashes the
-    * (short) url in packQuery. */
-  private[graft] def tokenHashCol(tok: Column): Column =
-    aggregate(
-      sequence(lit(1), length(tok)),
-      lit(7L),
-      (acc, i) => pmod(acc * 31 + ascii(substring(tok, i, lit(1))).cast("long"), lit(1000000007L)))
-
+  /** [[Kernels.tokenHash]] in DuckDB: the oracles' side of every token hash. */
   private val duckTokenHash =
     "list_reduce(list_prepend(CAST(7 AS BIGINT), [CAST(ord(t[i:i]) AS BIGINT) for i in range(1, len(t)+1)]), (a, b) -> (a*31 + b) % 1000000007)"
 
@@ -390,7 +373,8 @@ object Queries {
       out.toArray
     }
 
-    /** tokenHashCol: fold (acc*31 + codepoint) % 1e9+7 from acc0 = 7. */
+    /** The token hash both engines compute ([[duckTokenHash]] on DuckDB's
+      * side): fold (acc*31 + codepoint) % 1e9+7 from acc0 = 7. */
     def tokenHash(tok: String): Long = {
       var h = 7L
       var i = 0
@@ -1559,7 +1543,7 @@ object Queries {
         buildSignatureIndex(docs, s"$base/sig"),
         delta.write.mode("overwrite").parquet(deltaDir))
       val oldMatch = graft.spark.Streaming.incrementalDedupPairs(spark, s"$base/sig",
-        deltaDir, delta.schema, "x31_" + java.lang.Long.toHexString(System.nanoTime()))
+        deltaDir, delta.schema)
       // base = docs with >=1 token (sigKeyed), as d11's and the oracle's
       // dkeyed base: an empty-text delta doc must not emit a 'new' row
       // that the oracle lacks
@@ -2753,13 +2737,16 @@ object Queries {
     (spark, _) => {
       // stream the SAME 180-row corpus the batch queries use, so the
       // streaming extraction is oracle-comparable to the generator's
-      // ground truth (streaming and batch must agree byte-for-byte)
-      val dir = java.nio.file.Files.createTempDirectory("stream_corpus").toString
-      CorpusGen.inputView(CorpusGen.corpus(spark, rows = 180, partitions = 8))
-        .write.mode("overwrite").parquet(dir)
-      val name = "stream_extract_" + java.lang.Long.toHexString(System.nanoTime())
-      Surfaces.streamingExtract(spark, dir, name)
-        .select("url", "mode", "ok", "chars", "text").orderBy("url")
+      // ground truth (streaming and batch must agree byte-for-byte). The
+      // memory sink holds the rows once the stream has terminated, so the
+      // source directory goes then
+      val dir = java.nio.file.Files.createTempDirectory("stream_corpus").toFile
+      try {
+        CorpusGen.inputView(CorpusGen.corpus(spark, rows = 180, partitions = 8))
+          .write.mode("overwrite").parquet(dir.toString)
+        Surfaces.streamingExtract(spark, dir.toString)
+          .select("url", "mode", "ok", "chars", "text").orderBy("url")
+      } finally LocalFileSystem.deleteTree(dir)
     },
     s"""SELECT url, $auxModeSql AS mode, TRUE AS ok,
             |  CAST(len(text) AS INT) AS chars, text
@@ -2875,8 +2862,7 @@ object Queries {
       // table: redelivered copies (every 7th event_id, constructed
       // identically in both engines... and invisible to the oracle
       // precisely because a correct dedup removes them all)
-      val s = graft.spark.Streaming.dedupedEventStream(spark, s"$dir/events.parquet",
-        "stream_dedup_" + java.lang.Long.toHexString(System.nanoTime()))
+      val s = graft.spark.Streaming.dedupedEventStream(spark, s"$dir/events.parquet")
       s.groupBy("event_type")
         .agg(count(lit(1)).as("events"),
           countDistinct(col("event_id")).as("distinct_events"))
@@ -2890,8 +2876,7 @@ object Queries {
 
   private val x22 = Q(
     (spark, dir) => {
-      val j = graft.spark.Streaming.attributedPurchases(spark, s"$dir/events.parquet",
-        "stream_attr_" + java.lang.Long.toHexString(System.nanoTime()))
+      val j = graft.spark.Streaming.attributedPurchases(spark, s"$dir/events.parquet")
       j.groupBy(col("c_user").as("user_id"))
         .agg(count(lit(1)).as("attributed_pairs"),
           countDistinct(col("p_id")).as("purchases"),
@@ -3015,8 +3000,7 @@ object Queries {
 
   private val x15 = Q(
     (spark, dir) =>
-      graft.spark.Streaming.windowedEventCounts(spark, s"$dir/events.parquet",
-        "stream_win_" + java.lang.Long.toHexString(System.nanoTime()))
+      graft.spark.Streaming.windowedEventCounts(spark, s"$dir/events.parquet")
         .orderBy("window_start", "event_type"),
     // Append-mode semantics are pure SQL: tumbling 1h windows whose end the
     // final watermark (max ts - 10 min) has passed — so a batch engine can
@@ -3038,8 +3022,7 @@ object Queries {
       // finalizedSessions collapses the snapshot stream to one row per
       // session and drops phantom stale-firstTs snapshots, so the result
       // is identical whether the stream arrived as one batch or many
-      val sess = graft.spark.Streaming.userSessions(spark, s"$dir/events.parquet",
-        "stream_sess_" + java.lang.Long.toHexString(System.nanoTime()))
+      val sess = graft.spark.Streaming.userSessions(spark, s"$dir/events.parquet")
       graft.spark.Streaming.finalizedSessions(sess)
         .orderBy("user_id", "first_ts")
     },
@@ -3408,6 +3391,10 @@ object Queries {
   private def longInput(spark: SparkSession): DataFrame =
     CorpusGen.inputView(CorpusGen.longCorpus(spark, rows = 24, partitions = 4))
 
+  /** [[Kernels.tokenHash]] of the url, null for a null url. */
+  private val urlTokenHash = udf((url: String) =>
+    if (url == null) null else java.lang.Long.valueOf(Kernels.tokenHash(url)))
+
   /** Training-SEQUENCE packing (the trainer-side op downstream of
     * chunking): chunks are assigned to url-hash shards, and within each
     * shard packed in (url, chunk) order into fixed-capacity sequences —
@@ -3426,7 +3413,7 @@ object Queries {
     val sp2 = spark
     import sp2.implicits._
     greedyChunkQuery(spark, input, budget)
-      .select(pmod(tokenHashCol(col("url")), lit(shards)).cast("int").as("shard"),
+      .select(pmod(urlTokenHash(col("url")), lit(shards)).cast("int").as("shard"),
         col("url"), col("chunk"), col("tokens"))
       .as[(Int, String, Int, Long)]
       .groupByKey(_._1)

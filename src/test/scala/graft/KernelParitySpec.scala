@@ -128,6 +128,14 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- the legacy expression forms the kernels replaced ----
 
+  /** Token hash: fold (acc*31 + charcode) % 1000000007 over the token's
+    * chars (Queries.Kernels.tokenHash; c6 hashes the url with it). */
+  private def tokenHashCol(tok: Column): Column =
+    aggregate(
+      sequence(lit(1), length(tok)),
+      lit(7L),
+      (acc, i) => pmod(acc * 31 + ascii(substring(tok, i, lit(1))).cast("long"), lit(1000000007L)))
+
   /** Row-local distinct-token array (whitespace split, empties dropped). */
   private def toksCol: Column =
     array_distinct(filter(split(col("text"), "\\s+"), x => length(x) > 0))
@@ -155,7 +163,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def legacySig(): DataFrame =
     df()
       .select(col("doc_id"),
-        transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
+        transform(toksCol, tok => tokenHashCol(tok)).as("xs"))
       .filter(size(col("xs")) > 0)
       .select(col("doc_id"),
         array_sort(array_distinct(col("xs"))).as("hs"),
@@ -167,6 +175,17 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
           minPerm(col("xs"), 7919, 7507))).as("band0"),
         md5(concat_ws(":", minPerm(col("xs"), 104183, 337),
           minPerm(col("xs"), 909091, 5861))).as("band1"))
+
+  test("token hash kernel == legacy expression on every non-empty string") {
+    // c6 hashes the url with the kernel; on "" the expression folds over
+    // sequence(1, 0) = [1, 0] and differs from the kernel's (and DuckDB's) 7
+    val sp = spark
+    import sp.implicits._
+    val rows = samples.toDF("s").select(col("s"), tokenHashCol(col("s")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    for ((s, h) <- rows if s.nonEmpty) assert(Queries.Kernels.tokenHash(s) == h, s)
+    assert(Queries.Kernels.tokenHash("") == 7L && rows("") != 7L)
+  }
 
   test("minhash signature kernel == legacy expression (d2/d5/d10 path)") {
     // d2's own output (d5 groups on its band0, d10 links on band0/band1),
@@ -197,7 +216,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("simhash kernel == legacy nested-aggregate expression (d3)") {
     val legacy = df()
       .select(col("doc_id"),
-        transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
+        transform(toksCol, tok => tokenHashCol(tok)).as("xs"))
       .filter(size(col("xs")) > 0)
       .select(col("doc_id"),
         expr("""aggregate(sequence(0, 15), CAST(0 AS BIGINT), (acc, b) ->
@@ -215,7 +234,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("shingle kernel == legacy rolling-fold expression (d8/d9)") {
     val w = regexp_extract_all(col("text"), lit("\\S+"), lit(0))
     val legacy = df()
-      .select(col("doc_id"), transform(w, tok => Queries.tokenHashCol(tok)).as("th"))
+      .select(col("doc_id"), transform(w, tok => tokenHashCol(tok)).as("th"))
       .select(col("doc_id"), shingleGramsCol.as("g"))
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
@@ -260,7 +279,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // whitespace-only strings in the sample set
     val legacy = df()
       .select(col("doc_id"),
-        transform(toksCol, tok => Queries.tokenHashCol(tok)).as("xs"))
+        transform(toksCol, tok => tokenHashCol(tok)).as("xs"))
       .filter(size(col("xs")) > 0)
       .select("doc_id").orderBy("doc_id").collect().map(_.getLong(0)).toSeq
     val kept = df().filter(col("text").rlike("\\S"))

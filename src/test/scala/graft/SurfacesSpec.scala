@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.core._
@@ -278,7 +279,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("stream_test").toString
     val corpus = CorpusGen.corpus(spark, rows = 22, partitions = 2).cache()
     CorpusGen.inputView(corpus).write.mode("overwrite").parquet(dir)
-    val streamed = Surfaces.streamingExtract(spark, dir, "stream_spec")
+    val streamed = Surfaces.streamingExtract(spark, dir)
     val joined = streamed.join(corpus.select("url", "expected"), Seq("url"))
     assert(joined.count() == 22)
     assert(joined.filter(col("text") === col("expected")).count() == 22)
@@ -286,7 +287,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stateful streaming: windowed counts + keyed sessions over events") {
     val dir = "/root/testdata/sf0.001"
-    val win = graft.spark.Streaming.windowedEventCounts(spark, s"$dir/events.parquet", "t_win")
+    val win = graft.spark.Streaming.windowedEventCounts(spark, s"$dir/events.parquet")
     // Append mode emits exactly the windows the final watermark
     // (max event ts - 10 min) has passed; trailing windows stay in state.
     val events = spark.read.parquet(s"$dir/events.parquet")
@@ -299,7 +300,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("window.end") <= lit(wm))
     assert(win.count() == batch.count(), s"win=${win.count()} batch=${batch.count()}")
     assert(win.count() > 0)
-    val sess = graft.spark.Streaming.userSessions(spark, s"$dir/events.parquet", "t_sess")
+    val (sess, progress) = streamed(graft.spark.Streaming.userSessions(spark, s"$dir/events.parquet"))
     val users = spark.read.parquet(s"$dir/events.parquet").select("user_id").distinct().count()
     assert(sess.select("user_id").distinct().count() == users)
     // sessions split on >30-min event-time gaps: (user, firstTs) identifies
@@ -318,7 +319,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gap = graft.spark.Streaming.SessionGapMs
     val surviveLt = lastPerUser.count(_.getTimestamp(1).getTime + gap >= wmMs)
     val surviveLe = lastPerUser.count(_.getTimestamp(1).getTime + gap > wmMs)
-    val stateRows = graft.spark.Streaming.lastSessionStateRows
+    val stateRows = lastStateOperator(progress).fold(-1L)(_.numRowsTotal)
     assert(stateRows >= 0, "no state-operator progress captured")
     assert(stateRows < users, s"no key was evicted (state=$stateRows users=$users)")
     assert(stateRows == surviveLt || stateRows == surviveLe,
@@ -355,8 +356,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     addFile(fileA, "a.parquet", 1000000000L)
     addFile(fileB, "b.parquet", 2000000000L)
-    val raw = graft.spark.Streaming.userSessions(spark, dir, "t_sess_mb",
-      maxFilesPerTrigger = Some(1))
+    val raw = graft.spark.Streaming.userSessions(spark, dir, maxFilesPerTrigger = Some(1))
     // the raw Append stream really does hold a stale-firstTs snapshot for
     // user 1 (the scenario under test)…
     assert(raw.select("user_id", "firstTs").distinct()
@@ -444,8 +444,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dir = Files.createTempDirectory(s"sess_prop_$seed").toString
       for ((fileIdx, pos) <- perm.zipWithIndex)
         addFile(dir, fileBlocks(fileIdx), f"f$pos%03d.parquet", 1000000000L + pos * 1000L)
-      val raw = graft.spark.Streaming.userSessions(spark, dir, s"t_sess_prop_$seed",
-        maxFilesPerTrigger = Some(1))
+      val raw = graft.spark.Streaming.userSessions(spark, dir, maxFilesPerTrigger = Some(1))
       if (raw.select("user_id", "firstTs").distinct().count() > oracle.length) staleSeeds += 1
       val fin = graft.spark.Streaming.finalizedSessions(raw)
         .orderBy("user_id", "first_ts").collect()
@@ -468,16 +467,17 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val dir = "/root/testdata/sf0.001"
-    val rocks = graft.spark.Streaming.finalizedSessions(
-      graft.spark.Streaming.userSessions(ss, s"$dir/events.parquet", "t_sess_rocks"))
+    val (rocksRaw, progress) = streamed(graft.spark.Streaming.userSessions(ss, s"$dir/events.parquet"))
+    val rocks = graft.spark.Streaming.finalizedSessions(rocksRaw)
       .orderBy("user_id", "first_ts").collect()
     // hard engagement proof: the run's state operator reported rocksdb*
     // custom metrics — the provider actually served the stream, the conf
     // didn't just sit unread
-    assert(graft.spark.Streaming.lastSessionStateMetrics.exists(_.startsWith("rocksdb")),
-      s"no rocksdb metrics: ${graft.spark.Streaming.lastSessionStateMetrics}")
+    import scala.jdk.CollectionConverters._
+    val metrics = lastStateOperator(progress).fold(Set.empty[String])(_.customMetrics.keySet.asScala.toSet)
+    assert(metrics.exists(_.startsWith("rocksdb")), s"no rocksdb metrics: $metrics")
     val base = graft.spark.Streaming.finalizedSessions(
-      graft.spark.Streaming.userSessions(spark, s"$dir/events.parquet", "t_sess_hdfs"))
+      graft.spark.Streaming.userSessions(spark, s"$dir/events.parquet"))
       .orderBy("user_id", "first_ts").collect()
     assert(rocks.length == base.length && rocks.sameElements(base),
       s"rocks=${rocks.length} base=${base.length}")
@@ -604,17 +604,16 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = events.count()
     val redelivered = n + events.filter(pmod(col("event_id"), lit(7)) === 0).count()
     assert(redelivered > n, "the redelivery construction must add duplicates")
-    val deduped = graft.spark.Streaming.dedupedEventStream(
-      spark, s"$dir/events.parquet", "t_dedup")
+    val deduped = graft.spark.Streaming.dedupedEventStream(spark, s"$dir/events.parquet")
     // every duplicate dropped, every original kept, ids unique
     assert(deduped.count() == n, s"deduped=${deduped.count()} expected=$n (input $redelivered)")
     assert(deduped.select("event_id").distinct().count() == n)
   }
 
-  /** The ids of the micro-batches the stream named `queryName` runs inside
-    * `body`, read off the context's listener bus (streams run on child
-    * sessions, and their progress events reach every SparkListener). */
-  private def batchIds(queryName: String)(body: => Unit): Seq[Long] = {
+  /** `body`'s value and the progress, batch by batch, of the one stream
+    * `body` starts, read off the context's listener bus (streams run on
+    * child sessions, and their progress events reach every SparkListener). */
+  private def streamed[T](body: => T): (T, Seq[StreamingQueryProgress]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
@@ -623,20 +622,28 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     spark.sparkContext.addSparkListener(listener)
     def seen = events.toArray.toSeq
-    def runs = seen.collect { case e: QueryStartedEvent if e.name == queryName => e.runId }.toSet
-    try {
-      body
+    def runs = seen.collect { case e: QueryStartedEvent => e.runId }.toSet
+    val out = try {
+      val v = body
       // the bus delivers asynchronously; a run's termination comes last
       val deadline = System.nanoTime() + 60L * 1000000000L
       while ((runs.isEmpty || !runs.forall(r => seen.exists {
           case e: QueryTerminatedEvent => e.runId == r
           case _ => false
         })) && System.nanoTime() < deadline) Thread.sleep(20)
+      v
     } finally spark.sparkContext.removeSparkListener(listener)
     val rs = runs
-    assert(rs.size == 1, s"$queryName ran ${rs.size} times")
-    seen.collect { case e: QueryProgressEvent if rs(e.progress.runId) => e.progress.batchId }
+    assert(rs.size == 1, s"${rs.size} streams ran")
+    (out, seen.collect { case e: QueryProgressEvent if rs(e.progress.runId) => e.progress })
   }
+
+  /** The ids of the micro-batches of the one stream `body` starts. */
+  private def batchIds(body: => Unit): Seq[Long] = streamed(body)._2.map(_.batchId)
+
+  /** The state operator of a stream's last batch that reported one. */
+  private def lastStateOperator(progress: Seq[StreamingQueryProgress]) =
+    progress.reverse.find(_.stateOperators.nonEmpty).map(_.stateOperators(0))
 
   test("x21 and x22 run no no-data batch; the windowed counts keep theirs") {
     // a dedup and an inner stream-stream join emit only for data: a
@@ -644,16 +651,16 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Append windows in the no-data batch after the data.
     val events = "/root/testdata/sf0.001/events.parquet"
     var rows = 0L
-    assert(batchIds("t_join_batches") {
-      rows = graft.spark.Streaming.attributedPurchases(spark, events, "t_join_batches").count()
+    assert(batchIds {
+      rows = graft.spark.Streaming.attributedPurchases(spark, events).count()
     } == Seq(0L))
     assert(rows > 0)
-    assert(batchIds("t_dedup_batches") {
-      rows = graft.spark.Streaming.dedupedEventStream(spark, events, "t_dedup_batches").count()
+    assert(batchIds {
+      rows = graft.spark.Streaming.dedupedEventStream(spark, events).count()
     } == Seq(0L))
     assert(rows > 0)
-    assert(batchIds("t_win_batches") {
-      rows = graft.spark.Streaming.windowedEventCounts(spark, events, "t_win_batches").count()
+    assert(batchIds {
+      rows = graft.spark.Streaming.windowedEventCounts(spark, events).count()
     } == Seq(0L, 1L))
     assert(rows > 0)
   }
@@ -669,12 +676,12 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
       body
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     }
-    def x22(name: String): Unit = assert(graft.spark.Streaming.attributedPurchases(
-      spark, s"$dir/events.parquet", name).count() > 0)
+    def x22(): Unit = assert(graft.spark.Streaming.attributedPurchases(
+      spark, s"$dir/events.parquet").count() > 0)
     def x31(): Unit =
       assert(graft.spark.Queries.queries("x31_stream_incremental")(spark, dir).collect().nonEmpty)
-    compiles(x22("t_codegen_first"))
-    assert(compiles(x22("t_codegen_second")) == 0, "x22's second call compiled")
+    compiles(x22())
+    assert(compiles(x22()) == 0, "x22's second call compiled")
     compiles(x31())
     assert(compiles(x31()) == 0, "x31's second call compiled")
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
@@ -682,15 +689,29 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stream runs delete the temp copy of a single-file source") {
     // the file source needs a directory: a single-file table is copied into
-    // a stream_src* temp dir, which must not outlive the query
+    // a stream_src* temp dir, which must not outlive the query; x12 writes
+    // its corpus to a stream_corpus* dir, which must not outlive its stream
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def copies = tmp.list().filter(_.startsWith("stream_src")).toSet
+    def copies = tmp.list().filter(n => n.startsWith("stream_src") || n.startsWith("stream_corpus")).toSet
     val before = copies
     val win = graft.spark.Streaming.windowedEventCounts(
-      spark, "/root/testdata/sf0.001/events.parquet", "t_win_copy")
+      spark, "/root/testdata/sf0.001/events.parquet")
     assert(win.count() > 0)
+    val x12 = graft.spark.Queries.queries("x12_streaming_extract")(spark, "/root/testdata/sf0.001")
+    assert(x12.count() == 180)
     val left = copies -- before
     assert(left.isEmpty, s"source copies left in $tmp: $left")
+  }
+
+  test("two concurrent calls of one stream entry each return every row") {
+    // the runner names each memory sink: concurrent calls cannot share one
+    val events = "/root/testdata/sf0.001/events.parquet"
+    def x22() = graft.spark.Streaming.attributedPurchases(spark, events).count()
+    val alone = x22()
+    assert(alone > 0)
+    @volatile var other = -1L
+    val mine = graft.spark.Queries.inParallel(spark)({ other = x22() }, x22())
+    assert((mine, other) == (alone, alone))
   }
 
   /** The commands of the OS processes `body` starts, recorded in-process
@@ -727,7 +748,7 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(events).count() > 0)
     var pairs = 0L
     val forks = processStarts {
-      pairs = graft.spark.Streaming.attributedPurchases(spark, events, "t_nofork").count()
+      pairs = graft.spark.Streaming.attributedPurchases(spark, events).count()
     }
     val n = forks.size
     assert(n == 0, s"$n processes started, e.g. ${forks.take(3).mkString("; ")}")
