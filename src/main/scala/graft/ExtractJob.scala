@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.spark.{LocalFileSystem, Pipeline}
+import graft.spark.Pipeline
 
 /** Production extraction job (spark-submit main).
   *
@@ -39,7 +39,6 @@ object ExtractJob {
         .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
-    LocalFileSystem.register(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     val input = spark.read.parquet(inputDir)

@@ -12,7 +12,7 @@ object Footnotes {
 
   def inlineFootnotes(graphics: List[Rect], ls: List[Line]): List[Line] = {
     if (ls.isEmpty) return ls
-    val bodySize = Util.medianOf(ls.map(_.size))
+    val bodySize = Util.medianOf(Util.lineSizes(ls))
     val (lo, hi) = Layout.pageBaselineExtent(ls)
     val bandTop = lo + 0.35 * (hi - lo)
     val ruleYs = graphics.collect {

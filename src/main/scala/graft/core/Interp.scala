@@ -3,6 +3,7 @@ package graft.core
 import java.nio.charset.StandardCharsets
 
 import scala.collection.immutable.TreeMap
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import PObj._
 import DocStructure.{Dict, Document, emptyDict}
@@ -42,7 +43,13 @@ object Interp {
       val collectImages: Boolean) {
     var gs: GS = initialGS
     var gsStack: List[GS] = Nil
-    var ts: Option[(Mat, Mat)] = None // (tm, tlm)
+    /** A text state is set (from BT, or from a Tm anywhere, until ET): the
+      * text matrix `tm` and line matrix `tlm`, each as (a, b, c, d, e, f). */
+    var inText: Boolean = false
+    val tm = new Array[Double](6)
+    val tlm = new Array[Double](6)
+    val trm = new Array[Double](4) // renderingOrigin's result
+    var textBuf = new Array[Char](64) // a shown string's text, see textRoom
     val items = new ArrayBuffer[PageItem]
     val images = new ArrayBuffer[(Int, Rect)]
     var path: List[(Double, Double)] = Nil
@@ -227,14 +234,12 @@ object Interp {
   private def latin1(buf: Array[Byte], start: Int, len: Int): String =
     new String(buf, start, len, StandardCharsets.ISO_8859_1)
 
-  private def readName(cur: Cursor): AnyRef = {
+  /** A name token: its bytes, the leading '/' included, as chars 0-255. */
+  private[graft] def readName(cur: Cursor): AnyRef = {
     val start = cur.pos
     cur.pos += 1
-    val sb = new StringBuilder("/")
-    while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) {
-      sb.append(cur.peek.toChar); cur.pos += 1
-    }
-    if (cur.pos - start > 1) PName(sb.toString)
+    while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) cur.pos += 1
+    if (cur.pos - start > 1) PName(latin1(cur.buf, start, cur.pos - start))
     else { cur.pos = start; null }
   }
 
@@ -330,28 +335,35 @@ object Interp {
     null
   }
 
-  /** Known operator names interned so hot streams don't allocate a string
-    * per operator token. */
-  private val knownOps: java.util.HashMap[String, String] = {
-    val m = new java.util.HashMap[String, String]
-    for (op <- List("q", "Q", "cm", "BT", "ET", "Tf", "Tc", "Tw", "Tz", "TL", "Ts",
+  /** A token's bytes packed into a Long. Operator chars are ASCII and
+    * non-zero, so tokens of up to 8 chars pack to distinct keys. */
+  private def opKey(buf: Array[Byte], start: Int, len: Int): Long = {
+    var key = 0L
+    var i = start
+    while (i < start + len) { key = (key << 8) | (buf(i) & 0xff); i += 1 }
+    key
+  }
+
+  /** Known operator names by packed key, so a known operator token
+    * resolves to its one String instance without building a String. */
+  private val knownOps: mutable.LongMap[String] = mutable.LongMap.from(
+    List("q", "Q", "cm", "BT", "ET", "Tf", "Tc", "Tw", "Tz", "TL", "Ts",
       "Tr", "Td", "TD", "Tm", "T*", "Tj", "TJ", "Do", "m", "l", "c", "v", "y",
       "re", "h", "n", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "W", "W*",
       "BDC", "BMC", "EMC", "BI", "ID", "EI", "gs", "cs", "CS", "rg", "RG", "g",
       "G", "k", "K", "d", "i", "j", "J", "M", "ri", "sh", "w", "SC", "SCN",
-      "sc", "scn", "d0", "d1", "MP", "DP", "BX", "EX", "true", "false", "null"))
-      m.put(op, op)
-    m
-  }
+      "sc", "scn", "d0", "d1", "MP", "DP", "BX", "EX", "true", "false", "null")
+      .map(op => opKey(op.getBytes(StandardCharsets.ISO_8859_1), 0, op.length) -> op))
+  private val MaxKnownOpLen = knownOps.values.map(_.length).max
 
-  private def readOperator(cur: Cursor): AnyRef = {
+  private[graft] def readOperator(cur: Cursor): AnyRef = {
     val start = cur.pos
     while (!cur.atEnd && isOpChar(cur.peek)) cur.pos += 1
-    if (cur.pos == start) null
+    val len = cur.pos - start
+    if (len == 0) null
     else {
-      val raw = latin1(cur.buf, start, cur.pos - start)
-      val interned = knownOps.get(raw)
-      if (interned != null) interned else raw
+      val known = if (len > MaxKnownOpLen) null else knownOps.getOrNull(opKey(cur.buf, start, len))
+      if (known != null) known else latin1(cur.buf, start, len)
     }
   }
 
@@ -437,8 +449,11 @@ object Interp {
       val b = st.nbuf
       st.gs.ctm = Mat(b(5), b(4), b(3), b(2), b(1), b(0)).multiply(st.gs.ctm)
     }
-    case "BT" => st.ts = Some((Mat.identity, Mat.identity))
-    case "ET" => st.ts = None
+    case "BT" =>
+      st.inText = true
+      setMat(st.tm, 1, 0, 0, 1, 0, 0)
+      setMat(st.tlm, 1, 0, 0, 1, 0, 0)
+    case "ET" => st.inText = false
     case "Tf" => st.operands match {
       case PNum(size) :: PName(font) :: _ => resolveFont(font, size, st)
       case _ => ()
@@ -456,36 +471,29 @@ object Interp {
       textTd(st.nbuf(1), ty, st)
     }
     case "Tm" => if (popNums(6, st)) {
+      // sets the text state also outside BT..ET
       val b = st.nbuf
-      val m = Mat(b(5), b(4), b(3), b(2), b(1), b(0))
-      st.ts = Some((m, m))
+      st.inText = true
+      setMat(st.tm, b(5), b(4), b(3), b(2), b(1), b(0))
+      setMat(st.tlm, b(5), b(4), b(3), b(2), b(1), b(0))
     }
-    case "T*" => if (st.ts.isDefined) textLeadingNewline(st)
+    case "T*" => if (st.inText) textLeadingNewline(st)
     case "Tj" => st.operands match {
-      case o :: _ => objBytes(o).foreach(showBytes(_, st))
+      case o :: _ => showString(o, st)
       case _ => ()
     }
     case "TJ" => st.operands match {
-      case o :: _ => tjElems(o).foreach(showTJ(_, st))
+      case o :: _ => showTJ(o, st)
       case _ => ()
     }
     case "'" => st.operands match {
-      case o :: _ if st.ts.isDefined =>
-        objBytes(o) match {
-          case Some(bs) => textLeadingNewline(st); showBytes(bs, st)
-          case None => textLeadingNewline(st)
-        }
-      case _ => if (st.ts.isDefined) textLeadingNewline(st)
+      case o :: _ if st.inText => textLeadingNewline(st); showString(o, st)
+      case _ => if (st.inText) textLeadingNewline(st)
     }
     case "\"" => st.operands match {
       case o :: PNum(ac) :: PNum(aw) :: _ =>
         st.gs.wordSp = aw; st.gs.charSp = ac
-        if (st.ts.isDefined) {
-          objBytes(o) match {
-            case Some(bs) => textLeadingNewline(st); showBytes(bs, st)
-            case None => textLeadingNewline(st)
-          }
-        }
+        if (st.inText) { textLeadingNewline(st); showString(o, st) }
       case _ => ()
     }
     case "Do" => st.operands match {
@@ -559,8 +567,12 @@ object Interp {
     st.operands = Nil
   }
 
-  private def currentMCID(st: IState): Option[Int] =
-    st.mcStack.collectFirst { case MCEntry(_, Some(n)) => n }
+  /** The innermost marked-content id: the entry's own Option. */
+  private def currentMCID(st: IState): Option[Int] = {
+    var entries = st.mcStack
+    while (entries.nonEmpty && entries.head.mcid.isEmpty) entries = entries.tail
+    if (entries.isEmpty) None else entries.head.mcid
+  }
 
   private def mcidFromProps(props: PObj, res: Dict, doc: Document): Option[Int] = {
     val dict: Option[Dict] = props match {
@@ -627,97 +639,192 @@ object Interp {
     }
   }
 
+  private def setMat(m: Array[Double], a: Double, b: Double, c: Double, d: Double,
+      e: Double, f: Double): Unit = {
+    m(0) = a; m(1) = b; m(2) = c; m(3) = d; m(4) = e; m(5) = f
+  }
+
+  /** `m` := `Mat.translate(tx, ty).multiply(m)`, with multiply's whole
+    * expression, the translation's zero and one terms included, so NaN,
+    * ±Inf and −0.0 come out as they do from the Mats. */
+  private def translate(tx: Double, ty: Double, m: Array[Double]): Unit = {
+    val a = 1.0 * m(0) + 0.0 * m(2)
+    val b = 1.0 * m(1) + 0.0 * m(3)
+    val c = 0.0 * m(0) + 1.0 * m(2)
+    val d = 0.0 * m(1) + 1.0 * m(3)
+    val e = tx * m(0) + ty * m(2) + m(4)
+    val f = tx * m(1) + ty * m(3) + m(5)
+    setMat(m, a, b, c, d, e, f)
+  }
+
   private def textTd(tx: Double, ty: Double, st: IState): Unit =
-    st.ts match {
-      case None => ()
-      case Some((_, tlm)) =>
-        val tlm2 = Mat.translate(tx, ty).multiply(tlm)
-        st.ts = Some((tlm2, tlm2))
+    if (st.inText) {
+      translate(tx, ty, st.tlm)
+      System.arraycopy(st.tlm, 0, st.tm, 0, 6)
     }
 
   private def textLeadingNewline(st: IState): Unit =
     textTd(0, -st.gs.leading, st)
 
-  private sealed trait TJElem
-  private final case class TJString(bytes: Array[Int]) extends TJElem
-  private final case class TJAdjust(k: Double) extends TJElem
+  /** TJ shows nothing unless every element is a number or a string. */
+  private def showTJ(o: PObj, st: IState): Unit = o match {
+    case PArray(elems) if elems.forall(isTJElem) =>
+      elems.foreach {
+        case PNum(k) => tjKern(k, st)
+        case s => showString(s, st)
+      }
+    case _ => ()
+  }
 
-  private def showTJ(elems: List[TJElem], st: IState): Unit =
-    elems.foreach {
-      case TJString(bs) => showBytes(bs, st)
-      case TJAdjust(k) => tjKern(k, st)
-    }
+  private def isTJElem(o: PObj): Boolean = o match {
+    case _: PNum | _: PText | _: PHex => true
+    case _ => false
+  }
 
   private def tjKern(k: Double, st: IState): Unit =
-    st.ts match {
-      case None => ()
-      case Some((tm, tlm)) =>
-        val gs = st.gs
-        val wmode = gs.font.map(_.wmode).getOrElse(0)
-        val disp = -k / 1000 * gs.fontSize * gs.hScale
-        val tm2 =
-          if (wmode == 1) Mat.translate(0, disp).multiply(tm)
-          else Mat.translate(disp, 0).multiply(tm)
-        st.ts = Some((tm2, tlm))
+    if (st.inText) {
+      val gs = st.gs
+      val wmode = gs.font match {
+        case Some(fi) => fi.wmode
+        case None => 0
+      }
+      val disp = -k / 1000 * gs.fontSize * gs.hScale
+      if (wmode == 1) translate(0, disp, st.tm)
+      else translate(disp, 0, st.tm)
     }
 
-  private def showBytes(bytes: Array[Int], st: IState): Unit =
-    (st.ts, st.gs.font, st.gs.fontRes) match {
-      case (Some((tm, tlm)), Some(fi), Some(fname)) =>
-        val gs = st.gs
-        val codes = bytesToCodesArr(fi, bytes)
-        val originTrm = textRenderingMatrix(gs, tm)
-        val (ox, oy) = originTrm.apply(0, 0)
-        val segSize = { val (vx, vy) = originTrm.applyVec(0, 1); math.sqrt(vx * vx + vy * vy) }
-        val text = new StringBuilder(codes.length)
-        // translate(tx,ty) premultiply keeps a..d; only e,f change — track
-        // the text matrix as locals to avoid two Mat allocations per glyph
-        var e = tm.e
-        var f = tm.f
-        val wmodeV = fi.wmode == 1
-        val tfs = gs.fontSize
-        val tc = gs.charSp
-        val tw = gs.wordSp
-        val th = gs.hScale
-        val oneByte = fi.bytesPerCode == 1
-        var k = 0
-        while (k < codes.length) {
-          val code = codes(k)
-          val s = codeToUnicode(fi, code)
-          if (s.length == 1) text.append(s.charAt(0)) else text.append(s)
-          var tx = 0.0
-          var ty = 0.0
-          if (wmodeV) {
-            var w1 = fi.widthV(code)
-            if (w1 == 0) w1 = FontInfo.DefaultVerticalW1
-            ty = (w1 / 1000) * tfs + tc + tw
-          } else {
-            var w0 = fi.width(code)
-            if (w0 == 0) w0 = fi.defaultWidth
-            val space = if (oneByte && code == 32) tw else 0.0
-            tx = ((w0 / 1000) * tfs + tc + space) * th
-          }
-          e = tx * tm.a + ty * tm.c + e
-          f = tx * tm.b + ty * tm.d + f
-          k += 1
+  /** Shows a string operand; other operands show nothing. A literal's
+    * chars are its bytes (an octal escape may exceed 255), read in place. */
+  private def showString(o: PObj, st: IState): Unit = o match {
+    case PText(s) => showBytes(null, s, st)
+    case PHex(h) => showBytes(hexPairsArr(h), null, st)
+    case _ => ()
+  }
+
+  /** Shows one string: `bytes`, or when that is null, the chars of
+    * `literal`. */
+  private def showBytes(bytes: Array[Int], literal: String, st: IState): Unit = {
+    val gs = st.gs
+    val fi = gs.font.orNull
+    val fname = gs.fontRes.orNull
+    if (st.inText && fi != null && fname != null) {
+      val tm = st.tm
+      val a = tm(0)
+      val b = tm(1)
+      val c = tm(2)
+      val d = tm(3)
+      // null: the codes are the literal's chars
+      val codes =
+        if (bytes != null) bytesToCodesArr(fi, bytes)
+        else if (codesAreBytes(fi)) null
+        else bytesToCodesArr(fi, Array.tabulate(literal.length)(literal.charAt(_).toInt))
+      val n = if (codes != null) codes.length else literal.length
+      renderingOrigin(st, tm(4), tm(5))
+      val ox = st.trm(0)
+      val oy = st.trm(1)
+      val segSize = { val vx = st.trm(2); val vy = st.trm(3); math.sqrt(vx * vx + vy * vy) }
+      var text = textRoom(st, n)
+      var len = 0
+      // translate(tx,ty) premultiply keeps a..d; only e,f change
+      var e = tm(4)
+      var f = tm(5)
+      val wmodeV = fi.wmode == 1
+      val tfs = gs.fontSize
+      val tc = gs.charSp
+      val tw = gs.wordSp
+      val th = gs.hScale
+      val oneByte = fi.bytesPerCode == 1
+      var k = 0
+      while (k < n) {
+        val code = if (codes != null) codes(k) else literal.charAt(k).toInt
+        val s = codeToUnicode(fi, code)
+        if (s.length == 1 && len < text.length) text(len) = s.charAt(0)
+        else {
+          text = textRoom(st, len + s.length)
+          s.getChars(0, s.length, text, len)
         }
-        val curTm = Mat(tm.a, tm.b, tm.c, tm.d, e, f)
-        val endTrm = textRenderingMatrix(gs, curTm)
-        val (ex, ey) = endTrm.apply(0, 0)
-        val width = math.sqrt((ex - ox) * (ex - ox) + (ey - oy) * (ey - oy))
-        st.items += PageItem.ItemGlyph(Glyph(text.toString, ox, oy, width, segSize,
-          fname, fi.wmode, currentMCID(st)))
-        st.ts = Some((curTm, tlm))
-      case _ => ()
+        len += s.length
+        var tx = 0.0
+        var ty = 0.0
+        if (wmodeV) {
+          var w1 = fi.widthV(code)
+          if (w1 == 0) w1 = FontInfo.DefaultVerticalW1
+          ty = (w1 / 1000) * tfs + tc + tw
+        } else {
+          var w0 = fi.width(code)
+          if (w0 == 0) w0 = fi.defaultWidth
+          val space = if (oneByte && code == 32) tw else 0.0
+          tx = ((w0 / 1000) * tfs + tc + space) * th
+        }
+        e = tx * a + ty * c + e
+        f = tx * b + ty * d + f
+        k += 1
+      }
+      tm(4) = e
+      tm(5) = f
+      renderingOrigin(st, e, f)
+      val ex = st.trm(0)
+      val ey = st.trm(1)
+      val width = math.sqrt((ex - ox) * (ex - ox) + (ey - oy) * (ey - oy))
+      st.items += PageItem.ItemGlyph(Glyph(new String(text, 0, len), ox, oy, width, segSize,
+        fname, fi.wmode, currentMCID(st)))
     }
+  }
+
+  /** `st.textBuf` with room for `need` chars, its content kept. */
+  private def textRoom(st: IState, need: Int): Array[Char] = {
+    if (st.textBuf.length < need)
+      st.textBuf = java.util.Arrays.copyOf(st.textBuf, math.max(need, 2 * st.textBuf.length))
+    st.textBuf
+  }
+
+  /** The text rendering matrix `Mat(fontSize * hScale, 0, 0, fontSize, 0,
+    * rise).multiply(tm).multiply(ctm)` for `tm` with translation (e, f),
+    * with multiply's whole expression, applied as the Mat would be:
+    * `st.trm` = (origin x, origin y, and the image of the unit vector
+    * (0, 1)). */
+  private def renderingOrigin(st: IState, e: Double, f: Double): Unit = {
+    val gs = st.gs
+    val a = st.tm(0)
+    val b = st.tm(1)
+    val c = st.tm(2)
+    val d = st.tm(3)
+    val ta = gs.fontSize * gs.hScale
+    val td = gs.fontSize
+    val tf = gs.rise
+    val pa = ta * a + 0.0 * c
+    val pb = ta * b + 0.0 * d
+    val pc = 0.0 * a + td * c
+    val pd = 0.0 * b + td * d
+    val pe = 0.0 * a + tf * c + e
+    val pf = 0.0 * b + tf * d + f
+    val m = gs.ctm
+    val ra = pa * m.a + pb * m.c
+    val rb = pa * m.b + pb * m.d
+    val rc = pc * m.a + pd * m.c
+    val rd = pc * m.b + pd * m.d
+    val re = pe * m.a + pf * m.c + m.e
+    val rf = pe * m.b + pf * m.d + m.f
+    val out = st.trm
+    out(0) = ra * 0.0 + rc * 0.0 + re
+    out(1) = rb * 0.0 + rd * 0.0 + rf
+    out(2) = ra * 0.0 + rc * 1.0
+    out(3) = rb * 0.0 + rd * 1.0
+  }
+
+  /** Whether a string's codes are its bytes, one per code. */
+  private def codesAreBytes(fi: FontInfo): Boolean = fi.encoding match {
+    case Encoding.SJISmap | Encoding.UnicodeMap | Encoding.JISmap => false
+    case _ => fi.bytesPerCode != 2
+  }
 
   def bytesToCodesArr(fi: FontInfo, bytes: Array[Int]): Array[Int] =
-    fi.encoding match {
+    if (codesAreBytes(fi)) bytes
+    else fi.encoding match {
       case Encoding.SJISmap => sjisBytesToCodesArr(bytes)
       case Encoding.UnicodeMap => unicodeBytesToCodesArr(bytes)
       case Encoding.JISmap => jisBytesToCodesArr(bytes)
-      case _ if fi.bytesPerCode == 2 => pairs2Arr(bytes)
-      case _ => bytes
+      case _ => pairs2Arr(bytes)
     }
 
   private def pairs2Arr(bs: Array[Int]): Array[Int] = {
@@ -825,21 +932,6 @@ object Interp {
     } else s
   }
 
-  private def textRenderingMatrix(gs: GS, tm: Mat): Mat = {
-    val textMat = Mat(gs.fontSize * gs.hScale, 0, 0, gs.fontSize, 0, gs.rise)
-    textMat.multiply(tm).multiply(gs.ctm)
-  }
-
-  private def objBytes(o: PObj): Option[Array[Int]] = o match {
-    case PText(s) =>
-      val out = new Array[Int](s.length)
-      var i = 0
-      while (i < s.length) { out(i) = s.charAt(i).toInt; i += 1 }
-      Some(out)
-    case PHex(h) => Some(hexPairsArr(h))
-    case _ => None
-  }
-
   /** hexPairs (StreamLex.hs:44-54): odd trailing digit padded with '0'. */
   def hexPairsArr(h: String): Array[Int] = {
     val out = new scala.collection.mutable.ArrayBuffer[Int](h.length / 2 + 1)
@@ -857,20 +949,6 @@ object Interp {
       }
     }
     out.toArray
-  }
-
-  private def tjElems(o: PObj): Option[List[TJElem]] = o match {
-    case PArray(objs) =>
-      val out = List.newBuilder[TJElem]
-      for (obj <- objs) obj match {
-        case PNum(n) => out += TJAdjust(n)
-        case other => objBytes(other) match {
-          case Some(bs) => out += TJString(bs)
-          case None => return None
-        }
-      }
-      Some(out.result())
-    case _ => None
   }
 
   // ---------- XObjects ----------
@@ -911,7 +989,9 @@ object Interp {
                 val savedStack = st.gsStack
                 val savedRes = st.res
                 val savedDepth = st.depth
-                val savedTs = st.ts
+                val savedInText = st.inText
+                val savedTm = st.tm.clone()
+                val savedTlm = st.tlm.clone()
                 val savedMc = st.mcStack
                 val savedPath = st.path
                 st.gsStack = savedGs :: st.gsStack
@@ -927,7 +1007,9 @@ object Interp {
                 }
                 st.res = savedRes
                 st.depth = savedDepth
-                st.ts = savedTs
+                st.inText = savedInText
+                System.arraycopy(savedTm, 0, st.tm, 0, 6)
+                System.arraycopy(savedTlm, 0, st.tlm, 0, 6)
                 st.mcStack = savedMc
                 st.path = savedPath
               case Left(_) => ()

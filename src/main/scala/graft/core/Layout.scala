@@ -2,7 +2,7 @@ package graft.core
 
 import scala.collection.mutable
 
-import Util.{firstChar, lastChar, medianOf, strip, stripEnd}
+import Util.{firstChar, lastChar, strip, stripEnd, totalMax, totalMin}
 import PageItem._
 
 /** Line and paragraph reconstruction from interpreted page items.
@@ -30,8 +30,18 @@ object Layout {
   def layoutDocumentFromPageLines(opts: LayoutOptions, layouts: List[PageLines]): String =
     formatParagraphs(documentParagraphsFromPageLines(opts, layouts))
 
+  /** The paragraphs joined by blank lines, ending in a newline ("\n"
+    * for none). */
   def formatParagraphs(ps: List[String]): String =
-    if (ps.isEmpty) "\n" else ps.mkString("\n\n") + "\n"
+    if (ps.isEmpty) "\n"
+    else {
+      var len = 2 * ps.length - 1
+      for (p <- ps) len += p.length
+      val sb = new java.lang.StringBuilder(len)
+      sb.append(ps.head)
+      for (p <- ps.tail) sb.append("\n\n").append(p)
+      sb.append('\n').toString
+    }
 
   def layoutParagraphs(opts: LayoutOptions, items: List[PageItem]): List[String] =
     applyFootnotesOpt(opts, applyRuby(opts, pageLinesRaw(items))) match {
@@ -212,10 +222,20 @@ object Layout {
     if (glyphs.nonEmpty && vertical >= glyphs.length - vertical) 1 else 0
   }
 
+  /** The page's (width, height) spanned by its glyphs' x, x + width and
+    * y, each at least 1. Needs a glyph. */
   def pageExtents(glyphs: List[Glyph]): (Double, Double) = {
-    val xs = glyphs.flatMap(g => List(g.x, g.x + g.width))
-    val ys = glyphs.map(_.y)
-    (math.max(1, xs.max - xs.min), math.max(1, ys.max - ys.min))
+    var xMin = glyphs.head.x
+    var xMax = xMin
+    var yMin = glyphs.head.y
+    var yMax = yMin
+    for (g <- glyphs) {
+      xMin = totalMin(totalMin(xMin, g.x), g.x + g.width)
+      xMax = totalMax(totalMax(xMax, g.x), g.x + g.width)
+      yMin = totalMin(yMin, g.y)
+      yMax = totalMax(yMax, g.y)
+    }
+    (math.max(1, xMax - xMin), math.max(1, yMax - yMin))
   }
 
   def baselineOf(wmode: Int, g: Glyph): Double = if (wmode == 1) g.x else g.y
@@ -436,9 +456,15 @@ object Layout {
     else Middle
   }
 
+  /** The lowest and highest baseline. Needs a line. */
   def pageBaselineExtent(ls: List[Line]): (Double, Double) = {
-    val baselines = ls.map(_.baseline)
-    (baselines.min, baselines.max)
+    var lo = ls.head.baseline
+    var hi = lo
+    for (l <- ls) {
+      lo = totalMin(lo, l.baseline)
+      hi = totalMax(hi, l.baseline)
+    }
+    (lo, hi)
   }
 
   /** Drops hs-spaces, then turns each ASCII digit run into one '#', then
@@ -717,23 +743,30 @@ object Layout {
     case Nil => ""
     case _ if ls.forall(isCodeLine) => joinCodeLines(ls)
     case _ =>
-      // single-builder equivalent of the reference's foldl1 merge
-      // (stripEnd(acc) ++ paraJoinSep ++ stripStart(piece) per step)
-      val sb = new StringBuilder
+      // one-builder equivalent of the reference's foldl1 merge
+      // (stripEnd(acc) ++ paraJoinSep ++ stripStart(piece) per step); each
+      // line's stripped text is appended from its own string
+      var cap = 0
+      for (l <- ls) cap += l.text.length + 1
+      val sb = new java.lang.StringBuilder(cap)
       var first = true
       for (l <- ls) {
-        val t = strip(l.text)
-        if (first) { sb.append(t); first = false }
+        val t = l.text
+        var i = 0
+        var j = t.length
+        while (i < j && Util.isHsSpace(t.charAt(i))) i += 1
+        while (j > i && Util.isHsSpace(t.charAt(j - 1))) j -= 1
+        if (first) first = false
         else {
           var end = sb.length
           while (end > 0 && Util.isHsSpace(sb.charAt(end - 1))) end -= 1
           sb.setLength(end)
-          val sep =
-            if (end > 0 && t.nonEmpty && isCJK(sb.charAt(end - 1)) && isCJK(t.charAt(0))) ""
-            else if (end > 0 && hyphenContinues(sb.charAt(end - 1))) ""
-            else " "
-          sb.append(sep).append(t)
+          val joined =
+            (end > 0 && i < j && isCJK(sb.charAt(end - 1)) && isCJK(t.charAt(i))) ||
+              (end > 0 && hyphenContinues(sb.charAt(end - 1)))
+          if (!joined) sb.append(' ')
         }
+        sb.append(t, i, j)
       }
       strip(sb.toString)
   }
@@ -752,11 +785,17 @@ object Layout {
     false
   }
 
-  /** Dingbat 'r' -> bullet repair (Layout.hs:1170-1191). */
-  def fixDingbatBulletLine(l: Line): Line = l.copy(text = fixDingbatBullet(l.text))
+  /** Dingbat 'r' -> bullet repair (Layout.hs:1170-1191); `l` itself when
+    * its text has nothing to repair. */
+  def fixDingbatBulletLine(l: Line): Line = {
+    val t = fixDingbatBullet(l.text)
+    if (t == l.text) l else l.copy(text = t)
+  }
+
+  private val DingbatBeforeOpen = " r「"
+  private val BulletBeforeOpen = " •「"
 
   def fixDingbatBullet(t: String): String = {
-    val open = "「"
     val t1 = {
       if (t.startsWith("r")) {
         val rest = t.drop(1)
@@ -772,6 +811,6 @@ object Layout {
         else t
       } else t
     }
-    t1.replace(" r" + open, " •" + open)
+    t1.replace(DingbatBeforeOpen, BulletBeforeOpen)
   }
 }

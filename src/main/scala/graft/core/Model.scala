@@ -208,13 +208,30 @@ object Util {
     * codepoints; surrogate pairs must not be split when testing CJK-ness —
     * only relevant for astral chars which are never CJK here, so unit-level
     * access is behavior-identical for the checks we do). */
-  def medianOf(xs: Seq[Double]): Double = {
-    if (xs.isEmpty) 0
+  /** The lower and the higher of `acc` and `v` as the collections' `min`
+    * and `max` order doubles (`java.lang.Double.compare`: NaN highest,
+    * −0.0 below 0.0); `acc` on a tie. */
+  def totalMin(acc: Double, v: Double): Double = if (java.lang.Double.compare(v, acc) < 0) v else acc
+  def totalMax(acc: Double, v: Double): Double = if (java.lang.Double.compare(v, acc) > 0) v else acc
+
+  /** Each line's size, in order, in a fresh array. */
+  def lineSizes(ls: List[Line]): Array[Double] = {
+    val sizes = new Array[Double](ls.length)
+    var i = 0
+    for (l <- ls) { sizes(i) = l.size; i += 1 }
+    sizes
+  }
+
+  /** The median of `xs` (0 when empty), the mean of the middle two for an
+    * even count, ordered by `java.lang.Double.compare` (NaN highest, −0.0
+    * below 0.0). Sorts `xs` in place. */
+  def medianOf(xs: Array[Double]): Double = {
+    val n = xs.length
+    if (n == 0) 0
     else {
-      val sorted = xs.sorted
-      val n = sorted.length
+      java.util.Arrays.sort(xs)
       val mid = n / 2
-      if (n % 2 == 1) sorted(mid) else (sorted(mid - 1) + sorted(mid)) / 2
+      if (n % 2 == 1) xs(mid) else (xs(mid - 1) + xs(mid)) / 2
     }
   }
 

@@ -40,11 +40,19 @@ object Ruby {
     }
   }
 
-  private def bodyMedianSize(ls: List[Line]): Double = {
-    val sizes = ls.map(_.size)
+  /** The median size of the lines above 0.85 of the median line size,
+    * or that median when there are none. */
+  private[graft] def bodyMedianSize(ls: List[Line]): Double = {
+    val sizes = Util.lineSizes(ls)
+    val n = sizes.length
     val med = Util.medianOf(sizes)
-    val bodySizes = ls.collect { case l if l.size > 0.85 * med => l.size }
-    if (bodySizes.isEmpty) med else Util.medianOf(bodySizes)
+    // sorted, NaN last: the body sizes are the run before the NaNs that
+    // starts at the first size above the bar
+    var from = 0
+    while (from < n && !(sizes(from) > 0.85 * med)) from += 1
+    var to = n
+    while (to > from && sizes(to - 1).isNaN) to -= 1
+    if (from == to) med else Util.medianOf(java.util.Arrays.copyOfRange(sizes, from, to))
   }
 
   private def isRubyLine(wmode: Int, bodySize: Double, ls: List[Line], l: Line): Boolean =

@@ -79,10 +79,15 @@ object Pipeline {
     catch { case e: Throwable => failed(url, payload, e) }
   }
 
+  /** The runner's projection. It registers [[LocalFileSystem]] on the
+    * input's session, so the surface's `file:` output writes fork no
+    * `chmod`. */
   private def documents[X: Encoder](input: DataFrame,
-      third: TypedColumn[Any, X]): Dataset[(String, Array[Byte], X)] =
+      third: TypedColumn[Any, X]): Dataset[(String, Array[Byte], X)] = {
+    LocalFileSystem.register(input.sparkSession)
     input.select(col("url"), col("html"), third)
       .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY, implicitly[Encoder[X]]))
+  }
 
   /** A surface with one output row per document. */
   private[spark] def perDocument[X: Encoder, T: Encoder](input: DataFrame, third: TypedColumn[Any, X])(
@@ -186,11 +191,15 @@ object Pipeline {
     (observed, obs)
   }
 
-  /** Per-partition lineage rows (append these to the metrics table). */
+  /** Per-partition lineage rows (append these to the metrics table), one
+    * per partition of `ds`, an empty one included. Only the counted
+    * columns are read: over a cached `ds` the scan skips the text. */
   def partitionMetrics(spark: SparkSession, ds: Dataset[ExtractedDoc]): Dataset[PartitionMetrics] = {
     import spark.implicits._
     val pdfLabels = Modes.keySet.map(pdfLabel)
-    ds.mapPartitions { iter =>
+    val counted = ds.select(col("ok"), col("mode"), col("chars"), col("kernelMicros"))
+      .as[(Boolean, String, Int, Long)]
+    counted.mapPartitions { iter =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var docs = 0L
       var okDocs = 0L
@@ -200,17 +209,17 @@ object Pipeline {
       var err = 0L
       var chars = 0L
       var micros = 0L
-      for (d <- iter) {
+      for ((ok, mode, docChars, docMicros) <- iter) {
         docs += 1
-        if (d.ok) okDocs += 1
-        d.mode match {
+        if (ok) okDocs += 1
+        mode match {
           case "html" => htmlD += 1
           case "text" => textD += 1
           case m if pdfLabels(m) => pdf += 1
           case _ => err += 1
         }
-        chars += d.chars
-        micros += d.kernelMicros
+        chars += docChars
+        micros += docMicros
       }
       Iterator.single(PartitionMetrics(pid, docs, okDocs, pdf, htmlD, textD, err, chars, micros))
     }

@@ -15,6 +15,7 @@ import graft.spark.{PairKernels, Queries}
   * adversarial strings (unicode incl. non-BMP, empties, whitespace runs,
   * hash-heavy repetition) AND on deterministic pseudo-corpus rows. */
 class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
+  import KernelParitySpec._
 
   private var spark: SparkSession = _
 
@@ -897,5 +898,461 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val expected = if (gs.isEmpty) 0 else counts.filter(_._2 == counts.map(_._2).max).last._1
       assert(Layout.dominantWMode(gs) == expected, gs)
     }
+  }
+
+  // ---- the extraction kernel's text path: each rewrite against its old form ----
+
+  private def sameBits(a: Double, b: Double): Boolean =
+    java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b)
+
+  /** Doubles the layout code must order as the collection methods did. */
+  private val edgeDoubles = Vector(0.0, -0.0, 1.0, -1.0, 2.5, 2.5, 7.0, 7.0, 1e300, -1e300,
+    Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN, Double.MinPositiveValue)
+
+  private def edgeDouble(rnd: scala.util.Random): Double =
+    if (rnd.nextInt(3) == 0) rnd.nextInt(40) - 10.0 else edgeDoubles(rnd.nextInt(edgeDoubles.length))
+
+  /** `Interp.readOperator` as it stood before the packed-key table: a
+    * latin1 String per token, then the interned instance of a known one. */
+  private object LegacyOperator {
+    val knownOps: java.util.HashMap[String, String] = {
+      val m = new java.util.HashMap[String, String]
+      for (op <- List("q", "Q", "cm", "BT", "ET", "Tf", "Tc", "Tw", "Tz", "TL", "Ts",
+        "Tr", "Td", "TD", "Tm", "T*", "Tj", "TJ", "Do", "m", "l", "c", "v", "y",
+        "re", "h", "n", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*", "W", "W*",
+        "BDC", "BMC", "EMC", "BI", "ID", "EI", "gs", "cs", "CS", "rg", "RG", "g",
+        "G", "k", "K", "d", "i", "j", "J", "M", "ri", "sh", "w", "SC", "SCN",
+        "sc", "scn", "d0", "d1", "MP", "DP", "BX", "EX", "true", "false", "null"))
+        m.put(op, op)
+      m
+    }
+
+    private def isOpChar(c: Int): Boolean =
+      (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '*'
+
+    /** `Interp.readName` as it stood: one StringBuilder append per byte. */
+    def readName(cur: graft.core.Cursor): AnyRef = {
+      def isWs(c: Int) = c == ' ' || c == '\t' || c == '\r' || c == '\n' || c == '\f'
+      def isDelim(c: Int) = "[]()<>/{".indexOf(c) >= 0 && c >= 0
+      val start = cur.pos
+      cur.pos += 1
+      val sb = new StringBuilder("/")
+      while (!cur.atEnd && !isWs(cur.peek) && !isDelim(cur.peek)) {
+        sb.append(cur.peek.toChar); cur.pos += 1
+      }
+      if (cur.pos - start > 1) graft.core.PObj.PName(sb.toString)
+      else { cur.pos = start; null }
+    }
+
+    def read(cur: graft.core.Cursor): AnyRef = {
+      val start = cur.pos
+      while (!cur.atEnd && isOpChar(cur.peek)) cur.pos += 1
+      if (cur.pos == start) null
+      else {
+        val raw = new String(cur.buf, start, cur.pos - start, java.nio.charset.StandardCharsets.ISO_8859_1)
+        val interned = knownOps.get(raw)
+        if (interned != null) interned else raw
+      }
+    }
+  }
+
+  test("packed-key operator lookup and in-place names == the String-building reference, known instances kept") {
+    import graft.core.{Cursor, Interp}
+    val rnd = new scala.util.Random(29)
+    val known = LegacyOperator.knownOps.keySet.toArray(new Array[String](0)).toVector
+    val others = Vector("T", "Tj*", "TJ*", "Tjj", "B", "BD", "BDCX", "EM", "SCNN", "scnx", "d2", "fals",
+      "falsee", "nul", "tru", "truex", "W**", "*", "**", "xyz", "Q1", "12abc", "qQ", "ETBT", "Tf0",
+      "longoperatorname", "abcdefgh", "abcdefghi")
+    val seps = Vector(" ", "\n", "\t", "(", ")", "[", "]", "<", ">", "/", "{", "}", "%", "'", "\"", "-",
+      "+", ".", "\u0000", "\u0080", "\u00e9", "\u00ff")
+    val names = Vector("/F1", "/Span", "/MCID", "/a#20b", "/T*", "/\u00e9\u00ff", "/x.y-1", "//")
+    def token(): String = rnd.nextInt(4) match {
+      case 0 => known(rnd.nextInt(known.length))
+      case 1 => others(rnd.nextInt(others.length))
+      case 2 => names(rnd.nextInt(names.length))
+      case _ => seps(rnd.nextInt(seps.length))
+    }
+    var knownHits = 0
+    var nameHits = 0
+    for (_ <- 1 to 3000) {
+      val bytes = Seq.fill(1 + rnd.nextInt(8))(token()).mkString
+        .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+      for (start <- 0 to bytes.length) {
+        val (a, b) = (new Cursor(bytes, start), new Cursor(bytes, start))
+        val want = LegacyOperator.read(a)
+        val got = Interp.readOperator(b)
+        assert(got == want && a.pos == b.pos, s"${new String(bytes, "ISO-8859-1")} @ $start")
+        if (want != null && LegacyOperator.knownOps.containsKey(want)) {
+          assert(got eq want, s"$want is not the interned instance")
+          knownHits += 1
+        }
+        if (bytes.lift(start).contains('/'.toByte)) {
+          val (c, d) = (new Cursor(bytes, start), new Cursor(bytes, start))
+          assert(Interp.readName(d) == LegacyOperator.readName(c) && c.pos == d.pos,
+            s"${new String(bytes, "ISO-8859-1")} @ $start")
+          nameHits += 1
+        }
+      }
+    }
+    assert(knownHits > 1500 && nameHits > 1500, s"only $knownHits known-operator tokens, $nameHits names")
+  }
+
+  /** The interpreter's text path as it stood with Mats: the text state an
+    * `Option[(tm, tlm)]`, six Mats per show, each literal copied to an Int
+    * array. Runs a generated op list; marked content is not generated. */
+  private object LegacyTextPath {
+    import graft.core.{Encoding, FontInfo, Glyph, Interp, Mat}
+
+    final class GS(var ctm: Mat, var fontRes: Option[String], var font: Option[FontInfo],
+        var fontSize: Double, var charSp: Double, var wordSp: Double, var hScale: Double,
+        var leading: Double, var rise: Double) {
+      def copy2: GS = new GS(ctm, fontRes, font, fontSize, charSp, wordSp, hScale, leading, rise)
+    }
+
+    def run(ops: Seq[TOp], fonts: Map[String, FontInfo]): List[Glyph] = {
+      var gs = new GS(Mat.identity, None, None, 0, 0, 0, 1, 0, 0)
+      var stack: List[GS] = Nil
+      var ts: Option[(Mat, Mat)] = None
+      var mcStack: List[Option[Int]] = Nil
+      val out = List.newBuilder[Glyph]
+
+      def textTd(tx: Double, ty: Double): Unit = ts match {
+        case None => ()
+        case Some((_, tlm)) =>
+          val tlm2 = Mat.translate(tx, ty).multiply(tlm)
+          ts = Some((tlm2, tlm2))
+      }
+      def newline(): Unit = textTd(0, -gs.leading)
+      def tjKern(k: Double): Unit = ts match {
+        case None => ()
+        case Some((tm, tlm)) =>
+          val wmode = gs.font.map(_.wmode).getOrElse(0)
+          val disp = -k / 1000 * gs.fontSize * gs.hScale
+          val tm2 =
+            if (wmode == 1) Mat.translate(0, disp).multiply(tm)
+            else Mat.translate(disp, 0).multiply(tm)
+          ts = Some((tm2, tlm))
+      }
+      def trm(tm: Mat): Mat =
+        Mat(gs.fontSize * gs.hScale, 0, 0, gs.fontSize, 0, gs.rise).multiply(tm).multiply(gs.ctm)
+      def objBytes(a: TArg): Option[Array[Int]] = a match {
+        case TLit(cs) => Some(cs.map(_.toInt).toArray)
+        case THex(h) => Some(Interp.hexPairsArr(h))
+        case _ => None
+      }
+      def codesOf(fi: FontInfo, bytes: Array[Int]): Array[Int] = fi.encoding match {
+        case Encoding.SJISmap => Interp.sjisBytesToCodesArr(bytes)
+        case Encoding.UnicodeMap => Interp.unicodeBytesToCodesArr(bytes)
+        case Encoding.JISmap => Interp.jisBytesToCodesArr(bytes)
+        case _ if fi.bytesPerCode == 2 => Interp.jisBytesToCodesArr(bytes) // byte pairs
+        case _ => bytes
+      }
+      def show(bytes: Array[Int]): Unit = (ts, gs.font, gs.fontRes) match {
+        case (Some((tm, tlm)), Some(fi), Some(fname)) =>
+          val codes = codesOf(fi, bytes)
+          val originTrm = trm(tm)
+          val (ox, oy) = originTrm.apply(0, 0)
+          val segSize = { val (vx, vy) = originTrm.applyVec(0, 1); math.sqrt(vx * vx + vy * vy) }
+          val text = new StringBuilder
+          var e = tm.e
+          var f = tm.f
+          for (code <- codes) {
+            text.append(Interp.codeToUnicode(fi, code))
+            var tx = 0.0
+            var ty = 0.0
+            if (fi.wmode == 1) {
+              var w1 = fi.widthV(code)
+              if (w1 == 0) w1 = FontInfo.DefaultVerticalW1
+              ty = (w1 / 1000) * gs.fontSize + gs.charSp + gs.wordSp
+            } else {
+              var w0 = fi.width(code)
+              if (w0 == 0) w0 = fi.defaultWidth
+              val space = if (fi.bytesPerCode == 1 && code == 32) gs.wordSp else 0.0
+              tx = ((w0 / 1000) * gs.fontSize + gs.charSp + space) * gs.hScale
+            }
+            e = tx * tm.a + ty * tm.c + e
+            f = tx * tm.b + ty * tm.d + f
+          }
+          val curTm = Mat(tm.a, tm.b, tm.c, tm.d, e, f)
+          val (ex, ey) = trm(curTm).apply(0, 0)
+          val width = math.sqrt((ex - ox) * (ex - ox) + (ey - oy) * (ey - oy))
+          out += Glyph(text.toString, ox, oy, width, segSize, fname, fi.wmode,
+            mcStack.collectFirst { case Some(n) => n })
+          ts = Some((curTm, tlm))
+        case _ => ()
+      }
+
+      for (op <- ops) {
+        val n = op.args.collect { case TNum(_, v) => v }
+        (op.name, op.args) match {
+          case ("q", _) => stack = gs.copy2 :: stack
+          case ("Q", _) => stack match {
+            case g :: rest => gs = g; stack = rest
+            case Nil => ()
+          }
+          case ("cm", _) => gs.ctm = Mat(n(0), n(1), n(2), n(3), n(4), n(5)).multiply(gs.ctm)
+          case ("BT", _) => ts = Some((Mat.identity, Mat.identity))
+          case ("ET", _) => ts = None
+          case ("Tf", Seq(TName(font), TNum(_, size))) =>
+            gs.fontRes = Some(font); gs.font = fonts.get(font); gs.fontSize = size
+          case ("Tc", _) => gs.charSp = n(0)
+          case ("Tw", _) => gs.wordSp = n(0)
+          case ("Tz", _) => gs.hScale = n(0) / 100
+          case ("TL", _) => gs.leading = n(0)
+          case ("Ts", _) => gs.rise = n(0)
+          case ("Td", _) => textTd(n(0), n(1))
+          case ("TD", _) => gs.leading = -n(1); textTd(n(0), n(1))
+          case ("Tm", _) =>
+            val m = Mat(n(0), n(1), n(2), n(3), n(4), n(5))
+            ts = Some((m, m))
+          case ("T*", _) => if (ts.isDefined) newline()
+          case ("Tj", Seq(o)) => objBytes(o).foreach(show)
+          case ("TJ", Seq(TArr(elems))) =>
+            val shown = elems.map {
+              case TNum(_, k) => Some(Left(k))
+              case o => objBytes(o).map(Right(_))
+            }
+            if (shown.forall(_.isDefined)) shown.flatten.foreach {
+              case Left(k) => tjKern(k)
+              case Right(bs) => show(bs)
+            }
+          case ("TJ", _) => ()
+          case ("'", Seq(o)) => if (ts.isDefined) { newline(); objBytes(o).foreach(show) }
+          case ("\"", Seq(TNum(_, aw), TNum(_, ac), o)) =>
+            gs.wordSp = aw; gs.charSp = ac
+            if (ts.isDefined) { newline(); objBytes(o).foreach(show) }
+          case ("BDC", Seq(_, TMcid(n))) => mcStack = Some(n) :: mcStack
+          case ("BDC", _) | ("BMC", _) => mcStack = None :: mcStack
+          case ("EMC", _) => if (mcStack.nonEmpty) mcStack = mcStack.tail
+          case (other, _) => fail(s"no reference for $other")
+        }
+      }
+      out.result()
+    }
+  }
+
+  test("primitive text state, in-place literals and TJ == the Mat-based text path") {
+    import graft.core.{DocStructure, Encoding, FontInfo, Interp, PageItem}
+    import scala.collection.immutable.TreeMap
+    val rnd = new scala.util.Random(31)
+    val huge = "1" + "0" * 400 // overflows to Infinity in the content-stream number parser
+    val nums = Vector(TNum("0", 0.0), TNum("-0", -0.0), TNum("1", 1.0), TNum("-1", -1.0),
+      TNum("2", 2.0), TNum("-3", -3.0), TNum("12", 12.0), TNum("0.5", 0.5), TNum("-.5", -0.5),
+      TNum("100", 100.0), TNum("-250", -250.0), TNum("700", 700.0),
+      TNum(huge, Double.PositiveInfinity), TNum("-" + huge, Double.NegativeInfinity))
+    def num(): TNum =
+      if (rnd.nextInt(3) > 0) nums(rnd.nextInt(12)) else nums(rnd.nextInt(nums.length))
+    def scale(): TNum = Vector(TNum("10", 10.0), TNum("12", 12.0), TNum("0", 0.0), TNum("-8", -8.0),
+      TNum("1", 1.0))(rnd.nextInt(5))
+    val letters = "ABCDEFab rz "
+    // now and then a long one, whose text outgrows a 64-char buffer
+    def literal(): TLit = TLit(Seq.fill(if (rnd.nextInt(12) == 0) 40 + rnd.nextInt(60) else rnd.nextInt(6))(rnd.nextInt(6) match {
+      case 0 => (0x80 + rnd.nextInt(0x80)).toChar
+      case 1 => rnd.nextInt(512).toChar
+      case _ => letters(rnd.nextInt(letters.length))
+    }).mkString)
+    // "<>" is no operand to the tokenizer: at least one digit
+    def hex(): THex = THex(Seq.fill(1 + rnd.nextInt(6))("0123456789abcdefABCDEF"(rnd.nextInt(22))).mkString)
+    def str(): TArg = rnd.nextInt(5) match {
+      case 0 => hex()
+      case 1 if rnd.nextInt(4) == 0 => num() // not a string: shows nothing
+      case _ => literal()
+    }
+    def tjArray(): TArr = TArr(Seq.fill(rnd.nextInt(6))(rnd.nextInt(7) match {
+      case 0 | 1 => num()
+      case 2 => hex()
+      case 3 if rnd.nextInt(6) == 0 => TName("/X") // a non-string element: the whole TJ shows nothing
+      case _ => literal()
+    }))
+    def op(): TOp = rnd.nextInt(23) match {
+      case 0 | 1 => TOp("BT", Nil)
+      case 2 => TOp("ET", Nil)
+      case 3 => TOp("Tf", Seq(TName(Vector("/F1", "/F2", "/F3", "/F4", "/F9")(rnd.nextInt(5))), scale()))
+      case 4 => TOp("Tm", Seq.fill(6)(num()))
+      case 5 => TOp("Td", Seq.fill(2)(num()))
+      case 6 => TOp("TD", Seq.fill(2)(num()))
+      case 7 => TOp("T*", Nil)
+      case 8 => TOp(Vector("TL", "Ts", "Tz", "Tc", "Tw")(rnd.nextInt(5)), Seq(num()))
+      case 9 => TOp("cm", Seq.fill(6)(num()))
+      case 10 => TOp("q", Nil)
+      case 11 => TOp("Q", Nil)
+      case 12 | 13 | 14 => TOp("Tj", Seq(str()))
+      case 15 | 16 | 17 => TOp("TJ", Seq(tjArray()))
+      case 18 => TOp("TJ", Seq(literal())) // not an array: shows nothing
+      case 19 => TOp("'", Seq(str()))
+      case 20 => TOp("\"", Seq(num(), num(), str()))
+      case 21 => rnd.nextInt(4) match {
+        case 0 => TOp("BDC", Seq(TName("/P"), TMcid(rnd.nextInt(4))))
+        case 1 => TOp("BDC", Seq(TName("/Span"), TName("/Props"))) // no /Properties: no id
+        case 2 => TOp("BMC", Seq(TName("/Artifact")))
+        case _ => TOp("EMC", Nil)
+      }
+      case _ => TOp("Tf", Seq(TName("/F2"), scale()))
+    }
+    // B, C and D map to several chars, none, and a surrogate pair
+    val simple = FontInfo(Encoding.NullMap, Map(66 -> "ffi", 67 -> "", 68 -> "𝐀"), 65, Vector(Some(600.0), Some(0.0), None, Some(-250.0)),
+      Map.empty, Map.empty, FontInfo.DefaultVerticalW1, 0, 1, 500, isType0 = false)
+    val vertical = FontInfo(Encoding.CIDmap("Adobe-Japan1"), Map.empty, 0, Vector.empty,
+      Map(0x4142 -> 800.0), Map(0x4142 -> -900.0, 0x6162 -> 0.0, 0x2020 -> 500.0),
+      FontInfo.DefaultVerticalW1, 1, 2, 1000, isType0 = true)
+    val sjis = FontInfo(Encoding.SJISmap, Map.empty, 0, Vector.empty, Map(0x8140 -> 1000.0),
+      Map.empty, FontInfo.DefaultVerticalW1, 0, 2, 500, isType0 = true)
+    val unicode = FontInfo(Encoding.UnicodeMap, Map(0x41 -> "Z"), 0, Vector.empty, Map(0x41 -> 300.0),
+      Map.empty, FontInfo.DefaultVerticalW1, 0, 2, 700, isType0 = true)
+    val fonts = Map("/F1" -> simple, "/F2" -> vertical, "/F3" -> sjis, "/F4" -> unicode)
+    val doc = new DocStructure.Document("".getBytes, TreeMap.empty, Map.empty, None, Some(Map.empty))
+    var glyphs = 0
+    var nonFinite = 0
+    var marked = 0
+    for (_ <- 1 to 4000) {
+      val ops = TOp("BT", Nil) +: Seq.fill(1 + rnd.nextInt(24))(op())
+      val src = ops.map(_.src).mkString("\n").getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+      val got = Interp.interpretContentItems(doc, DocStructure.emptyDict, fonts, src)
+        .collect { case PageItem.ItemGlyph(g) => g }
+      val want = LegacyTextPath.run(ops, fonts)
+      val ctx = ops.map(_.src).mkString(" | ")
+      assert(got.length == want.length, ctx)
+      for ((g, w) <- got.zip(want)) {
+        assert(g.text == w.text && g.font == w.font && g.wmode == w.wmode && g.mcid == w.mcid, ctx)
+        assert(sameBits(g.x, w.x) && sameBits(g.y, w.y) && sameBits(g.width, w.width) &&
+          sameBits(g.size, w.size), s"$g != $w: $ctx")
+        if (Seq(g.x, g.y, g.width, g.size).exists(v => v.isNaN || v.isInfinite)) nonFinite += 1
+        if (g.mcid.isDefined) marked += 1
+      }
+      glyphs += got.length
+    }
+    assert(nonFinite > 800 && glyphs - nonFinite > 3000 && marked > 500,
+      s"$glyphs glyphs, $nonFinite non-finite, $marked marked")
+  }
+
+  test("primitive page and baseline extents == the boxed min/max of the collection methods") {
+    import graft.core.{Glyph, Layout, Line}
+    def legacy(gs: List[Glyph]): (Double, Double) = {
+      val xs = gs.flatMap(g => List(g.x, g.x + g.width))
+      val ys = gs.map(_.y)
+      (math.max(1, xs.max - xs.min), math.max(1, ys.max - ys.min))
+    }
+    def legacyBaselines(ls: List[Line]): (Double, Double) = {
+      val baselines = ls.map(_.baseline)
+      (baselines.min, baselines.max)
+    }
+    val rnd = new scala.util.Random(37)
+    for (_ <- 1 to 20000) {
+      val gs = List.fill(1 + rnd.nextInt(6))(
+        Glyph("a", edgeDouble(rnd), edgeDouble(rnd), edgeDouble(rnd), 10, "/F", 0, None))
+      val (w, h) = Layout.pageExtents(gs)
+      val (lw, lh) = legacy(gs)
+      assert(sameBits(w, lw) && sameBits(h, lh), gs)
+      val ls = gs.map(g => Line(g.y, 0, 1, 10, 0, 0, "x", Nil, lastSuper = false))
+      val (lo, hi) = Layout.pageBaselineExtent(ls)
+      val (llo, lhi) = legacyBaselines(ls)
+      assert(sameBits(lo, llo) && sameBits(hi, lhi), ls)
+    }
+  }
+
+  test("primitive medians == the sorted-Seq reference (Util.medianOf, Ruby.bodyMedianSize)") {
+    import graft.core.{Line, Ruby, Util}
+    def legacyMedian(xs: Seq[Double]): Double =
+      if (xs.isEmpty) 0
+      else {
+        val sorted = xs.sorted
+        val n = sorted.length
+        val mid = n / 2
+        if (n % 2 == 1) sorted(mid) else (sorted(mid - 1) + sorted(mid)) / 2
+      }
+    def legacyBody(ls: List[Line]): Double = {
+      val med = legacyMedian(ls.map(_.size))
+      val bodySizes = ls.collect { case l if l.size > 0.85 * med => l.size }
+      if (bodySizes.isEmpty) med else legacyMedian(bodySizes)
+    }
+    val rnd = new scala.util.Random(41)
+    for (_ <- 1 to 20000) {
+      val xs = Seq.fill(rnd.nextInt(8))(edgeDouble(rnd))
+      assert(sameBits(Util.medianOf(xs.toArray), legacyMedian(xs)), xs)
+      val ls = xs.map(s => Line(0, 0, 1, s, 0, 0, "x", Nil, lastSuper = false)).toList
+      assert(sameBits(Ruby.bodyMedianSize(ls), legacyBody(ls)), xs)
+    }
+  }
+
+  test("presized paragraph builders == the mkString / per-line strip reference") {
+    import graft.core.{Layout, Line, Util}
+    def legacyFormat(ps: List[String]): String = if (ps.isEmpty) "\n" else ps.mkString("\n\n") + "\n"
+    def legacyJoin(ls: List[Line]): String = {
+      val sb = new StringBuilder
+      var first = true
+      for (l <- ls) {
+        val t = Util.strip(l.text)
+        if (first) { sb.append(t); first = false }
+        else {
+          var end = sb.length
+          while (end > 0 && Util.isHsSpace(sb.charAt(end - 1))) end -= 1
+          sb.setLength(end)
+          val last = if (end > 0) sb.charAt(end - 1) else ' '
+          val sep =
+            if (end > 0 && t.nonEmpty && Layout.isCJK(last) && Layout.isCJK(t.charAt(0))) ""
+            else if (end > 0 && (last == '-' || last == '\u00ad')) ""
+            else " "
+          sb.append(sep).append(t)
+        }
+      }
+      Util.strip(sb.toString)
+    }
+    val rnd = new scala.util.Random(43)
+    val pieces = Vector("", " ", "\u3000", "\t", "word", "Hyphen-", "soft\u00ad", "-", "日本", "語。",
+      "12.", "1 x", "a.", "Code()", "𝐀", "  padded  ", "\u00a0")
+    def text(): String = Seq.fill(rnd.nextInt(4))(pieces(rnd.nextInt(pieces.length))).mkString
+    var prose = 0
+    for (_ <- 1 to 20000) {
+      val ps = List.fill(rnd.nextInt(5))(text())
+      assert(Layout.formatParagraphs(ps) == legacyFormat(ps), ps)
+      val ls = List.fill(rnd.nextInt(5))(
+        Line(0, 0, 1, if (rnd.nextBoolean()) 10 else 7, 0, 0, text(), Nil, lastSuper = false))
+      // an all-code paragraph takes joinCodeLines, which is unchanged
+      if (ls.isEmpty || !ls.forall(Layout.isCodeLine)) {
+        val want = if (ls.isEmpty) "" else legacyJoin(ls)
+        assert(Layout.joinParaLines(ls) == want, ls)
+        prose += 1
+      }
+    }
+    assert(prose > 10000, s"only $prose prose paragraphs")
+  }
+
+  test("dingbat repair returns the line itself when its text is unchanged") {
+    import graft.core.{Layout, Line}
+    val rnd = new scala.util.Random(47)
+    val pieces = Vector("r", "r ", "r「", " r「", "「", " ", "a", "B", "•", "rr", "")
+    var same = 0
+    for (_ <- 1 to 5000) {
+      val l = Line(0, 0, 1, 10, 0, 0, Seq.fill(rnd.nextInt(4))(pieces(rnd.nextInt(pieces.length))).mkString,
+        Nil, lastSuper = false)
+      val got = Layout.fixDingbatBulletLine(l)
+      assert(got == l.copy(text = Layout.fixDingbatBullet(l.text)), l)
+      if (got.text == l.text) { assert(got eq l, l); same += 1 }
+    }
+    assert(same > 500 && same < 4500, s"$same of 5000 unchanged")
+  }
+}
+
+object KernelParitySpec {
+  /** One generated content-stream operand: its source text and value. */
+  sealed trait TArg { def src: String }
+  final case class TNum(src: String, v: Double) extends TArg
+  final case class TName(name: String) extends TArg { def src: String = name }
+  /** A literal string of chars 0-511; letters and spaces plain, everything
+    * else an octal escape, raw bytes 0x80-0xff as themselves. */
+  final case class TLit(chars: String) extends TArg {
+    def src: String = "(" + chars.map { c =>
+      if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || c == ' ' || (c >= 0x80 && c <= 0xff)) c.toString
+      else "\\" + f"${c.toInt}%03o"
+    }.mkString + ")"
+  }
+  final case class THex(digits: String) extends TArg { def src: String = "<" + digits + ">" }
+  /** Marked-content properties with an id. */
+  final case class TMcid(n: Int) extends TArg { def src: String = s"<< /MCID $n >>" }
+  final case class TArr(elems: Seq[TArg]) extends TArg {
+    def src: String = elems.map(_.src).mkString("[", " ", "]")
+  }
+  final case class TOp(name: String, args: Seq[TArg]) {
+    def src: String = (args.map(_.src) :+ name).mkString(" ")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.spark.{CorpusGen, FixtureGen, Pipeline, Surfaces}
+import graft.spark.{CorpusGen, FixtureGen, LocalFileSystem, Pipeline, Surfaces}
 
 /** End-to-end Spark pipeline tests: scan -> mapPartitions kernel ->
   * predicates/joins, with a byte-identical match-rate gate against the
@@ -82,6 +82,35 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(m.getLong(2) == 0, mode)
       assert(m.getLong(3) == 90, mode)
     }
+  }
+
+  test("counters-only partition metrics == the full-row count over the same cached frame") {
+    val s = spark
+    import s.implicits._
+    // corpus documents of every kind, one decode failure, and one more
+    // partition than rows: parallelize leaves the first slice empty
+    val rows = CorpusGen.inputView(CorpusGen.corpus(spark, rows = 14, partitions = 2))
+      .select("url", "html", "text").as[(String, Array[Byte], String)].collect().toSeq :+
+      (("u/bad", "%PDF-1.5 garbage".getBytes, null: String))
+    val input = spark.sparkContext.parallelize(rows, rows.length + 1).toDF("url", "html", "text")
+    val extracted = Pipeline.extractMode(spark, input, Pipeline.DefaultMode).cache()
+    try {
+      val pdfLabels = Pipeline.Modes.keySet.map("pdf-" + _)
+      // the metrics as they were counted from whole rows
+      val reference = extracted.mapPartitions { iter =>
+        val docs = iter.toSeq
+        def n(p: Pipeline.ExtractedDoc => Boolean) = docs.count(p).toLong
+        Iterator.single(Pipeline.PartitionMetrics(org.apache.spark.TaskContext.getPartitionId(),
+          docs.length, n(_.ok), n(d => pdfLabels(d.mode)), n(_.mode == "html"), n(_.mode == "text"),
+          n(d => !pdfLabels(d.mode) && d.mode != "html" && d.mode != "text"),
+          docs.map(_.chars.toLong).sum, docs.map(_.kernelMicros).sum))
+      }.collect().sortBy(_.partitionId).toSeq
+      val got = Pipeline.partitionMetrics(spark, extracted).collect().sortBy(_.partitionId).toSeq
+      assert(got == reference)
+      assert(got.length == rows.length + 1 && got.exists(_.docs == 0), got)
+      assert(got.map(_.errorDocs).sum == 1 && got.map(_.docs).sum == rows.length, got)
+      assert(got.map(_.htmlDocs).sum > 0 && got.map(_.textDocs).sum > 0 && got.map(_.pdfDocs).sum > 0, got)
+    } finally extracted.unpersist()
   }
 
   test("an unknown extraction mode is rejected when extractMode is called") {
@@ -235,12 +264,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("column pruning reaches the scan") {
     val corpus = CorpusGen.corpus(spark, rows = 9, partitions = 1)
-    val dir = java.nio.file.Files.createTempDirectory("corpus").toString
-    corpus.write.mode("overwrite").parquet(dir)
-    val input = spark.read.parquet(dir)
-    val plan = Pipeline.extract(spark, input).queryExecution.executedPlan.toString
-    // the parquet scan must read only the three needed columns
-    assert(plan.contains("ReadSchema"))
-    assert(!plan.split("ReadSchema")(1).takeWhile(_ != '>').contains("warc_ts"))
+    val dir = java.nio.file.Files.createTempDirectory("corpus").toFile
+    try {
+      corpus.write.mode("overwrite").parquet(dir.toString)
+      val input = spark.read.parquet(dir.toString)
+      val plan = Pipeline.extract(spark, input).queryExecution.executedPlan.toString
+      // the parquet scan must read only the three needed columns
+      assert(plan.contains("ReadSchema"))
+      assert(!plan.split("ReadSchema")(1).takeWhile(_ != '>').contains("warc_ts"))
+    } finally LocalFileSystem.deleteTree(dir)
   }
 }

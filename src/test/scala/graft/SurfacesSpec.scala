@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.core._
-import graft.spark.{CorpusGen, FixtureGen, Pipeline, Surfaces}
+import graft.spark.{CorpusGen, FixtureGen, LocalFileSystem, Pipeline, Surfaces}
 
 /** Tests for the diff / images / outlines / multimodal / streaming query
   * surfaces and the embedded-font fallbacks. */
@@ -26,6 +26,13 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** `body` over a new temp directory named `prefix`..., which is deleted
+    * afterwards. */
+  private def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally LocalFileSystem.deleteTree(dir.toFile)
+  }
 
   test("toc: outline tree flattens with depths and titles") {
     val d = FixtureGen.outlined(7)
@@ -276,13 +283,15 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming extraction matches batch results") {
-    val dir = java.nio.file.Files.createTempDirectory("stream_test").toString
-    val corpus = CorpusGen.corpus(spark, rows = 22, partitions = 2).cache()
-    CorpusGen.inputView(corpus).write.mode("overwrite").parquet(dir)
-    val streamed = Surfaces.streamingExtract(spark, dir)
-    val joined = streamed.join(corpus.select("url", "expected"), Seq("url"))
-    assert(joined.count() == 22)
-    assert(joined.filter(col("text") === col("expected")).count() == 22)
+    withTempDir("stream_test") { dirPath =>
+      val dir = dirPath.toString
+      val corpus = CorpusGen.corpus(spark, rows = 22, partitions = 2).cache()
+      CorpusGen.inputView(corpus).write.mode("overwrite").parquet(dir)
+      val streamed = Surfaces.streamingExtract(spark, dir)
+      val joined = streamed.join(corpus.select("url", "expected"), Seq("url"))
+      assert(joined.count() == 22)
+      assert(joined.filter(col("text") === col("expected")).count() == 22)
+    }
   }
 
   test("stateful streaming: windowed counts + keyed sessions over events") {
@@ -332,44 +341,47 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("multi-batch sessions: stale-firstTs snapshots are dropped, not phantom sessions") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import java.sql.Timestamp
-    val dir = Files.createTempDirectory("sess_mb").toString
-    def ts(min: Int) = new Timestamp(1700000000000L + min * 60000L)
-    val sp = spark; import sp.implicits._
-    // batch A: user 1 session in progress (60, 65); user 2 a closed session
-    // (0, 10) and a fresh one (64). Watermark after A = 65 - 10 = min 55.
-    val fileA = Seq((1L, ts(60), "view"), (1L, ts(65), "click"),
-      (2L, ts(0), "view"), (2L, ts(10), "view"), (2L, ts(64), "click"))
-      .toDF("user_id", "ts", "event_type")
-    // batch B delivers a user-1 event EARLIER than the session's current
-    // firstTs but inside the watermark (58 >= 55): the session's firstTs
-    // moves back, stranding batch A's snapshot under the stale key
-    val fileB = Seq((1L, ts(58), "buy")).toDF("user_id", "ts", "event_type")
-    def addFile(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("sess_part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val st = Files.list(tmp)
-      val part = try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get() finally st.close()
-      val dst = Paths.get(dir, name)
-      Files.copy(part, dst, StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(mtime)
+    withTempDir("sess_mb") { dirPath =>
+      val dir = dirPath.toString
+      def ts(min: Int) = new Timestamp(1700000000000L + min * 60000L)
+      val sp = spark; import sp.implicits._
+      // batch A: user 1 session in progress (60, 65); user 2 a closed session
+      // (0, 10) and a fresh one (64). Watermark after A = 65 - 10 = min 55.
+      val fileA = Seq((1L, ts(60), "view"), (1L, ts(65), "click"),
+        (2L, ts(0), "view"), (2L, ts(10), "view"), (2L, ts(64), "click"))
+        .toDF("user_id", "ts", "event_type")
+      // batch B delivers a user-1 event EARLIER than the session's current
+      // firstTs but inside the watermark (58 >= 55): the session's firstTs
+      // moves back, stranding batch A's snapshot under the stale key
+      val fileB = Seq((1L, ts(58), "buy")).toDF("user_id", "ts", "event_type")
+      def addFile(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
+        withTempDir("sess_part") { tmp =>
+          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          val st = Files.list(tmp)
+          val part = try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
+            .findFirst().get() finally st.close()
+          val dst = Paths.get(dir, name)
+          Files.copy(part, dst, StandardCopyOption.REPLACE_EXISTING)
+          dst.toFile.setLastModified(mtime)
+        }
+      }
+      addFile(fileA, "a.parquet", 1000000000L)
+      addFile(fileB, "b.parquet", 2000000000L)
+      val raw = graft.spark.Streaming.userSessions(spark, dir, maxFilesPerTrigger = Some(1))
+      // the raw Append stream really does hold a stale-firstTs snapshot for
+      // user 1 (the scenario under test)…
+      assert(raw.select("user_id", "firstTs").distinct()
+        .filter(col("user_id") === 1L).count() == 2,
+        "expected a stale-firstTs snapshot — the phantom path was not exercised")
+      // …and finalizedSessions collapses to the true event-time session set
+      val fin = graft.spark.Streaming.finalizedSessions(raw)
+        .orderBy("user_id", "first_ts").collect()
+      assert(fin.length == 3, fin.mkString("\n"))
+      val u1 = fin.filter(_.getLong(0) == 1L)
+      assert(u1.length == 1 && u1.head.getTimestamp(1) == ts(58)
+        && u1.head.getLong(2) == 3L, u1.mkString("\n"))
+      assert(fin.filter(_.getLong(0) == 2L).map(_.getLong(2)).toSeq == Seq(2L, 1L))
     }
-    addFile(fileA, "a.parquet", 1000000000L)
-    addFile(fileB, "b.parquet", 2000000000L)
-    val raw = graft.spark.Streaming.userSessions(spark, dir, maxFilesPerTrigger = Some(1))
-    // the raw Append stream really does hold a stale-firstTs snapshot for
-    // user 1 (the scenario under test)…
-    assert(raw.select("user_id", "firstTs").distinct()
-      .filter(col("user_id") === 1L).count() == 2,
-      "expected a stale-firstTs snapshot — the phantom path was not exercised")
-    // …and finalizedSessions collapses to the true event-time session set
-    val fin = graft.spark.Streaming.finalizedSessions(raw)
-      .orderBy("user_id", "first_ts").collect()
-    assert(fin.length == 3, fin.mkString("\n"))
-    val u1 = fin.filter(_.getLong(0) == 1L)
-    assert(u1.length == 1 && u1.head.getTimestamp(1) == ts(58)
-      && u1.head.getLong(2) == 3L, u1.mkString("\n"))
-    assert(fin.filter(_.getLong(0) == 2L).map(_.getLong(2)).toSeq == Seq(2L, 1L))
   }
 
   test("property: session output is file-order invariant and equals the batch oracle (6 seeds)") {
@@ -414,14 +426,15 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
         s.map(_._3).distinct.length)).toList
     }
     def addFile(dir: String, rows: Seq[(Long, Timestamp, String)], name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("sess_prop_part")
-      rows.toDF("user_id", "ts", "event_type").coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val st = Files.list(tmp)
-      val part = try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get() finally st.close()
-      Files.copy(part, Paths.get(dir, name), StandardCopyOption.REPLACE_EXISTING)
-      Paths.get(dir, name).toFile.setLastModified(mtime)
+      withTempDir("sess_prop_part") { tmp =>
+        rows.toDF("user_id", "ts", "event_type").coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+        val st = Files.list(tmp)
+        val part = try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
+          .findFirst().get() finally st.close()
+        Files.copy(part, Paths.get(dir, name), StandardCopyOption.REPLACE_EXISTING)
+        Paths.get(dir, name).toFile.setLastModified(mtime)
+      }
     }
     val fileBlocks: Seq[Seq[(Long, Timestamp, String)]] = (0 until 20)
       .map(j => events.filter(e => ((e._2.getTime - base) / 60000 / 4).toInt == j))
@@ -441,17 +454,19 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
           val t = perm(i); perm(i) = perm(i + 1); perm(i + 1) = t; i += 2
         } else i += 1
       }
-      val dir = Files.createTempDirectory(s"sess_prop_$seed").toString
-      for ((fileIdx, pos) <- perm.zipWithIndex)
-        addFile(dir, fileBlocks(fileIdx), f"f$pos%03d.parquet", 1000000000L + pos * 1000L)
-      val raw = graft.spark.Streaming.userSessions(spark, dir, maxFilesPerTrigger = Some(1))
-      if (raw.select("user_id", "firstTs").distinct().count() > oracle.length) staleSeeds += 1
-      val fin = graft.spark.Streaming.finalizedSessions(raw)
-        .orderBy("user_id", "first_ts").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(2),
-          r.getTimestamp(3).getTime, r.getInt(4)))
-      assert(fin.toSeq == oracle,
-        s"seed $seed perm ${perm.mkString(",")}:\n${fin.mkString("\n")}\nvs\n${oracle.mkString("\n")}")
+      withTempDir(s"sess_prop_$seed") { dirPath =>
+        val dir = dirPath.toString
+        for ((fileIdx, pos) <- perm.zipWithIndex)
+          addFile(dir, fileBlocks(fileIdx), f"f$pos%03d.parquet", 1000000000L + pos * 1000L)
+        val raw = graft.spark.Streaming.userSessions(spark, dir, maxFilesPerTrigger = Some(1))
+        if (raw.select("user_id", "firstTs").distinct().count() > oracle.length) staleSeeds += 1
+        val fin = graft.spark.Streaming.finalizedSessions(raw)
+          .orderBy("user_id", "first_ts").collect()
+          .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(2),
+            r.getTimestamp(3).getTime, r.getInt(4)))
+        assert(fin.toSeq == oracle,
+          s"seed $seed perm ${perm.mkString(",")}:\n${fin.mkString("\n")}\nvs\n${oracle.mkString("\n")}")
+      }
     }
     // the property must not be vacuous: at least one order actually
     // produced a stale-firstTs snapshot for finalizedSessions to drop
@@ -768,6 +783,35 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("an extraction pass and its metrics write without starting an OS process") {
+    // an earlier stream registers the forkless filesystem context-wide:
+    // unset it, so that only what the extraction registers is in force
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    keys.foreach(conf.unset)
+    try withTempDir("extract_forks") { dir =>
+      val in = dir.resolve("in").toString
+      CorpusGen.inputView(CorpusGen.corpus(spark, rows = 16, partitions = 2)).write.parquet(in)
+      // the input read builds (and Hadoop caches) a stock file: filesystem
+      val input = spark.read.parquet(in)
+      assert(input.count() == 16)
+      val forks = processStarts {
+        val extracted = Pipeline.extractMode(spark, input, Pipeline.DefaultMode).cache()
+        extracted.write.mode("append").parquet(dir.resolve("extracted").toString)
+        Pipeline.partitionMetrics(spark, extracted).write.mode("append").parquet(dir.resolve("metrics").toString)
+        extracted.unpersist()
+      }
+      val n = forks.size
+      assert(n == 0, s"$n processes started, e.g. ${forks.take(3).mkString("; ")}")
+      assert(spark.read.parquet(dir.resolve("extracted").toString).count() == 16)
+      assert(spark.read.parquet(dir.resolve("metrics").toString).count() == 2)
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   test("d11 and x31 write their signature index as files: no catalog table") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.catalog.CreateTableEvent
@@ -802,10 +846,14 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a stateful stream stopped after its first batch resumes on its checkpoint") {
+    withTempDir("stream_restart")(streamRestart)
+  }
+
+  /** The restart test's body over its temp directory `root`. */
+  private def streamRestart(root: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, Path, StandardCopyOption}
     import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("stream_restart")
     // four source files, one per micro-batch, in mtime order; events are
     // dealt to them by id, so later files carry rows behind the watermark
     val src = Files.createDirectory(root.resolve("src"))
@@ -868,7 +916,11 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("windowed-count plan carries the watermark (Append-mode state eviction)") {
-    val dir = java.nio.file.Files.createTempDirectory("wm_plan").toString
+    withTempDir("wm_plan")(dir => watermarkPlan(dir.toString))
+  }
+
+  /** The watermark test's body over its temp directory `dir`. */
+  private def watermarkPlan(dir: String): Unit = {
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .write.mode("overwrite").parquet(dir)
     val plan = graft.spark.Streaming.windowedEventCountsPlan(spark, dir)
