@@ -132,7 +132,6 @@ object Extract {
         case Some(mcid) => m = m.updated(mcid, m.getOrElse(mcid, Nil) :+ g)
         case None => ()
       }
-      case _ => ()
     }
     m
   }

@@ -3,25 +3,20 @@ package graft.core
 import Util.{strip, stripEnd, stripStart}
 
 /** Footnote inlining (reference Layout.hs:475-611): small-size lines in the
-  * bottom band (or under a bottom rule) starting with markers like †2 form
-  * footnote blocks; matching superscript markers in body lines become
-  * <footnote>...</footnote>. Horizontal pages only. */
+  * bottom band starting with markers like †2 form footnote blocks; matching
+  * superscript markers in body lines become <footnote>...</footnote>.
+  * Horizontal pages only. */
 object Footnotes {
 
   private val markerPrefixes = "†‡*※"
 
-  def inlineFootnotes(graphics: List[Rect], ls: List[Line]): List[Line] = {
+  def inlineFootnotes(ls: List[Line]): List[Line] = {
     if (ls.isEmpty) return ls
     val bodySize = Util.medianOf(Util.lineSizes(ls))
     val (lo, hi) = Layout.pageBaselineExtent(ls)
     val bandTop = lo + 0.35 * (hi - lo)
-    val ruleYs = graphics.collect {
-      case r if r.height < 1 && r.width >= 40 && math.min(r.y0, r.y1) <= bandTop =>
-        math.max(r.y0, r.y1)
-    }
     def isSmall(l: Line) = l.size <= 0.85 * bodySize
-    def inRegion(l: Line) =
-      isSmall(l) && (l.baseline <= bandTop || ruleYs.exists(_ > l.baseline))
+    def inRegion(l: Line) = isSmall(l) && l.baseline <= bandTop
 
     val tagged = ls.map(l => (inRegion(l), l))
     val regionLines = tagged.collect { case (true, l) => l }

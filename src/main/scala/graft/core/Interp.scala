@@ -12,8 +12,10 @@ import DocStructure.{Dict, Document, emptyDict}
   *
   * Re-expression of /root/reference/src/PDF/Interpret.hs: byte tokenizer +
   * operator dispatch over an explicit graphics/text state, emitting
-  * positioned glyph runs and painted-path bounding boxes. Form XObjects
-  * inherit the enclosing marked-content stack; recursion depth capped at 12.
+  * positioned glyph runs and recording each image XObject's device bounding
+  * box. Path and paint operators only clear the operand stack: no output
+  * reads them. Form XObjects inherit the enclosing marked-content stack;
+  * recursion depth capped at 12.
   */
 object Interp {
   private val MaxFormDepth = 12
@@ -39,8 +41,7 @@ object Interp {
   private final class IState(
       val doc: Document,
       var res: Dict,
-      val fontOverrides: Map[String, FontInfo],
-      val collectImages: Boolean) {
+      val fontOverrides: Map[String, FontInfo]) {
     var gs: GS = initialGS
     var gsStack: List[GS] = Nil
     /** A text state is set (from BT, or from a Tm anywhere, until ET): the
@@ -52,7 +53,6 @@ object Interp {
     var textBuf = new Array[Char](64) // a shown string's text, see textRoom
     val items = new ArrayBuffer[PageItem]
     val images = new ArrayBuffer[(Int, Rect)]
-    var path: List[(Double, Double)] = Nil
     var depth: Int = 0
     var operands: List[PObj] = Nil
     var mcStack: List[MCEntry] = Nil
@@ -66,14 +66,14 @@ object Interp {
   /** Interpret a page's content (by page object ref). */
   def interpretPageItems(doc: Document, pageRef: Int): Either[PdfError, List[PageItem]] =
     pageInterpretInputs(doc, pageRef).map { case (_, content, res) =>
-      val st = new IState(doc, res, Map.empty, collectImages = false)
+      val st = new IState(doc, res, Map.empty)
       runStream(st, content)
       st.items.toList
     }
 
   def interpretPageImageHits(doc: Document, pageRef: Int): Either[PdfError, List[(Int, Rect)]] =
     pageInterpretInputs(doc, pageRef).map { case (_, content, res) =>
-      val st = new IState(doc, res, Map.empty, collectImages = true)
+      val st = new IState(doc, res, Map.empty)
       runStream(st, content)
       st.images.toList
     }
@@ -82,7 +82,7 @@ object Interp {
     * (unit-test entry; Interpret.hs:199-204). */
   def interpretContentItems(doc: Document, res: Dict, fonts: Map[String, FontInfo],
       bytes: Array[Byte]): List[PageItem] = {
-    val st = new IState(doc, res, fonts, collectImages = false)
+    val st = new IState(doc, res, fonts)
     runStream(st, bytes)
     st.items.toList
   }
@@ -409,7 +409,7 @@ object Interp {
           st.operands = o :: st.operands
           skipWsTok(cur)
         case "BI" =>
-          emitInlineImage(st)
+          st.operands = Nil
           skipWsTok(cur)
           skipInlineImage(cur)
         case op: String =>
@@ -500,30 +500,6 @@ object Interp {
       case PName(name) :: _ => invokeXObject(name, st)
       case _ => ()
     }
-    case "m" => if (popNums(2, st)) st.path = List(devicePoint(st, st.nbuf(1), st.nbuf(0)))
-    case "l" => if (popNums(2, st)) st.path = devicePoint(st, st.nbuf(1), st.nbuf(0)) :: st.path
-    case "c" => if (popNums(6, st)) {
-      val b = st.nbuf // [y3,x3,y2,x2,y1,x1]
-      prependPath(st, List(devicePoint(st, b(5), b(4)), devicePoint(st, b(3), b(2)), devicePoint(st, b(1), b(0))))
-    }
-    case "v" => if (popNums(4, st)) {
-      val b = st.nbuf // [y3,x3,y2,x2]
-      prependPath(st, List(devicePoint(st, b(3), b(2)), devicePoint(st, b(1), b(0))))
-    }
-    case "y" => if (popNums(4, st)) {
-      val b = st.nbuf // [y3,x3,y1,x1]
-      prependPath(st, List(devicePoint(st, b(3), b(2)), devicePoint(st, b(1), b(0))))
-    }
-    case "re" => if (popNums(4, st)) {
-      val h = st.nbuf(0); val w = st.nbuf(1); val y = st.nbuf(2); val x = st.nbuf(3)
-      prependPath(st, List(
-        devicePoint(st, x, y), devicePoint(st, x + w, y),
-        devicePoint(st, x, y + h), devicePoint(st, x + w, y + h)))
-    }
-    case "h" => ()
-    case "n" => st.path = Nil
-    case "S" | "s" | "f" | "F" | "f*" | "B" | "B*" | "b" | "b*" => paintPath(st)
-    case "W" | "W*" => ()
     case "BDC" => st.operands match {
       case props :: PName(tag) :: _ =>
         val mcid = mcidFromProps(props, st.res, st.doc)
@@ -541,30 +517,9 @@ object Interp {
     case _ => ()
   }
 
-  private def prependPath(st: IState, pts: List[(Double, Double)]): Unit =
-    st.path = pts.foldLeft(st.path)((acc, p) => p :: acc)
-
-  private def devicePoint(st: IState, x: Double, y: Double): (Double, Double) =
-    st.gs.ctm.apply(x, y)
-
-  private def paintPath(st: IState): Unit = {
-    if (st.path.nonEmpty) {
-      val pts = st.path.reverse
-      val xs = pts.map(_._1)
-      val ys = pts.map(_._2)
-      st.items += PageItem.ItemGraphic(Rect(xs.min, ys.min, xs.max, ys.max))
-      st.path = Nil
-    }
-  }
-
   private def ctmUnitSquare(m: Mat): Rect = {
     val pts = List(m.apply(0, 0), m.apply(1, 0), m.apply(0, 1), m.apply(1, 1))
     Rect(pts.map(_._1).min, pts.map(_._2).min, pts.map(_._1).max, pts.map(_._2).max)
-  }
-
-  private def emitInlineImage(st: IState): Unit = {
-    st.items += PageItem.ItemGraphic(ctmUnitSquare(st.gs.ctm))
-    st.operands = Nil
   }
 
   /** The innermost marked-content id: the entry's own Option. */
@@ -983,7 +938,7 @@ object Interp {
                 // form runs with a pushed gstate + form matrix; afterwards the
                 // result state is `popGStateSt st0` — i.e. the PRE-CALL state
                 // with its own gs stack popped (gs unchanged when the stack
-                // was empty). ts/path/mc/operand changes inside the form are
+                // was empty). ts/mc/operand changes inside the form are
                 // discarded; items/images are kept.
                 val savedGs = st.gs.copy2
                 val savedStack = st.gsStack
@@ -993,7 +948,6 @@ object Interp {
                 val savedTm = st.tm.clone()
                 val savedTlm = st.tlm.clone()
                 val savedMc = st.mcStack
-                val savedPath = st.path
                 st.gsStack = savedGs :: st.gsStack
                 st.gs = st.gs.copy2
                 st.gs.ctm = formMat.multiply(st.gs.ctm)
@@ -1011,13 +965,10 @@ object Interp {
                 System.arraycopy(savedTm, 0, st.tm, 0, 6)
                 System.arraycopy(savedTlm, 0, st.tlm, 0, 6)
                 st.mcStack = savedMc
-                st.path = savedPath
               case Left(_) => ()
             }
           case Some(PName("/Image")) =>
-            val bbox = ctmUnitSquare(st.gs.ctm)
-            if (st.collectImages) st.images += ((ref, bbox))
-            st.items += PageItem.ItemGraphic(bbox)
+            st.images += ((ref, ctmUnitSquare(st.gs.ctm)))
           case _ => ()
         }
         case None => ()

@@ -19,8 +19,7 @@ object Layout {
 
   sealed trait PageLines
   final case class PageFallback(ps: List[String]) extends PageLines
-  final case class PageNormal(wmode: Int, graphics: List[Rect], bounds: (Double, Double),
-      lines: List[Line]) extends PageLines
+  final case class PageNormal(wmode: Int, lines: List[Line]) extends PageLines
 
   // ---------- top-level drivers ----------
 
@@ -46,20 +45,19 @@ object Layout {
   def layoutParagraphs(opts: LayoutOptions, items: List[PageItem]): List[String] =
     applyFootnotesOpt(opts, applyRuby(opts, pageLinesRaw(items))) match {
       case PageFallback(ps) => ps
-      case PageNormal(wmode, graphics, bounds, ls) =>
-        groupParagraphs(wmode, graphics, bounds, ls).map(joinParaLines)
+      case PageNormal(wmode, ls) => groupParagraphs(wmode, ls).map(joinParaLines)
     }
 
   def pageItemLines(opts: LayoutOptions, items: List[PageItem]): List[Line] =
     applyFootnotesOpt(opts, applyRuby(opts, pageLinesRaw(items))) match {
       case PageFallback(_) => Nil
-      case PageNormal(_, _, _, ls) => ls
+      case PageNormal(_, ls) => ls
     }
 
   def pageItemParagraphGroups(opts: LayoutOptions, items: List[PageItem]): List[List[Line]] =
     applyFootnotesOpt(opts, applyRuby(opts, pageLinesRaw(items))) match {
       case PageFallback(ps) => List.fill(ps.length)(Nil)
-      case PageNormal(wmode, graphics, bounds, ls) => groupParagraphs(wmode, graphics, bounds, ls)
+      case PageNormal(wmode, ls) => groupParagraphs(wmode, ls)
     }
 
   /** Cross-page paragraph merge with pending-paragraph carry
@@ -84,8 +82,8 @@ object Layout {
       case PageFallback(ps) =>
         done = done ++ (finalizePending(pending) ++ ps.map(strip))
         pending = Nil
-      case PageNormal(wmode, graphics, bounds, ls) =>
-        val pageGroups = groupParagraphs(wmode, graphics, bounds, ls)
+      case PageNormal(wmode, ls) =>
+        val pageGroups = groupParagraphs(wmode, ls)
         val pageMinInline = if (ls.isEmpty) 0.0 else ls.map(_.inlineStart).min
         (pending, pageGroups) match {
           case (Nil, _) => continuePage(pageGroups)
@@ -118,25 +116,23 @@ object Layout {
 
   def applyHeaderFooterStrip(n: Int, layouts: List[PageLines]): List[PageLines] = {
     val normalPairs = layouts.zipWithIndex.collect {
-      case (PageNormal(_, _, _, ls), i) => (i, ls)
+      case (PageNormal(_, ls), i) => (i, ls)
     }
     val strippedNormals = stripHeadersFooters(n, normalPairs.map(_._2))
     val strippedMap = normalPairs.map(_._1).zip(strippedNormals).toMap
     layouts.zipWithIndex.map {
       case (PageFallback(ps), _) => PageFallback(ps)
-      case (PageNormal(w, g, b, ls), i) => PageNormal(w, g, b, strippedMap.getOrElse(i, ls))
+      case (PageNormal(w, ls), i) => PageNormal(w, strippedMap.getOrElse(i, ls))
     }
   }
 
   private def applyFootnotesOpt(opts: LayoutOptions, page: PageLines): PageLines = page match {
-    case PageNormal(0, graphics, bounds, ls) if opts.footnotes =>
-      PageNormal(0, graphics, bounds, Footnotes.inlineFootnotes(graphics, ls))
+    case PageNormal(0, ls) if opts.footnotes => PageNormal(0, Footnotes.inlineFootnotes(ls))
     case _ => page
   }
 
   private def applyRuby(opts: LayoutOptions, page: PageLines): PageLines = page match {
-    case PageNormal(wmode, _, bounds, ls) =>
-      PageNormal(wmode, Nil, bounds, Ruby.mergeInterleavedRubyLines(wmode, opts.ruby, ls))
+    case PageNormal(wmode, ls) => PageNormal(wmode, Ruby.mergeInterleavedRubyLines(wmode, opts.ruby, ls))
     case _ => page
   }
 
@@ -144,21 +140,19 @@ object Layout {
 
   def pageLinesRaw(items: List[PageItem]): PageLines = {
     val glyphs = items.collect { case ItemGlyph(g) => g }
-    val graphics = items.collect { case ItemGraphic(r) => r }
     if (glyphs.isEmpty) PageFallback(Nil)
     else if (fallbackNeeded(glyphs)) PageFallback(List(glyphs.map(_.text).mkString("\n")))
     else {
       val visible = filterPageGlyphs(glyphs)
       // the coordinate filter (measure >= 0) can drop EVERY glyph (e.g. a
-      // page whose glyphs all sit at negative y): pageExtents on an empty
-      // list would throw (the reference's `maximum []` errors here too —
-      // totality demands an empty page instead of a crash)
+      // page whose glyphs all sit at negative y); such a page is an empty
+      // fallback page, not an empty normal one: the two merge across pages
+      // differently (a fallback page ends the pending paragraph)
       if (visible.isEmpty) PageFallback(Nil)
       else {
         val wmode = dominantWMode(visible)
-        val bounds = pageExtents(visible)
         val ls = buildLines(visible).map(fixDingbatBulletLine)
-        PageNormal(wmode, graphics, bounds, ls)
+        PageNormal(wmode, ls)
       }
     }
   }
@@ -220,22 +214,6 @@ object Layout {
   def dominantWMode(glyphs: List[Glyph]): Int = {
     val vertical = glyphs.count(_.wmode == 1)
     if (glyphs.nonEmpty && vertical >= glyphs.length - vertical) 1 else 0
-  }
-
-  /** The page's (width, height) spanned by its glyphs' x, x + width and
-    * y, each at least 1. Needs a glyph. */
-  def pageExtents(glyphs: List[Glyph]): (Double, Double) = {
-    var xMin = glyphs.head.x
-    var xMax = xMin
-    var yMin = glyphs.head.y
-    var yMax = yMin
-    for (g <- glyphs) {
-      xMin = totalMin(totalMin(xMin, g.x), g.x + g.width)
-      xMax = totalMax(totalMax(xMax, g.x), g.x + g.width)
-      yMin = totalMin(yMin, g.y)
-      yMax = totalMax(yMax, g.y)
-    }
-    (math.max(1, xMax - xMin), math.max(1, yMax - yMin))
   }
 
   def baselineOf(wmode: Int, g: Glyph): Double = if (wmode == 1) g.x else g.y
@@ -548,8 +526,7 @@ object Layout {
     }
   }
 
-  def groupParagraphs(wmode: Int, graphics: List[Rect], bounds: (Double, Double),
-      lines: List[Line]): List[List[Line]] = {
+  def groupParagraphs(wmode: Int, lines: List[Line]): List[List[Line]] = {
     val ordered = sortLinesByReadingOrder(lines).filter(l => !l.text.forall(Util.isHsSpace))
     val out = List.newBuilder[List[Line]]
     val pageGaps = new GapTracker
@@ -563,7 +540,7 @@ object Layout {
       var stop = false
       while (!stop && tail.nonEmpty) {
         val l = tail.head
-        if (paragraphBreakT(wmode, graphics, bounds, prev, l, pageGaps, minInline)) stop = true
+        if (paragraphBreakT(wmode, prev, l, pageGaps, minInline)) stop = true
         else {
           val g = baselineGap(wmode, prev, l)
           pageGaps.add(g)
@@ -579,8 +556,8 @@ object Layout {
     out.result()
   }
 
-  private def paragraphBreakT(wmode: Int, graphics: List[Rect], pageBounds: (Double, Double),
-      prev: Line, cur: Line, gaps: GapTracker, paraMinInline: Double): Boolean = {
+  private def paragraphBreakT(wmode: Int, prev: Line, cur: Line, gaps: GapTracker,
+      paraMinInline: Double): Boolean = {
     val gap = baselineGap(wmode, prev, cur)
     val typical = gaps.typical(cur.size)
     val gapBreak = math.abs(gap) > 1.6 * typical
@@ -590,8 +567,7 @@ object Layout {
       sameHangListItemBreakT(wmode, prev, cur, gaps) ||
       codeBlockBreak(prev, cur) ||
       (gapBreak && !cjkWrapContinuation(prev, cur)) ||
-      indentBreak(paraMinInline, cur) ||
-      (graphicBreak(wmode, graphics, pageBounds, prev, cur) && !cjkWrapContinuation(prev, cur))
+      indentBreak(paraMinInline, cur)
   }
 
   def baselineGap(wmode: Int, prev: Line, cur: Line): Double = prev.baseline - cur.baseline
@@ -706,35 +682,6 @@ object Layout {
       val n = Util.hsTruncate(offset / math.max(charW, 1))
       (" " * n) + strip(l.text)
     }.mkString("\n")
-  }
-
-  // ---------- graphic separators ----------
-
-  def graphicBreak(wmode: Int, graphics: List[Rect], pageBounds: (Double, Double),
-      prev: Line, cur: Line): Boolean = {
-    val (pageW, pageH) = pageBounds
-    val tol = 0.2 * cur.size
-    val lo = math.min(prev.baseline, cur.baseline) - tol
-    val hi = math.max(prev.baseline, cur.baseline) + tol
-    graphics.exists { r =>
-      val bigEnough = r.width > 0.8 * pageW && r.height > 0.8 * pageH
-      val tiny = r.width < 0.5 && r.height < 0.5
-      val rLo = if (wmode == 1) math.min(r.x0, r.x1) else math.min(r.y0, r.y1)
-      val rHi = if (wmode == 1) math.max(r.x0, r.x1) else math.max(r.y0, r.y1)
-      val candidate = !bigEnough && !tiny && rLo <= hi && rHi >= lo
-      candidate && inlineOverlap(wmode, prev, cur, r)
-    }
-  }
-
-  private def inlineOverlap(wmode: Int, prev: Line, cur: Line, r: Rect): Boolean = {
-    val unionLo = math.min(prev.inlineStart, cur.inlineStart)
-    val unionHi = math.max(prev.inlineEnd, cur.inlineEnd)
-    val unionLen = math.max(0, unionHi - unionLo)
-    val (rLo, rHi) =
-      if (wmode == 1) (math.min(r.y0, r.y1), math.max(r.y0, r.y1))
-      else (math.min(r.x0, r.x1), math.max(r.x0, r.x1))
-    val overlap = math.max(0, math.min(unionHi, rHi) - math.max(unionLo, rLo))
-    unionLen <= 0 || overlap / unionLen >= 0.2
   }
 
   // ---------- joining ----------

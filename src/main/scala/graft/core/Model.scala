@@ -151,15 +151,11 @@ final case class Glyph(
     wmode: Int,
     mcid: Option[Int])
 
-final case class Rect(x0: Double, y0: Double, x1: Double, y1: Double) {
-  def width: Double = math.abs(x1 - x0)
-  def height: Double = math.abs(y1 - y0)
-}
+final case class Rect(x0: Double, y0: Double, x1: Double, y1: Double)
 
 sealed trait PageItem extends Product with Serializable
 object PageItem {
   final case class ItemGlyph(g: Glyph) extends PageItem
-  final case class ItemGraphic(r: Rect) extends PageItem
 }
 
 /** Merged glyph run on one baseline (Layout.hs:855-865). */

@@ -31,7 +31,7 @@ object Page {
       else Right(refs(n - 1))
     }
 
-  /** Raw interpreted page items (glyphs + graphics) — Page.hs:80-81. */
+  /** Raw interpreted page items, the positioned glyphs — Page.hs:80-81. */
   def pageItems(doc: Document, ref: Int): Either[PdfError, List[PageItem]] =
     Interp.interpretPageItems(doc, ref)
 

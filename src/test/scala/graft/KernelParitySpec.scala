@@ -999,7 +999,8 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The interpreter's text path as it stood with Mats: the text state an
     * `Option[(tm, tlm)]`, six Mats per show, each literal copied to an Int
-    * array. Runs a generated op list; marked content is not generated. */
+    * array. Runs a generated op list; path, paint, clip and inline-image
+    * ops show nothing and change no state, so it skips them. */
   private object LegacyTextPath {
     import graft.core.{Encoding, FontInfo, Glyph, Interp, Mat}
 
@@ -1124,12 +1125,18 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
           case ("BDC", Seq(_, TMcid(n))) => mcStack = Some(n) :: mcStack
           case ("BDC", _) | ("BMC", _) => mcStack = None :: mcStack
           case ("EMC", _) => if (mcStack.nonEmpty) mcStack = mcStack.tail
+          case (g, _) if graphicsOps(g) => ()
           case (other, _) => fail(s"no reference for $other")
         }
       }
       out.result()
     }
   }
+
+  /** Path construction, painting and clipping, and the `EI` that closes an
+    * inline image. */
+  private val graphicsOps = Set("m", "l", "c", "v", "y", "re", "h", "n", "S", "s", "f", "F", "f*",
+    "B", "B*", "b", "b*", "W", "W*", "EI")
 
   test("primitive text state, in-place literals and TJ == the Mat-based text path") {
     import graft.core.{DocStructure, Encoding, FontInfo, Interp, PageItem}
@@ -1164,7 +1171,22 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       case 3 if rnd.nextInt(6) == 0 => TName("/X") // a non-string element: the whole TJ shows nothing
       case _ => literal()
     }))
-    def op(): TOp = rnd.nextInt(23) match {
+    // image data holds no E or I, so the only whitespace-led EI is the
+    // closing one; it starts with a non-space byte (the interpreter skips all
+    // whitespace after ID, so data of spaces alone would hide the EI)
+    val imageBytes = "()<>[]Tj01\u00ff \n"
+    def inlineImage(): TOp = TOp("EI", Seq(TRaw("BI /W " + num().src + " /H 1 /BPC 8 /CS /G ID " +
+      imageBytes(rnd.nextInt(11)) + Seq.fill(rnd.nextInt(12))(imageBytes(rnd.nextInt(13))).mkString)))
+    def graphic(): TOp = rnd.nextInt(9) match {
+      case 0 => TOp(Vector("m", "l")(rnd.nextInt(2)), Seq.fill(2)(num()))
+      case 1 => TOp("c", Seq.fill(6)(num()))
+      case 2 => TOp(Vector("v", "y", "re")(rnd.nextInt(3)), Seq.fill(4)(num()))
+      case 3 | 4 => TOp(Vector("h", "n", "S", "s", "f", "F", "f*", "B", "B*", "b", "b*")(rnd.nextInt(11)), Nil)
+      case 5 => TOp(Vector("W", "W*")(rnd.nextInt(2)), Nil)
+      case 6 => TOp(Vector("S", "f")(rnd.nextInt(2)), Seq.fill(rnd.nextInt(3))(num())) // stray operands
+      case _ => inlineImage()
+    }
+    def op(): TOp = rnd.nextInt(25) match {
       case 0 | 1 => TOp("BT", Nil)
       case 2 => TOp("ET", Nil)
       case 3 => TOp("Tf", Seq(TName(Vector("/F1", "/F2", "/F3", "/F4", "/F9")(rnd.nextInt(5))), scale()))
@@ -1187,6 +1209,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
         case 2 => TOp("BMC", Seq(TName("/Artifact")))
         case _ => TOp("EMC", Nil)
       }
+      case 22 | 23 => graphic()
       case _ => TOp("Tf", Seq(TName("/F2"), scale()))
     }
     // B, C and D map to several chars, none, and a surrogate pair
@@ -1225,25 +1248,16 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       s"$glyphs glyphs, $nonFinite non-finite, $marked marked")
   }
 
-  test("primitive page and baseline extents == the boxed min/max of the collection methods") {
-    import graft.core.{Glyph, Layout, Line}
-    def legacy(gs: List[Glyph]): (Double, Double) = {
-      val xs = gs.flatMap(g => List(g.x, g.x + g.width))
-      val ys = gs.map(_.y)
-      (math.max(1, xs.max - xs.min), math.max(1, ys.max - ys.min))
-    }
+  test("primitive baseline extents == the boxed min/max of the collection methods") {
+    import graft.core.{Layout, Line}
     def legacyBaselines(ls: List[Line]): (Double, Double) = {
       val baselines = ls.map(_.baseline)
       (baselines.min, baselines.max)
     }
     val rnd = new scala.util.Random(37)
     for (_ <- 1 to 20000) {
-      val gs = List.fill(1 + rnd.nextInt(6))(
-        Glyph("a", edgeDouble(rnd), edgeDouble(rnd), edgeDouble(rnd), 10, "/F", 0, None))
-      val (w, h) = Layout.pageExtents(gs)
-      val (lw, lh) = legacy(gs)
-      assert(sameBits(w, lw) && sameBits(h, lh), gs)
-      val ls = gs.map(g => Line(g.y, 0, 1, 10, 0, 0, "x", Nil, lastSuper = false))
+      val ls = List.fill(1 + rnd.nextInt(6))(
+        Line(edgeDouble(rnd), 0, 1, 10, 0, 0, "x", Nil, lastSuper = false))
       val (lo, hi) = Layout.pageBaselineExtent(ls)
       val (llo, lhi) = legacyBaselines(ls)
       assert(sameBits(lo, llo) && sameBits(hi, lhi), ls)
@@ -1349,6 +1363,8 @@ object KernelParitySpec {
   final case class THex(digits: String) extends TArg { def src: String = "<" + digits + ">" }
   /** Marked-content properties with an id. */
   final case class TMcid(n: Int) extends TArg { def src: String = s"<< /MCID $n >>" }
+  /** Source text written as is (an inline image's `BI <dict> ID <data>`). */
+  final case class TRaw(src: String) extends TArg
   final case class TArr(elems: Seq[TArg]) extends TArg {
     def src: String = elems.map(_.src).mkString("[", " ", "]")
   }

@@ -91,11 +91,39 @@ class LayoutExtrasSpec extends AnyFunSuite {
     }
   }
 
+  test("rules, strokes and images between two lines never split the paragraph") {
+    import scala.collection.immutable.TreeMap
+    import graft.core.PObj.{PDict, PName, PRef}
+    val imageRef = 5
+    val image = PDict(TreeMap("/Type" -> PName("/XObject"), "/Subtype" -> PName("/Image")))
+    val doc = new DocStructure.Document("".getBytes, TreeMap.empty, Map.empty, None,
+      Some(Map(imageRef -> List(image))))
+    val res: DocStructure.Dict = TreeMap("/XObject" -> PDict(TreeMap("/Im1" -> PRef(imageRef))))
+    val font = FontInfo(Encoding.NullMap, Map.empty, 65, Vector(Some(600.0), Some(700.0)),
+      Map.empty, Map.empty, FontInfo.DefaultVerticalW1, 0, 1, 500, isType0 = false)
+    val first = "BT /F1 10 Tf 72 700 Td (ABBA) Tj ET\n"
+    val second = "BT /F1 10 Tf 72 688 Td (BAAB) Tj ET\n"
+    // a thin rule as wide as a column, a stroke, an inline image and an
+    // image XObject, all between the two baselines and across the text
+    val graphics =
+      "72 693 300 0.5 re f\n" +
+        "72 691 m 372 691 l S\n" +
+        "q 20 0 0 6 72 689 cm BI /W 2 /H 1 /BPC 8 /CS /G ID \u00ff\u0000 EI Q\n" +
+        "q 20 0 0 6 90 689 cm /Im1 Do Q\n"
+    def text(src: String): String = Layout.layoutPageText(Layout.defaultOptions,
+      Interp.interpretContentItems(doc, res, Map("/F1" -> font),
+        src.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)))
+    val plain = text(first + second)
+    // one paragraph holding both lines
+    assert(plain.filterNot(_.isWhitespace) == "ABBABAAB" && plain.count(_ == '\n') == 1, plain)
+    assert(text(first + graphics + second) == plain)
+  }
+
   test("footnote block inlined at its body anchor") {
     val body = line("Main claim†1 continues", 700, 72, 300, 10, markers = List((10, "†1")))
     val other = line("Another body line here", 688, 72, 300, 10)
     val note = line("†1 Footnote body text", 50, 72, 200, 6)
-    val out = Footnotes.inlineFootnotes(Nil, List(body, other, note))
+    val out = Footnotes.inlineFootnotes(List(body, other, note))
     assert(out.map(_.text) == List(
       "Main claim<footnote>Footnote body text</footnote> continues",
       "Another body line here"))
@@ -104,7 +132,7 @@ class LayoutExtrasSpec extends AnyFunSuite {
   test("unanchored footnote blocks are kept") {
     val body = line("No marker here at all!", 700, 72, 300, 10)
     val note = line("†2 Orphan footnote", 50, 72, 200, 6)
-    val out = Footnotes.inlineFootnotes(Nil, List(body, note))
+    val out = Footnotes.inlineFootnotes(List(body, note))
     assert(out.map(_.text) == List("No marker here at all!", "†2 Orphan footnote"))
   }
 }
