@@ -47,7 +47,7 @@ object Diff {
       refs: List[Int]): Either[PdfError, Vector[List[String]]] = {
     val out = Vector.newBuilder[List[String]]
     for (ref <- refs) Interp.interpretPageItems(doc, ref) match {
-      case Right(items) => out += Layout.layoutParagraphs(opts, items)
+      case Right(glyphs) => out += Layout.layoutParagraphs(opts, glyphs)
       case Left(e) => return Left(e)
     }
     Right(out.result())

@@ -475,81 +475,53 @@ object DocStructure {
   }
 
   /** ObjStm header: `/First` splits `objnum offset` pairs from the bodies
-    * (DocumentStructure.hs:745-754; strict split fixed in CHANGELOG 0.4.6.3). */
+    * (DocumentStructure.hs:745-754; strict split fixed in CHANGELOG 0.4.6.3).
+    * Without `/First` the pairs are parsed greedily and the body starts
+    * where they end. */
   def parseObjStmHeader(first: Option[Int], s: Array[Byte]): Option[(List[(Int, Int)], Array[Byte])] = {
-    def parsePairs(buf: Array[Byte]): Option[List[(Int, Int)]] = {
-      val cur = new Cursor(buf)
-      Lexer.skipSpaces(cur)
-      val out = List.newBuilder[(Int, Int)]
-      var count = 0
-      var go = true
-      while (go) {
-        val save = cur.pos
-        var r = 0L
-        var rd = 0
-        while (Lexer.isDigit(cur.peek)) { r = r * 10 + (cur.next() - '0'); rd += 1 }
-        if (rd == 0) { cur.pos = save; go = false }
-        else {
-          Lexer.skipSpaces(cur)
-          var o = 0L
-          var od = 0
-          while (Lexer.isDigit(cur.peek)) { o = o * 10 + (cur.next() - '0'); od += 1 }
-          if (od == 0) { cur.pos = save; go = false }
-          else {
-            Lexer.skipSpaces(cur)
-            out += ((r.toInt, o.toInt))
-            count += 1
-          }
-        }
-      }
-      if (count == 0) None else Some(out.result())
-    }
-    first match {
+    val (pairs, bodyAt) = first match {
       case Some(f) if f >= 0 && f <= s.length =>
-        parsePairs(java.util.Arrays.copyOfRange(s, 0, f)).map(loc => (loc, s.drop(f)))
-      case _ =>
-        // no /First: greedy pair parse, remainder is the body
-        val cur = new Cursor(s)
-        Lexer.skipSpaces(cur)
-        val out = List.newBuilder[(Int, Int)]
-        var go = true
-        var last = cur.pos
-        while (go) {
-          val save = cur.pos
-          var r = 0L; var rd = 0
-          while (Lexer.isDigit(cur.peek)) { r = r * 10 + (cur.next() - '0'); rd += 1 }
-          if (rd == 0) { cur.pos = save; go = false }
-          else {
-            Lexer.skipSpaces(cur)
-            var o = 0L; var od = 0
-            while (Lexer.isDigit(cur.peek)) { o = o * 10 + (cur.next() - '0'); od += 1 }
-            if (od == 0) { cur.pos = save; go = false }
-            else { Lexer.skipSpaces(cur); out += ((r.toInt, o.toInt)); last = cur.pos }
-          }
-        }
-        val loc = out.result()
-        if (loc.isEmpty) None else Some((loc, s.drop(last)))
+        (objStmPairs(java.util.Arrays.copyOfRange(s, 0, f))._1, f)
+      case _ => objStmPairs(s)
     }
+    if (pairs.isEmpty) None else Some((pairs, s.drop(bodyAt)))
   }
 
-  /** ObjStm value parse: dict | array | string (DocumentStructure.hs:756-769). */
+  /** The leading `objnum offset` pairs of `buf` and the position after the
+    * last one (and the whitespace that follows it). */
+  private def objStmPairs(buf: Array[Byte]): (List[(Int, Int)], Int) = {
+    val cur = new Cursor(buf)
+    Lexer.skipSpaces(cur)
+    val out = List.newBuilder[(Int, Int)]
+    var end = cur.pos
+    var go = true
+    while (go) {
+      var r = 0L; var rd = 0
+      while (Lexer.isDigit(cur.peek)) { r = r * 10 + (cur.next() - '0'); rd += 1 }
+      var o = 0L; var od = 0
+      if (rd > 0) {
+        Lexer.skipSpaces(cur)
+        while (Lexer.isDigit(cur.peek)) { o = o * 10 + (cur.next() - '0'); od += 1 }
+      }
+      if (od == 0) go = false
+      else {
+        Lexer.skipSpaces(cur)
+        out += ((r.toInt, o.toInt))
+        end = cur.pos
+      }
+    }
+    (out.result(), end)
+  }
+
+  /** ObjStm value parse: dict | array | string (DocumentStructure.hs:756-769),
+    * read in place at `off`. */
   def parseObjStmObject(body: Array[Byte], off: Int): List[PObj] = {
     if (off < 0 || off > body.length) return List(PNull)
-    val sub = body.drop(off)
-    val c1 = new Cursor(sub)
-    Lexer.dictionary(c1, None, 0) match {
+    Lexer.dictionary(new Cursor(body, off), None, 0)
+      .orElse(Lexer.array(new Cursor(body, off), None, 0))
+      .orElse(Lexer.literal(new Cursor(body, off), None, 0)) match {
       case Some(o) => List(o)
-      case None =>
-        val c2 = new Cursor(sub)
-        Lexer.array(c2, None, 0) match {
-          case Some(o) => List(o)
-          case None =>
-            val c3 = new Cursor(sub)
-            Lexer.literal(c3, None, 0) match {
-              case Some(o) => List(o)
-              case None => List(PNull)
-            }
-        }
+      case None => List(PNull)
     }
   }
 

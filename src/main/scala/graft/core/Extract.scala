@@ -2,8 +2,7 @@ package graft.core
 
 import DocStructure.Document
 import Layout.{LayoutOptions, PageLines, defaultOptions}
-import PageItem._
-import Structure.{StructElem, structTree, logicalOrder, collectRubySpans}
+import Structure.{RubySpan, StructElem, structTree, logicalOrder, collectRubySpans}
 
 /** Text-extraction drivers (reference src/PDF/Text.hs).
   *
@@ -45,31 +44,35 @@ object Extract {
   }
 
   /** >= 50% of glyphs carry MCIDs (Text.hs:232-237). */
-  def taggedUsable(pages: List[List[PageItem]]): Boolean = {
-    val glyphs = for (pg <- pages; ItemGlyph(g) <- pg) yield g
-    val total = glyphs.length
-    val tagged = glyphs.count(_.mcid.isDefined)
+  def taggedUsable(pages: List[List[Glyph]]): Boolean = {
+    var total = 0
+    var tagged = 0
+    for (pg <- pages; g <- pg) {
+      total += 1
+      if (g.mcid.isDefined) tagged += 1
+    }
     total > 0 && tagged.toDouble / total >= 0.5
   }
 
   /** assembleTagged (Text.hs:239-341). */
   def assembleTagged(opts: LayoutOptions, root: StructElem, refs: List[Int],
-      pages: List[List[PageItem]]): String = {
-    val mcidMaps: List[(Int, Map[Int, List[Glyph]])] = refs.zip(pages.map(mcidGlyphMap))
+      pages: List[List[Glyph]]): String = {
     val mcidLookup: Map[(Int, Int), List[Glyph]] =
-      (for ((page, m) <- mcidMaps; (mcid, gs) <- m) yield ((page, mcid), gs)).toMap
+      (for ((page, glyphs) <- refs.zip(pages); (mcid, gs) <- mcidGlyphMap(glyphs))
+        yield ((page, mcid), gs)).toMap
 
-    val rubyMap: Map[(Int, Int), String] = structureRubyMap(opts, root, refs, pages)
-    val structRubyPages: Set[Int] = collectRubySpans(root).map(_.page).toSet
+    val rubySpans = collectRubySpans(root)
+    val rubyMap: Map[(Int, Int), String] = structureRubyMap(opts, rubySpans, mcidLookup)
+    val structRubyPages: Set[Int] = rubySpans.map(_.page).toSet
     val geomRubyPerPage: Map[Int, String] =
       (for {
-        (page, items) <- refs.zip(pages)
+        (page, glyphs) <- refs.zip(pages)
         if opts.ruby && !structRubyPages.contains(page)
-      } yield page -> Layout.layoutPageText(opts, items)).toMap
+      } yield page -> Layout.layoutPageText(opts, glyphs)).toMap
 
     val artifactLinesPerPage: Map[Int, List[Line]] =
       refs.zip(Layout.stripHeadersFooters(pages.length,
-        pages.map(p => Layout.buildLines(artifactGlyphs(p))))).toMap
+        pages.map(p => Layout.buildLines(p.filter(_.mcid.isEmpty))))).toMap
 
     def lastPathType(path: List[String]): String = path.lastOption.getOrElse("")
 
@@ -125,35 +128,20 @@ object Extract {
     Set("/P", "/H1", "/H2", "/H3", "/H4", "/H5", "/H6",
       "/LI", "/LBody", "/TD", "/TH", "/Caption", "/Title").contains(stype)
 
-  def mcidGlyphMap(items: List[PageItem]): Map[Int, List[Glyph]] = {
-    var m = Map.empty[Int, List[Glyph]]
-    for (item <- items) item match {
-      case ItemGlyph(g) => g.mcid match {
-        case Some(mcid) => m = m.updated(mcid, m.getOrElse(mcid, Nil) :+ g)
-        case None => ()
-      }
-    }
-    m
-  }
+  /** Each MCID's glyphs, in content order. */
+  def mcidGlyphMap(glyphs: List[Glyph]): Map[Int, List[Glyph]] =
+    glyphs.filter(_.mcid.isDefined).groupBy(_.mcid.get)
 
-  private def artifactGlyphs(items: List[PageItem]): List[Glyph] =
-    items.collect { case ItemGlyph(g) if g.mcid.isEmpty => g }
-
-  private def structureRubyMap(opts: LayoutOptions, root: StructElem, refs: List[Int],
-      pages: List[List[PageItem]]): Map[(Int, Int), String] = {
+  /** Ruby text per (page, base MCID), read from the page's MCID glyphs. */
+  private def structureRubyMap(opts: LayoutOptions, spans: List[RubySpan],
+      mcidLookup: Map[(Int, Int), List[Glyph]]): Map[(Int, Int), String] =
     if (!opts.ruby) Map.empty
-    else {
-      val mcidMaps = refs.zip(pages.map(mcidGlyphMap)).toMap
-      def glyphTextFor(page: Int, mcid: Int): String =
-        mcidMaps.get(page).flatMap(_.get(mcid)).map(Layout.joinGlyphsRun).getOrElse("")
-      (for {
-        span <- collectRubySpans(root)
-        (baseMcid, rubyMcid) <- span.bases.zip(span.rubies)
-        rubyTxt = glyphTextFor(span.page, rubyMcid)
-        if rubyTxt.nonEmpty
-      } yield ((span.page, baseMcid), rubyTxt)).toMap
-    }
-  }
+    else (for {
+      span <- spans
+      (baseMcid, rubyMcid) <- span.bases.zip(span.rubies)
+      rubyTxt = mcidLookup.get((span.page, rubyMcid)).fold("")(Layout.joinGlyphsRun)
+      if rubyTxt.nonEmpty
+    } yield ((span.page, baseMcid), rubyTxt)).toMap
 
   // ---------- the full per-document entry point ----------
 

@@ -16,11 +16,16 @@ object Images {
     DocStructure.pageRefs(doc).flatMap { refs =>
       if (pageNum < 1 || pageNum > refs.length)
         Left(PdfError.UnsupportedFeature(s"page number $pageNum out of range"))
-      else Interp.interpretPageImageHits(doc, refs(pageNum - 1)).map { hits =>
-        hits.zipWithIndex.flatMap { case ((ref, bbox), idx) =>
-          loadImageBytes(doc, ref).toOption.map { case (fmt, bytes) =>
-            PageImage(idx + 1, pageNum, bbox, fmt, bytes)
-          }
+      else pageImages(doc, pageNum, refs(pageNum - 1))
+    }
+
+  /** The images placed on page number `pageNum`, whose page object is
+    * `pageRef`. */
+  def pageImages(doc: Document, pageNum: Int, pageRef: Int): Either[PdfError, List[PageImage]] =
+    Interp.interpretPageImageHits(doc, pageRef).map { hits =>
+      hits.zipWithIndex.flatMap { case ((ref, bbox), idx) =>
+        loadImageBytes(doc, ref).toOption.map { case (fmt, bytes) =>
+          PageImage(idx + 1, pageNum, bbox, fmt, bytes)
         }
       }
     }

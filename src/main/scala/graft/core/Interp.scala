@@ -51,7 +51,7 @@ object Interp {
     val tlm = new Array[Double](6)
     val trm = new Array[Double](4) // renderingOrigin's result
     var textBuf = new Array[Char](64) // a shown string's text, see textRoom
-    val items = new ArrayBuffer[PageItem]
+    val items = new mutable.ListBuffer[Glyph]
     val images = new ArrayBuffer[(Int, Rect)]
     var depth: Int = 0
     var operands: List[PObj] = Nil
@@ -64,7 +64,7 @@ object Interp {
   }
 
   /** Interpret a page's content (by page object ref). */
-  def interpretPageItems(doc: Document, pageRef: Int): Either[PdfError, List[PageItem]] =
+  def interpretPageItems(doc: Document, pageRef: Int): Either[PdfError, List[Glyph]] =
     pageInterpretInputs(doc, pageRef).map { case (_, content, res) =>
       val st = new IState(doc, res, Map.empty)
       runStream(st, content)
@@ -81,7 +81,7 @@ object Interp {
   /** Interpret raw content bytes with explicit resources + font overrides
     * (unit-test entry; Interpret.hs:199-204). */
   def interpretContentItems(doc: Document, res: Dict, fonts: Map[String, FontInfo],
-      bytes: Array[Byte]): List[PageItem] = {
+      bytes: Array[Byte]): List[Glyph] = {
     val st = new IState(doc, res, fonts)
     runStream(st, bytes)
     st.items.toList
@@ -721,8 +721,8 @@ object Interp {
       val ex = st.trm(0)
       val ey = st.trm(1)
       val width = math.sqrt((ex - ox) * (ex - ox) + (ey - oy) * (ey - oy))
-      st.items += PageItem.ItemGlyph(Glyph(new String(text, 0, len), ox, oy, width, segSize,
-        fname, fi.wmode, currentMCID(st)))
+      st.items += Glyph(new String(text, 0, len), ox, oy, width, segSize,
+        fname, fi.wmode, currentMCID(st))
     }
   }
 

@@ -3,9 +3,8 @@ package graft.core
 import scala.collection.mutable
 
 import Util.{firstChar, lastChar, strip, stripEnd, totalMax, totalMin}
-import PageItem._
 
-/** Line and paragraph reconstruction from interpreted page items.
+/** Line and paragraph reconstruction from a page's interpreted glyphs.
   *
   * Re-expression of /root/reference/src/PDF/Layout.hs — every heuristic
   * constant (baseline merge 0.4*size, gap break 1.6*leading, indent 0.85em,
@@ -23,8 +22,8 @@ object Layout {
 
   // ---------- top-level drivers ----------
 
-  def layoutPageText(opts: LayoutOptions, items: List[PageItem]): String =
-    formatParagraphs(layoutParagraphs(opts, items))
+  def layoutPageText(opts: LayoutOptions, glyphs: List[Glyph]): String =
+    formatParagraphs(layoutParagraphs(opts, glyphs))
 
   def layoutDocumentFromPageLines(opts: LayoutOptions, layouts: List[PageLines]): String =
     formatParagraphs(documentParagraphsFromPageLines(opts, layouts))
@@ -42,22 +41,21 @@ object Layout {
       sb.append('\n').toString
     }
 
-  def layoutParagraphs(opts: LayoutOptions, items: List[PageItem]): List[String] =
-    applyFootnotesOpt(opts, applyRuby(opts, pageLinesRaw(items))) match {
-      case PageFallback(ps) => ps
-      case PageNormal(wmode, ls) => groupParagraphs(wmode, ls).map(joinParaLines)
+  def layoutParagraphs(opts: LayoutOptions, glyphs: List[Glyph]): List[String] =
+    paragraphsWithLines(opts, glyphs).map(_._1)
+
+  /** A page's paragraphs, each text with the line group it was joined from,
+    * from one layout pass; a fallback page's paragraphs have no lines. */
+  def paragraphsWithLines(opts: LayoutOptions, glyphs: List[Glyph]): List[(String, List[Line])] =
+    finishPage(opts, pageLinesRaw(glyphs)) match {
+      case PageFallback(ps) => ps.map((_, Nil))
+      case PageNormal(wmode, ls) => groupParagraphs(wmode, ls).map(g => (joinParaLines(g), g))
     }
 
-  def pageItemLines(opts: LayoutOptions, items: List[PageItem]): List[Line] =
-    applyFootnotesOpt(opts, applyRuby(opts, pageLinesRaw(items))) match {
+  def pageLines(opts: LayoutOptions, glyphs: List[Glyph]): List[Line] =
+    finishPage(opts, pageLinesRaw(glyphs)) match {
       case PageFallback(_) => Nil
       case PageNormal(_, ls) => ls
-    }
-
-  def pageItemParagraphGroups(opts: LayoutOptions, items: List[PageItem]): List[List[Line]] =
-    applyFootnotesOpt(opts, applyRuby(opts, pageLinesRaw(items))) match {
-      case PageFallback(ps) => List.fill(ps.length)(Nil)
-      case PageNormal(wmode, ls) => groupParagraphs(wmode, ls)
     }
 
   /** Cross-page paragraph merge with pending-paragraph carry
@@ -65,7 +63,7 @@ object Layout {
   def documentParagraphsFromPageLines(opts: LayoutOptions, layouts: List[PageLines]): List[String] = {
     val n = layouts.length
     val stripped = applyHeaderFooterStrip(n, layouts)
-    val finalPages = stripped.map(p => applyFootnotesOpt(opts, applyRuby(opts, p)))
+    val finalPages = stripped.map(finishPage(opts, _))
 
     var done = Vector.empty[String]
     var pending: List[Line] = Nil
@@ -126,20 +124,18 @@ object Layout {
     }
   }
 
-  private def applyFootnotesOpt(opts: LayoutOptions, page: PageLines): PageLines = page match {
-    case PageNormal(0, ls) if opts.footnotes => PageNormal(0, Footnotes.inlineFootnotes(ls))
-    case _ => page
-  }
-
-  private def applyRuby(opts: LayoutOptions, page: PageLines): PageLines = page match {
-    case PageNormal(wmode, ls) => PageNormal(wmode, Ruby.mergeInterleavedRubyLines(wmode, opts.ruby, ls))
+  /** A page's lines after the ruby merge and then, on a horizontal page,
+    * footnote inlining; a fallback page passes through. */
+  private def finishPage(opts: LayoutOptions, page: PageLines): PageLines = page match {
+    case PageNormal(wmode, ls) =>
+      val merged = Ruby.mergeInterleavedRubyLines(wmode, opts.ruby, ls)
+      PageNormal(wmode, if (wmode == 0 && opts.footnotes) Footnotes.inlineFootnotes(merged) else merged)
     case _ => page
   }
 
   // ---------- page lines ----------
 
-  def pageLinesRaw(items: List[PageItem]): PageLines = {
-    val glyphs = items.collect { case ItemGlyph(g) => g }
+  def pageLinesRaw(glyphs: List[Glyph]): PageLines = {
     if (glyphs.isEmpty) PageFallback(Nil)
     else if (fallbackNeeded(glyphs)) PageFallback(List(glyphs.map(_.text).mkString("\n")))
     else {

@@ -153,10 +153,10 @@ final case class Glyph(
 
 final case class Rect(x0: Double, y0: Double, x1: Double, y1: Double)
 
-sealed trait PageItem extends Product with Serializable
-object PageItem {
-  final case class ItemGlyph(g: Glyph) extends PageItem
-}
+/** A page is a plain `List[Glyph]`. perfbench/Replay.scala imports this
+  * object and counts glyphs with `isInstanceOf` on its alias; nothing else
+  * uses it. */
+object PageItem { type ItemGlyph = Glyph }
 
 /** Merged glyph run on one baseline (Layout.hs:855-865). */
 final case class Line(

@@ -31,34 +31,30 @@ object Page {
       else Right(refs(n - 1))
     }
 
-  /** Raw interpreted page items, the positioned glyphs — Page.hs:80-81. */
-  def pageItems(doc: Document, ref: Int): Either[PdfError, List[PageItem]] =
-    Interp.interpretPageItems(doc, ref)
-
-  /** Just the positioned glyphs (Page.hs:83-86). */
+  /** The page's positioned glyphs (Page.hs:80-86). */
   def pageGlyphs(doc: Document, ref: Int): Either[PdfError, List[Glyph]] =
-    pageItems(doc, ref).map(_.collect { case PageItem.ItemGlyph(g) => g })
+    Interp.interpretPageItems(doc, ref)
 
   /** Merged layout lines (Page.hs:88-89). */
   def pageLines(doc: Document, ref: Int,
       opts: Layout.LayoutOptions): Either[PdfError, List[Line]] =
-    pageItems(doc, ref).map(Layout.pageItemLines(opts, _))
+    pageGlyphs(doc, ref).map(Layout.pageLines(opts, _))
 
   /** Paragraph texts for one page, no cross-page merge (Page.hs:91-92). */
   def pageParagraphs(doc: Document, ref: Int,
       opts: Layout.LayoutOptions): Either[PdfError, List[String]] =
-    pageItems(doc, ref).map(Layout.layoutParagraphs(opts, _))
+    pageGlyphs(doc, ref).map(Layout.layoutParagraphs(opts, _))
 
   /** Per-page paragraph regions for a page REFERENCE, resolving the page
     * number like the reference's pageRegions (Page.hs:105-117). */
   def pageRegionsAt(doc: Document, ref: Int,
       opts: Layout.LayoutOptions): Either[PdfError, List[PageRegion]] =
     for {
-      items <- pageItems(doc, ref)
+      glyphs <- pageGlyphs(doc, ref)
       refs <- DocStructure.pageRefs(doc)
       idx = refs.indexOf(ref)
       _ <- if (idx < 0) Left(PdfError.MissingObject(ref)) else Right(())
-    } yield pageRegions(idx + 1, opts, items)
+    } yield pageRegions(idx + 1, opts, glyphs)
 
   /** Paragraph bounding box from its layout lines (Page.hs:147-154):
     * inline extent on x, [baseline - size, baseline] on y; the empty group
@@ -73,17 +69,12 @@ object Page {
   }
 
   /** Per-page paragraph regions without document-level cross-page merge
-    * (Page.hs:105-117): paragraph texts and line groups come from the SAME
-    * layout pass, zipped positionally — layoutParagraphs and
-    * pageItemParagraphGroups run the identical grouping, so index i of one
-    * is paragraph i of the other (fallback pages produce empty groups and
-    * a zero bbox, reference parity). */
+    * (Page.hs:105-117): one layout pass yields each paragraph's text with
+    * its line group, whose extent is the bbox (a fallback page's paragraphs
+    * have no lines, so a zero bbox, reference parity). */
   def pageRegions(pageNo: Int, opts: Layout.LayoutOptions,
-      items: List[PageItem]): List[PageRegion] = {
-    val texts = Layout.layoutParagraphs(opts, items)
-    val groups = Layout.pageItemParagraphGroups(opts, items)
-    texts.zip(groups).zipWithIndex.map { case ((txt, grp), i) =>
+      glyphs: List[Glyph]): List[PageRegion] =
+    Layout.paragraphsWithLines(opts, glyphs).zipWithIndex.map { case ((txt, grp), i) =>
       PageRegion(pageNo, i + 1, paraBBox(grp), txt)
     }
-  }
 }

@@ -84,21 +84,22 @@ object ExtractText {
 /** Session extension installing the extraction function into the registry:
   * `--conf spark.sql.extensions=graft.spark.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("extract_text"),
-      new ExpressionInfo(classOf[ExtractText].getName, "extract_text"),
-      (children: Seq[Expression]) => ExtractText.build(children)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    ext.injectFunction(GraftExtensions.extractText)
 }
 
 object GraftExtensions {
+  /** extract_text's registry entry, the one both routes register. */
+  private val extractText = (
+    FunctionIdentifier("extract_text"),
+    new ExpressionInfo(classOf[ExtractText].getName, "extract_text"),
+    (children: Seq[Expression]) => ExtractText.build(children))
+
   /** Register extract_text on an ALREADY-BUILT session (extensions via
     * spark.sql.extensions only apply at session construction; a shared
     * session — notebook, Verify — installs it post hoc). Idempotent. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("extract_text"),
-      new ExpressionInfo(classOf[ExtractText].getName, "extract_text"),
-      (children: Seq[Expression]) => ExtractText.build(children))
+  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val (name, info, builder) = extractText
+    spark.sessionState.functionRegistry.registerFunction(name, info, builder)
+  }
 }

@@ -240,7 +240,7 @@ object Pipeline {
       openPdf(payload).toSeq.flatMap { doc =>
         DocStructure.pageRefs(doc).getOrElse(Nil).zipWithIndex.map { case (ref, idx) =>
           val txt = Interp.interpretPageItems(doc, ref) match {
-            case Right(items) => Layout.layoutPageText(Layout.defaultOptions, items)
+            case Right(glyphs) => Layout.layoutPageText(Layout.defaultOptions, glyphs)
             case Left(_) => ""
           }
           PageText(url, idx + 1, txt)
@@ -268,8 +268,8 @@ object Pipeline {
       if (Html.looksLikePdf(payload))
         openPdf(payload).toSeq.flatMap { doc =>
           DocStructure.pageRefs(doc).getOrElse(Nil).zipWithIndex.flatMap { case (ref, idx) =>
-            val items = Interp.interpretPageItems(doc, ref).getOrElse(Nil)
-            graft.core.Page.pageRegions(idx + 1, Layout.defaultOptions, items)
+            val glyphs = Interp.interpretPageItems(doc, ref).getOrElse(Nil)
+            graft.core.Page.pageRegions(idx + 1, Layout.defaultOptions, glyphs)
               .map(r => RegionRow(url, r.page, r.paragraph,
                 r.bbox.x0, r.bbox.y0, r.bbox.x1, r.bbox.y1, r.text))
           }
@@ -336,10 +336,9 @@ object Surfaces {
     import spark.implicits._
     perDocumentRows(input, noText) { (url, payload, _) =>
       openPdf(payload).toSeq.flatMap { doc =>
-        val nPages = DocStructure.pageRefs(doc).map(_.length).getOrElse(0)
-        (1 to nPages).flatMap { page =>
-          Images.extractPageImages(doc, page).getOrElse(Nil).map { im =>
-            ImageRow(url, page, im.index, im.format,
+        DocStructure.pageRefs(doc).getOrElse(Nil).zipWithIndex.flatMap { case (ref, idx) =>
+          Images.pageImages(doc, idx + 1, ref).getOrElse(Nil).map { im =>
+            ImageRow(url, idx + 1, im.index, im.format,
               im.bbox.x0, im.bbox.y0, im.bbox.x1, im.bbox.y1, im.bytes.length)
           }
         }
@@ -978,22 +977,19 @@ object Streaming {
   }
 
   /** The one stream runner: starts the stream `start` builds over the
-    * directory holding the parquet table at `source`, with an AvailableNow
-    * trigger, and returns the query once it has terminated. The file
-    * source needs a directory, so a single-file table is copied into a
-    * `stream_src*` temp dir for the run; the copy is deleted once the query
-    * has terminated (the sink holds the output, nothing reads the copy
-    * afterwards). */
+    * parquet table at `source`, with an AvailableNow trigger, and returns
+    * the query once it has terminated. A single-file table is read in
+    * place through a glob that names only that file,
+    * `<parent>/{<name>}`, its glob characters escaped: the file source
+    * takes a plain path as its partition base path, which must be a
+    * directory. */
   private def run(source: String)(start: String => DataStreamWriter[_]): StreamingQuery = {
-    import java.nio.file.Files
     val src = java.nio.file.Paths.get(source)
-    val copy = if (Files.isDirectory(src)) None else Some(Files.createTempDirectory("stream_src").toFile)
-    try {
-      val dir = copy.fold(source) { d => Files.copy(src, d.toPath.resolve(src.getFileName)); d.toString }
-      val q = start(dir).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q
-    } finally copy.foreach(LocalFileSystem.deleteTree)
+    val path = if (java.nio.file.Files.isDirectory(src)) source
+      else s"${src.getParent}/{${src.getFileName.toString.replaceAll("[\\\\{}\\[\\]*?,]", "\\\\$0")}}"
+    val q = start(path).trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
   }
 
   /** The windowed-count streaming plan: tumbling 1-hour windows with a

@@ -85,9 +85,9 @@ object FuzzSoak {
               // the page, region, metadata and diff surfaces' kernels
               Metadata.title(d); Metadata.infoJson(d); Metadata.trailerJson(d); Metadata.toc(d)
               for (refs <- DocStructure.pageRefs(d); (ref, idx) <- refs.zipWithIndex;
-                   items <- Interp.interpretPageItems(d, ref)) {
-                Layout.layoutPageText(Layout.defaultOptions, items)
-                Page.pageRegions(idx + 1, Layout.defaultOptions, items)
+                   glyphs <- Interp.interpretPageItems(d, ref)) {
+                Layout.layoutPageText(Layout.defaultOptions, glyphs)
+                Page.pageRegions(idx + 1, Layout.defaultOptions, glyphs)
               }
               DocStructure.openDocument(base, None)
                 .foreach(Diff.compareDocuments(Layout.defaultOptions, d, _))

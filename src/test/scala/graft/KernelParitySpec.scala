@@ -1139,7 +1139,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     "B", "B*", "b", "b*", "W", "W*", "EI")
 
   test("primitive text state, in-place literals and TJ == the Mat-based text path") {
-    import graft.core.{DocStructure, Encoding, FontInfo, Interp, PageItem}
+    import graft.core.{DocStructure, Encoding, FontInfo, Interp}
     import scala.collection.immutable.TreeMap
     val rnd = new scala.util.Random(31)
     val huge = "1" + "0" * 400 // overflows to Infinity in the content-stream number parser
@@ -1231,7 +1231,6 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val ops = TOp("BT", Nil) +: Seq.fill(1 + rnd.nextInt(24))(op())
       val src = ops.map(_.src).mkString("\n").getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
       val got = Interp.interpretContentItems(doc, DocStructure.emptyDict, fonts, src)
-        .collect { case PageItem.ItemGlyph(g) => g }
       val want = LegacyTextPath.run(ops, fonts)
       val ctx = ops.map(_.src).mkString(" | ")
       assert(got.length == want.length, ctx)
@@ -1344,6 +1343,267 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       if (got.text == l.text) { assert(got eq l, l); same += 1 }
     }
     assert(same > 500 && same < 4500, s"$same of 5000 unchanged")
+  }
+
+  // ---- a page is one glyph list, laid out once; object streams read in place ----
+
+  /** The page forms from before a page was a plain glyph list laid out
+    * once: texts and line groups from two layout passes, zipped by index;
+    * each MCID's glyphs appended one at a time; the tag count over a built
+    * list of every glyph. The references the one-pass forms are pinned
+    * against. */
+  private object LegacyPage {
+    import graft.core.{Footnotes, Glyph, Layout, Line, Page, PageRegion, Ruby}
+    import graft.core.Layout.{LayoutOptions, PageFallback, PageLines, PageNormal}
+
+    private def applyFootnotesOpt(opts: LayoutOptions, page: PageLines): PageLines = page match {
+      case PageNormal(0, ls) if opts.footnotes => PageNormal(0, Footnotes.inlineFootnotes(ls))
+      case _ => page
+    }
+    private def applyRuby(opts: LayoutOptions, page: PageLines): PageLines = page match {
+      case PageNormal(wmode, ls) => PageNormal(wmode, Ruby.mergeInterleavedRubyLines(wmode, opts.ruby, ls))
+      case _ => page
+    }
+    private def lines(opts: LayoutOptions, glyphs: List[Glyph]): PageLines =
+      applyFootnotesOpt(opts, applyRuby(opts, Layout.pageLinesRaw(glyphs)))
+
+    def layoutParagraphs(opts: LayoutOptions, glyphs: List[Glyph]): List[String] =
+      lines(opts, glyphs) match {
+        case PageFallback(ps) => ps
+        case PageNormal(wmode, ls) => Layout.groupParagraphs(wmode, ls).map(Layout.joinParaLines)
+      }
+    def pageLines(opts: LayoutOptions, glyphs: List[Glyph]): List[Line] =
+      lines(opts, glyphs) match {
+        case PageFallback(_) => Nil
+        case PageNormal(_, ls) => ls
+      }
+    def paragraphGroups(opts: LayoutOptions, glyphs: List[Glyph]): List[List[Line]] =
+      lines(opts, glyphs) match {
+        case PageFallback(ps) => List.fill(ps.length)(Nil)
+        case PageNormal(wmode, ls) => Layout.groupParagraphs(wmode, ls)
+      }
+    def pageRegions(pageNo: Int, opts: LayoutOptions, glyphs: List[Glyph]): List[PageRegion] = {
+      val texts = layoutParagraphs(opts, glyphs)
+      val groups = paragraphGroups(opts, glyphs)
+      texts.zip(groups).zipWithIndex.map { case ((txt, grp), i) =>
+        PageRegion(pageNo, i + 1, Page.paraBBox(grp), txt)
+      }
+    }
+    def mcidGlyphMap(glyphs: List[Glyph]): Map[Int, List[Glyph]] = {
+      var m = Map.empty[Int, List[Glyph]]
+      for (g <- glyphs) g.mcid match {
+        case Some(mcid) => m = m.updated(mcid, m.getOrElse(mcid, Nil) :+ g)
+        case None => ()
+      }
+      m
+    }
+    def taggedUsable(pages: List[List[Glyph]]): Boolean = {
+      val glyphs = pages.flatten
+      val total = glyphs.length
+      val tagged = glyphs.count(_.mcid.isDefined)
+      total > 0 && tagged.toDouble / total >= 0.5
+    }
+  }
+
+  /** A random page: horizontal or vertical, now and then with unusable
+    * glyphs (a fallback page), small raised digits (footnote marks), small
+    * kana beside the body (ruby) and MCIDs that repeat out of order. */
+  private def randomPage(rnd: scala.util.Random): List[graft.core.Glyph] = {
+    val words = Vector("word", "Line", "end.", "Hyphen-", "1.", "2)", "r Item", "•", "", " ",
+      "日本", "語。", "ひら")
+    val vertical = rnd.nextInt(4) == 0
+    val broken = rnd.nextInt(6) == 0
+    List.fill(rnd.nextInt(36)) {
+      val wmode = if (vertical ^ (rnd.nextInt(12) == 0)) 1 else 0
+      val line = rnd.nextInt(14)
+      val baseline = if (vertical) 500 - line * 14.0 else 720 - line * 12.0 - (if (rnd.nextInt(5) == 0) 30 else 0)
+      val along = 72 + rnd.nextInt(30) * 8.0
+      val (text, size, lift) = rnd.nextInt(8) match {
+        case 0 => ((1 + rnd.nextInt(3)).toString, 6.0, 4.0) // a raised footnote mark
+        case 1 => ("るび", 5.0, 7.0) // ruby over the line
+        case _ => (words(rnd.nextInt(words.length)), if (rnd.nextInt(10) == 0) 14.0 else 10.0, 0.0)
+      }
+      val unusable = broken && rnd.nextInt(2) == 0
+      val (x, y) = if (wmode == 1) (baseline + lift, 700 - along) else (along, baseline + lift)
+      graft.core.Glyph(text, if (unusable) Double.NaN else x, if (rnd.nextInt(40) == 0) -y else y,
+        6.0 * math.max(1, text.length), if (unusable && rnd.nextBoolean()) 0 else size, "/F1", wmode,
+        if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(4)))
+    }
+  }
+
+  test("one-pass page regions, linear MCID map and tag count == the two-pass, appending references") {
+    import graft.core.{DocStructure, Extract, Glyph, Interp, Layout, Page}
+    val allOpts = for (f <- Seq(false, true); r <- Seq(false, true)) yield Layout.LayoutOptions(f, r)
+    def same(glyphs: List[Glyph]): Unit = {
+      for (opts <- allOpts) {
+        // toString: a NaN coordinate compares unequal to itself
+        assert(Page.pageRegions(3, opts, glyphs).toString ==
+          LegacyPage.pageRegions(3, opts, glyphs).toString, s"$opts $glyphs")
+        assert(Layout.layoutParagraphs(opts, glyphs) == LegacyPage.layoutParagraphs(opts, glyphs))
+        assert(Layout.pageLines(opts, glyphs).toString == LegacyPage.pageLines(opts, glyphs).toString)
+      }
+      assert(Extract.mcidGlyphMap(glyphs) == LegacyPage.mcidGlyphMap(glyphs), glyphs)
+    }
+    var fixturePages = 0
+    val fixtures = (0L until 45L).map(graft.spark.FixtureGen.docFor) ++
+      Seq(graft.spark.FixtureGen.book(2), graft.spark.FixtureGen.longDoc(1))
+    for (d <- fixtures; doc <- DocStructure.openDocument(d.bytes, None).toOption) {
+      val pages = DocStructure.pageRefs(doc).getOrElse(Nil)
+        .map(Interp.interpretPageItems(doc, _).getOrElse(Nil))
+      pages.foreach(same)
+      assert(Extract.taggedUsable(pages) == LegacyPage.taggedUsable(pages), d.kind)
+      fixturePages += pages.length
+    }
+    assert(fixturePages > 60, s"$fixturePages fixture pages")
+    val rnd = new scala.util.Random(53)
+    var fallback = 0
+    var vertical = 0
+    var repeated = 0
+    var multi = 0
+    for (_ <- 1 to 3000) {
+      val pages = List.fill(1 + rnd.nextInt(3))(randomPage(rnd))
+      for (glyphs <- pages) {
+        same(glyphs)
+        Layout.pageLinesRaw(glyphs) match {
+          case Layout.PageFallback(ps) if ps.nonEmpty => fallback += 1
+          case Layout.PageNormal(1, _) => vertical += 1
+          case _ => ()
+        }
+        val ids = glyphs.flatMap(_.mcid)
+        if (ids.zip(ids.drop(1)).exists { case (a, b) => a != b } && ids.distinct.length < ids.length) repeated += 1
+        if (Layout.layoutParagraphs(Layout.defaultOptions, glyphs).length > 1) multi += 1
+      }
+      assert(Extract.taggedUsable(pages) == LegacyPage.taggedUsable(pages))
+    }
+    assert(fallback > 200 && vertical > 300 && repeated > 2000 && multi > 1000,
+      s"$fallback fallback, $vertical vertical, $repeated repeated-MCID, $multi multi-paragraph pages")
+  }
+
+  /** The object-stream parse from before the pair loop was one and
+    * members were read in place: one pair loop with `/First`, a second
+    * without, and a copy of the body from each member's offset. */
+  private object LegacyObjStm {
+    import graft.core.{Cursor, Lexer, PObj}
+    import graft.core.PObj.PNull
+
+    def parseObjStmHeader(first: Option[Int], s: Array[Byte]): Option[(List[(Int, Int)], Array[Byte])] = {
+      def parsePairs(buf: Array[Byte]): Option[List[(Int, Int)]] = {
+        val cur = new Cursor(buf)
+        Lexer.skipSpaces(cur)
+        val out = List.newBuilder[(Int, Int)]
+        var count = 0
+        var go = true
+        while (go) {
+          val save = cur.pos
+          var r = 0L
+          var rd = 0
+          while (Lexer.isDigit(cur.peek)) { r = r * 10 + (cur.next() - '0'); rd += 1 }
+          if (rd == 0) { cur.pos = save; go = false }
+          else {
+            Lexer.skipSpaces(cur)
+            var o = 0L
+            var od = 0
+            while (Lexer.isDigit(cur.peek)) { o = o * 10 + (cur.next() - '0'); od += 1 }
+            if (od == 0) { cur.pos = save; go = false }
+            else {
+              Lexer.skipSpaces(cur)
+              out += ((r.toInt, o.toInt))
+              count += 1
+            }
+          }
+        }
+        if (count == 0) None else Some(out.result())
+      }
+      first match {
+        case Some(f) if f >= 0 && f <= s.length =>
+          parsePairs(java.util.Arrays.copyOfRange(s, 0, f)).map(loc => (loc, s.drop(f)))
+        case _ =>
+          val cur = new Cursor(s)
+          Lexer.skipSpaces(cur)
+          val out = List.newBuilder[(Int, Int)]
+          var go = true
+          var last = cur.pos
+          while (go) {
+            val save = cur.pos
+            var r = 0L; var rd = 0
+            while (Lexer.isDigit(cur.peek)) { r = r * 10 + (cur.next() - '0'); rd += 1 }
+            if (rd == 0) { cur.pos = save; go = false }
+            else {
+              Lexer.skipSpaces(cur)
+              var o = 0L; var od = 0
+              while (Lexer.isDigit(cur.peek)) { o = o * 10 + (cur.next() - '0'); od += 1 }
+              if (od == 0) { cur.pos = save; go = false }
+              else { Lexer.skipSpaces(cur); out += ((r.toInt, o.toInt)); last = cur.pos }
+            }
+          }
+          val loc = out.result()
+          if (loc.isEmpty) None else Some((loc, s.drop(last)))
+      }
+    }
+
+    def parseObjStmObject(body: Array[Byte], off: Int): List[PObj] = {
+      if (off < 0 || off > body.length) return List(PNull)
+      val sub = body.drop(off)
+      Lexer.dictionary(new Cursor(sub), None, 0) match {
+        case Some(o) => List(o)
+        case None =>
+          Lexer.array(new Cursor(sub), None, 0) match {
+            case Some(o) => List(o)
+            case None =>
+              Lexer.literal(new Cursor(sub), None, 0) match {
+                case Some(o) => List(o)
+                case None => List(PNull)
+              }
+          }
+      }
+    }
+  }
+
+  test("one pair loop and in-place member reads == the two-loop, copying object-stream parse") {
+    import graft.core.{DocStructure, PObj}
+    import graft.core.PObj._
+    def show(o: PObj): String = o match {
+      case t: PText => s"PText(${t.s}, ${Option(t.rawBytes).map(_.mkString(","))})"
+      case h: PHex => s"PHex(${h.hex}, ${Option(h.rawBytes).map(_.mkString(","))})"
+      case PArray(xs) => xs.map(show).mkString("[", " ", "]")
+      case PDict(d) => d.map { case (k, v) => s"$k ${show(v)}" }.mkString("<<", " ", ">>")
+      case other => other.toString
+    }
+    def header(h: Option[(List[(Int, Int)], Array[Byte])]) = h.map { case (l, b) => (l, b.toSeq) }
+    var members = 0
+    def check(first: Option[Int], s: Array[Byte], offsets: Seq[Int]): Unit = {
+      val got = DocStructure.parseObjStmHeader(first, s)
+      assert(header(got) == header(LegacyObjStm.parseObjStmHeader(first, s)), s"$first ${new String(s, "ISO-8859-1")}")
+      for (body <- s :: got.map(_._2).toList; off <- offsets ++ got.toList.flatMap(_._1.map(_._2))) {
+        val want = LegacyObjStm.parseObjStmObject(body, off).map(show)
+        assert(DocStructure.parseObjStmObject(body, off).map(show) == want, s"$off ${new String(body, "ISO-8859-1")}")
+        if (want != List("PNull")) members += 1
+      }
+    }
+    for (i <- 0L until 12L) {
+      val doc = DocStructure.openDocument(graft.spark.FixtureGen.objStm(i).bytes, None).toOption.get
+      val body = doc.rawStreamByRef(6).toOption.get // the fixture's object-stream container
+      val first = doc.findDictByRef(6).flatMap(_.get("/First")).collect { case PNum(n) => n.toInt }
+      assert(first.isDefined && DocStructure.parseObjStmHeader(first, body).exists(_._1.length == 4))
+      for (f <- Seq(first, None, first.map(_ - 1), first.map(_ + 3), Some(-1), Some(body.length),
+          Some(body.length + 1)))
+        check(f, body, -2 to body.length + 2)
+    }
+    val rnd = new scala.util.Random(59)
+    val pieces = Vector("1", "0", "12", " ", "\n", "%c\n", "<<", ">>", "/Type", "/K", "[", "]", "(", ")",
+      "(a\\)b)", "\\", "<41>", "3 0 R", "true", "null", "-2.5", "<<>>", "[1 2]", "<</A (x)>>")
+    for (_ <- 1 to 3000) {
+      val pairs = Seq.fill(rnd.nextInt(4))(s"${rnd.nextInt(40)} ${rnd.nextInt(60)} ").mkString
+      val s = (pairs + Seq.fill(rnd.nextInt(20))(pieces(rnd.nextInt(pieces.length))).mkString)
+        .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+      val first = rnd.nextInt(4) match {
+        case 0 => None
+        case 1 => Some(pairs.length)
+        case _ => Some(rnd.nextInt(s.length + 5) - 2)
+      }
+      check(first, s, Seq.fill(6)(rnd.nextInt(s.length + 7) - 3))
+    }
+    assert(members > 3000, s"$members members parsed")
   }
 }
 

@@ -41,9 +41,7 @@ class KernelSpec extends AnyFunSuite {
 
   private def interp(src: String): List[Glyph] =
     Interp.interpretContentItems(stubDoc, DocStructure.emptyDict,
-      Map("/F1" -> stubFont), src.getBytes).collect {
-      case PageItem.ItemGlyph(g) => g
-    }
+      Map("/F1" -> stubFont), src.getBytes)
 
   test("Tj places a glyph with origin, width, size") {
     val gs = interp("BT /F1 10 Tf 100 700 Td (AB) Tj ET")
@@ -98,22 +96,22 @@ class KernelSpec extends AnyFunSuite {
     Glyph(text, x, y, w, size, "/F1", 0, None)
 
   test("paragraph gap break at 1.6x typical leading") {
-    val items: List[PageItem] =
+    val items: List[Glyph] =
       List(
         glyph("Line one", 72, 700, 40, 10),
         glyph("Line two", 72, 688, 40, 10),
         glyph("Line three", 72, 676, 40, 10),
-        glyph("New para", 72, 640, 40, 10)).map(PageItem.ItemGlyph.apply)
+        glyph("New para", 72, 640, 40, 10))
     val paras = Layout.layoutParagraphs(Layout.defaultOptions, items)
     assert(paras == List("Line one Line two Line three", "New para"))
   }
 
   test("indent starts a new paragraph") {
-    val items: List[PageItem] =
+    val items: List[Glyph] =
       List(
         glyph("First line", 72, 700, 40, 10),
         glyph("wrapped", 72, 688, 40, 10),
-        glyph("Indented start", 85, 676, 40, 10)).map(PageItem.ItemGlyph.apply)
+        glyph("Indented start", 85, 676, 40, 10))
     val paras = Layout.layoutParagraphs(Layout.defaultOptions, items)
     assert(paras == List("First line wrapped", "Indented start"))
   }

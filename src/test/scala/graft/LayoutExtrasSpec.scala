@@ -65,10 +65,10 @@ class LayoutExtrasSpec extends AnyFunSuite {
   }
 
   test("numbered list markers start new paragraphs") {
-    val items: List[PageItem] = List(
+    val items: List[Glyph] = List(
       g("Intro text before the list:", 72, 700, 150, 10),
       g("1. first item", 72, 688, 80, 10),
-      g("2. second item", 72, 676, 80, 10)).map(PageItem.ItemGlyph.apply)
+      g("2. second item", 72, 676, 80, 10))
     val paras = Layout.layoutParagraphs(Layout.defaultOptions, items)
     assert(paras == List("Intro text before the list:", "1. first item", "2. second item"))
   }
@@ -81,10 +81,10 @@ class LayoutExtrasSpec extends AnyFunSuite {
   }
 
   test("fallback page: unusable glyph ratio emits raw text lines") {
-    val items: List[PageItem] = List(
+    val items: List[Glyph] = List(
       g("ok", 72, 700, 10, 10),
       g("bad1", Double.NaN, 0, 10, 10),
-      g("bad2", Double.NaN, 0, 10, 10)).map(PageItem.ItemGlyph.apply)
+      g("bad2", Double.NaN, 0, 10, 10))
     Layout.pageLinesRaw(items) match {
       case Layout.PageFallback(ps) => assert(ps == List("ok\nbad1\nbad2"))
       case other => fail(s"expected fallback, got $other")

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
-import graft.core.PageItem.ItemGlyph
 
 /** The paragraph-region page API (reference Page.hs pageRegions/paraBBox):
   * bbox math against hand-computed stub-font values, and the region<->text
@@ -13,7 +12,7 @@ class PageSpec extends AnyFunSuite {
 
   test("paraBBox: single line spans [x, x+width] x [baseline-size, baseline]") {
     // the Unit.hs stub-font example: "AB" at (100,700), width 13, size 10
-    val items = List(ItemGlyph(Glyph("AB", 100, 700, 13, 10, "/F1", 0, None)))
+    val items = List(Glyph("AB", 100, 700, 13, 10, "/F1", 0, None))
     val rs = Page.pageRegions(1, Layout.defaultOptions, items)
     assert(rs == List(PageRegion(1, 1, Rect(100, 690, 113, 700), "AB")))
   }
@@ -22,8 +21,8 @@ class PageSpec extends AnyFunSuite {
     // 12 pt leading at size 10 is under the paragraph-break threshold:
     // one paragraph whose bbox spans both lines
     val items = List(
-      ItemGlyph(Glyph("AB", 100, 700, 13, 10, "/F1", 0, None)),
-      ItemGlyph(Glyph("CDE", 100, 688, 20, 10, "/F1", 0, None)))
+      Glyph("AB", 100, 700, 13, 10, "/F1", 0, None),
+      Glyph("CDE", 100, 688, 20, 10, "/F1", 0, None))
     val rs = Page.pageRegions(1, Layout.defaultOptions, items)
     assert(rs.length == 1, rs)
     assert(rs.head.bbox == Rect(100, 678, 120, 700))
@@ -116,11 +115,11 @@ class PageSpec extends AnyFunSuite {
         val y = 700 - k * 250.0 - rnd.nextInt(40)
         val w = 10 + rnd.nextInt(80)
         val size = 8 + rnd.nextInt(10)
-        ItemGlyph(Glyph(s"line$k", x, y, w, size, "/F1", 0, None))
+        Glyph(s"line$k", x, y, w, size, "/F1", 0, None)
       }.toList
       val rs = Page.pageRegions(1, Layout.defaultOptions, glyphs)
       assert(rs.length == n, rs)
-      for ((r, g) <- rs.zip(glyphs.map(_.g))) {
+      for ((r, g) <- rs.zip(glyphs)) {
         assert(r.bbox == Rect(g.x, g.y - g.size, g.x + g.width, g.y), s"$r vs $g")
         assert(r.text == g.text)
       }

@@ -702,20 +702,40 @@ class SurfacesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
   }
 
-  test("stream runs delete the temp copy of a single-file source") {
-    // the file source needs a directory: a single-file table is copied into
-    // a stream_src* temp dir, which must not outlive the query; x12 writes
-    // its corpus to a stream_corpus* dir, which must not outlive its stream
+  test("single-file tables stream in place; x12 leaves no corpus dir") {
+    // the file source reads a glob naming the one file, in the table's own
+    // directory: no stream_src* copy appears at any point of the run; x12
+    // writes its corpus to a stream_corpus* dir, which must not outlive its
+    // stream
+    val events = java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet")
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def copies = tmp.list().filter(n => n.startsWith("stream_src") || n.startsWith("stream_corpus")).toSet
-    val before = copies
-    val win = graft.spark.Streaming.windowedEventCounts(
-      spark, "/root/testdata/sf0.001/events.parquet")
-    assert(win.count() > 0)
+    def dirs(prefix: String) = tmp.list().filter(_.startsWith(prefix)).toSet
+    val corporaBefore = dirs("stream_corpus")
+    val copies = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var watching = true
+    val watcher = new Thread(() => while (watching) {
+      dirs("stream_src").foreach(copies.add)
+      Thread.sleep(2)
+    })
+    watcher.setDaemon(true)
+    watcher.start()
+    val (windows, progress) =
+      try streamed(graft.spark.Streaming.windowedEventCounts(spark, events.toString).count())
+    finally { watching = false; watcher.join() }
+    assert(windows > 0)
+    val sources = progress.flatMap(_.sources.map(_.description))
+    assert(sources.nonEmpty && sources.forall(_.contains(s"${events.getParent}/")), sources)
+    assert(copies.isEmpty, s"source copies made in $tmp: $copies")
+    // a file name with glob characters names only itself
+    withTempDir("glob_name") { dir =>
+      val table = dir.resolve("events,{1}[x]*?.parquet")
+      java.nio.file.Files.copy(events, table)
+      assert(graft.spark.Streaming.windowedEventCounts(spark, table.toString).count() == windows)
+    }
     val x12 = graft.spark.Queries.queries("x12_streaming_extract")(spark, "/root/testdata/sf0.001")
     assert(x12.count() == 180)
-    val left = copies -- before
-    assert(left.isEmpty, s"source copies left in $tmp: $left")
+    val left = dirs("stream_corpus") -- corporaBefore
+    assert(left.isEmpty, s"corpus dirs left in $tmp: $left")
   }
 
   test("two concurrent calls of one stream entry each return every row") {

@@ -19,7 +19,7 @@ class VerticalSpec extends AnyFunSuite {
 
   private def interp(src: String): List[Glyph] =
     Interp.interpretContentItems(stubDoc, DocStructure.emptyDict,
-      Map("/F1" -> vFont), src.getBytes).collect { case PageItem.ItemGlyph(g) => g }
+      Map("/F1" -> vFont), src.getBytes)
 
   test("vertical glyphs advance downward with wmode=1") {
     val gs = interp("BT /F1 10 Tf 1 0 0 1 500 700 Tm <467C> Tj <4B5C> Tj ET")
@@ -33,8 +33,7 @@ class VerticalSpec extends AnyFunSuite {
     val gs = interp(
       "BT /F1 10 Tf 1 0 0 1 500 700 Tm <467C> Tj <4B5C> Tj ET " +
         "BT /F1 10 Tf 1 0 0 1 480 700 Tm <386C> Tj ET")
-    val items = gs.map(PageItem.ItemGlyph.apply)
-    val paras = Layout.layoutParagraphs(Layout.defaultOptions, items)
+    val paras = Layout.layoutParagraphs(Layout.defaultOptions, gs)
     // right column (x=500) before left column (x=480): 日本 then 語
     assert(paras == List("日本", "語"))
   }
